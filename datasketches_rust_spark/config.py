@@ -39,8 +39,9 @@ class PipelineConfig:
     # rep-payload strategy (execution only — never in cfg_hash): True
     # broadcasts the narrow (content_sha, rep_file_id) key set into the
     # signature scan so the 2KB kmv/band payload never crosses an
-    # exchange; False falls back to a materialized shuffle-hash reps
-    # stage. None (default) = AUTO: the pipeline decides from the actual
+    # exchange, and runs connected components as one union-find task;
+    # False falls back to a materialized shuffle-hash reps stage and the
+    # iterative large-star/small-star join loop. None (default) = AUTO: the pipeline decides from the actual
     # rep-key count after the rep_keys stage materializes — broadcast iff
     # n_keys <= broadcast_key_limit — so a job approaching driver
     # capacity degrades to the shuffle path instead of OOMing on a knob

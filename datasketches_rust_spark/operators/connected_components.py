@@ -1,29 +1,51 @@
-"""Stage 4 — connected components via alternating large-star / small-star.
+"""Stage 4 — connected components: one-task union-find, or the iterative
+large-star/small-star joins when the node set outgrows one task.
 
-The two-phase DataFrame-join formulation of Kiveris et al., "Connected
-Components in MapReduce and Beyond" (SOCC'14): every iteration is a
-bounded number of shuffles on node ids, converges in O(log^2 n) rounds
-(2-4 rounds in practice for near-dup clusters, whose diameter is tiny),
-and never materializes a component in one task — so it survives clusters
-of any size, unlike collect-based CC.
+``union_find_components`` (the pipeline's default) ships the edge list to
+ONE task as Arrow batches and runs the vectorized hook-and-compress kernel
+of ``sigkit/union_find`` there: a fixed handful of Spark jobs whatever the
+graph's diameter. The pipeline takes it whenever the rep-key set fits the
+broadcast budget (``cfg.broadcast_key_limit``) — the graph's nodes are a
+subset of the rep keys, so the same measured bound that lets the key set
+live in one place bounds this task's memory.
+
+``connected_components`` is the two-phase DataFrame-join formulation of
+Kiveris et al., "Connected Components in MapReduce and Beyond" (SOCC'14):
+every iteration is a bounded number of shuffles on node ids, converges in
+O(log^2 n) rounds (2-4 rounds in practice for near-dup clusters, whose
+diameter is tiny), and never materializes a component in one task — so it
+survives clusters of any size. The pipeline's shuffle fallback (rep keys
+beyond the broadcast budget) runs it, and tests hold the union-find to it
+as the reference. Its cost is scheduling, not data: each iteration is ~6
+shuffle stages plus a lineage cut, and AQE submits each shuffle stage as
+its own job (25 jobs for a 3-iteration run on a ~1k-edge graph).
 
 Node ids are 32-byte binary content_shas: globally unique at any corpus
 scale (no 64-bit-collision risk at 10^12 files) and the component minimum
 under byte-wise binary ordering equals the minimum of the hex rendering —
-exactly FIXTURES.md F4's cluster_id = min content_sha.
+exactly FIXTURES.md F4's cluster_id = min content_sha. Both algorithms
+label a component with that minimum, so their outputs are identical.
 
-Each iteration ends with a lineage cut (localCheckpoint, or parquet
+Each Kiveris iteration ends with a lineage cut (localCheckpoint, or parquet
 round-trip when a checkpoint dir is provided) — iterative plans otherwise
 grow Catalyst lineage exponentially. Convergence is detected by an
 order-insensitive fingerprint (count + sum of pair hashes) that rides the
 materialization action itself via ``DataFrame.observe`` — no separate
-fingerprint job per iteration (the loop is scheduling-overhead-bound at
-high core counts, so jobs per iteration matter more than bytes).
+fingerprint job per iteration.
 """
 
 from __future__ import annotations
 
+from typing import Iterator
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, functions as F
+
+from ..sigkit.union_find import union_find
+
+ASSIGN_SCHEMA = "node binary, component binary"
+_OUT_ROWS = 1 << 20  # rows per emitted batch: 32 MB of 32-byte keys per column
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -123,3 +145,51 @@ def connected_components(
     return assign.unionByName(roots).groupBy("node").agg(
         F.min("component").alias("component")
     )
+
+
+def _fixed_width_keys(col: pa.Array) -> np.ndarray:
+    """Zero-copy ``S<w>`` view of a binary column whose values all have one
+    width (the 32-byte content_sha)."""
+    if col.null_count:
+        raise ValueError("union_find_components: null node id")
+    off = np.frombuffer(col.buffers()[1], np.int32, len(col) + 1, col.offset * 4)
+    width = int(off[-1] - off[0]) // max(len(col), 1)
+    if width == 0 or not (np.diff(off) == width).all():
+        raise ValueError("union_find_components: node ids must share one nonzero width")
+    return np.frombuffer(col.buffers()[2], f"S{width}", len(col), int(off[0]))
+
+
+def _binary_array(keys: np.ndarray) -> pa.Array:
+    width = keys.dtype.itemsize
+    offsets = np.arange(0, (len(keys) + 1) * width, width, dtype=np.int32)
+    return pa.Array.from_buffers(
+        pa.binary(), len(keys), [None, pa.py_buffer(offsets), pa.py_buffer(keys)]
+    )
+
+
+def _union_find_task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    src, dst = [], []
+    for b in batches:
+        if b.num_rows:
+            src.append(_fixed_width_keys(b.column("src")))
+            dst.append(_fixed_width_keys(b.column("dst")))
+    if not src:
+        return
+    nodes, comp, _ = union_find(np.concatenate(src), np.concatenate(dst))
+    for i in range(0, len(nodes), _OUT_ROWS):
+        yield pa.RecordBatch.from_arrays(
+            [_binary_array(nodes[i:i + _OUT_ROWS]), _binary_array(comp[i:i + _OUT_ROWS])],
+            ["node", "component"],
+        )
+
+
+def union_find_components(edges: DataFrame) -> DataFrame:
+    """edges(src, dst) → assignments(node, component), component = min id —
+    the same relation as ``connected_components``, computed in ONE task.
+
+    Node ids must be non-null binary values of one width (content_shas).
+    The whole edge list and its node set are held by that task, so callers
+    must know the node set fits one executor; a materialized ``edges``
+    costs no extra shuffle (``coalesce(1)`` is a narrow dependency).
+    """
+    return edges.select("src", "dst").coalesce(1).mapInArrow(_union_find_task, ASSIGN_SCHEMA)

@@ -105,7 +105,10 @@ def rep_payload(
 
 
 def exact_representatives(
-    signatures: DataFrame, ids: DataFrame | None = None, broadcast: bool = True
+    signatures: DataFrame,
+    ids: DataFrame | None = None,
+    broadcast: bool = True,
+    has_dups: bool | None = None,
 ) -> DataFrame:
     """One full-payload row per distinct content (standalone form).
 
@@ -121,11 +124,16 @@ def exact_representatives(
     materialized narrow projection makes the keys agg and the duplicate
     probe read ~60 bytes per row instead. Parquet-checkpointed callers
     get the same effect from column pruning and can omit it.
+
+    ``has_dups``: the ``has_duplicate_id_rows(ids)`` result when the caller
+    already probed; None runs the probe here.
     """
     ids = ids if ids is not None else signatures.select("content_sha", "file_id")
     keys = exact_rep_keys(ids)
     payload = signatures
-    if has_duplicate_id_rows(ids):
+    if has_dups is None:
+        has_dups = has_duplicate_id_rows(ids)
+    if has_dups:
         payload = signatures.dropDuplicates(["content_sha", "file_id"])
     k = keys.alias("k")
     k = F.broadcast(k) if broadcast else k.hint("shuffle_hash")

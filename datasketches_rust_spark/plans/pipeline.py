@@ -6,23 +6,43 @@ commutative merges (shuffle on content_sha / band keys), and every stage
 boundary is a serialized compact form (parquet checkpoint ≙ the
 CompactThetaSketch exchange path, theta/sketch.rs:443-491).
 
+One measured decision picks the plan of the key-bound stages: the rep-key
+count against ``cfg.broadcast_key_limit`` (unless
+``cfg.broadcast_rep_payload`` forces it). Within the limit, the narrow key
+set is broadcast into the signature scan for the payload attach, and the
+final merge — connected components — runs as one vectorized union-find
+task (``union_find_components``): the graph's nodes are a subset of the
+rep keys, so the same bound covers that task's memory, and the stage costs
+a fixed handful of jobs instead of ~6 per Kiveris iteration. Beyond the
+limit, both fall back to shuffle plans: a materialized reps stage and the
+iterative large-star/small-star ``connected_components``, which never holds
+a component in one task.
+
 Checkpoint/resume: each stage writes to ``<dir>/<stage>`` plus a one-row
-``_meta`` parquet carrying (stage, fingerprint). The fingerprint chains
-cfg_hash with the upstream stage's fingerprint — the pipeline-level analog
-of the reference's seed-hash compatibility check (hash/seed.rs:42-55): a
-resumed run with a different config or different upstream refuses to reuse
-the checkpoint and recomputes. ``_metrics`` accumulates per-stage row
-counts (map-then-merge accounting, FIXTURES.md F5).
+``_meta`` parquet carrying (stage, fingerprint). The fingerprint chains the
+upstream stage's fingerprint with exactly the config parameters the stage
+itself reads (``STAGE_PARAMS``; the signatures stage reads those of
+``cfg_hash``) — the pipeline-level analog of the reference's seed-hash
+compatibility check (hash/seed.rs:42-55): a resumed run whose config or
+upstream changed anything a stage's output depends on refuses to reuse
+that checkpoint and recomputes it, while stages upstream of the change are
+reused. ``_metrics`` accumulates per-stage row counts (map-then-merge
+accounting, FIXTURES.md F5).
 """
 
 from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import PipelineConfig
-from ..operators.connected_components import connected_components
+from ..operators.connected_components import (
+    connected_components,
+    union_find_components,
+)
 from ..operators.lsh import (
     candidate_pairs,
     exact_pairs,
@@ -34,6 +54,48 @@ from ..operators.lsh import (
 from ..operators.signatures import compute_signatures
 from ..operators.substring import containment_pairs
 from ..operators.verify import verify_pairs
+
+# PipelineConfig fields each stage reads beyond its upstream's output; the
+# signatures stage reads exactly the cfg_hash fields. Execution-only fields
+# (broadcast_rep_payload, broadcast_key_limit) shape plans, never outputs.
+STAGE_PARAMS = {
+    "candidates": ("max_bucket_size",),
+    "verified": ("jaccard_threshold",),
+}
+META_SCHEMA = "stage string, fingerprint string"
+
+
+def assign_clusters(
+    ids: DataFrame,
+    edges: DataFrame,
+    single_task: bool,
+    checkpoint_dir: str | None = None,
+) -> DataFrame:
+    """ids(file_id, content_sha) + accepted edges(src, dst) →
+    clusters(file_id, content_sha, cluster_id) in lowercase hex;
+    cluster_id = min content_sha of the file's component, a file on no
+    edge is its own cluster.
+
+    ``single_task``: the node set is known to fit one task (the rep keys
+    fit the broadcast budget) — components come from the one-task
+    union-find and are broadcast into the ids scan. Otherwise the Kiveris
+    join loop computes them and a plain join attaches them.
+    """
+    if single_task:
+        assign = F.broadcast(union_find_components(edges))
+    else:
+        assign = connected_components(edges, checkpoint_dir=checkpoint_dir)
+    return (
+        ids
+        .join(assign.withColumnRenamed("node", "content_sha"), "content_sha", "left")
+        .select(
+            "file_id",
+            # render the binary keys as the usual lowercase hex at the
+            # output boundary (identical to sha2's text form)
+            F.lower(F.hex("content_sha")).alias("content_sha"),
+            F.lower(F.hex(F.coalesce("component", "content_sha"))).alias("cluster_id"),
+        )
+    )
 
 
 class DedupPipeline:
@@ -53,11 +115,31 @@ class DedupPipeline:
     def _meta_path(self, name: str) -> str:
         return f"{self.dir}/{name}__meta"
 
+    def _fingerprint(self, name: str, upstream_fp: str) -> str:
+        if name == "signatures":
+            params = str(self.cfg.cfg_hash())
+        else:
+            params = ",".join(f"{k}={getattr(self.cfg, k)!r}" for k in STAGE_PARAMS.get(name, ()))
+        return f"{params}|{upstream_fp}|{name}"
+
+    def _read_meta(self, name: str) -> list:
+        """The stage's meta rows; none when the meta parquet is missing or
+        unreadable (the stage then recomputes). Other errors propagate."""
+        try:
+            return self.spark.read.schema(META_SCHEMA).parquet(self._meta_path(name)).collect()
+        except AnalysisException as e:  # meta never written
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
+        except Py4JJavaError as e:  # meta files present but corrupt
+            if not str(e.java_exception.getCondition()).startswith("FAILED_READ_FILE"):
+                raise
+        return []
+
     def _stage(
         self, name: str, upstream_fp: str, compute, materialize: bool = True
     ) -> tuple[DataFrame, str]:
         """Run or resume one stage; returns (df, fingerprint)."""
-        fp = f"{self.cfg.cfg_hash()}|{upstream_fp}|{name}"
+        fp = self._fingerprint(name, upstream_fp)
         if self.dir is None:
             # no durable checkpoint: cut lineage EAGERLY so every downstream
             # consumer — including broadcast-subquery jobs, which Spark runs
@@ -73,19 +155,14 @@ class DedupPipeline:
             return df, fp
         path = f"{self.dir}/{name}"
         if os.path.exists(os.path.join(path, "_SUCCESS")):
-            try:
-                meta = self.spark.read.parquet(self._meta_path(name)).collect()
-                if meta and meta[0]["fingerprint"] == fp:
-                    df = self.spark.read.parquet(path)
-                    self.metrics.append((name, df.count(), fp, True))
-                    return df, fp
-            except Exception:
-                pass  # missing/corrupt meta → recompute
+            meta = self._read_meta(name)
+            if meta and meta[0]["fingerprint"] == fp:
+                df = self.spark.read.parquet(path)
+                self.metrics.append((name, df.count(), fp, True))
+                return df, fp
         df = compute()
         df.write.mode("overwrite").parquet(path)
-        self.spark.createDataFrame(
-            [(name, fp)], "stage string, fingerprint string"
-        ).write.mode("overwrite").parquet(self._meta_path(name))
+        self.spark.createDataFrame([(name, fp)], META_SCHEMA).write.mode("overwrite").parquet(self._meta_path(name))
         out = self.spark.read.parquet(path)
         self.metrics.append((name, out.count(), fp, False))
         return out, fp
@@ -112,8 +189,10 @@ class DedupPipeline:
     def _dedup_stages(self, corpus: DataFrame, input_fp: str):
         """Shared stage chain up to verification.
 
-        Returns (sigs, ids, rep_map, verified, fp4) where rep_map is the
-        narrow (content_sha, rep_file_id) relation.
+        Returns (sigs, ids, rep_map, verified, fp4, broadcast) where
+        rep_map is the narrow (content_sha, rep_file_id) relation and
+        broadcast the resolved rep-key placement (True: the key set fits
+        one place).
 
         Broadcast path (the common case): only the NARROW rep-key table
         is materialized; consumers re-attach the payload columns they
@@ -165,24 +244,21 @@ class DedupPipeline:
         # downstream stages see the RESOLVED decision (verify's cand-sha
         # semi-join pushdown gates on the same broadcast-capacity premise)
         rcfg = self.cfg.with_(broadcast_rep_payload=broadcast)
-        if broadcast:
-            # duplicate-(sha,fid) probe: lazy (or prefetched above) so
-            # checkpoint resume skips it; at most one narrow job
-            memo: dict = {}
+        memo: dict = {}
 
+        def has_dups() -> bool:
+            """The duplicate-(sha,fid) probe, run at most once by whichever
+            branch needs it: the prefetched future's result (so its
+            exception surfaces) or a lazy probe a resumed run never reaches."""
+            if "d" not in memo:
+                memo["d"] = (
+                    probe_fut.result() if probe_fut is not None else has_duplicate_id_rows(ids)
+                )
+            return memo["d"]
+
+        if broadcast:
             def payload() -> DataFrame:
-                if "p" not in memo:
-                    has_dups = (
-                        probe_fut.result()
-                        if probe_fut is not None
-                        else has_duplicate_id_rows(ids)
-                    )
-                    memo["p"] = (
-                        sigs.dropDuplicates(["content_sha", "file_id"])
-                        if has_dups
-                        else sigs
-                    )
-                return memo["p"]
+                return sigs.dropDuplicates(["content_sha", "file_id"]) if has_dups() else sigs
 
             cands, fp3 = self._stage(
                 "candidates",
@@ -200,7 +276,9 @@ class DedupPipeline:
             )
         else:
             reps, fp2b = self._stage(
-                "reps", fp2, lambda: exact_representatives(sigs, ids, broadcast=False)
+                "reps",
+                fp2,
+                lambda: exact_representatives(sigs, ids, broadcast=False, has_dups=has_dups()),
             )
             cands, fp3 = self._stage(
                 "candidates", fp2b, lambda: candidate_pairs(reps, rcfg)
@@ -209,7 +287,7 @@ class DedupPipeline:
                 "verified", fp3, lambda: verify_pairs(cands, reps, rcfg)
             )
         rep_map = keys.select("content_sha", "rep_file_id")
-        return sigs, ids, rep_map, verified, fp4
+        return sigs, ids, rep_map, verified, fp4, broadcast
 
     def _stage_rows(self, name: str, df: DataFrame) -> int:
         """Row count of a just-materialized stage: from the checkpoint
@@ -225,33 +303,16 @@ class DedupPipeline:
         """corpus(repo,path,commit,lang,content) → clusters(file_id,
         content_sha, cluster_id). cluster_id = min content_sha in component;
         non-duplicated files map to their own content_sha."""
-        _, ids, _, verified, fp4 = self._dedup_stages(corpus, input_fp)
+        _, ids, _, verified, fp4, broadcast = self._dedup_stages(corpus, input_fp)
         edges = (
             verified.where("accepted")
             .select(F.col("sha_a").alias("src"), F.col("sha_b").alias("dst"))
         )
-
-        def compute_clusters():
-            assign = connected_components(edges, checkpoint_dir=self.dir)
-            return (
-                ids
-                .join(
-                    assign.withColumnRenamed("node", "content_sha"),
-                    "content_sha",
-                    "left",
-                )
-                .select(
-                    "file_id",
-                    # render the binary keys as the usual lowercase hex at
-                    # the output boundary (identical to sha2's text form)
-                    F.lower(F.hex("content_sha")).alias("content_sha"),
-                    F.lower(
-                        F.hex(F.coalesce("component", "content_sha"))
-                    ).alias("cluster_id"),
-                )
-            )
-
-        clusters, _ = self._stage("clusters", fp4, compute_clusters)
+        # the rep keys fitting the broadcast budget bounds the graph's node
+        # set too, so the same decision picks the one-task union-find
+        clusters, _ = self._stage(
+            "clusters", fp4, lambda: assign_clusters(ids, edges, broadcast, self.dir)
+        )
         self.flush_metrics()
         return clusters
 
@@ -288,7 +349,7 @@ class DedupPipeline:
 
     def dup_pairs(self, corpus: DataFrame, input_fp: str = "corpus") -> DataFrame:
         """(file_id-level) exact + verified near-dup pairs — F3 schema."""
-        _, ids, rep_map, verified, _ = self._dedup_stages(corpus, input_fp)
+        _, ids, rep_map, verified, *_ = self._dedup_stages(corpus, input_fp)
         near = (
             verified.where("accepted")
             .join(rep_map.withColumnRenamed("content_sha", "sha_a")

@@ -92,9 +92,6 @@ def main(corpus_path: str, cpus: int) -> None:
         # materialization breaks cross-stage pipelining)
         from pyspark.sql import functions as F
 
-        from datasketches_rust_spark.operators.connected_components import (
-            connected_components,
-        )
         from datasketches_rust_spark.operators.lsh import (
             candidate_pairs,
             exact_rep_keys,
@@ -103,6 +100,7 @@ def main(corpus_path: str, cpus: int) -> None:
         )
         from datasketches_rust_spark.operators.signatures import compute_signatures
         from datasketches_rust_spark.operators.verify import verify_pairs
+        from datasketches_rust_spark.plans.pipeline import assign_clusters
 
         def timed(name, df):
             t = time.monotonic()
@@ -136,19 +134,10 @@ def main(corpus_path: str, cpus: int) -> None:
         edges = verified.where("accepted").select(
             F.col("sha_a").alias("src"), F.col("sha_b").alias("dst")
         )
-        t = time.monotonic()
-        assign = connected_components(edges)
-        clusters = (
-            ids
-            .join(assign.withColumnRenamed("node", "content_sha"), "content_sha", "left")
-            .select(
-                "file_id",
-                "content_sha",
-                F.coalesce("component", "content_sha").alias("cluster_id"),
-            )
-        )
+        # this diag runs the broadcast (key set fits one place) path
+        # throughout, so clusters take the pipeline's one-task union-find
+        clusters = timed("clusters", assign_clusters(ids, edges, single_task=True))
         n_rows = clusters.count()
-        stage_walls["cc+assign"] = round(time.monotonic() - t, 2)
     else:
         pipe = DedupPipeline(spark, cfg)
         clusters = pipe.run(corpus)

@@ -250,6 +250,61 @@ def test_connected_components_shapes(spark):
     assert len(got) == 66
 
 
+def test_union_find_components_match_kiveris(spark):
+    """The one-task union-find and the Kiveris join loop give the same
+    (node, component) relation: a 61-node path and a 5-clique, duplicate
+    and reversed edges, self-loops (a self-loop-only node is emitted by
+    neither), keys leading with bytes >= 0x80 (min under UNSIGNED order)
+    and keys ending in zero bytes. The Spark task equals the kernel."""
+    from datasketches_rust_spark.operators.connected_components import (
+        connected_components,
+        union_find_components,
+    )
+    from datasketches_rust_spark.sigkit.union_find import union_find
+
+    path = [bytes([0xFF - i]) + bytes(31) for i in range(61)]  # min: the far end
+    clique = [bytes([b]) + bytes([i]) * 31 for i, b in enumerate((0x90, 0x10, 0xF0, 0x80, 0x7F))]
+    edges = list(zip(path, path[1:]))
+    edges += [(a, b) for i, a in enumerate(clique) for b in clique[i + 1:]]
+    edges += [(b, a) for a, b in edges[:10]] + edges[5:9]  # reversed + duplicate
+    loner = bytes([0x01]) * 32
+    edges += [(path[3], path[3]), (loner, loner)]
+
+    df = spark.createDataFrame(edges, "src binary, dst binary")
+    kiv = {bytes(r["node"]): bytes(r["component"]) for r in connected_components(df).collect()}
+    uf = {bytes(r["node"]): bytes(r["component"]) for r in union_find_components(df).collect()}
+    assert uf == kiv
+    assert set(uf) == set(path) | set(clique)
+    assert {uf[k] for k in path} == {path[-1]}
+    assert {uf[k] for k in clique} == {clique[1]}
+
+    src, dst = (np.array([e[i] for e in edges], dtype="S32") for i in (0, 1))
+    nodes, comp, _ = union_find(src, dst)
+    as_bytes = [r.tobytes() for r in np.concatenate([nodes, comp]).view(np.uint8).reshape(-1, 32)]
+    assert dict(zip(as_bytes[: len(nodes)], as_bytes[len(nodes):])) == uf
+
+
+def test_assign_clusters_empty_edges_and_algorithm_parity(spark):
+    """With no accepted edge every file is its own cluster, on both the
+    union-find and the Kiveris path; with edges the paths agree."""
+    from datasketches_rust_spark.plans.pipeline import assign_clusters
+
+    shas = [bytes([b]) * 32 for b in (0x01, 0x81, 0xC0, 0x40)]
+    ids = spark.createDataFrame(
+        [(f"f{i}", shas[i % 4]) for i in range(10)], "file_id string, content_sha binary"
+    )
+    empty = spark.createDataFrame([], "src binary, dst binary")
+    for single_task in (True, False):
+        out = assign_clusters(ids, empty, single_task).collect()
+        assert len(out) == 10
+        assert all(r["cluster_id"] == r["content_sha"] for r in out)
+    edges = spark.createDataFrame([(shas[1], shas[2]), (shas[3], shas[2])], "src binary, dst binary")
+    a = sorted(map(tuple, assign_clusters(ids, edges, True).collect()))
+    b = sorted(map(tuple, assign_clusters(ids, edges, False).collect()))
+    assert a == b
+    assert {r[2] for r in a if r[1] != shas[0].hex()} == {shas[3].hex()}
+
+
 def test_ngram_jaccard_pairs_small(spark):
     t1 = " ".join(f"w{i}" for i in range(50))
     t2 = " ".join(f"w{i}" if i != 25 else "CHANGED" for i in range(50))

@@ -8,6 +8,9 @@ Correctness anchors (SURVEY.md §5 carry-over):
   produces identical clusters.
 """
 
+import shutil
+from collections import Counter
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -116,11 +119,56 @@ def test_checkpoint_resume_identical_and_reused(spark, corpus, tmp_path):
     # every stage of the second run resumed from checkpoint
     assert set(second.stage) >= {"signatures", "rep_keys", "candidates", "verified", "clusters"}
 
-    # config change breaks the fingerprint chain → stages recompute
-    pipe3 = DedupPipeline(spark, CFG.with_(kmv_k=128), checkpoint_dir=ckpt)
+    # a verify-only change: the stages upstream of verify are reused, and
+    # verified + clusters recompute (the threshold is in verified's
+    # fingerprint, which clusters' chains)
+    before = Counter(map(tuple, metrics.itertuples(index=False)))
+    pipe3 = DedupPipeline(spark, CFG.with_(jaccard_threshold=0.5), checkpoint_dir=ckpt)
     pipe3.run(corpus.drop("file_seq"))
-    m3 = spark.read.parquet(f"{ckpt}/_metrics").toPandas()
-    assert not m3[m3.input_fingerprint.str.startswith(str(CFG.with_(kmv_k=128).cfg_hash()))].reused.any()
+    after = spark.read.parquet(f"{ckpt}/_metrics").toPandas()
+    run3 = pd.DataFrame(
+        list((Counter(map(tuple, after.itertuples(index=False))) - before).elements()),
+        columns=after.columns,
+    ).set_index("stage")
+    assert run3.loc[["signatures", "ids", "rep_keys", "candidates"], "reused"].all()
+    assert not run3.loc[["verified", "clusters"], "reused"].any()
+
+    # a signature-parameter change breaks the fingerprint chain → every
+    # stage of that run recomputes (each fingerprint chains its upstream's)
+    pipe4 = DedupPipeline(spark, CFG.with_(kmv_k=128), checkpoint_dir=ckpt)
+    pipe4.run(corpus.drop("file_seq"))
+    m4 = spark.read.parquet(f"{ckpt}/_metrics").toPandas()
+    run4 = m4[m4.input_fingerprint.str.contains(str(CFG.with_(kmv_k=128).cfg_hash()))]
+    assert set(run4.stage) >= {"signatures", "rep_keys", "candidates", "verified", "clusters"}
+    assert not run4.reused.any()
+
+
+def test_stage_resume_meta_errors(spark, tmp_path):
+    """A missing or corrupt stage meta parquet means recompute; an error
+    that is not a missing/unreadable meta propagates instead of being
+    swallowed."""
+    ckpt = str(tmp_path / "ckpt")
+    pipe = DedupPipeline(spark, CFG, checkpoint_dir=ckpt)
+    compute = lambda: spark.range(5)  # noqa: E731
+    pipe._stage("ids", "up", compute)
+    pipe._stage("ids", "up", compute)
+    assert [m[3] for m in pipe.metrics] == [False, True]
+
+    meta = tmp_path / "ckpt" / "ids__meta"
+    for f in meta.glob("*.parquet"):
+        f.write_bytes(b"not parquet")
+    pipe._stage("ids", "up", compute)
+    assert pipe.metrics[-1][3] is False
+    shutil.rmtree(meta)  # a run cut between the stage write and its meta
+    pipe._stage("ids", "up", compute)
+    assert pipe.metrics[-1][3] is False
+
+    def broken(*_):
+        raise RuntimeError("boom")
+
+    pipe.spark = type("S", (), {"read": property(broken)})()
+    with pytest.raises(RuntimeError, match="boom"):
+        pipe._stage("ids", "up", compute)
 
 
 def test_hot_lsh_bucket_star_path(spark):
@@ -233,7 +281,7 @@ def test_pipeline_containment_threads_ndocs_hint(spark, corpus, monkeypatch):
     assert out == expect
 
 
-def test_rep_payload_auto_mode_resolves_from_key_count(spark, corpus):
+def test_rep_payload_auto_mode_resolves_from_key_count(spark, corpus, monkeypatch):
     """broadcast_rep_payload=None derives the join side from the measured
     rep-key count (round-4 ADVICE #3: no static knob to forget): a limit
     below the key count forces the shuffle fallback, a comfortable limit
@@ -244,8 +292,22 @@ def test_rep_payload_auto_mode_resolves_from_key_count(spark, corpus):
         .orderBy("file_id")
         .toPandas()
     )
+    import datasketches_rust_spark.operators.lsh as L
+    import datasketches_rust_spark.plans.pipeline as P
+
+    probes, probe = [], L.has_duplicate_id_rows
+
+    def spy(ids):
+        probes.append(ids)
+        return probe(ids)
+
+    monkeypatch.setattr(P, "has_duplicate_id_rows", spy)
+    monkeypatch.setattr(L, "has_duplicate_id_rows", spy)
     forced_fallback = DedupPipeline(
         spark, CFG.with_(broadcast_rep_payload=None, broadcast_key_limit=1)
     )
     b = forced_fallback.run(corpus.drop("file_seq")).orderBy("file_id").toPandas()
     pd.testing.assert_frame_equal(a, b)
+    # the probe prefetched before the decision is the one the fallback's
+    # reps stage consumes: it runs once, and its result is read
+    assert len(probes) == 1

@@ -21,6 +21,7 @@ from datasketches_rust_spark.sigkit.kmv import (
 from datasketches_rust_spark.sigkit.oph import band_hashes, oph_minhashes
 from datasketches_rust_spark.sigkit.simhash import hamming64, simhash64
 from datasketches_rust_spark.sigkit.tokenize import shingle_hashes, token_hash_stream
+from datasketches_rust_spark.sigkit.union_find import union_find
 from datasketches_rust_spark.sigkit.xxhash import xxh64_u64
 
 CFG = PipelineConfig()
@@ -323,3 +324,63 @@ def test_token_spans_multiple_cuts_in_one_run():
         assert np.array_equal(
             xxh64_slices(buf, starts, lengths, 9001), xxh64_str_list(expect, 9001)
         )
+
+
+def _sorted_keys(n, seed=0):
+    """n distinct random 32-byte keys in ascending byte order (about half
+    lead with a byte >= 0x80, and every key ends in a zero byte)."""
+    rng = np.random.default_rng(seed)
+    raw = rng.integers(0, 256, (n, 32), dtype=np.uint8)
+    raw[:, -1] = 0  # S32 strips trailing zeros on conversion, never in compares
+    keys = np.unique(raw.view("S32").ravel())
+    assert len(keys) == n
+    return keys
+
+
+def _path_random_order(n):
+    keys = _sorted_keys(n, seed=1)
+    rng = np.random.default_rng(2)
+    walk = keys[rng.permutation(n)]  # path visits the keys in random order
+    e = rng.permutation(n - 1)
+    return walk[:-1][e], walk[1:][e], keys
+
+
+def _caterpillar_descending(n):
+    """A spine whose keys fall along it, one leaf per spine node, the
+    smallest key on the far end's leaf. Hooking NODES instead of roots
+    moves the minimum one spine hop per round (n/2 rounds)."""
+    keys = _sorted_keys(n, seed=3)[::-1]
+    half = n // 2
+    spine, leaves = keys[:half], keys[half:]
+    return np.concatenate([spine[:-1], spine]), np.concatenate([spine[1:], leaves]), keys
+
+
+@pytest.mark.parametrize("graph", [_path_random_order, _caterpillar_descending])
+def test_union_find_rounds_logarithmic(graph):
+    """One component labelled by its minimum key, in O(log n) hook rounds."""
+    src, dst, keys = graph(100_000)
+    nodes, comp, rounds = union_find(src, dst)
+    assert np.array_equal(nodes, np.sort(keys))
+    assert (comp == nodes[0]).all()
+    assert rounds <= int(np.ceil(np.log2(len(keys)))), rounds
+
+
+def test_union_find_unsigned_byte_order_and_degenerate_inputs():
+    """S32 order is unsigned byte order (Spark's binary order, and Python's
+    bytes order), self-loops and duplicate edges change nothing, and an
+    empty edge set yields no nodes."""
+    lo = bytes([0x10]) + bytes(31)
+    hi = bytes([0x90]) + bytes(31)  # < lo under a signed-byte compare
+    top = bytes([0xFF]) * 31 + bytes(1)
+    alone = bytes([0x05]) * 32
+    src = np.array([hi, top, top, hi, alone], dtype="S32")
+    dst = np.array([top, lo, lo, hi, alone], dtype="S32")
+    nodes, comp, rounds = union_find(src, dst)
+    raw = [r.tobytes() for r in nodes.view(np.uint8).reshape(-1, 32)]
+    assert raw == sorted([lo, hi, top])
+    assert {c.tobytes() for c in comp.view(np.uint8).reshape(-1, 32)} == {lo}
+    assert rounds >= 1
+
+    empty = np.array([], dtype="S32")
+    nodes, comp, rounds = union_find(empty, empty)
+    assert len(nodes) == len(comp) == rounds == 0
