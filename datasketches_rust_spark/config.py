@@ -6,7 +6,9 @@ sketch (``/root/reference/datasketches/src/hash/seed.rs:30-55``; default
 update seed 9001 at ``hash/mod.rs:83``). Our analog is ``cfg_hash``: a
 64-bit fingerprint of every parameter that affects signature values
 (tokenizer version, shingle width, seed, k, banding), carried as a column
-through checkpoints and asserted on resume / before any signature join.
+of the signature table. What guards reuse is the pipeline's resume check:
+the signatures stage's checkpoint fingerprint includes ``cfg_hash()``, so
+a resumed run with different signature parameters recomputes the stage.
 """
 
 from __future__ import annotations

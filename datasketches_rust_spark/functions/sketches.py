@@ -200,7 +200,7 @@ def _reflayout_triples(item_col: str, row_seeds, width: int):
     import numpy as np
     import pyarrow as pa
 
-    from ..operators.signatures import _arrow_string_to_buf
+    from ..sigkit.arrow_buf import to_buf
     from ..sigkit.murmur3 import murmur3_bucket_indexes
 
     def run(batches):
@@ -208,7 +208,7 @@ def _reflayout_triples(item_col: str, row_seeds, width: int):
             if not rb.num_rows:
                 continue
             items = rb.column(rb.schema.get_field_index(item_col))
-            buf, offs = _arrow_string_to_buf(items)
+            buf, offs = to_buf(items)
             idx = murmur3_bucket_indexes(buf, offs, row_seeds, width)  # (n, d)
             n, d = idx.shape
             w = rb.column(rb.schema.get_field_index("__w")).to_numpy(
@@ -464,8 +464,8 @@ def bloom_might_contain(
 
     Long probe keys under the broadcast gate take the PACKED path: the
     set-bit relation is OR-reduced into one dense ``num_bits/8``-byte
-    bitmap (per-partition partial bitmaps, driver OR — the same shape as
-    the substring prefilter), broadcast once, and every probe batch is
+    bitmap (at most 8 partial bitmaps, driver OR — the reducer the
+    substring prefilter uses too), broadcast once, and every probe batch is
     checked vectorized in a single ``mapInArrow`` kernel. That replaces
     the old probe plan — broadcast a hash relation of up to ``num_bits``
     set-bit rows, k-way ``posexplode`` of every probe row, join, and a
@@ -520,32 +520,15 @@ def _bloom_might_contain_packed(
     import numpy as np
     import pyarrow as pa
 
+    from ..sigkit.arrow_buf import or_reduce_bitmap
     from ..sigkit.xxhash import xxh64_u64
 
-    nbytes = (num_bits + 7) // 8
-
-    def partials(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        bm = np.zeros(nbytes, dtype=np.uint8)
-        seen = False
-        for rb in batches:
-            seen = True
-            if rb.num_rows:
-                b = np.asarray(rb.column(0)).astype(np.int64)
-                # scatter target is the (cache-resident) packed bitmap
-                np.bitwise_or.at(
-                    bm, b >> 3, np.left_shift(1, (b & 7)).astype(np.uint8)
-                )
-        if seen:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([bm.tobytes()], type=pa.binary())], ["bm"]
-            )
-
-    out = np.zeros(nbytes, dtype=np.uint8)
-    for row in bits.select(F.col("bit").cast("long")).mapInArrow(
-        partials, "bm binary"
-    ).collect():
-        out |= np.frombuffer(row["bm"], dtype=np.uint8)
-    bmb = probe.sparkSession.sparkContext.broadcast(out.tobytes())
+    bitmap = or_reduce_bitmap(
+        bits.select(F.col("bit").cast("long")),
+        lambda rb: np.asarray(rb.column(0)),
+        num_bits,
+    )
+    bmb = probe.sparkSession.sparkContext.broadcast(bitmap)
 
     deduped = probe.dropDuplicates()
     out_schema = deduped.withColumn("might_contain", F.lit(True)).schema

@@ -42,6 +42,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, functions as F
 
+from ..sigkit.arrow_buf import binary_array, to_buf
 from ..sigkit.union_find import union_find
 
 ASSIGN_SCHEMA = "node binary, component binary"
@@ -152,19 +153,15 @@ def _fixed_width_keys(col: pa.Array) -> np.ndarray:
     width (the 32-byte content_sha)."""
     if col.null_count:
         raise ValueError("union_find_components: null node id")
-    off = np.frombuffer(col.buffers()[1], np.int32, len(col) + 1, col.offset * 4)
-    width = int(off[-1] - off[0]) // max(len(col), 1)
+    buf, off = to_buf(col)
+    width = len(buf) // max(len(col), 1)
     if width == 0 or not (np.diff(off) == width).all():
         raise ValueError("union_find_components: node ids must share one nonzero width")
-    return np.frombuffer(col.buffers()[2], f"S{width}", len(col), int(off[0]))
+    return buf.view(f"S{width}")
 
 
-def _binary_array(keys: np.ndarray) -> pa.Array:
-    width = keys.dtype.itemsize
-    offsets = np.arange(0, (len(keys) + 1) * width, width, dtype=np.int32)
-    return pa.Array.from_buffers(
-        pa.binary(), len(keys), [None, pa.py_buffer(offsets), pa.py_buffer(keys)]
-    )
+def _key_array(keys: np.ndarray) -> pa.Array:
+    return binary_array(keys, np.arange(len(keys) + 1))
 
 
 def _union_find_task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -178,7 +175,7 @@ def _union_find_task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBat
     nodes, comp, _ = union_find(np.concatenate(src), np.concatenate(dst))
     for i in range(0, len(nodes), _OUT_ROWS):
         yield pa.RecordBatch.from_arrays(
-            [_binary_array(nodes[i:i + _OUT_ROWS]), _binary_array(comp[i:i + _OUT_ROWS])],
+            [_key_array(nodes[i:i + _OUT_ROWS]), _key_array(comp[i:i + _OUT_ROWS])],
             ["node", "component"],
         )
 

@@ -7,7 +7,7 @@ call itself is stubbed (the sandbox has no image/audio libraries).
 
 - :func:`attach_media_meta` — sniff container format + sizes from magic
   bytes (real, vectorized).
-- :func:`extract_features` — mapInPandas over Arrow batches producing a
+- :func:`extract_features` — mapInArrow over Arrow batches producing a
   fixed-dim feature vector per asset. ``decoder="stub"`` raises
   NotImplementedError at the exact seam where PIL/ffmpeg would plug in;
   ``decoder="fake"`` produces a *deterministic* byte-statistics vector so
@@ -21,8 +21,11 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import ArrayType, DoubleType
+
+from ..sigkit.arrow_buf import list_array, to_buf
 
 MEDIA_SCHEMA = "struct<format string, n_bytes long, magic string>"
 
@@ -56,46 +59,43 @@ def attach_media_meta(df: DataFrame, binary_col: str) -> DataFrame:
 FEATURE_DIM = 16
 
 
-def _fake_decode_features(blobs: pd.Series) -> np.ndarray:
-    """Deterministic byte-statistics 'features' standing in for a decoder.
+def _fake_decode_features(buf: np.ndarray, offs: np.ndarray) -> np.ndarray:
+    """Deterministic byte-statistics 'features' standing in for a decoder:
+    each asset's histogram of high nibbles, normalized (zeros when empty).
 
     Real deployment replaces this with PIL/torchaudio/ffmpeg decode +
     model features; the Spark plumbing (batch shape, schema, partitioning)
     is identical.
     """
-    out = np.zeros((len(blobs), FEATURE_DIM), dtype=np.float64)
-    for i, blob in enumerate(blobs):
-        a = np.frombuffer(bytes(blob), dtype=np.uint8)
-        if len(a) == 0:
-            continue
-        hist = np.bincount(a >> 4, minlength=16).astype(np.float64)
-        out[i] = hist / hist.sum()
-    return out
+    n = len(offs) - 1
+    asset = np.repeat(np.arange(n, dtype=np.int64), np.diff(offs))
+    hist = np.bincount(asset * FEATURE_DIM + (buf >> 4), minlength=n * FEATURE_DIM)
+    hist = hist.reshape(n, FEATURE_DIM).astype(np.float64)
+    total = hist.sum(axis=1, keepdims=True)
+    return np.divide(hist, total, out=np.zeros_like(hist), where=total > 0)
 
 
 def extract_features(
     df: DataFrame, binary_col: str, id_col: str, decoder: str = "fake"
 ) -> DataFrame:
     """(id, features array<double>) per asset via Arrow-batched decode."""
-    id_t = df.select(id_col).schema[0].dataType.simpleString()
+    schema = df.select(id_col).schema.add("features", ArrayType(DoubleType()))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
             if decoder == "stub":
                 raise NotImplementedError(
                     "media decode requires an image/audio codec library; "
                     "plug PIL/torchaudio in here (operators/multimodal.py)"
                 )
-            feats = _fake_decode_features(pdf[binary_col])
-            yield pd.DataFrame(
-                {"__id": pdf[id_col], "features": list(feats)}
+            feats = _fake_decode_features(*to_buf(rb.column(1)))
+            offsets = np.arange(0, feats.size + 1, FEATURE_DIM)
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(0), list_array(feats.reshape(-1), offsets)],
+                [id_col, "features"],
             )
 
-    return (
-        df.select(id_col, binary_col)
-        .mapInPandas(run, f"__id {id_t}, features array<double>")
-        .withColumnRenamed("__id", id_col)
-    )
+    return df.select(id_col, binary_col).mapInArrow(run, schema)
 
 
 def frame_sample_plan(

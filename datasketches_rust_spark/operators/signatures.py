@@ -2,7 +2,7 @@
 
 The reference's build path (`/root/reference/datasketches/src/thetafamily/
 theta/sketch.rs:128-130`: update → hash → theta-screen → k-min table) runs
-here as one ``mapInPandas`` pass: each Arrow batch of files is tokenized,
+here as one ``mapInArrow`` pass: each Arrow batch of files is tokenized,
 shingled, hashed and reduced to
 
 - ``minhash_kmv``: sorted k smallest distinct 63-bit shingle hashes — the
@@ -22,15 +22,15 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from ..config import PipelineConfig
+from ..sigkit.arrow_buf import binary_array, list_array, to_buf
 from ..sigkit.kmv import kmv_signatures
 from ..sigkit.oph import band_hashes, oph_minhashes
 from ..sigkit.simhash import simhash64
-from ..sigkit.tokenize import shingle_hashes, shingle_hashes_buf
+from ..sigkit.tokenize import shingle_hashes_buf
 
 # content_sha is BINARY(32), not the 64-char hex string: it is the join /
 # shuffle / group key of every downstream stage, and halving the key bytes
@@ -50,73 +50,11 @@ SIGNATURE_SCHEMA = (
 )
 
 
-def signature_batch(pdf: pd.DataFrame, cfg: PipelineConfig) -> pd.DataFrame:
-    """Pure-pandas signature kernel for one Arrow batch (testable solo)."""
-    texts = pdf["content"].tolist()
-    vals, offs = shingle_hashes(texts, cfg.shingle_width, cfg.seed)
-    sig_vals, sig_offs, theta, n_distinct = kmv_signatures(vals, offs, cfg.kmv_k)
-    sim = simhash64(vals, offs)
-    mh = oph_minhashes(vals, offs, cfg.num_perm, cfg.seed)
-    bh = band_hashes(mh, cfg.num_bands, cfg.band_rows, cfg.seed)
-
-    sig_le = sig_vals.astype("<u8")
-    nonempty = n_distinct > 0
-    return pd.DataFrame(
-        {
-            "file_id": pdf["file_id"].to_numpy(),
-            "content_sha": pdf["content_sha"].to_numpy(),
-            "n_shingles": n_distinct,
-            "minhash_kmv": [
-                sig_le[sig_offs[i]: sig_offs[i + 1]].tobytes() for i in range(len(pdf))
-            ],
-            "theta64": theta,
-            "simhash64": sim,
-            "bands": [bh[i] if nonempty[i] else np.empty(0, np.int64) for i in range(len(pdf))],
-            "cfg_hash": np.full(len(pdf), cfg.cfg_hash(), dtype=np.int64),
-        }
-    )
-
-
-def _arrow_string_to_buf(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """(uint8 buffer, (n+1,) int64 offsets) view of an Arrow string column.
-
-    Zero-copy except the int32→int64 offset upcast: the UTF-8 bytes are
-    numpy views of the Arrow data buffer — no per-doc Python objects.
-    """
-    if pa.types.is_string(arr.type):
-        arr = arr.cast(pa.large_string())
-    bufs = arr.buffers()
-    offs = np.frombuffer(bufs[1], dtype=np.int64)[arr.offset : arr.offset + len(arr) + 1]
-    data = (
-        np.frombuffer(bufs[2], dtype=np.uint8)
-        if bufs[2] is not None
-        else np.empty(0, dtype=np.uint8)
-    )
-    lo, hi = int(offs[0]), int(offs[-1])
-    return data[lo:hi], offs - lo
-
-
-def _list_array(values: np.ndarray, offsets: np.ndarray) -> pa.ListArray:
-    return pa.ListArray.from_arrays(
-        pa.array(offsets.astype(np.int32)), pa.array(values.astype(np.int64))
-    )
-
-
-def _binary_array(values: np.ndarray, elem_offsets: np.ndarray) -> pa.BinaryArray:
-    """Zero-copy binary column: element i = values[off[i]:off[i+1]] bytes."""
-    byte_offs = (elem_offsets * values.dtype.itemsize).astype(np.int32)
-    return pa.BinaryArray.from_buffers(
-        pa.binary(),
-        len(elem_offsets) - 1,
-        [None, pa.py_buffer(byte_offs), pa.py_buffer(np.ascontiguousarray(values))],
-    )
-
-
 def signature_record_batch(rb: pa.RecordBatch, cfg: PipelineConfig) -> pa.RecordBatch:
     """Arrow-native signature kernel: UTF-8 bytes never become Python strs."""
     n = rb.num_rows
     content = rb.column(rb.schema.get_field_index("content"))
-    buf, doc_offs = _arrow_string_to_buf(content)
+    buf, doc_offs = to_buf(content)
     vals, offs = shingle_hashes_buf(buf, doc_offs, cfg.shingle_width, cfg.seed)
     sig_vals, sig_offs, theta, n_distinct = kmv_signatures(vals, offs, cfg.kmv_k)
     sim = simhash64(vals, offs)
@@ -133,10 +71,10 @@ def signature_record_batch(rb: pa.RecordBatch, cfg: PipelineConfig) -> pa.Record
             rb.column(rb.schema.get_field_index("file_id")),
             rb.column(rb.schema.get_field_index("content_sha")),
             pa.array(n_distinct),
-            _binary_array(sig_vals.astype("<u8"), sig_offs),
+            binary_array(sig_vals.astype("<u8"), sig_offs),
             pa.array(theta),
             pa.array(sim),
-            _list_array(band_vals, band_offs),
+            list_array(band_vals, band_offs),
             pa.array(np.full(n, cfg.cfg_hash(), dtype=np.int64)),
         ],
         names=[

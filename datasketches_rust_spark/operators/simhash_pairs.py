@@ -14,12 +14,14 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import LongType
 
 from ..config import PipelineConfig
+from ..sigkit.arrow_buf import to_buf
 from ..sigkit.simhash import simhash64
-from ..sigkit.tokenize import shingle_hashes
+from ..sigkit.tokenize import shingle_hashes_buf
 
 
 def simhash_fingerprints(
@@ -28,16 +30,22 @@ def simhash_fingerprints(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    id_t = docs.select(id_col).schema[0].dataType.simpleString()
+    """(id, simhash64) per doc, hashed from the Arrow text buffer by the
+    signature kernel's path (``shingle_hashes_buf``); a null text is an
+    empty doc (fingerprint 0)."""
+    schema = docs.select(id_col).schema.add("simhash64", LongType())
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vals, offs = shingle_hashes(pdf[text_col].tolist(), cfg.shingle_width, cfg.seed)
-            yield pd.DataFrame({"__id": pdf[id_col], "simhash64": simhash64(vals, offs)})
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            buf, doc_offs = to_buf(rb.column(1))
+            vals, offs = shingle_hashes_buf(buf, doc_offs, cfg.shingle_width, cfg.seed)
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(0), pa.array(simhash64(vals, offs))], [id_col, "simhash64"]
+            )
 
-    return docs.select(id_col, text_col).mapInPandas(
-        run, f"__id {id_t}, simhash64 long"
-    ).withColumnRenamed("__id", id_col)
+    return docs.select(id_col, text_col).mapInArrow(run, schema)
 
 
 def simhash_pairs(

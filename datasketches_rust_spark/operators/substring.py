@@ -26,7 +26,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
-from .signatures import _arrow_string_to_buf
+from ..sigkit.arrow_buf import or_reduce_bitmap, to_buf
 
 _B = np.uint64(1099511628211)  # FNV prime, odd → invertible mod 2^64
 _B_INV = np.uint64(pow(int(_B), -1, 1 << 64))
@@ -126,39 +126,17 @@ def _prefix_bloom_bitmap(
     The prefix hash needs only the first ``window`` bytes of each doc, so
     this pass scans substring(text, 1, window) — O(n_docs * window) bytes
     of exchange + kernel input, not the corpus (see ``_prefix_rows`` for
-    the scan-parallelism contract). Per-partition bitmaps (m/8 bytes) are
-    OR-reduced driver-side.
+    the scan-parallelism contract). At most 8 partial bitmaps (m/8 bytes
+    each) are OR-reduced driver-side (``or_reduce_bitmap``).
     """
-    pre = _prefix_rows(base, text_col, window)
 
-    def bitmaps(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        bm = np.zeros(m // 8, dtype=np.uint8)
-        seen = False
-        for rb in batches:
-            seen = True
-            if not rb.num_rows:
-                continue
-            buf, offs = _arrow_string_to_buf(rb.column(0))
-            h, woffs = rolling_window_hashes_buf(buf, offs, window)
-            if len(h) == 0:
-                continue
-            counts = np.diff(woffs)
-            hs = h[woffs[:-1][counts > 0]]  # first-window hash per doc
-            pos = _bloom_positions_np(hs, m)
-            np.bitwise_or.at(
-                bm,
-                (pos >> np.uint64(3)).astype(np.int64),
-                np.left_shift(1, (pos & np.uint64(7)).astype(np.int64)).astype(np.uint8),
-            )
-        if seen:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([bm.tobytes()], type=pa.binary())], ["bm"]
-            )
+    def positions(rb: pa.RecordBatch) -> np.ndarray:
+        buf, offs = to_buf(rb.column(0))
+        h, woffs = rolling_window_hashes_buf(buf, offs, window)
+        hs = h[woffs[:-1][np.diff(woffs) > 0]]  # first-window hash per doc
+        return _bloom_positions_np(hs, m)
 
-    out = np.zeros(m // 8, dtype=np.uint8)
-    for row in pre.mapInArrow(bitmaps, "bm binary").collect():
-        out |= np.frombuffer(row["bm"], dtype=np.uint8)
-    return out.tobytes()
+    return or_reduce_bitmap(_prefix_rows(base, text_col, window), positions, m)
 
 
 def _hash_batches(id_col: str, text_col: str, window: int, bloom=None, m: int = 0):
@@ -172,7 +150,7 @@ def _hash_batches(id_col: str, text_col: str, window: int, bloom=None, m: int = 
     false positives are removed by the exact ``instr`` verify.
 
     Buffer path: UTF-8 bytes are read straight from the Arrow data buffer
-    (``_arrow_string_to_buf``) and hashed in ONE vectorized pass over the
+    (``arrow_buf.to_buf``) and hashed in ONE vectorized pass over the
     whole batch (``rolling_window_hashes_buf``); the bloom screen is one
     batch-wide mask. The only remaining per-doc step is the np.unique of
     each doc's (post-screen) window-hash segment — contiguous, L1-sized
@@ -186,7 +164,7 @@ def _hash_batches(id_col: str, text_col: str, window: int, bloom=None, m: int = 
             if not rb.num_rows:
                 continue
             ids = rb.column(rb.schema.get_field_index(id_col))
-            buf, offs = _arrow_string_to_buf(
+            buf, offs = to_buf(
                 rb.column(rb.schema.get_field_index(text_col))
             )
             h, woffs = rolling_window_hashes_buf(buf, offs, window)
@@ -327,7 +305,7 @@ def duplicated_spans(
             if not rb.num_rows:
                 continue
             ids = rb.column(rb.schema.get_field_index(id_col))
-            buf, offs = _arrow_string_to_buf(
+            buf, offs = to_buf(
                 rb.column(rb.schema.get_field_index(text_col))
             )
             spans = shared_spans_buf(buf, offs, min_len)
@@ -389,7 +367,7 @@ def doc_fingerprints(
             if not rb.num_rows:
                 continue
             ids = rb.column(rb.schema.get_field_index(id_col))
-            buf, offs = _arrow_string_to_buf(
+            buf, offs = to_buf(
                 rb.column(rb.schema.get_field_index(text_col))
             )
             h, woffs = rolling_window_hashes_buf(buf, offs, window)

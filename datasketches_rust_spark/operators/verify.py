@@ -14,9 +14,10 @@ no-false-negatives mode of the reference's frequent-items thresholds
 the recall>=0.99 contract. Exact-mode pairs are thresholded exactly.
 
 The kernel is fully vectorized across a batch of pairs: all signature
-arrays are concatenated into one value vector with pair ids, one lexsort
-finds duplicate (pair, value) entries = per-pair intersection sizes. No
-per-pair Python beyond pointer-level ``np.concatenate``.
+arrays are read in place from the Arrow batch's kmv value buffers and
+concatenated into one value vector with pair ids, one lexsort finds
+duplicate (pair, value) entries = per-pair intersection sizes. No per-pair
+Python.
 """
 
 from __future__ import annotations
@@ -24,34 +25,41 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from ..config import PipelineConfig
+from ..sigkit.arrow_buf import to_buf
 
 VERIFIED_SCHEMA = "sha_a binary, sha_b binary, jaccard_est double, accepted boolean"
 
 
-def jaccard_batch(
-    kmv_a: list, theta_a: np.ndarray, kmv_b: list, theta_b: np.ndarray
-) -> np.ndarray:
+def _kmv_values(kmv) -> tuple[np.ndarray, np.ndarray]:
+    """(int64 hashes, (n+1,) per-pair offsets) of a kmv column — an Arrow
+    binary array read zero-copy, or a sequence of bytes converted once."""
+    if not isinstance(kmv, pa.Array):
+        kmv = pa.array(kmv, pa.binary())
+    buf, offs = to_buf(kmv)
+    return buf.view("<u8").view(np.int64), offs // 8
+
+
+def jaccard_batch(kmv_a, theta_a: np.ndarray, kmv_b, theta_b: np.ndarray) -> np.ndarray:
     """Vectorized pairwise theta-Jaccard for a batch of pairs.
 
-    ``kmv_a``/``kmv_b`` are binary blobs of little-endian uint64 sorted
-    hashes (the signature column's packed form): one bytes-join +
-    frombuffer decodes the whole batch.
+    ``kmv_a``/``kmv_b`` hold binary blobs of little-endian uint64 sorted
+    hashes (the signature column's packed form), as Arrow binary arrays
+    (read in place from their value and offset buffers) or as sequences
+    of bytes.
     """
     n = len(theta_a)
-    la = np.fromiter((len(x) // 8 for x in kmv_a), dtype=np.int64, count=n)
-    lb = np.fromiter((len(x) // 8 for x in kmv_b), dtype=np.int64, count=n)
-    theta = np.minimum(theta_a, theta_b).astype(np.int64)
-
     if n == 0:
         return np.empty(0, dtype=np.float64)
+    va, oa = _kmv_values(kmv_a)
+    vb, ob = _kmv_values(kmv_b)
+    la, lb = np.diff(oa), np.diff(ob)
+    theta = np.minimum(theta_a, theta_b).astype(np.int64)
 
-    vals = np.frombuffer(
-        b"".join(kmv_a) + b"".join(kmv_b), dtype="<u8"
-    ).astype(np.int64)
+    vals = np.concatenate([va, vb])
     pid = np.concatenate([np.repeat(np.arange(n), la), np.repeat(np.arange(n), lb)])
 
     keep = vals < np.concatenate([np.repeat(theta, la), np.repeat(theta, lb)])
@@ -95,11 +103,10 @@ def verify_pairs(
     # leaving the auto default (None) pays one narrow count over the
     # candidate relation so the broadcast decision reflects the actual
     # cardinality instead of silently inheriting the broadcast path.
-    broadcast = getattr(cfg, "broadcast_rep_payload", True)
+    broadcast = cfg.broadcast_rep_payload
     if broadcast is None:
-        limit = getattr(cfg, "broadcast_key_limit", 15_000_000)
         # each candidate pair contributes <= 2 shas to the broadcast set
-        broadcast = candidates.count() * 2 <= limit
+        broadcast = candidates.count() * 2 <= cfg.broadcast_key_limit
     if broadcast:
         cand_shas = (
             candidates.select(F.col("sha_a").alias("content_sha"))
@@ -148,23 +155,19 @@ def verify_pairs(
     slack = 2.0  # NUM_STD_DEVS = 2.0, jaccard_similarity.rs:36
     max_theta = (1 << 63) - 1
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            ta = pdf["theta_a"].to_numpy()
-            tb = pdf["theta_b"].to_numpy()
-            j = jaccard_batch(pdf["kmv_a"].tolist(), ta, pdf["kmv_b"].tolist(), tb)
+            ta = rb.column("theta_a").to_numpy()
+            tb = rb.column("theta_b").to_numpy()
+            j = jaccard_batch(rb.column("kmv_a"), ta, rb.column("kmv_b"), tb)
             estimating = (ta < max_theta) | (tb < max_theta)
             sigma = np.sqrt(np.clip(j * (1.0 - j), 0.0, None) / k)
             ub = np.where(estimating, j + slack * sigma, j)
-            yield pd.DataFrame(
-                {
-                    "sha_a": pdf["sha_a"],
-                    "sha_b": pdf["sha_b"],
-                    "jaccard_est": j,
-                    "accepted": ub >= threshold,
-                }
+            yield pa.RecordBatch.from_arrays(
+                [rb.column("sha_a"), rb.column("sha_b"), pa.array(j), pa.array(ub >= threshold)],
+                ["sha_a", "sha_b", "jaccard_est", "accepted"],
             )
 
-    return joined.mapInPandas(run, schema=VERIFIED_SCHEMA)
+    return joined.mapInArrow(run, schema=VERIFIED_SCHEMA)

@@ -23,8 +23,4 @@ def fan_out_small_scan(df: DataFrame, min_partitions: int | None = None) -> Data
     """
     sc = df.sparkSession.sparkContext
     target = min_partitions or sc.defaultParallelism
-    try:
-        n = df.rdd.getNumPartitions()
-    except Exception:  # planning-only probe; never fail the caller's plan
-        return df
-    return df.repartition(target) if n < target else df
+    return df.repartition(target) if df.rdd.getNumPartitions() < target else df

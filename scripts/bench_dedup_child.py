@@ -23,6 +23,20 @@ from datasketches_rust_spark.plans.pipeline import DedupPipeline
 from datasketches_rust_spark.plans.session import get_spark
 
 
+class StageWallPipeline(DedupPipeline):
+    """DedupPipeline that records each stage's wall, keyed by stage name."""
+
+    def __init__(self, *args, **kwargs):
+        super().__init__(*args, **kwargs)
+        self.walls: dict[str, float] = {}
+
+    def _stage(self, name, upstream_fp, compute, materialize=True):
+        t = time.monotonic()
+        out = super()._stage(name, upstream_fp, compute, materialize)
+        self.walls[name] = round(time.monotonic() - t, 2)
+        return out
+
+
 def main(corpus_path: str, cpus: int) -> None:
     spark = get_spark(
         master=f"local[{cpus}]",
@@ -82,72 +96,22 @@ def main(corpus_path: str, cpus: int) -> None:
     n_files = corpus.count()  # warm the input outside the timed window
     # spawn the Python worker pool before timing: a real long job amortizes
     # interpreter startup to nothing; at bench scale it would skew the ratio
-    corpus.select("repo").mapInPandas(lambda it: it, "repo string").count()
+    corpus.select("repo").mapInArrow(lambda it: it, "repo string").count()
 
-    stage_walls = {}
+    # SPARK_GRAFT_STAGE_WALLS=1 (diagnostic): also time each stage of the
+    # same pipeline — every stage is an eager checkpoint, so a stage's wall
+    # is its own work; finds which stage stops scaling
+    timed = os.environ.get("SPARK_GRAFT_STAGE_WALLS") == "1"
+    pipe = (StageWallPipeline if timed else DedupPipeline)(spark, cfg)
     t0 = time.monotonic()
-    if os.environ.get("SPARK_GRAFT_STAGE_WALLS") == "1":
-        # diagnostic mode: eager-checkpoint each stage and time it — finds
-        # which stage stops scaling; not the official measurement (eager
-        # materialization breaks cross-stage pipelining)
-        from pyspark.sql import functions as F
-
-        from datasketches_rust_spark.operators.lsh import (
-            candidate_pairs,
-            exact_rep_keys,
-            has_duplicate_id_rows,
-            rep_payload,
-        )
-        from datasketches_rust_spark.operators.signatures import compute_signatures
-        from datasketches_rust_spark.operators.verify import verify_pairs
-        from datasketches_rust_spark.plans.pipeline import assign_clusters
-
-        def timed(name, df):
-            t = time.monotonic()
-            out = df.localCheckpoint(eager=True)
-            stage_walls[name] = round(time.monotonic() - t, 2)
-            return out
-
-        sigs = timed("signatures", compute_signatures(corpus, cfg))
-        ids = timed("ids", sigs.select("file_id", "content_sha"))
-        keys = timed("rep_keys", exact_rep_keys(ids))
-        t = time.monotonic()
-        payload = (
-            sigs.dropDuplicates(["content_sha", "file_id"])
-            if has_duplicate_id_rows(ids)
-            else sigs
-        )
-        stage_walls["dup_probe"] = round(time.monotonic() - t, 2)
-        # the broadcast payload attach is a zero-exchange scan, so its cost
-        # lands inside the consumer stages' walls (candidates/verify)
-        cands = timed(
-            "candidates", candidate_pairs(rep_payload(payload, keys, ["bands"]), cfg)
-        )
-        verified = timed(
-            "verify",
-            verify_pairs(
-                cands,
-                rep_payload(payload, keys, ["n_shingles", "minhash_kmv", "theta64"]),
-                cfg,
-            ),
-        )
-        edges = verified.where("accepted").select(
-            F.col("sha_a").alias("src"), F.col("sha_b").alias("dst")
-        )
-        # this diag runs the broadcast (key set fits one place) path
-        # throughout, so clusters take the pipeline's one-task union-find
-        clusters = timed("clusters", assign_clusters(ids, edges, single_task=True))
-        n_rows = clusters.count()
-    else:
-        pipe = DedupPipeline(spark, cfg)
-        clusters = pipe.run(corpus)
-        n_rows = clusters.count()
+    clusters = pipe.run(corpus)
+    n_rows = clusters.count()
     wall = time.monotonic() - t0
     n_clusters = clusters.select("cluster_id").distinct().count()
 
     out = {"wall": wall, "files": n_files, "rows": n_rows, "clusters": n_clusters}
-    if stage_walls:
-        out["stage_walls"] = stage_walls
+    if timed:
+        out["stage_walls"] = pipe.walls
     print(json.dumps(out))
     spark.stop()
     shutil.rmtree(f"/dev/shm/spark-bench-{cpus}", ignore_errors=True)

@@ -202,6 +202,9 @@ def test_multimodal_plumbing(spark):
     assert feats[1] == feats[3]  # deterministic → identical bytes dedup by feature
     assert feats[1] != feats[2]
     assert len(feats[1]) == 16 and abs(sum(feats[1]) - 1.0) < 1e-9
+    for asset_id, blob in rows:  # the per-asset loop is the reference
+        a = np.frombuffer(blob, np.uint8)
+        assert feats[asset_id] == (np.bincount(a >> 4, minlength=16) / max(len(a), 1)).tolist()
 
     with _pytest.raises(Exception, match="NotImplementedError|codec"):
         extract_features(df, "blob", "asset_id", decoder="stub").collect()
@@ -370,6 +373,28 @@ def test_simhash_pairs_skew_stress(spark):
     # star per bucket: hub 0 to each member once -> exactly n-1 pairs
     assert rows == n - 1, rows
     assert out.where("hamming = 0").count() == n - 1
+
+
+def test_simhash_fingerprints_match_kernel_incl_null_and_multibyte(spark):
+    """The Arrow fingerprint kernel equals sigkit's SimHash over the list
+    shingler; a null text is an empty doc, like the signature kernel."""
+    from datasketches_rust_spark.operators.simhash_pairs import simhash_fingerprints
+    from datasketches_rust_spark.sigkit.simhash import simhash64
+    from datasketches_rust_spark.sigkit.tokenize import shingle_hashes
+
+    texts = [
+        "",
+        "héllo wörld — ünïcode tokens_1 between ascii runs x y z",
+        "日本語のテキスト mixed with ascii tokens and 数字 42",
+        None,
+        "short doc",
+        " ".join(f"tok{i}" for i in range(50)),
+    ]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    got = dict(simhash_fingerprints(docs.repartition(2), CFG).collect())
+    want = simhash64(*shingle_hashes([t or "" for t in texts], CFG.shingle_width, CFG.seed))
+    assert got == dict(enumerate(want.tolist()))
+    assert got[3] == got[0] == 0
 
 
 def test_simhash_pairs_cap_preserves_small_corpus_output(spark):
