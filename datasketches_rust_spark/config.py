@@ -5,10 +5,10 @@ the same hash seed, via a 16-bit seed hash carried in every serialized
 sketch (``/root/reference/datasketches/src/hash/seed.rs:30-55``; default
 update seed 9001 at ``hash/mod.rs:83``). Our analog is ``cfg_hash``: a
 64-bit fingerprint of every parameter that affects signature values
-(tokenizer version, shingle width, seed, k, banding), carried as a column
-of the signature table. What guards reuse is the pipeline's resume check:
-the signatures stage's checkpoint fingerprint includes ``cfg_hash()``, so
-a resumed run with different signature parameters recomputes the stage.
+(tokenizer version, shingle width, seed, k, banding). It is not stored in
+the signature table: the pipeline's resume check guards reuse, because the
+signatures stage's checkpoint fingerprint includes ``cfg_hash()``, so a
+resumed run with different signature parameters recomputes the stage.
 """
 
 from __future__ import annotations

@@ -1,94 +1,48 @@
-"""Shared skew-safe bucket→candidate-pair machinery.
+"""Shared skew-safe bucket→candidate-pair plan of every LSH-family operator.
 
-Every LSH-family operator (MinHash bands, SimHash byte bands, hyperplane
-sign bands) reduces to the same shape: rows of (bucket key..., member id)
-where same-bucket members are candidate pairs. The quadratic failure mode
-is identical too — one hot bucket with m members emits m² pairs. This
-module is the single implementation of the fix used by all of them:
-
-1. bucket-size accounting (a partial-agg shuffle on the join key, so AQE
-   reuses the exchange);
-2. small buckets (size <= cap): all-pairs self-join — AQE skew-join splits
-   residual hot keys;
-3. big buckets: join-based star to the bucket-min member — O(m) pairs, one
-   hub row per bucket, never a collect_list; connectivity (what downstream
-   connected-components consumes) is preserved because a bucket is a clique
-   candidate and a star spans it.
-
-Members are joined BY ID ONLY — payloads (vectors, fingerprints, band
-arrays) must be re-attached after the pair set is distinct, so the shuffle
-carries ids, not data. The cap is the same "bound the damage" move as the
-reference's stride probing (common/hash_table.rs:425-427) and k-truncated
-unions (common/union.rs:130-135).
+MinHash bands, SimHash byte bands and hyperplane sign bands all reduce to
+rows of (bucket key..., member id) whose same-bucket members are candidate
+pairs, and all share one failure mode: a hot bucket of m members emits m²
+pairs. One plan serves them: an exchange on the bucket key, one Arrow
+kernel task per partition (``sigkit/bucket_pairs.py``: all pairs up to the
+cap, a star to the bucket minimum above it) and a ``distinct``. The key rows
+are read once, so nothing needs an eager checkpoint, a broadcast or a join.
+Members carry ids only: payloads (vectors, fingerprints, band arrays) are
+re-attached to the distinct pair set, so the shuffle carries ids, not data.
 """
 
 from __future__ import annotations
 
-from functools import reduce
+from typing import Iterator
 
-from pyspark.sql import Column, DataFrame, functions as F
+import pyarrow as pa
+from pyspark.sql import DataFrame
+from pyspark.sql.types import StructField, StructType
+
+from ..sigkit.bucket_pairs import capped_pairs
 
 
 def capped_bucket_pairs(
-    keys: DataFrame,
-    key_cols: list[str],
-    id_col: str,
-    cap: int,
-    materialize: bool = True,
+    keys: DataFrame, key_cols: list[str], id_col: str, cap: int
 ) -> DataFrame:
     """Distinct (id_a, id_b) with id_a < id_b from bucket-membership rows.
 
     ``keys``: one row per (bucket key..., member id); a member may appear
     in many buckets (bands). Buckets with more than ``cap`` members emit a
     star to the bucket minimum instead of all pairs.
-
-    Shuffle shape: ONE map-side-combined aggregation over the keys (sizes
-    + hub mins) whose over-cap slice — tiny by definition of the cap — is
-    BROADCAST back, so hot-bucket classification costs no shuffle or sort
-    of the key rows. The only large exchange left is the small-bucket
-    self-join on the bucket key (AQE skew-join splits residual hot keys).
-
-    ``materialize`` (default): the key rows feed SIX subplans (the
-    hot-list aggregate under three broadcast consumers, both self-join
-    sides, the star expansion), and Spark's exchange reuse does not
-    collapse them — without a lineage cut the upstream scan (in the
-    pipeline: the 2KB-row signature cache + band explode) is recomputed
-    per subplan. One eager localCheckpoint of the narrow key rows
-    (ids + 8-byte bucket key, executor-resident, spillable) plus one of
-    the tiny hot list turns that into one upstream evaluation + one
-    aggregation + cached reads. Pass False when ``keys`` is already a
-    materialized relation.
     """
-    if materialize:
-        keys = keys.localCheckpoint(eager=True)
-    hot = F.broadcast(
-        keys.groupBy(*key_cols)
-        .agg(F.count("*").alias("__bn"), F.min(id_col).alias("__hub"))
-        .where(F.col("__bn") > cap)
-        .select(*key_cols, "__hub")
-        .localCheckpoint(eager=True)
-    )
-    keyed = keys.join(hot, key_cols, "left")
+    id_type = keys.schema[id_col].dataType
+    schema = StructType([StructField("id_a", id_type), StructField("id_b", id_type)])
 
-    small = keyed.where(F.col("__hub").isNull()).drop("__hub")
-    # SHUFFLE_HASH: bucket partitions are cap-bounded, so the per-partition
-    # hash build always fits — and it skips the two full sorts an SMJ would
-    # spend on the widest shuffle of the stage
-    a, b = small.alias("a"), small.hint("shuffle_hash").alias("b")
-    same_bucket: Column = reduce(
-        lambda x, y: x & y,
-        [F.col(f"a.{c}") == F.col(f"b.{c}") for c in key_cols],
-    )
-    small_pairs = a.join(
-        b, same_bucket & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-    ).select(
-        F.col(f"a.{id_col}").alias("id_a"),
-        F.col(f"b.{id_col}").alias("id_b"),
-    )
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        batches = list(batches)
+        if batches:
+            pairs = capped_pairs(pa.Table.from_batches(batches), key_cols, id_col, cap)
+            yield from pairs.to_batches()
 
-    big_pairs = (
-        keyed.where(F.col("__hub").isNotNull() & (F.col(id_col) != F.col("__hub")))
-        .select(F.col("__hub").alias("id_a"), F.col(id_col).alias("id_b"))
+    return (
+        keys.select(*key_cols, id_col)
+        .repartition(*key_cols)
+        .mapInArrow(run, schema)
+        .distinct()
     )
-
-    return small_pairs.unionByName(big_pairs).distinct()

@@ -9,9 +9,11 @@ shingled, hashed and reduced to
   ordered CompactThetaSketch form (theta/sketch.rs:321-332);
 - ``theta64``: (k+1)-th smallest hash or i64::MAX in exact mode
   (common/hash_table.rs:388-401);
-- ``simhash64`` + ``bands``: SimHash fingerprint and OPH/LSH band hashes
-  from the *same* shingle hash stream (hashing paid once, hll/mod.rs:170-175);
-- ``cfg_hash``: the seed-compatibility fingerprint (hash/seed.rs:30-55).
+- ``bands``: OPH/LSH band hashes from the *same* shingle hash stream
+  (hashing paid once, hll/mod.rs:170-175).
+
+The seed-compatibility check (hash/seed.rs:30-55) is not a column: the
+signatures stage's resume fingerprint includes ``cfg.cfg_hash()``.
 
 ``file_id``/``content_sha`` are computed JVM-side with ``F.sha2`` (stays in
 whole-stage codegen); only the numeric kernel crosses into Arrow.
@@ -29,7 +31,6 @@ from ..config import PipelineConfig
 from ..sigkit.arrow_buf import binary_array, list_array, to_buf
 from ..sigkit.kmv import kmv_signatures
 from ..sigkit.oph import band_hashes, oph_minhashes
-from ..sigkit.simhash import simhash64
 from ..sigkit.tokenize import shingle_hashes_buf
 
 # content_sha is BINARY(32), not the 64-char hex string: it is the join /
@@ -45,8 +46,7 @@ from ..sigkit.tokenize import shingle_hashes_buf
 # (theta/sketch.rs:321-332). Decode with np.frombuffer(b, '<u8').
 SIGNATURE_SCHEMA = (
     "file_id string, content_sha binary, "
-    "n_shingles long, minhash_kmv binary, theta64 long, "
-    "simhash64 long, bands array<long>, cfg_hash long"
+    "n_shingles long, minhash_kmv binary, theta64 long, bands array<long>"
 )
 
 
@@ -57,7 +57,6 @@ def signature_record_batch(rb: pa.RecordBatch, cfg: PipelineConfig) -> pa.Record
     buf, doc_offs = to_buf(content)
     vals, offs = shingle_hashes_buf(buf, doc_offs, cfg.shingle_width, cfg.seed)
     sig_vals, sig_offs, theta, n_distinct = kmv_signatures(vals, offs, cfg.kmv_k)
-    sim = simhash64(vals, offs)
     mh = oph_minhashes(vals, offs, cfg.num_perm, cfg.seed)
     bh = band_hashes(mh, cfg.num_bands, cfg.band_rows, cfg.seed)
 
@@ -73,20 +72,9 @@ def signature_record_batch(rb: pa.RecordBatch, cfg: PipelineConfig) -> pa.Record
             pa.array(n_distinct),
             binary_array(sig_vals.astype("<u8"), sig_offs),
             pa.array(theta),
-            pa.array(sim),
             list_array(band_vals, band_offs),
-            pa.array(np.full(n, cfg.cfg_hash(), dtype=np.int64)),
         ],
-        names=[
-            "file_id",
-            "content_sha",
-            "n_shingles",
-            "minhash_kmv",
-            "theta64",
-            "simhash64",
-            "bands",
-            "cfg_hash",
-        ],
+        names=["file_id", "content_sha", "n_shingles", "minhash_kmv", "theta64", "bands"],
     )
 
 

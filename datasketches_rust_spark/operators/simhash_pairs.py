@@ -1,13 +1,14 @@
-"""SimHash near-dup candidate pairs via bit-sliced banding (all JVM).
+"""SimHash near-dup candidate pairs via bit-sliced banding.
 
 Pairs of documents whose 64-bit SimHash fingerprints are within a Hamming
 radius. Candidate generation uses the pigeonhole principle: split the 64
 bits into 8 bytes; any pair with Hamming distance <= 7 agrees on at least
-one byte, so an equi-join on (band_index, band_byte) finds every such pair.
-Verification is ``bit_count(a XOR b) <= radius`` — a JVM expression.
+one byte, so bucketing on (band, byte) finds every such pair. Three steps:
 
-The fingerprints themselves come from the signature kernel's SimHash
-(same shingle hash stream as MinHash — sigkit.simhash).
+- fingerprints: an Arrow kernel, the signature kernel's SimHash over the
+  same shingle hash stream as MinHash (sigkit.simhash);
+- candidates: the shared Arrow bucket kernel (operators/buckets.py);
+- verify: ``bit_count(a XOR b) <= radius``, a JVM expression.
 """
 
 from __future__ import annotations

@@ -1506,25 +1506,80 @@ def test_bloom_might_contain_broadcast_cutoff(spark):
     assert all(m for v, m in rs if int(v[1:]) < 200)
 
 
-def test_capped_bucket_pairs_materialize_off_identical(spark):
-    """materialize=False (for callers whose keys relation is already
-    materialized) must produce the identical pair set."""
-    from datasketches_rust_spark.operators.buckets import capped_bucket_pairs
+def _ref_capped_pairs(rows, cap):
+    """Pure-Python capped pairs over (key, id) rows: all id_a < id_b pairs
+    of a bucket with <= cap rows, a star to the minimum id above that."""
+    buckets = {}
+    for key, i in rows:
+        buckets.setdefault(key, []).append(i)
+    out = set()
+    for ids in buckets.values():
+        if len(ids) <= cap:
+            out |= {(a, b) for a in ids for b in ids if a < b}
+        else:
+            hub = min(ids)
+            out |= {(hub, b) for b in ids if b != hub}
+    return out
 
-    keys = spark.range(5000).select(
+
+def test_capped_bucket_pairs_match_reference(spark):
+    """The Spark-free bucket kernel and the Spark capped_bucket_pairs both
+    equal the pure-Python reference: buckets of exactly cap rows (all
+    pairs) and cap+1 rows (star), the composite (band, byte) key, a
+    repeated (key, id) row, and long, string and binary ids whose values
+    differ only in trailing NUL or >= 0x80 bytes. The plan has no join and
+    no broadcast."""
+    import pyarrow as pa
+
+    from datasketches_rust_spark.operators.buckets import capped_bucket_pairs
+    from datasketches_rust_spark.sigkit.bucket_pairs import capped_pairs
+
+    cap = 5
+    pools = {
+        "long": [-(2**63), -7, 0, 3, 2**63 - 1, *range(100, 130)],
+        "string": ["", "\x00", "a", "a\x00", "é", "é\x00", "\x7f", *(f"s{i}" for i in range(30))],
+        "binary": [b"", b"\x00", b"\x00\x00", b"\x80", b"\x80\x00", b"\xff", b"\x7f",
+                   *(bytes([i, 0x90, 0]) for i in range(30))],
+    }
+    rng = np.random.default_rng(7)
+    for kind, pool in pools.items():
+        rows = []
+        for b, size in enumerate([cap, cap + 1, 1, 2, 3, cap + 20]):
+            picked = rng.choice(len(pool), size=size, replace=False)
+            rows += [((b % 3, b), pool[p]) for p in picked]
+        rows.append(rows[0])  # a repeated (key, id) row
+        rows += [((9, int(rng.integers(4))), pool[int(p)]) for p in rng.integers(len(pool), size=40)]
+        want = _ref_capped_pairs(rows, cap)
+
+        table = pa.table({
+            "band": pa.array([k[0] for k, _ in rows], pa.int32()),
+            "byte": pa.array([k[1] for k, _ in rows], pa.int64()),
+            "id": [i for _, i in rows],
+        })
+        got = capped_pairs(table, ["band", "byte"], "id", cap)
+        assert set(zip(*(got.column(c).to_pylist() for c in ("id_a", "id_b")))) == want, kind
+
+        df = spark.createDataFrame(
+            [(k[0], k[1], i) for k, i in rows], f"band int, byte long, id {kind}"
+        ).repartition(16)
+        out = capped_bucket_pairs(df, ["band", "byte"], "id", cap)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "Join" not in plan and "BroadcastExchange" not in plan, plan
+        pairs = [tuple(bytes(v) if kind == "binary" else v for v in r) for r in out.collect()]
+        assert len(pairs) == len(set(pairs)) and set(pairs) == want, kind
+
+    # 5,000 long ids in 200 buckets of 25 over many partitions
+    keys = spark.range(5000, numPartitions=40).select(
         (F.col("id") % 200).alias("bkey"), F.col("id").alias("sha")
     )
-    a = {
-        (r["id_a"], r["id_b"])
-        for r in capped_bucket_pairs(keys, ["bkey"], "sha", 30).collect()
-    }
-    b = {
-        (r["id_a"], r["id_b"])
-        for r in capped_bucket_pairs(
-            keys.localCheckpoint(eager=True), ["bkey"], "sha", 30, materialize=False
-        ).collect()
-    }
-    assert a == b and len(a) > 0
+    want = _ref_capped_pairs([((i % 200,), i) for i in range(5000)], 30)
+    got = {(r["id_a"], r["id_b"]) for r in capped_bucket_pairs(keys, ["bkey"], "sha", 30).collect()}
+    assert got == want and len(want) == 200 * 25 * 24 // 2
+
+    empty = spark.createDataFrame([], "band int, byte long, id binary")
+    out = capped_bucket_pairs(empty, ["band", "byte"], "id", cap)
+    assert out.count() == 0
+    assert [f.dataType.simpleString() for f in out.schema] == ["binary", "binary"]
 
 
 def test_countmin_reflayout_build_estimate_merge(spark):

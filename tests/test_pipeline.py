@@ -143,6 +143,35 @@ def test_checkpoint_resume_identical_and_reused(spark, corpus, tmp_path):
     assert not run4.reused.any()
 
 
+def test_resume_after_crash_past_candidates(spark, corpus, tmp_path):
+    """A run killed right after the candidates stage is written resumes on
+    the same checkpoint dir: signatures, ids, rep_keys and candidates are
+    reused, verified and clusters recompute, and the clusters equal those
+    of an uninterrupted run."""
+    ckpt = str(tmp_path / "ckpt")
+
+    class Crash(DedupPipeline):
+        def _stage(self, name, upstream_fp, compute, materialize=True):
+            out = super()._stage(name, upstream_fp, compute, materialize)
+            if name == "candidates":
+                raise RuntimeError("killed after candidates")
+            return out
+
+    docs = corpus.drop("file_seq")
+    with pytest.raises(RuntimeError, match="killed after candidates"):
+        Crash(spark, CFG, checkpoint_dir=ckpt).run(docs)
+
+    resumed = DedupPipeline(spark, CFG, checkpoint_dir=ckpt).run(docs)
+    metrics = spark.read.parquet(f"{ckpt}/_metrics").toPandas().set_index("stage")
+    assert metrics.loc[["signatures", "ids", "rep_keys", "candidates"], "reused"].all()
+    assert not metrics.loc[["verified", "clusters"], "reused"].any()
+
+    whole = DedupPipeline(spark, CFG).run(docs)
+    pd.testing.assert_frame_equal(
+        resumed.orderBy("file_id").toPandas(), whole.orderBy("file_id").toPandas()
+    )
+
+
 def test_stage_resume_meta_errors(spark, tmp_path):
     """A missing or corrupt stage meta parquet means recompute; an error
     that is not a missing/unreadable meta propagates instead of being
