@@ -13,7 +13,7 @@ resumed run with different signature parameters recomputes the stage.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, replace
 
 from .sigkit.xxhash import xxh64_str_list
 
@@ -38,20 +38,15 @@ class PipelineConfig:
     max_bucket_size: int = 200
     # substring-dedup rolling window (chars)
     substr_window: int = 32
-    # rep-payload strategy (execution only — never in cfg_hash): True
-    # broadcasts the narrow (content_sha, rep_file_id) key set into the
-    # signature scan so the 2KB kmv/band payload never crosses an
-    # exchange, and runs connected components as one union-find task;
-    # False falls back to a materialized shuffle-hash reps stage and the
-    # iterative large-star/small-star join loop. None (default) = AUTO: the pipeline decides from the actual
-    # rep-key count after the rep_keys stage materializes — broadcast iff
-    # n_keys <= broadcast_key_limit — so a job approaching driver
-    # capacity degrades to the shuffle path instead of OOMing on a knob
-    # nobody flipped (round-4 ADVICE #3).
-    broadcast_rep_payload: bool | None = None
-    # auto-mode ceiling for the broadcast key set: ~100 B/row, so 15M keys
-    # ≈ 1.5 GB — comfortable under an 8g driver and Spark's 8 GB
-    # broadcast-table cap with room for the collect + block copies
+    # the one plan setting (execution only — never in cfg_hash): the
+    # pipeline measures the rep-key count once and, at or under this
+    # limit, broadcasts the narrow key set into the signature scan (the
+    # 2KB kmv/band payload never crosses an exchange), prunes verify's
+    # payload to the candidate shas and runs connected components as one
+    # union-find task; over it, every key-bound stage takes its shuffle
+    # plan. ~100 B/key, so 15M keys ≈ 1.5 GB — comfortable under an 8g
+    # driver and Spark's 8 GB broadcast-table cap with room for the
+    # collect + block copies
     broadcast_key_limit: int = 15_000_000
 
     @property

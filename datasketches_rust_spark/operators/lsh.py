@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, functions as F
 
 
 def exact_rep_keys(ids: DataFrame) -> DataFrame:
-    """Narrow rep-key table: (content_sha, rep_file_id, n_copies).
+    """Narrow rep-key table: (content_sha, rep_file_id).
 
     The representative of each distinct content is its min file_id,
     chosen with a scalar-only HashAggregate (map-side combined, ~60 B/row
@@ -40,10 +40,7 @@ def exact_rep_keys(ids: DataFrame) -> DataFrame:
     min-file_id pick only provides determinism; the payload attaches
     later (``rep_payload``) without ever shuffling.
     """
-    return ids.groupBy("content_sha").agg(
-        F.min("file_id").alias("rep_file_id"),
-        F.count("*").alias("n_copies"),
-    )
+    return ids.groupBy("content_sha").agg(F.min("file_id").alias("rep_file_id"))
 
 
 def has_duplicate_id_rows(ids: DataFrame) -> bool:
@@ -74,25 +71,22 @@ def rep_payload(
     signatures: DataFrame,
     keys: DataFrame,
     payload_cols: list[str],
-    broadcast: bool = True,
+    *,
+    broadcast: bool,
 ) -> DataFrame:
     """(content_sha, *payload_cols) of each representative's signature row,
     derived by joining the already-materialized signature table against
-    the narrow rep-key set — the wide kmv/band payload is scanned in
-    place and NEVER crosses an exchange.
+    the narrow rep-key set.
 
-    ``broadcast=True`` (default): the (content_sha, rep_file_id) key set
-    broadcasts into the signature scan (BroadcastHashJoin — zero shuffle
-    of the wide side). The key set is one ~100 B row per distinct
-    content; budget ~10-20M distinct contents per job on an 8 GB driver
-    (the collected rows, the serialized broadcast table, and Spark's
-    8 GB broadcast ceiling all bind well before the old ~50M figure).
-    Beyond that pass ``broadcast=False``: a shuffle-hash join with the
-    narrow keys as BUILD side (never the 2KB signature rows, whose
-    per-partition hash map cannot spill and OOMs at ~1.5M+ files) — one
-    wide exchange, so callers with several consumers should materialize
-    the result once. ``DedupPipeline`` picks the side automatically from
-    the measured key count (cfg.broadcast_rep_payload=None auto mode).
+    ``broadcast=True``: the (content_sha, rep_file_id) key set broadcasts
+    into the signature scan (BroadcastHashJoin), so the wide kmv/band
+    payload is scanned in place and NEVER crosses an exchange.
+    ``broadcast=False``: a shuffle-hash join with the narrow keys as BUILD
+    side (never the 2KB signature rows, whose per-partition hash map
+    cannot spill and OOMs at ~1.5M+ files) — one wide exchange, so
+    callers with several consumers should materialize the result once.
+    The caller decides: ``DedupPipeline`` broadcasts iff the measured
+    rep-key count is at most ``cfg.broadcast_key_limit`` (~100 B per key).
     """
     k = keys.select("content_sha", "rep_file_id")
     k = F.broadcast(k) if broadcast else k.hint("shuffle_hash")
@@ -102,55 +96,6 @@ def rep_payload(
         (F.col("s.content_sha") == F.col("k.content_sha"))
         & (F.col("s.file_id") == F.col("k.rep_file_id")),
     ).select(F.col("k.content_sha"), *[F.col(f"s.{c}") for c in payload_cols])
-
-
-def exact_representatives(
-    signatures: DataFrame,
-    ids: DataFrame | None = None,
-    broadcast: bool = True,
-    has_dups: bool | None = None,
-) -> DataFrame:
-    """One full-payload row per distinct content (standalone form).
-
-    Composition of ``exact_rep_keys`` + ``rep_payload`` + the
-    ``has_duplicate_id_rows`` probe. The pipeline no longer materializes
-    this wide table — its consumers attach only the columns they need via
-    ``rep_payload`` — but the operator remains for callers wanting the
-    classic reps relation.
-
-    ``ids``: optional pre-materialized narrow (file_id, content_sha)
-    projection. When the signature table is a row-cached localCheckpoint,
-    narrow aggregations over it still scan the full 2KB rows — a
-    materialized narrow projection makes the keys agg and the duplicate
-    probe read ~60 bytes per row instead. Parquet-checkpointed callers
-    get the same effect from column pruning and can omit it.
-
-    ``has_dups``: the ``has_duplicate_id_rows(ids)`` result when the caller
-    already probed; None runs the probe here.
-    """
-    ids = ids if ids is not None else signatures.select("content_sha", "file_id")
-    keys = exact_rep_keys(ids)
-    payload = signatures
-    if has_dups is None:
-        has_dups = has_duplicate_id_rows(ids)
-    if has_dups:
-        payload = signatures.dropDuplicates(["content_sha", "file_id"])
-    k = keys.alias("k")
-    k = F.broadcast(k) if broadcast else k.hint("shuffle_hash")
-    s = payload.alias("s")
-    return s.join(
-        k,
-        (F.col("s.content_sha") == F.col("k.content_sha"))
-        & (F.col("s.file_id") == F.col("k.rep_file_id")),
-    ).select(
-        F.col("k.content_sha"),
-        F.col("k.rep_file_id"),
-        F.col("s.n_shingles"),
-        F.col("s.minhash_kmv"),
-        F.col("s.theta64"),
-        F.col("s.bands"),
-        F.col("k.n_copies"),
-    )
 
 
 def exact_pairs(signatures: DataFrame) -> DataFrame:

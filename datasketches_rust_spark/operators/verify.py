@@ -81,12 +81,14 @@ def jaccard_batch(kmv_a, theta_a: np.ndarray, kmv_b, theta_b: np.ndarray) -> np.
 
 
 def verify_pairs(
-    candidates: DataFrame, reps: DataFrame, cfg: PipelineConfig
+    candidates: DataFrame, reps: DataFrame, cfg: PipelineConfig, *, broadcast: bool
 ) -> DataFrame:
     """candidates(sha_a, sha_b) → (sha_a, sha_b, jaccard_est, accepted).
 
-    ``candidates`` is consumed three times when the semi-join pushdown is
-    on (the cand-sha set plus both pair joins) — pass a materialized
+    ``broadcast``: whether the candidate-sha set fits a broadcast. The
+    pipeline passes its rep-key decision, since candidate shas are a
+    subset of the rep keys. When True, ``candidates`` is consumed three
+    times (the cand-sha set plus both pair joins) — pass a materialized
     relation (the pipeline checkpoints its candidates stage); an
     unmaterialized band-join chain would be replayed per consumer.
     """
@@ -96,17 +98,7 @@ def verify_pairs(
     # needed — broadcast the (small) candidate-sha set into the payload
     # scan so the wide exchange carries just those rows (candidates are a
     # small corpus fraction by construction: they passed LSH banding).
-    # Gated by the same knob as the rep-key broadcast: jobs whose
-    # candidate set exceeds broadcast capacity skip it and shuffle the
-    # full payload as before. The tri-state config is RESOLVED here, not
-    # re-tested raw: the pipeline passes a bool (rcfg); a direct caller
-    # leaving the auto default (None) pays one narrow count over the
-    # candidate relation so the broadcast decision reflects the actual
-    # cardinality instead of silently inheriting the broadcast path.
-    broadcast = cfg.broadcast_rep_payload
-    if broadcast is None:
-        # each candidate pair contributes <= 2 shas to the broadcast set
-        broadcast = candidates.count() * 2 <= cfg.broadcast_key_limit
+    # Without the broadcast the full payload shuffles.
     if broadcast:
         cand_shas = (
             candidates.select(F.col("sha_a").alias("content_sha"))

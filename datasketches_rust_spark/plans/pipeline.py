@@ -6,17 +6,18 @@ commutative merges (shuffle on content_sha / band keys), and every stage
 boundary is a serialized compact form (parquet checkpoint ≙ the
 CompactThetaSketch exchange path, theta/sketch.rs:443-491).
 
-One measured decision picks the plan of the key-bound stages: the rep-key
-count against ``cfg.broadcast_key_limit`` (unless
-``cfg.broadcast_rep_payload`` forces it). Within the limit, the narrow key
-set is broadcast into the signature scan for the payload attach, and the
-final merge — connected components — runs as one vectorized union-find
-task (``union_find_components``): the graph's nodes are a subset of the
-rep keys, so the same bound covers that task's memory, and the stage costs
-a fixed handful of jobs instead of ~6 per Kiveris iteration. Beyond the
-limit, both fall back to shuffle plans: a materialized reps stage and the
-iterative large-star/small-star ``connected_components``, which never holds
-a component in one task.
+One decision, made once, picks the plan of every key-bound stage: the
+measured rep-key count against ``cfg.broadcast_key_limit``, the only plan
+setting. Within the limit, the narrow key set is broadcast into the
+signature scan for each payload attach, verify prunes its payload to the
+broadcast candidate-sha set, and the final merge — connected components —
+runs as one vectorized union-find task (``union_find_components``): the
+graph's nodes are a subset of the rep keys, so the same bound covers that
+task's memory, and the stage costs a fixed handful of jobs instead of ~6
+per Kiveris iteration. Beyond the limit, all three take shuffle plans: a
+materialized reps stage, an unpruned verify join and the iterative
+large-star/small-star ``connected_components``, which never holds a
+component in one task.
 
 Checkpoint/resume: each stage writes to ``<dir>/<stage>`` plus a one-row
 ``_meta`` parquet carrying (stage, fingerprint). The fingerprint chains the
@@ -32,6 +33,7 @@ accounting, FIXTURES.md F5).
 
 from __future__ import annotations
 
+import functools
 import os
 
 from py4j.protocol import Py4JJavaError
@@ -47,7 +49,6 @@ from ..operators.lsh import (
     candidate_pairs,
     exact_pairs,
     exact_rep_keys,
-    exact_representatives,
     has_duplicate_id_rows,
     rep_payload,
 )
@@ -56,8 +57,8 @@ from ..operators.substring import containment_pairs
 from ..operators.verify import verify_pairs
 
 # PipelineConfig fields each stage reads beyond its upstream's output; the
-# signatures stage reads exactly the cfg_hash fields. Execution-only fields
-# (broadcast_rep_payload, broadcast_key_limit) shape plans, never outputs.
+# signatures stage reads exactly the cfg_hash fields. The execution-only
+# broadcast_key_limit shapes plans, never outputs.
 STAGE_PARAMS = {
     "candidates": ("max_bucket_size",),
     "verified": ("jaccard_threshold",),
@@ -177,39 +178,24 @@ class DedupPipeline:
 
     # ------------------------------------------------------------ stages
 
-    @staticmethod
-    def file_ids(corpus: DataFrame) -> DataFrame:
-        """(file_id, content_sha BINARY) — JVM-only (sha2), cheap to
-        recompute; content_sha matches the signature table's binary key."""
-        return corpus.select(
-            F.sha2(F.concat_ws("\x00", "repo", "path", "commit"), 256).alias("file_id"),
-            F.unhex(F.sha2(F.col("content"), 256)).alias("content_sha"),
-        )
-
     def _dedup_stages(self, corpus: DataFrame, input_fp: str):
         """Shared stage chain up to verification.
 
-        Returns (sigs, ids, rep_map, verified, fp4, broadcast) where
-        rep_map is the narrow (content_sha, rep_file_id) relation and
-        broadcast the resolved rep-key placement (True: the key set fits
-        one place).
+        Returns (ids, rep_map, verified, fp4, broadcast) where rep_map is
+        the narrow (content_sha, rep_file_id) relation and broadcast the
+        plan decision: the measured rep-key count is at most
+        cfg.broadcast_key_limit. The count comes from the rep_keys stage's
+        own materialization (checkpoint metrics, or one narrow job over
+        the ~60 B/row cached blocks), so no extra corpus scan.
 
-        Broadcast path (the common case): only the NARROW rep-key table
-        is materialized; consumers re-attach the payload columns they
-        need (candidates: bands; verify: kmv/theta/n_shingles) by
-        broadcasting the key set into the already-materialized signature
-        scan — the ~2KB-wide rows are scanned in place and never
-        re-shuffled or re-materialized (round-3's reps exchange, the
-        pipeline's one bus-bound stage, is gone). Fallback path: the
-        classic materialized wide reps stage, for jobs whose key set
-        exceeds broadcast capacity.
-
-        cfg.broadcast_rep_payload=None (default) resolves AUTOMATICALLY
-        from the measured rep-key count (<= cfg.broadcast_key_limit →
-        broadcast): the count comes from the rep_keys stage's own
-        materialization (checkpoint metrics, or one narrow job over the
-        ~60 B/row cached blocks), so no extra corpus scan — and no static
-        knob to forget as a job grows toward driver capacity.
+        Only the NARROW rep-key table is materialized up front; consumers
+        attach the payload columns they need (candidates: bands; verify:
+        kmv/theta/n_shingles). Broadcast path: each attach broadcasts the
+        key set into the already-materialized signature scan — the ~2KB
+        wide rows are scanned in place, never re-shuffled or
+        re-materialized. Fallback path: a materialized shuffle-hash reps
+        stage carries all four payload columns, and each attach selects
+        from it.
         """
         # signatures feed several consumers (rep keys, payload attach, the
         # final file_id→cluster map) — materialize once so the kernel runs
@@ -231,63 +217,57 @@ class DedupPipeline:
         # agg's tail leaves idle). Only in the no-checkpoint path: with a
         # checkpoint dir the probe stays LAZY so a resumed run skips it.
         probe_fut = None
-        if self.dir is None and self.cfg.broadcast_rep_payload is not False:
+        if self.dir is None:
             from concurrent.futures import ThreadPoolExecutor
 
             pool = ThreadPoolExecutor(max_workers=1)
             probe_fut = pool.submit(has_duplicate_id_rows, ids)
             pool.shutdown(wait=False)
         keys, fp2 = self._stage("rep_keys", fp1, lambda: exact_rep_keys(ids))
-        broadcast = self.cfg.broadcast_rep_payload
-        if broadcast is None:
-            broadcast = self._stage_rows("rep_keys", keys) <= self.cfg.broadcast_key_limit
-        # downstream stages see the RESOLVED decision (verify's cand-sha
-        # semi-join pushdown gates on the same broadcast-capacity premise)
-        rcfg = self.cfg.with_(broadcast_rep_payload=broadcast)
-        memo: dict = {}
+        broadcast = self._stage_rows("rep_keys", keys) <= self.cfg.broadcast_key_limit
 
-        def has_dups() -> bool:
-            """The duplicate-(sha,fid) probe, run at most once by whichever
-            branch needs it: the prefetched future's result (so its
-            exception surfaces) or a lazy probe a resumed run never reaches."""
-            if "d" not in memo:
-                memo["d"] = (
-                    probe_fut.result() if probe_fut is not None else has_duplicate_id_rows(ids)
-                )
-            return memo["d"]
+        @functools.cache
+        def payload() -> DataFrame:
+            """The signature rows, deduplicated on (content_sha, file_id)
+            only when the probe finds duplicate input rows. The probe runs
+            at most once: the prefetched future's result (so its exception
+            surfaces) or a lazy probe a resumed run never reaches."""
+            dups = probe_fut.result() if probe_fut is not None else has_duplicate_id_rows(ids)
+            return sigs.dropDuplicates(["content_sha", "file_id"]) if dups else sigs
 
         if broadcast:
-            def payload() -> DataFrame:
-                return sigs.dropDuplicates(["content_sha", "file_id"]) if has_dups() else sigs
-
-            cands, fp3 = self._stage(
-                "candidates",
-                fp2,
-                lambda: candidate_pairs(rep_payload(payload(), keys, ["bands"]), rcfg),
-            )
-            verified, fp4 = self._stage(
-                "verified",
-                fp3,
-                lambda: verify_pairs(
-                    cands,
-                    rep_payload(payload(), keys, ["n_shingles", "minhash_kmv", "theta64"]),
-                    rcfg,
-                ),
-            )
+            def attach(cols: list[str]) -> DataFrame:
+                return rep_payload(payload(), keys, cols, broadcast=True)
         else:
-            reps, fp2b = self._stage(
+            reps, fp2 = self._stage(
                 "reps",
                 fp2,
-                lambda: exact_representatives(sigs, ids, broadcast=False, has_dups=has_dups()),
+                lambda: rep_payload(
+                    payload(),
+                    keys,
+                    ["bands", "n_shingles", "minhash_kmv", "theta64"],
+                    broadcast=False,
+                ),
             )
-            cands, fp3 = self._stage(
-                "candidates", fp2b, lambda: candidate_pairs(reps, rcfg)
-            )
-            verified, fp4 = self._stage(
-                "verified", fp3, lambda: verify_pairs(cands, reps, rcfg)
-            )
+
+            def attach(cols: list[str]) -> DataFrame:
+                return reps.select("content_sha", *cols)
+
+        cands, fp3 = self._stage(
+            "candidates", fp2, lambda: candidate_pairs(attach(["bands"]), self.cfg)
+        )
+        verified, fp4 = self._stage(
+            "verified",
+            fp3,
+            lambda: verify_pairs(
+                cands,
+                attach(["n_shingles", "minhash_kmv", "theta64"]),
+                self.cfg,
+                broadcast=broadcast,
+            ),
+        )
         rep_map = keys.select("content_sha", "rep_file_id")
-        return sigs, ids, rep_map, verified, fp4, broadcast
+        return ids, rep_map, verified, fp4, broadcast
 
     def _stage_rows(self, name: str, df: DataFrame) -> int:
         """Row count of a just-materialized stage: from the checkpoint
@@ -303,7 +283,7 @@ class DedupPipeline:
         """corpus(repo,path,commit,lang,content) → clusters(file_id,
         content_sha, cluster_id). cluster_id = min content_sha in component;
         non-duplicated files map to their own content_sha."""
-        _, ids, _, verified, fp4, broadcast = self._dedup_stages(corpus, input_fp)
+        ids, _, verified, fp4, broadcast = self._dedup_stages(corpus, input_fp)
         edges = (
             verified.where("accepted")
             .select(F.col("sha_a").alias("src"), F.col("sha_b").alias("dst"))
@@ -349,7 +329,7 @@ class DedupPipeline:
 
     def dup_pairs(self, corpus: DataFrame, input_fp: str = "corpus") -> DataFrame:
         """(file_id-level) exact + verified near-dup pairs — F3 schema."""
-        _, ids, rep_map, verified, *_ = self._dedup_stages(corpus, input_fp)
+        ids, rep_map, verified, *_ = self._dedup_stages(corpus, input_fp)
         near = (
             verified.where("accepted")
             .join(rep_map.withColumnRenamed("content_sha", "sha_a")

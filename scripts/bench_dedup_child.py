@@ -18,7 +18,6 @@ try:  # normally provided by spark-submit --py-files
 except ImportError:  # plain-python fallback for local debugging
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from datasketches_rust_spark.config import PipelineConfig
 from datasketches_rust_spark.plans.pipeline import DedupPipeline
 from datasketches_rust_spark.plans.session import get_spark
 
@@ -86,13 +85,6 @@ def main(corpus_path: str, cpus: int) -> None:
         },
     )
     corpus = spark.read.parquet(corpus_path)
-    # SPARK_GRAFT_BROADCAST_REP: 1 forces the broadcast rep-payload path,
-    # 0 forces the shuffle-hash fallback, unset = cfg auto mode — used for
-    # the measured fallback-path run recorded in BASELINE.md
-    cfg = PipelineConfig()
-    bc_env = os.environ.get("SPARK_GRAFT_BROADCAST_REP")
-    if bc_env is not None:
-        cfg = cfg.with_(broadcast_rep_payload=(bc_env == "1"))
     n_files = corpus.count()  # warm the input outside the timed window
     # spawn the Python worker pool before timing: a real long job amortizes
     # interpreter startup to nothing; at bench scale it would skew the ratio
@@ -102,7 +94,7 @@ def main(corpus_path: str, cpus: int) -> None:
     # same pipeline — every stage is an eager checkpoint, so a stage's wall
     # is its own work; finds which stage stops scaling
     timed = os.environ.get("SPARK_GRAFT_STAGE_WALLS") == "1"
-    pipe = (StageWallPipeline if timed else DedupPipeline)(spark, cfg)
+    pipe = (StageWallPipeline if timed else DedupPipeline)(spark)
     t0 = time.monotonic()
     clusters = pipe.run(corpus)
     n_rows = clusters.count()

@@ -868,30 +868,6 @@ def test_prefix_bloom_scan_runs_at_input_parallelism(spark):
     assert pre.rdd.getNumPartitions() == 8
 
 
-def test_exact_representatives_duplicate_corpus_rows(spark):
-    """Duplicate (repo, path, commit) input rows must still yield exactly
-    one representative row per content_sha (via the narrow duplicate probe
-    — the wide dropDuplicates path is only taken when dups exist)."""
-    from datasketches_rust_spark.operators.lsh import exact_representatives
-    from datasketches_rust_spark.operators.signatures import compute_signatures
-
-    rows = [
-        ("r1", "a.py", "c1", "py", "alpha beta gamma delta epsilon zeta " * 4),
-        ("r1", "b.py", "c1", "py", "alpha beta gamma delta epsilon zeta " * 4),
-        ("r2", "c.py", "c1", "py", "totally different content here okay " * 4),
-    ]
-    corpus = spark.createDataFrame(
-        rows + rows[:1] * 3,  # the first row appears 4x verbatim
-        "repo string, path string, commit string, lang string, content string",
-    )
-    sigs = compute_signatures(corpus, CFG)
-    reps = exact_representatives(sigs).collect()
-    shas = [r["content_sha"] for r in reps]
-    assert len(shas) == len(set(shas)) == 2  # two distinct contents, one row each
-    n_copies = {bytes(r["content_sha"]): r["n_copies"] for r in reps}
-    assert sorted(n_copies.values()) == [1, 5]  # 4 dups + b.py share content
-
-
 def test_theta_exactly_equal(spark):
     """exactly_equal contract (jaccard_similarity.rs): both empty → equal;
     one empty → unequal; else keys + theta must match (state, not input)."""
@@ -1697,13 +1673,9 @@ def test_countmin_df_merge_guard(spark):
         countmin_merge(a, b.table)
 
 
-def test_verify_pairs_auto_resolution(spark):
-    """verify_pairs must RESOLVE the tri-state broadcast_rep_payload
-    itself when a direct caller leaves the auto default (None): the
-    decision comes from the measured candidate count, so a candidate set
-    past broadcast capacity cannot silently inherit the broadcast
-    pushdown (the CLAUDE.md resolved-decision rule). All three paths
-    (auto-under-limit, auto-over-limit, explicit bool) must return
+def test_verify_pairs_broadcast_parity(spark):
+    """verify_pairs with the candidate-sha pushdown (broadcast=True) and
+    without it (broadcast=False, the full payload shuffles) must return
     identical rows."""
     import numpy as np
 
@@ -1731,18 +1703,17 @@ def test_verify_pairs_auto_resolution(spark):
         [(shas[i], shas[i + 1]) for i in range(7)], "sha_a binary, sha_b binary"
     )
 
-    def rows(cfg):
+    def rows(broadcast):
         return {
             (bytes(r["sha_a"]), bytes(r["sha_b"]), round(r["jaccard_est"], 9), r["accepted"])
-            for r in verify_pairs(cands, reps, cfg).collect()
+            for r in verify_pairs(
+                cands, reps, PipelineConfig(), broadcast=broadcast
+            ).collect()
         }
 
-    auto = rows(PipelineConfig())  # None -> resolved from candidate count
-    over = rows(PipelineConfig().with_(broadcast_key_limit=1))  # None -> shuffle path
-    bcast = rows(PipelineConfig().with_(broadcast_rep_payload=True))
-    shuf = rows(PipelineConfig().with_(broadcast_rep_payload=False))
-    assert auto == bcast == over == shuf
-    assert len(auto) == 7
+    bcast = rows(True)
+    assert bcast == rows(False)
+    assert len(bcast) == 7
 
 
 def test_countmin_reflayout_broadcast_gate(spark):

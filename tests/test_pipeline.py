@@ -248,7 +248,7 @@ def test_rep_payload_attach_is_wide_shuffle_free(spark, corpus):
     keys = exact_rep_keys(
         sigs.select("file_id", "content_sha")
     ).localCheckpoint(eager=True)
-    attached = rep_payload(sigs, keys, ["bands"])
+    attached = rep_payload(sigs, keys, ["bands"], broadcast=True)
     plan = attached._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan, plan
     assert "Exchange hashpartitioning" not in plan, plan
@@ -259,8 +259,9 @@ def test_rep_payload_attach_is_wide_shuffle_free(spark, corpus):
 
 
 def test_rep_payload_fallback_path_identical(spark, corpus):
-    """cfg.broadcast_rep_payload=False (the big-key-set fallback: classic
-    materialized shuffle-hash reps stage) must produce identical clusters."""
+    """A rep-key count over broadcast_key_limit (the big-key-set fallback:
+    materialized shuffle-hash reps stage, unpruned verify, iterative
+    connected components) must produce identical clusters."""
     a = (
         DedupPipeline(spark, CFG)
         .run(corpus.drop("file_seq"))
@@ -268,12 +269,55 @@ def test_rep_payload_fallback_path_identical(spark, corpus):
         .toPandas()
     )
     b = (
-        DedupPipeline(spark, CFG.with_(broadcast_rep_payload=False))
+        DedupPipeline(spark, CFG.with_(broadcast_key_limit=0))
         .run(corpus.drop("file_seq"))
         .orderBy("file_id")
         .toPandas()
     )
     pd.testing.assert_frame_equal(a, b)
+
+
+def test_duplicate_corpus_rows_one_representative_per_content(spark, monkeypatch):
+    """Duplicate (repo, path, commit) input rows must still yield exactly
+    one representative row per content_sha on both plans (the duplicate
+    probe turns on the wide dedup only when such rows exist), and the
+    broadcast and fallback clusters must agree."""
+    import datasketches_rust_spark.plans.pipeline as P
+
+    rows = [
+        ("r1", "a.py", "c1", "py", "alpha beta gamma delta epsilon zeta " * 4),
+        ("r1", "b.py", "c1", "py", "alpha beta gamma delta epsilon zeta " * 4),
+        ("r2", "c.py", "c1", "py", "totally different content here okay " * 4),
+    ]
+    corpus = spark.createDataFrame(
+        # a.py and b.py share content and each appear 4x verbatim, so the
+        # representative (the min file_id) is a duplicated row either way
+        rows + rows[:2] * 3,
+        "repo string, path string, commit string, lang string, content string",
+    )
+    attached = []
+
+    def spy(reps, cfg):
+        attached.append([bytes(r["content_sha"]) for r in reps.collect()])
+        return orig(reps, cfg)
+
+    orig = P.candidate_pairs
+    monkeypatch.setattr(P, "candidate_pairs", spy)
+    out = [
+        DedupPipeline(spark, CFG.with_(broadcast_key_limit=limit))
+        .run(corpus)
+        .orderBy("file_id")
+        .toPandas()
+        for limit in (CFG.broadcast_key_limit, 0)
+    ]
+    pd.testing.assert_frame_equal(*out)
+    for shas in attached:  # two distinct contents, one rep row each
+        assert len(shas) == len(set(shas)) == 2
+    assert len(attached) == 2
+    clusters = out[0]
+    assert len(clusters) == 9  # one row per input row
+    assert (clusters.groupby("content_sha").cluster_id.nunique() == 1).all()
+    assert clusters.content_sha.nunique() == 2
 
 
 def test_pipeline_containment_threads_ndocs_hint(spark, corpus, monkeypatch):
@@ -311,32 +355,42 @@ def test_pipeline_containment_threads_ndocs_hint(spark, corpus, monkeypatch):
 
 
 def test_rep_payload_auto_mode_resolves_from_key_count(spark, corpus, monkeypatch):
-    """broadcast_rep_payload=None derives the join side from the measured
-    rep-key count (round-4 ADVICE #3: no static knob to forget): a limit
-    below the key count forces the shuffle fallback, a comfortable limit
-    keeps the broadcast path — both with identical clusters."""
+    """The pipeline derives every join side from the measured rep-key count
+    (no static knob to forget): a limit below the key count takes the
+    shuffle fallback for each payload attach and for verify, a comfortable
+    limit keeps the broadcast path — both with identical clusters."""
+    import datasketches_rust_spark.plans.pipeline as P
+
+    calls = []
+    for name in ("rep_payload", "verify_pairs"):
+        def spy(*args, _orig=getattr(P, name), _name=name, **kw):
+            calls.append((_name, kw["broadcast"]))
+            return _orig(*args, **kw)
+
+        monkeypatch.setattr(P, name, spy)
     a = (
-        DedupPipeline(spark, CFG.with_(broadcast_rep_payload=None))
+        DedupPipeline(spark, CFG)
         .run(corpus.drop("file_seq"))
         .orderBy("file_id")
         .toPandas()
     )
-    import datasketches_rust_spark.operators.lsh as L
-    import datasketches_rust_spark.plans.pipeline as P
+    assert sorted(calls) == [
+        ("rep_payload", True), ("rep_payload", True), ("verify_pairs", True)
+    ]
 
-    probes, probe = [], L.has_duplicate_id_rows
+    probes, probe = [], P.has_duplicate_id_rows
 
-    def spy(ids):
+    def probe_spy(ids):
         probes.append(ids)
         return probe(ids)
 
-    monkeypatch.setattr(P, "has_duplicate_id_rows", spy)
-    monkeypatch.setattr(L, "has_duplicate_id_rows", spy)
-    forced_fallback = DedupPipeline(
-        spark, CFG.with_(broadcast_rep_payload=None, broadcast_key_limit=1)
-    )
+    monkeypatch.setattr(P, "has_duplicate_id_rows", probe_spy)
+    calls.clear()
+    forced_fallback = DedupPipeline(spark, CFG.with_(broadcast_key_limit=0))
     b = forced_fallback.run(corpus.drop("file_seq")).orderBy("file_id").toPandas()
     pd.testing.assert_frame_equal(a, b)
+    # one shuffle-hash reps stage serves both attaches
+    assert sorted(calls) == [("rep_payload", False), ("verify_pairs", False)]
     # the probe prefetched before the decision is the one the fallback's
     # reps stage consumes: it runs once, and its result is read
     assert len(probes) == 1
