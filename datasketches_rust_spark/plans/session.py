@@ -3,8 +3,25 @@
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_ROOT = os.path.dirname(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
+
+
+def _workers_find_package() -> bool:
+    """Whether a local Python worker finds this package. Spark starts the
+    daemon as ``python -m`` in this process's working directory and
+    environment, so it searches the working directory, ``$PYTHONPATH`` and
+    site-packages, but not entries a driver added to ``sys.path``."""
+    paths = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    root = os.path.realpath(_PACKAGE_ROOT)
+    return any(
+        p and os.path.realpath(p) == root for p in paths + site.getsitepackages()
+    )
 
 
 def get_spark(
@@ -15,9 +32,14 @@ def get_spark(
 ) -> SparkSession:
     """Build a session with AQE, Arrow, and sane shuffle sizing.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, else all
-    cores). On a real cluster, pass ``master=None`` after spark-submit has
-    set the master — the builder then inherits it.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, else
+    ``local[*]``); it is always set on the builder, so pass the cluster's
+    master explicitly to run elsewhere. For a local master whose workers
+    find this package, the Python workers fork from ``plans.pydaemon``,
+    which stops each task from re-reading ``pyspark.zip``. Other masters
+    keep the stock daemon: a worker that cannot import the daemon module
+    fails every Python task. ``extra_conf`` is applied last and overrides
+    any of these settings.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
@@ -48,6 +70,10 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
+    if (master == "local" or master.startswith("local[")) and _workers_find_package():
+        b = b.config(
+            "spark.python.daemon.module", "datasketches_rust_spark.plans.pydaemon"
+        )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
