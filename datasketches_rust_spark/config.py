@@ -41,12 +41,13 @@ class PipelineConfig:
     # the one plan setting (execution only — never in cfg_hash): the
     # pipeline measures the rep-key count once and, at or under this
     # limit, broadcasts the narrow key set into the signature scan (the
-    # 2KB kmv/band payload never crosses an exchange), prunes verify's
-    # payload to the candidate shas and runs connected components as one
-    # union-find task; over it, every key-bound stage takes its shuffle
-    # plan. ~100 B/key, so 15M keys ≈ 1.5 GB — comfortable under an 8g
-    # driver and Spark's 8 GB broadcast-table cap with room for the
-    # collect + block copies
+    # 2KB kmv/band payload never crosses an exchange) and runs connected
+    # components as one union-find task; over it, every key-bound stage
+    # takes its shuffle plan. ~100 B/key, so 15M keys ≈ 1.5 GB —
+    # comfortable under an 8g driver and Spark's 8 GB broadcast-table cap
+    # with room for the collect + block copies. Verify broadcasts two
+    # ~100 B side rows per candidate pair, so it also measures the pair
+    # count and broadcasts only when twice that is within this limit
     broadcast_key_limit: int = 15_000_000
 
     @property

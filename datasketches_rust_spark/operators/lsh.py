@@ -98,14 +98,15 @@ def rep_payload(
     ).select(F.col("k.content_sha"), *[F.col(f"s.{c}") for c in payload_cols])
 
 
-def exact_pairs(signatures: DataFrame) -> DataFrame:
+def exact_pairs(ids: DataFrame, rep_map: DataFrame) -> DataFrame:
     """Star pairs inside each exact-duplicate group (J = 1 by definition).
 
-    Emitted at file level: (file_id, rep) for every non-representative copy.
+    ``rep_map`` is the (content_sha, rep_file_id) table of
+    ``exact_rep_keys``. Emitted at file level: (rep, file_id) for every
+    non-representative copy.
     """
-    reps = signatures.groupBy("content_sha").agg(F.min("file_id").alias("rep_file_id"))
     return (
-        signatures.join(reps, "content_sha")
+        ids.join(rep_map, "content_sha")
         .where(F.col("file_id") != F.col("rep_file_id"))
         .select(
             F.col("rep_file_id").alias("file_id_a"),

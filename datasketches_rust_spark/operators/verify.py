@@ -13,11 +13,12 @@ no-false-negatives mode of the reference's frequent-items thresholds
 (frequencies/sketch.rs:394-430, ErrorType::NoFalseNegatives) applied to
 the recall>=0.99 contract. Exact-mode pairs are thresholded exactly.
 
-The kernel is fully vectorized across a batch of pairs: all signature
-arrays are read in place from the Arrow batch's kmv value buffers and
-concatenated into one value vector with pair ids, one lexsort finds
-duplicate (pair, value) entries = per-pair intersection sizes. No per-pair
-Python.
+A pair's two signatures reach one ``mapInArrow`` task as two adjacent
+rows routed on the pair. The kernel is fully vectorized across a batch of
+pairs: all signature arrays are read in place from the Arrow kmv value
+buffers and concatenated into one value vector with pair ids, one lexsort
+finds duplicate (pair, value) entries = per-pair intersection sizes. No
+per-pair Python.
 """
 
 from __future__ import annotations
@@ -32,6 +33,10 @@ from ..config import PipelineConfig
 from ..sigkit.arrow_buf import to_buf
 
 VERIFIED_SCHEMA = "sha_a binary, sha_b binary, jaccard_est double, accepted boolean"
+_UNPAIRED = (
+    "verify_pairs: a candidate pair did not meet exactly one payload row "
+    "per side (duplicated or missing content_sha in reps)"
+)
 
 
 def _kmv_values(kmv) -> tuple[np.ndarray, np.ndarray]:
@@ -85,61 +90,28 @@ def verify_pairs(
 ) -> DataFrame:
     """candidates(sha_a, sha_b) → (sha_a, sha_b, jaccard_est, accepted).
 
-    ``broadcast``: whether the candidate-sha set fits a broadcast. The
-    pipeline passes its rep-key decision, since candidate shas are a
-    subset of the rep keys. When True, ``candidates`` is consumed three
-    times (the cand-sha set plus both pair joins) — pass a materialized
-    relation (the pipeline checkpoints its candidates stage); an
-    unmaterialized band-join chain would be replayed per consumer.
+    One routed exchange: each pair's two side rows (sha_a, sha_b, side,
+    content_sha) join ``reps``' (content_sha, minhash_kmv, theta64),
+    repartition on (sha_a, sha_b) and sort on (sha_a, sha_b, side), so a
+    pair's a-row and b-row reach one kernel task adjacent; the kernel
+    streams its batches, carrying at most one a-row over a boundary.
+    ``candidates`` is read once. ``broadcast``: the side rows (two narrow
+    rows per pair; the pipeline measures the pair count) fit a broadcast,
+    so they go into the payload scan and the ~2 KB kmv rows are read in
+    place; otherwise they are the build side of a shuffle-hash join.
+    Raises ``ValueError`` when the plan runs unless every pair meets
+    exactly one payload row per side (e.g. ``reps`` with a duplicated or
+    missing content_sha), rather than pair the wrong rows.
     """
-    sigs = reps.select("content_sha", "minhash_kmv", "theta64", "n_shingles")
-    # semi-join pushdown: the pair joins shuffle the kmv payload on BOTH
-    # sides, but only shas that actually occur in a candidate pair are
-    # needed — broadcast the (small) candidate-sha set into the payload
-    # scan so the wide exchange carries just those rows (candidates are a
-    # small corpus fraction by construction: they passed LSH banding).
-    # Without the broadcast the full payload shuffles.
-    if broadcast:
-        cand_shas = (
-            candidates.select(F.col("sha_a").alias("content_sha"))
-            .unionByName(candidates.select(F.col("sha_b").alias("content_sha")))
-            .distinct()
-        )
-        # materialize the pruned payload ONCE: it feeds both pair joins,
-        # and without the cut the (sigs scan + semi-join) subplan runs
-        # twice. Bounded by the candidate-sha set — the same small
-        # fraction the broadcast gate already assumes — so the cached
-        # relation is executor-resident and spillable; the no-pushdown
-        # branch below deliberately stays lazy (materializing the FULL
-        # wide payload would re-create the round-3 reps exchange).
-        sigs = sigs.join(
-            F.broadcast(cand_shas), "content_sha", "left_semi"
-        ).localCheckpoint(eager=True)
-    # Join 1: SHUFFLE_HASH with the BUILD side on the narrow pair relation
-    # — the 2KB-wide signature rows stream through unsorted and are never
-    # held in a hash map (a wide build side cannot spill and OOMs).
-    # Join 2's left side is already wide (it carries kmv_a), so no hint:
-    # AQE picks by runtime stats there.
-    joined = (
-        candidates.hint("shuffle_hash")
-        .join(
-            sigs.select(
-                F.col("content_sha").alias("sha_a"),
-                F.col("minhash_kmv").alias("kmv_a"),
-                F.col("theta64").alias("theta_a"),
-                F.col("n_shingles").alias("n_a"),
-            ),
-            "sha_a",
-        )
-        .join(
-            sigs.select(
-                F.col("content_sha").alias("sha_b"),
-                F.col("minhash_kmv").alias("kmv_b"),
-                F.col("theta64").alias("theta_b"),
-                F.col("n_shingles").alias("n_b"),
-            ),
-            "sha_b",
-        )
+    sides = candidates.select(
+        "sha_a", "sha_b", F.posexplode(F.array("sha_a", "sha_b")).alias("side", "content_sha")
+    )
+    rows = (
+        reps.select("content_sha", "minhash_kmv", "theta64")
+        .join(F.broadcast(sides) if broadcast else sides.hint("shuffle_hash"), "content_sha")
+        .select("sha_a", "sha_b", "side", "minhash_kmv", "theta64")
+        .repartition("sha_a", "sha_b")
+        .sortWithinPartitions("sha_a", "sha_b", "side")
     )
 
     threshold = cfg.jaccard_threshold
@@ -148,18 +120,32 @@ def verify_pairs(
     max_theta = (1 << 63) - 1
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        carry = None  # an a-row whose b-row opens the next batch
         for rb in batches:
-            if not rb.num_rows:
+            if carry is not None:
+                rb = pa.Table.from_batches([carry, rb]).combine_chunks().to_batches()[0]
+            # sides must alternate 0, 1 and each (even, odd) couple share
+            # the pair key
+            n = rb.num_rows
+            if (rb.column("side").to_numpy() != np.arange(n) % 2).any():
+                raise ValueError(_UNPAIRED)
+            carry = rb.slice(n - 1) if n % 2 else None
+            if n < 2:
                 continue
-            ta = rb.column("theta_a").to_numpy()
-            tb = rb.column("theta_b").to_numpy()
-            j = jaccard_batch(rb.column("kmv_a"), ta, rb.column("kmv_b"), tb)
+            a, b = rb.take(np.arange(0, n - 1, 2)), rb.take(np.arange(1, n, 2))
+            if not all(a.column(c).equals(b.column(c)) for c in ("sha_a", "sha_b")):
+                raise ValueError(_UNPAIRED)
+            ta = a.column("theta64").to_numpy()
+            tb = b.column("theta64").to_numpy()
+            j = jaccard_batch(a.column("minhash_kmv"), ta, b.column("minhash_kmv"), tb)
             estimating = (ta < max_theta) | (tb < max_theta)
             sigma = np.sqrt(np.clip(j * (1.0 - j), 0.0, None) / k)
             ub = np.where(estimating, j + slack * sigma, j)
             yield pa.RecordBatch.from_arrays(
-                [rb.column("sha_a"), rb.column("sha_b"), pa.array(j), pa.array(ub >= threshold)],
+                [a.column("sha_a"), a.column("sha_b"), pa.array(j), pa.array(ub >= threshold)],
                 ["sha_a", "sha_b", "jaccard_est", "accepted"],
             )
+        if carry is not None:
+            raise ValueError(_UNPAIRED)
 
-    return joined.mapInArrow(run, schema=VERIFIED_SCHEMA)
+    return rows.mapInArrow(run, schema=VERIFIED_SCHEMA)

@@ -9,13 +9,13 @@ CompactThetaSketch exchange path, theta/sketch.rs:443-491).
 One decision, made once, picks the plan of every key-bound stage: the
 measured rep-key count against ``cfg.broadcast_key_limit``, the only plan
 setting. Within the limit, the narrow key set is broadcast into the
-signature scan for each payload attach, verify prunes its payload to the
-broadcast candidate-sha set, and the final merge — connected components —
-runs as one vectorized union-find task (``union_find_components``): the
+signature scan for each payload attach, verify broadcasts its side rows
+(if twice the measured pair count fits too), and connected components
+run as one vectorized union-find task (``union_find_components``): the
 graph's nodes are a subset of the rep keys, so the same bound covers that
 task's memory, and the stage costs a fixed handful of jobs instead of ~6
 per Kiveris iteration. Beyond the limit, all three take shuffle plans: a
-materialized reps stage, an unpruned verify join and the iterative
+materialized reps stage, a shuffle-hash verify join and the iterative
 large-star/small-star ``connected_components``, which never holds a
 component in one task.
 
@@ -38,7 +38,7 @@ import os
 
 from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..config import PipelineConfig
 from ..operators.connected_components import (
@@ -109,7 +109,7 @@ class DedupPipeline:
         self.spark = spark
         self.cfg = cfg or PipelineConfig()
         self.dir = checkpoint_dir
-        self.metrics: list[tuple] = []  # (stage, rows_out, fingerprint, reused)
+        self.metrics: list[tuple] = []  # (stage, rows_out or Observation, fp, reused)
 
     # ------------------------------------------------------------ checkpoints
 
@@ -149,10 +149,13 @@ class DedupPipeline:
             # (measured: eager per-stage checkpoints beat the lazy variant
             # by ~35s on the 600k-file bench at 16 cores). Single-consumer
             # stages can opt out (materialize=False) and flow straight into
-            # their consumer's aggregation.
+            # their consumer's aggregation. The checkpoint job also counts
+            # the rows (an observed metric), so ``_stage_rows`` runs no job.
             df = compute()
             if materialize:
-                df = df.localCheckpoint(eager=True)
+                rows = Observation()
+                df = df.observe(rows, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+                self.metrics.append((name, rows, fp, False))
             return df, fp
         path = f"{self.dir}/{name}"
         if os.path.exists(os.path.join(path, "_SUCCESS")):
@@ -185,31 +188,21 @@ class DedupPipeline:
         the narrow (content_sha, rep_file_id) relation and broadcast the
         plan decision: the measured rep-key count is at most
         cfg.broadcast_key_limit. The count comes from the rep_keys stage's
-        own materialization (checkpoint metrics, or one narrow job over
-        the ~60 B/row cached blocks), so no extra corpus scan.
+        own materialization (the checkpoint's row count, or a count
+        observed by the eager checkpoint job), so it costs no job.
 
         Only the NARROW rep-key table is materialized up front; consumers
         attach the payload columns they need (candidates: bands; verify:
-        kmv/theta/n_shingles). Broadcast path: each attach broadcasts the
-        key set into the already-materialized signature scan — the ~2KB
-        wide rows are scanned in place, never re-shuffled or
-        re-materialized. Fallback path: a materialized shuffle-hash reps
-        stage carries all four payload columns, and each attach selects
-        from it.
+        kmv/theta). Broadcast path: each attach broadcasts the key set
+        into the already-materialized signature scan — the ~2KB wide rows
+        are scanned in place, never re-shuffled or re-materialized.
+        Fallback path: a materialized shuffle-hash reps stage carries the
+        three payload columns and each attach selects from it. Verify
+        broadcasts two side rows per candidate pair, so it needs twice the
+        candidates stage's row count (measured the same way) within the
+        limit too; else it shuffles.
         """
-        # signatures feed several consumers (rep keys, payload attach, the
-        # final file_id→cluster map) — materialize once so the kernel runs
-        # once and the cluster stage never re-scans the raw corpus
-        sigs, fp1 = self._stage(
-            "signatures",
-            input_fp,
-            lambda: compute_signatures(corpus, self.cfg),
-        )
-        # narrow (file_id, content_sha) projection materialized ONCE: the
-        # rep keys agg, the duplicate probe and the final cluster map are
-        # all narrow consumers, and a row-cached wide table gives them no
-        # column pruning — this 60B/row table does
-        ids, _ = self._stage("ids", fp1, lambda: sigs.select("file_id", "content_sha"))
+        sigs, ids, fp1 = self._signature_stages(corpus, input_fp)
         # the duplicate-(sha,fid) probe and the rep-keys agg both read only
         # the materialized ids blocks and are independent — overlap them
         # (guide §2.6: actions are only sequential because the driver calls
@@ -245,7 +238,7 @@ class DedupPipeline:
                 lambda: rep_payload(
                     payload(),
                     keys,
-                    ["bands", "n_shingles", "minhash_kmv", "theta64"],
+                    ["bands", "minhash_kmv", "theta64"],
                     broadcast=False,
                 ),
             )
@@ -256,27 +249,47 @@ class DedupPipeline:
         cands, fp3 = self._stage(
             "candidates", fp2, lambda: candidate_pairs(attach(["bands"]), self.cfg)
         )
+        # the rep-key count does not bound the pairs (a family of m
+        # near-duplicates gives up to m(m-1)/2), so measure them too
+        limit = self.cfg.broadcast_key_limit
+        side_rows = broadcast and 2 * self._stage_rows("candidates", cands) <= limit
         verified, fp4 = self._stage(
             "verified",
             fp3,
             lambda: verify_pairs(
                 cands,
-                attach(["n_shingles", "minhash_kmv", "theta64"]),
+                attach(["minhash_kmv", "theta64"]),
                 self.cfg,
-                broadcast=broadcast,
+                broadcast=side_rows,
             ),
         )
         rep_map = keys.select("content_sha", "rep_file_id")
         return ids, rep_map, verified, fp4, broadcast
 
+    def _signature_stages(self, corpus: DataFrame, input_fp: str):
+        """(sigs, ids, fp1): the signatures stage and its narrow ids
+        projection, shared by every entry point."""
+        # signatures feed several consumers (rep keys, payload attach, the
+        # final file_id→cluster map) — materialize once so the kernel runs
+        # once and the cluster stage never re-scans the raw corpus
+        sigs, fp1 = self._stage(
+            "signatures", input_fp, lambda: compute_signatures(corpus, self.cfg)
+        )
+        # narrow (file_id, content_sha) projection materialized ONCE: the
+        # rep keys agg, the duplicate probe and the final cluster map are
+        # all narrow consumers, and a row-cached wide table gives them no
+        # column pruning — this 60B/row table does
+        ids, _ = self._stage("ids", fp1, lambda: sigs.select("file_id", "content_sha"))
+        return sigs, ids, fp1
+
     def _stage_rows(self, name: str, df: DataFrame) -> int:
-        """Row count of a just-materialized stage: from the checkpoint
-        metrics when available, else one narrow job over the stage's own
-        cached blocks (~60 B/row for the key tables) — never a corpus
-        rescan."""
+        """Row count of a just-materialized stage, as ``_stage`` recorded
+        it (the checkpoint's count, or the count the eager checkpoint job
+        observed); one job over the stage's plan only for a stage built
+        with ``materialize=False``."""
         for stage, rows, *_ in reversed(self.metrics):
             if stage == name:
-                return rows
+                return rows.get["n"] if isinstance(rows, Observation) else rows
         return df.count()
 
     def run(self, corpus: DataFrame, input_fp: str = "corpus") -> DataFrame:
@@ -305,15 +318,12 @@ class DedupPipeline:
 
         Exemplar of the ``n_docs`` hint (operators/substring.py): the
         prefilter bloom is sized from the ids stage's measured row count
-        (checkpoint ``_metrics`` or the stage's own cached blocks), so NO
-        sizing ``count()`` job over the corpus appears in the plan. The
+        (recorded when the stage was materialized), so NO sizing
+        ``count()`` job appears in the plan. The
         signature/ids stages are shared with ``run()``/``dup_pairs()`` —
         checkpointed or cached once, reused by every consumer.
         """
-        sigs, fp1 = self._stage(
-            "signatures", input_fp, lambda: compute_signatures(corpus, self.cfg)
-        )
-        ids, _ = self._stage("ids", fp1, lambda: sigs.select("file_id", "content_sha"))
+        _, ids, _ = self._signature_stages(corpus, input_fp)
         docs = corpus.select(
             F.sha2(F.concat_ws("\x00", "repo", "path", "commit"), 256).alias("file_id"),
             F.col("content"),
@@ -343,6 +353,6 @@ class DedupPipeline:
                 F.lit("near").alias("kind"),
             )
         )
-        ex = exact_pairs(ids)
+        ex = exact_pairs(ids, rep_map)
         self.flush_metrics()
         return ex.unionByName(near)

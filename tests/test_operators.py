@@ -1674,46 +1674,128 @@ def test_countmin_df_merge_guard(spark):
 
 
 def test_verify_pairs_broadcast_parity(spark):
-    """verify_pairs with the candidate-sha pushdown (broadcast=True) and
-    without it (broadcast=False, the full payload shuffles) must return
-    identical rows."""
-    import numpy as np
+    """verify_pairs with broadcast side rows (broadcast=True) and with a
+    shuffle-hash join (broadcast=False) both equal a per-pair
+    ``jaccard_estimate`` reference plus the 2-sigma rule — over a star,
+    estimating-mode pairs near the threshold (mixed thetas), empty kmv
+    blobs and shas ending in 0x00 or holding bytes >= 0x80, also when a
+    pair's two rows fall in different Arrow batches. The broadcast plan
+    routes the pairs through exactly one hash exchange. A pair that
+    does not meet exactly one payload row per side raises instead of
+    pairing the wrong rows."""
+    from pyspark.errors import PythonException
 
-    from datasketches_rust_spark.config import PipelineConfig
     from datasketches_rust_spark.operators.verify import verify_pairs
+    from datasketches_rust_spark.sigkit.kmv import jaccard_estimate
 
     max_theta = (1 << 63) - 1
+    est_theta = 1 << 40
     rng = np.random.RandomState(7)
-    sig_rows = []
-    shas = [bytes([i] * 32) for i in range(8)]
-    def draw(n):
-        vals = np.unique(rng.randint(1, 1 << 40, size=2 * n).astype(np.uint64))
-        return vals[:n]
 
-    base_set = np.sort(draw(64))
+    def draw(n, hi=1 << 40):
+        return rng.choice(np.arange(1, hi, 1 << 20, dtype=np.uint64), n, replace=False)
+
+    shas = [bytes([i] * 32) for i in range(8)]
+    shas += [bytes([0x80 + i] * 31) + b"\x00" for i in range(4)]
+    base = draw(64, 1 << 30)
+    sig = {}
     for i, sha in enumerate(shas):
         # consecutive shas share most hashes -> high-J accepted pairs
-        vals = base_set.copy()
-        vals[: 4 * i] = draw(4 * i)
-        sig_rows.append((sha, bytes(np.sort(vals).astype("<u8").tobytes()), max_theta, 64))
-    reps = spark.createDataFrame(
-        sig_rows, "content_sha binary, minhash_kmv binary, theta64 long, n_shingles long"
-    )
-    cands = spark.createDataFrame(
-        [(shas[i], shas[i + 1]) for i in range(7)], "sha_a binary, sha_b binary"
-    )
+        vals = base.copy()
+        vals[: 4 * i] = draw(4 * i, 1 << 30) + np.uint64(1 << 30)
+        sig[sha] = (np.sort(vals), max_theta)
+    # estimating mode: 256 retained hashes below theta; J = 224/288 ~ 0.78
+    # passes only through the 2-sigma slack, J = 200/312 ~ 0.64 fails
+    a = draw(256 + 64 + 32, est_theta)
+    est = [bytes([0xF0 + i] * 31) + bytes([i]) for i in range(5)]
+    sig[est[0]] = (np.sort(a[:256]), est_theta)
+    sig[est[1]] = (np.sort(np.r_[a[:224], a[256:288]]), est_theta)
+    sig[est[2]] = (np.sort(np.r_[a[:200], a[256:312]]), est_theta)
+    # a smaller theta on one side cuts the other side's hashes above it
+    sig[est[3]] = (np.sort(a[:256][a[:256] < est_theta // 2]), est_theta // 2)
+    sig[est[4]] = (np.empty(0, np.uint64), max_theta)  # empty kmv blob
+    empty2 = bytes([0xEE] * 32)
+    sig[empty2] = (np.empty(0, np.uint64), max_theta)
 
-    def rows(broadcast):
-        return {
-            (bytes(r["sha_a"]), bytes(r["sha_b"]), round(r["jaccard_est"], 9), r["accepted"])
-            for r in verify_pairs(
-                cands, reps, PipelineConfig(), broadcast=broadcast
-            ).collect()
-        }
+    pairs = [(shas[i], shas[i + 1]) for i in range(len(shas) - 1)]
+    pairs += [(shas[0], s) for s in shas[2:6]]  # a star on shas[0]
+    pairs += [(est[0], est[1]), (est[0], est[2]), (est[0], est[3]), (est[1], est[3])]
+    pairs += [(shas[3], est[4]), (empty2, est[4])]
+    pairs = [tuple(sorted(p)) for p in pairs]
 
-    bcast = rows(True)
-    assert bcast == rows(False)
-    assert len(bcast) == 7
+    def blob(v):
+        return v.astype("<u8").tobytes()
+
+    sig_schema = "content_sha binary, minhash_kmv binary, theta64 long"
+    reps = spark.createDataFrame([(s, blob(v), t) for s, (v, t) in sig.items()], sig_schema)
+    cands = spark.createDataFrame(pairs, "sha_a binary, sha_b binary")
+
+    def expected(sa, sb):
+        (va, ta), (vb, tb) = sig[sa], sig[sb]
+        j = jaccard_estimate(va, ta, vb, tb)
+        sigma = np.sqrt(max(j * (1 - j), 0.0) / CFG.kmv_k)
+        ub = j + 2.0 * sigma if min(ta, tb) < max_theta else j
+        return sa, sb, j, bool(ub >= CFG.jaccard_threshold)
+
+    want = {expected(*p) for p in pairs}
+    assert len(want) == len(pairs)
+    # the near-threshold pair is accepted only through the slack
+    assert {(w[2] < CFG.jaccard_threshold, w[3]) for w in want if w[:2] == (est[0], est[1])} == {
+        (True, True)
+    }
+
+    def rows(df):
+        return {(bytes(r[0]), bytes(r[1]), r[2], r[3]) for r in df.collect()}
+
+    def with_conf(settings, fn):
+        old = {k: spark.conf.get(k) for k in settings}
+        for k, v in settings.items():
+            spark.conf.set(k, v)
+        try:
+            return fn()
+        finally:
+            for k, v in old.items():
+                spark.conf.set(k, v)
+
+    for broadcast in (True, False):
+        out = verify_pairs(cands, reps, CFG, broadcast=broadcast)
+        if broadcast:
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert plan.count("Exchange hashpartitioning") == 1, plan
+            assert "BroadcastHashJoin" in plan, plan
+        assert rows(out) == want
+        # one partition in Arrow batches of 1 and 3 rows: pairs split
+        # across batch boundaries, their a-row carried into the next batch
+        for per_batch in ("1", "3"):
+            settings = {
+                "spark.sql.shuffle.partitions": "1",
+                "spark.sql.execution.arrow.maxRecordsPerBatch": per_batch,
+            }
+            got = with_conf(
+                settings, lambda: rows(verify_pairs(cands, reps, CFG, broadcast=broadcast))
+            )
+            assert got == want
+
+        # duplicated rep rows on one side (odd row count) or on both sides
+        # (even: only the per-pair side check sees it) and a missing rep
+        x, y = shas[6], shas[7]
+        one_pair = spark.createDataFrame([(x, y)], "sha_a binary, sha_b binary")
+        dup_x = reps.unionByName(reps.where(F.col("content_sha") == x))
+        dup_xy = reps.unionByName(reps.where(F.col("content_sha").isin(x, y)))
+        no_y = reps.where(F.col("content_sha") != y)
+        for bad in (dup_x, dup_xy, no_y):
+            with pytest.raises(PythonException, match="ValueError: verify_pairs"):
+                verify_pairs(one_pair, bad, CFG, broadcast=broadcast).collect()
+        # (u, v) lacks its b-row and (x, y) its a-row: in one partition the
+        # sides still alternate 0, 1 — only the pair-key check sees it
+        u, v = shas[4], shas[5]
+        two_pairs = spark.createDataFrame([(u, v), (x, y)], "sha_a binary, sha_b binary")
+        half = reps.where(~F.col("content_sha").isin(v, x))
+        with pytest.raises(PythonException, match="ValueError: verify_pairs"):
+            with_conf(
+                {"spark.sql.shuffle.partitions": "1"},
+                lambda: verify_pairs(two_pairs, half, CFG, broadcast=broadcast).collect(),
+            )
 
 
 def test_countmin_reflayout_broadcast_gate(spark):

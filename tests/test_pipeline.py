@@ -394,3 +394,50 @@ def test_rep_payload_auto_mode_resolves_from_key_count(spark, corpus, monkeypatc
     # the probe prefetched before the decision is the one the fallback's
     # reps stage consumes: it runs once, and its result is read
     assert len(probes) == 1
+
+
+def test_verify_broadcast_gated_by_measured_pair_count(spark, monkeypatch):
+    """Verify broadcasts two side rows per candidate pair, and a family of
+    near-duplicates has more pairs than rep keys: with a limit that holds
+    the rep keys but not twice the pairs, the payload attaches stay
+    broadcast, verify takes its shuffle-hash join, and the clusters equal
+    the all-broadcast run's."""
+    import datasketches_rust_spark.plans.pipeline as P
+
+    base = " ".join(f"tok{i}" for i in range(400))
+    rows = [
+        (f"org/r{i}", f"src/f{i}.py", f"{i:040x}", "python", base + f" unique_{i}")
+        for i in range(12)
+    ] + [
+        (f"org/u{i}", f"src/u{i}.py", f"{i:040x}", "python",
+         " ".join(f"zz{i}_{j}" for j in range(400)))
+        for i in range(4)
+    ]
+    corpus = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, content string"
+    )
+    calls, n_pairs = [], []
+    for name in ("rep_payload", "verify_pairs"):
+        def spy(*args, _orig=getattr(P, name), _name=name, **kw):
+            calls.append((_name, kw["broadcast"]))
+            if _name == "verify_pairs":
+                n_pairs.append(args[0].count())
+            return _orig(*args, **kw)
+
+        monkeypatch.setattr(P, name, spy)
+    n_keys = len(rows)
+    out = []
+    for limit in (CFG.broadcast_key_limit, n_keys):
+        calls.clear()
+        out.append(
+            DedupPipeline(spark, CFG.with_(broadcast_key_limit=limit))
+            .run(corpus)
+            .orderBy("file_id")
+            .toPandas()
+        )
+    assert n_keys < 2 * n_pairs[-1] and n_pairs[0] == n_pairs[-1] == 66
+    assert sorted(calls) == [
+        ("rep_payload", True), ("rep_payload", True), ("verify_pairs", False)
+    ]
+    pd.testing.assert_frame_equal(*out)
+    assert out[0].cluster_id.nunique() == 1 + 4  # the family and 4 controls
