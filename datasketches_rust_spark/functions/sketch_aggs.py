@@ -1,30 +1,44 @@
-"""Bounded-memory sketch aggregates in Spark's partial→final shape.
+"""Bounded-memory sketch aggregates: partials, then one merge of
+stored-sketch rows.
 
-Both aggregates follow the reference's map-then-merge model exactly:
-per-input-partition sketches are built in a tight numpy kernel
-(``mapInPandas`` — no shuffle), serialized as array columns, then merged
-per group with the sketch's commutative ``merge`` (``applyInPandas`` after
-a shuffle of *sketches*, not raw rows). Shuffle volume is O(groups ×
-sketch size), independent of input rows — the entire point of sketches at
-100 TB.
+Each sketch family has one stored-row schema:
 
-- ``tdigest_agg``: sigkit.tdigest (TDigestMut semantics, tdigest/sketch.rs)
-- ``frequent_items_agg``: sigkit.frequencies (FrequentItemsSketch
-  semantics, frequencies/sketch.rs)
+- t-digest (sigkit.tdigest, TDigestMut semantics, tdigest/sketch.rs):
+  ``(group..., means array<double>, weights array<double>)``;
+- Misra-Gries (sigkit.frequencies, FrequentItemsSketch semantics,
+  frequencies/sketch.rs): ``(group..., items array<T>, counts array<long>,
+  offset long, weight long)``, ``T`` the item column's native type.
+
+The partials (``mapInArrow``, no shuffle) group each Arrow batch with
+``pa.Table.group_by``, update one sketch per key, and emit one stored row
+per key and partition. The merge (``groupBy(...).applyInArrow``, a shuffle
+of sketches, not raw rows) folds a group's stored rows with the sketch's
+commutative merge and finishes either as the query (quantile columns,
+threshold rows) or as one stored row again. So ``tdigest_agg`` is
+``tdigest_merge_agg`` over the partials, ``tdigest_sketch_agg`` is their
+merge-to-state, and the Misra-Gries functions compose the same way.
+Shuffle volume is O(groups × sketch size), independent of the input rows.
+
+A NULL group key is a group of its own, as in Spark's ``groupBy``; rows
+with a NULL value are skipped, as Spark's aggregates skip NULL inputs.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from functools import reduce
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame, functions as F
 
+from ..sigkit.arrow_buf import list_array, list_values
 from ..sigkit.frequencies import MisraGries
 from ..sigkit.tdigest import TDigest
 
 _GRP = "__grp"
+_TDIGEST_STATE = "means array<double>, weights array<double>"
+_MG_STATE = "items array<{t}>, counts array<long>, offset long, weight long"
 
 
 def _quantile_col_name(q: float) -> str:
@@ -38,91 +52,92 @@ def _quantile_col_name(q: float) -> str:
     return "p" + s.replace(".", "_").replace("-", "m")
 
 
-def _with_group(df: DataFrame, group_cols: list[str]) -> tuple[DataFrame, list[str]]:
-    if group_cols:
-        return df, group_cols
-    return df.withColumn(_GRP, F.lit(0)), [_GRP]
+def _grouped(df: DataFrame, group_cols: list[str], values: dict[str, Column], tail: str):
+    """(df projected to (group..., values...), its grouping columns, the
+    output schema (group..., tail)). With no group columns every row
+    groups under a constant ``__grp``, which the partials pass on and
+    ``_merge`` drops."""
+    gcols = group_cols or [_GRP]
+    df = df if group_cols else df.withColumn(_GRP, F.lit(0))
+    base = df.select(*gcols, *(c.alias(n) for n, c in values.items()))
+    keys = (f"{c} {base.schema[c].dataType.simpleString()}" for c in gcols)
+    return base, gcols, ", ".join([*keys, tail])
 
 
-def _gschema(base: DataFrame, gcols: list[str]) -> str:
-    return ", ".join(f"{c} {base.schema[c].dataType.simpleString()}" for c in gcols)
+def _partials(df, group_cols, values, tail, new, state) -> DataFrame:
+    """Per-input-partition sketches as stored rows (group..., tail).
+
+    Each Arrow batch is grouped by key, and the key's rows whose ``values``
+    are all non-NULL go to ``update_batch`` of its sketch (made by
+    ``new()``), one numpy array per value column. ``state(sketch,
+    batch_schema)`` gives a sketch's tail columns."""
+    base, gcols, schema = _grouped(df, group_cols, values, tail)
+    names = list(values)  # the kernel must not capture the (JVM) Columns
+
+    def partials(batches):
+        sketches, rb_schema = {}, None
+        for rb in batches:
+            rb_schema = rb.schema
+            g = pa.Table.from_batches([rb]).group_by(gcols, use_threads=False)
+            g = g.aggregate([(n, "list") for n in names])
+            for i, key in enumerate(zip(*(g[c].to_pylist() for c in gcols))):
+                arrays = [g[f"{n}_list"][i].values for n in names]
+                valid = reduce(pc.and_, [a.is_valid() for a in arrays])
+                sketches.setdefault(key, new()).update_batch(
+                    *(a.filter(valid).to_numpy(zero_copy_only=False) for a in arrays)
+                )
+        if sketches:
+            keys = [pa.array(k, rb_schema.field(c).type) for c, k in zip(gcols, zip(*sketches))]
+            rows = [state(s, rb_schema) for s in sketches.values()]
+            cols = {n: pa.concat_arrays([r[n] for r in rows]) for n in rows[0]}
+            yield pa.RecordBatch.from_arrays([*keys, *cols.values()], [*gcols, *cols])
+
+    return base.mapInArrow(partials, schema)
 
 
-def _tdigest_partials(
-    base: DataFrame, gcols: list[str], delta: float
-) -> tuple[DataFrame, str]:
-    """Per-input-partition digests: (group..., means, weights) rows —
-    the shared partial stage of tdigest_agg / tdigest_sketch_agg.
-    Returns (partials_df, row_schema) so callers never restate the
-    stored-digest schema string."""
-    part_schema = f"{_gschema(base, gcols)}, means array<double>, weights array<double>"
+def _merge(df, group_cols, values, tail, kernel) -> DataFrame:
+    """``groupBy(group_cols).applyInArrow``: ``kernel(table)`` gives the
+    tail columns of one group's output rows, which repeat the group key."""
+    base, gcols, schema = _grouped(df, group_cols, values, tail)
 
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        digests: dict = {}
-        for pdf in batches:
-            for key, sub in pdf.groupby(gcols, sort=False):
-                key = key if isinstance(key, tuple) else (key,)
-                d = digests.setdefault(key, TDigest(delta))
-                d.update_batch(sub["__v"].to_numpy())
-        rows = []
-        for key, d in digests.items():
-            m, w = d.to_rows()
-            rows.append((*key, m, w))
-        yield pd.DataFrame(rows, columns=[*gcols, "means", "weights"])
+    def merge(key, table):  # unannotated: (key, pa.Table), no type-hint inference
+        cols = kernel(table)
+        rows = np.zeros(len(next(iter(cols.values()))), dtype=np.int64)
+        keys = table.select(gcols).take(rows)
+        return pa.Table.from_arrays([*keys.columns, *cols.values()], [*gcols, *cols])
 
-    return base.mapInPandas(partials, part_schema), part_schema
+    out = base.groupBy(*gcols).applyInArrow(merge, schema)
+    return out if group_cols else out.drop(_GRP)
 
 
-def _merged_tdigest(pdf: pd.DataFrame, delta: float, m_col: str = "means", w_col: str = "weights") -> TDigest:
-    """Buffer-then-compress merge of stored digest rows
-    (tdigest/sketch.rs:235-259) instead of P sequential merges."""
-    return TDigest.from_rows(
-        delta,
-        np.concatenate(
-            [np.asarray(m, dtype=np.float64) for m in pdf[m_col]] or [np.empty(0, np.float64)]
-        ),
-        np.concatenate(
-            [np.asarray(w, dtype=np.float64) for w in pdf[w_col]] or [np.empty(0, np.float64)]
-        ),
+# ---------------------------------------------------------------- t-digest
+
+
+def _tdigest_state(d: TDigest) -> dict[str, pa.Array]:
+    d.compress()
+    offs = np.array([0, len(d.means)])
+    return {"means": list_array(d.means, offs), "weights": list_array(d.weights, offs)}
+
+
+def _tdigest_partials(df, group_cols, value_col, delta) -> DataFrame:
+    return _partials(
+        df, group_cols, {"__v": F.col(value_col).cast("double")}, _TDIGEST_STATE,
+        lambda: TDigest(delta),
+        lambda d, _: _tdigest_state(d),
     )
 
 
-def _mg_partials(
-    base: DataFrame, gcols: list[str], max_map_size: int, item_t: str
-) -> tuple[DataFrame, str]:
-    """Per-input-partition Misra-Gries states — the shared partial stage
-    of frequent_items_agg / frequent_items_sketch_agg. ``item_t`` is the
-    item column's NATIVE Spark type (carried through the partial schema —
-    the reference sketch is generic over T, frequencies/sketch.rs:96, so
-    long/binary items round-trip without a lossy string cast). Returns
-    (partials_df, row_schema)."""
-    part_schema = (
-        f"{_gschema(base, gcols)}, items array<{item_t}>, counts array<long>, offset long, weight long"
-    )
+def _tdigest_merge(df, group_cols, delta, tail, finish, means_col="means", weights_col="weights"):
+    """Buffer-then-compress merge of each group's stored digests
+    (tdigest/sketch.rs:235-259): the group's flattened centroid columns
+    are one digest's buffer."""
 
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sk: dict = {}
-        for pdf in batches:
-            for key, sub in pdf.groupby(gcols, sort=False):
-                key = key if isinstance(key, tuple) else (key,)
-                s = sk.setdefault(key, MisraGries(max_map_size))
-                s.update_batch(sub["__it"].to_numpy(), sub["__w"].to_numpy())
-        rows = []
-        for key, s in sk.items():
-            items, counts, off, wt = s.to_rows()
-            rows.append((*key, items, counts, off, wt))
-        yield pd.DataFrame(rows, columns=[*gcols, "items", "counts", "offset", "weight"])
+    def kernel(table):
+        m, w = (np.asarray(list_values(table[c])[0], np.float64) for c in ("__m", "__w"))
+        return finish(TDigest(delta, m, w))
 
-    return base.mapInPandas(partials, part_schema), part_schema
-
-
-def _merged_mg(pdf: pd.DataFrame, max_map_size: int) -> MisraGries:
-    """Itemwise-add merge of stored MG rows (frequencies/sketch.rs:358-371)."""
-    s = MisraGries(max_map_size)
-    for items, counts, off, wt in zip(pdf["items"], pdf["counts"], pdf["offset"], pdf["weight"]):
-        s.merge(MisraGries.from_rows(max_map_size, items, counts, off, wt))
-    return s
-
+    values = {"__m": F.col(means_col), "__w": F.col(weights_col)}
+    return _merge(df, group_cols, values, tail, kernel)
 
 
 def tdigest_agg(
@@ -140,24 +155,11 @@ def tdigest_agg(
     ``tdigest_quantiles`` shape. With delta > pi * n the k1 cap never lets
     two points merge, every centroid stays a singleton and the interpolated
     quantile is exact (and SQL-expressible). Round with F.round downstream
-    (Python round() is banker's; SQL round is half-away-from-zero).
+    (Python round() is banker's; SQL round is half-away-from-zero). NULL,
+    NaN and infinite values are skipped; a group with none left reads NaN.
     """
-    if col_names is None:
-        col_names = [_quantile_col_name(q) for q in quantiles]
-    if len(set(col_names)) != len(col_names):
-        raise ValueError(f"duplicate quantile column names: {col_names}")
-    df, gcols = _with_group(df, group_cols)
-    base = df.select(*gcols, F.col(value_col).cast("double").alias("__v"))
-    part, _ = _tdigest_partials(base, gcols, delta)
-    out_schema = _gschema(base, gcols) + ", " + ", ".join(f"{c} double" for c in col_names)
-
-    def final(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        d = _merged_tdigest(pdf, delta)
-        qs = [d.quantile(q) for q in quantiles]
-        return pd.DataFrame([(*key, *qs)], columns=[*gcols, *col_names])
-
-    out = part.groupBy(*gcols).applyInPandas(final, out_schema)
-    return out.drop(_GRP) if not group_cols else out
+    partials = _tdigest_partials(df, group_cols, value_col, delta)
+    return tdigest_merge_agg(partials, group_cols, quantiles, delta, col_names=col_names)
 
 
 def tdigest_sketch_agg(
@@ -172,16 +174,8 @@ def tdigest_sketch_agg(
     ``tdigest_merge_agg`` to re-aggregate stored digests later without
     rescanning raw values.
     """
-    df, gcols = _with_group(df, group_cols)
-    base = df.select(*gcols, F.col(value_col).cast("double").alias("__v"))
-    part, part_schema = _tdigest_partials(base, gcols, delta)
-
-    def final(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        m, w = _merged_tdigest(pdf, delta).to_rows()
-        return pd.DataFrame([(*key, m, w)], columns=[*gcols, "means", "weights"])
-
-    out = part.groupBy(*gcols).applyInPandas(final, part_schema)
-    return out.drop(_GRP) if not group_cols else out
+    partials = _tdigest_partials(df, group_cols, value_col, delta)
+    return _tdigest_merge(partials, group_cols, delta, _TDIGEST_STATE, _tdigest_state)
 
 
 def tdigest_merge_agg(
@@ -203,19 +197,58 @@ def tdigest_merge_agg(
         col_names = [_quantile_col_name(q) for q in quantiles]
     if len(set(col_names)) != len(col_names):
         raise ValueError(f"duplicate quantile column names: {col_names}")
-    df, gcols = _with_group(df, group_cols)
-    base = df.select(
-        *gcols, F.col(means_col).alias("__m"), F.col(weights_col).alias("__w")
+
+    def finish(d: TDigest) -> dict[str, pa.Array]:
+        return {c: pa.array([d.quantile(q)], pa.float64()) for c, q in zip(col_names, quantiles)}
+
+    tail = ", ".join(f"{c} double" for c in col_names)
+    return _tdigest_merge(df, group_cols, delta, tail, finish, means_col, weights_col)
+
+
+# ------------------------------------------------------------- Misra-Gries
+
+
+def _mg_state(s: MisraGries, item_type: pa.DataType) -> dict[str, pa.Array]:
+    offs = np.array([0, len(s.items)])
+    return {
+        "items": list_array(s.items, offs, item_type),
+        "counts": list_array(s.counts, offs, pa.int64()),
+        "offset": pa.array([s.offset], pa.int64()),
+        "weight": pa.array([s.stream_weight], pa.int64()),
+    }
+
+
+def _mg_partials(df, group_cols, item_col, weight_col, max_map_size) -> DataFrame:
+    """The stored items keep the item column's NATIVE Spark type (the
+    reference sketch is generic over T, frequencies/sketch.rs:96), so
+    long/binary items round-trip without a lossy string cast."""
+    w = F.col(weight_col).cast("long") if weight_col else F.lit(1).cast("long")
+    return _partials(
+        df, group_cols, {"__it": F.col(item_col), "__w": w},
+        _MG_STATE.format(t=df.schema[item_col].dataType.simpleString()),
+        lambda: MisraGries(max_map_size),
+        lambda s, schema: _mg_state(s, schema.field("__it").type),
     )
-    out_schema = _gschema(base, gcols) + ", " + ", ".join(f"{c} double" for c in col_names)
 
-    def final(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        d = _merged_tdigest(pdf, delta, "__m", "__w")
-        qs = [d.quantile(q) for q in quantiles]
-        return pd.DataFrame([(*key, *qs)], columns=[*gcols, *col_names])
 
-    out = base.groupBy(*gcols).applyInPandas(final, out_schema)
-    return out.drop(_GRP) if not group_cols else out
+def _mg_merge(df, group_cols, max_map_size, tail, finish) -> DataFrame:
+    """Itemwise-add merge of each group's stored Misra-Gries rows, one row
+    after another (frequencies/sketch.rs:358-371); ``{t}`` in ``tail`` is
+    the stored items' element type."""
+
+    def kernel(table):
+        items, offs = list_values(table["items"])
+        items = items.astype(object)
+        counts = list_values(table["counts"])[0].astype(np.int64)
+        s = MisraGries(max_map_size)
+        rows = zip(offs[:-1], offs[1:], table["offset"].to_pylist(), table["weight"].to_pylist())
+        for lo, hi, off, wt in rows:
+            s.merge(MisraGries(max_map_size, items[lo:hi], counts[lo:hi], off, wt))
+        return finish(s, table["items"].type.value_type)
+
+    item_t = df.schema["items"].dataType.elementType.simpleString()
+    values = {c: F.col(c) for c in ("items", "counts", "offset", "weight")}
+    return _merge(df, group_cols, values, tail.format(t=item_t), kernel)
 
 
 def frequent_items_sketch_agg(
@@ -230,22 +263,9 @@ def frequent_items_sketch_agg(
     counterpart of ``frequent_items_agg``; re-aggregate later with
     ``frequent_items_merge_agg``. The stored ``items`` array keeps the
     item column's native type (long items stay long, binary stays
-    binary)."""
-    df, gcols = _with_group(df, group_cols)
-    item_t = df.schema[item_col].dataType.simpleString()
-    w = F.col(weight_col).cast("long") if weight_col else F.lit(1).cast("long")
-    base = df.select(*gcols, F.col(item_col).alias("__it"), w.alias("__w"))
-    part, part_schema = _mg_partials(base, gcols, max_map_size, item_t)
-
-    def final(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        items, counts, off, wt = _merged_mg(pdf, max_map_size).to_rows()
-        return pd.DataFrame(
-            [(*key, items, counts, off, wt)],
-            columns=[*gcols, "items", "counts", "offset", "weight"],
-        )
-
-    out = part.groupBy(*gcols).applyInPandas(final, part_schema)
-    return out.drop(_GRP) if not group_cols else out
+    binary). Rows whose item or weight is NULL are skipped."""
+    partials = _mg_partials(df, group_cols, item_col, weight_col, max_map_size)
+    return _mg_merge(partials, group_cols, max_map_size, _MG_STATE, _mg_state)
 
 
 def frequent_items_merge_agg(
@@ -257,39 +277,22 @@ def frequent_items_merge_agg(
 ) -> DataFrame:
     """Merge the N stored Misra-Gries sketches in each group — itemwise
     count addition + offset addition (frequencies/sketch.rs:358-371) —
-    and run the threshold query under the chosen error type. Input rows
-    carry (items, counts, offset, weight) columns as produced by
-    ``frequent_items_sketch_agg``; the output ``item`` column keeps the
-    stored items' native element type."""
-    df, gcols = _with_group(df, group_cols)
-    item_t = df.schema["items"].dataType.elementType.simpleString()
-    base = df.select(*gcols, "items", "counts", "offset", "weight")
-    out_schema = f"{_gschema(base, gcols)}, item {item_t}, count_lb long, count_ub long"
+    and run the threshold query under the chosen error type
+    (``MisraGries.above_threshold``). Input rows carry (items, counts,
+    offset, weight) columns as produced by ``frequent_items_sketch_agg``;
+    the output ``item`` column keeps the stored items' native element
+    type."""
 
-    def final(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        s = _merged_mg(pdf, max_map_size)
-        return _threshold_rows(s, gcols, key, threshold_weight, no_false_negatives)
-
-    out = base.groupBy(*gcols).applyInPandas(final, out_schema)
-    return out.drop(_GRP) if not group_cols else out
-
-
-def _threshold_rows(s, gcols, key, threshold_weight, no_false_negatives) -> pd.DataFrame:
-    """Threshold query over a merged MG state (frequencies/sketch.rs:
-    421-436): threshold clamped to max(threshold, offset), then STRICT
-    upper_bound > t (NoFalseNegatives) / lower_bound > t
-    (NoFalsePositives), matching the reference's inequalities exactly."""
-    thr = max(threshold_weight, s.maximum_error()) if threshold_weight is not None else s.maximum_error()
-    ub = s.counts + s.offset
-    keep = (ub > thr) if no_false_negatives else (s.counts > thr)
-    return pd.DataFrame(
-        {
-            **{c: [k] * int(keep.sum()) for c, k in zip(gcols, key)},
-            "item": s.items[keep],
-            "count_lb": s.counts[keep],
-            "count_ub": ub[keep],
+    def finish(s: MisraGries, item_type: pa.DataType) -> dict[str, pa.Array]:
+        keep = s.above_threshold(threshold_weight, no_false_negatives)
+        return {
+            "item": pa.array(s.items[keep], item_type),
+            "count_lb": pa.array(s.counts[keep], pa.int64()),
+            "count_ub": pa.array(s.counts[keep] + s.offset, pa.int64()),
         }
-    )
+
+    tail = "item {t}, count_lb long, count_ub long"
+    return _mg_merge(df, group_cols, max_map_size, tail, finish)
 
 
 def frequent_items_agg(
@@ -312,18 +315,10 @@ def frequent_items_agg(
     threshold, so every reported item is guaranteed heavy, some true
     hitters may be missed. In exact mode (no purges, offset 0) the two
     coincide. Threshold defaults to the sketch's maximum_error (= offset).
-    The ``item`` column keeps the input column's native type.
+    The ``item`` column keeps the input column's native type. Rows whose
+    item or weight is NULL are skipped and add no stream weight.
     """
-    df, gcols = _with_group(df, group_cols)
-    item_t = df.schema[item_col].dataType.simpleString()
-    w = F.col(weight_col).cast("long") if weight_col else F.lit(1).cast("long")
-    base = df.select(*gcols, F.col(item_col).alias("__it"), w.alias("__w"))
-    part, _ = _mg_partials(base, gcols, max_map_size, item_t)
-    out_schema = f"{_gschema(base, gcols)}, item {item_t}, count_lb long, count_ub long"
-
-    def final(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        s = _merged_mg(pdf, max_map_size)
-        return _threshold_rows(s, gcols, key, threshold_weight, no_false_negatives)
-
-    out = part.groupBy(*gcols).applyInPandas(final, out_schema)
-    return out.drop(_GRP) if not group_cols else out
+    partials = _mg_partials(df, group_cols, item_col, weight_col, max_map_size)
+    return frequent_items_merge_agg(
+        partials, group_cols, max_map_size, threshold_weight, no_false_negatives
+    )

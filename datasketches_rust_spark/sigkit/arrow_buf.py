@@ -1,11 +1,11 @@
 """The Arrow buffer layout, in one place.
 
-Per-document and per-pair kernels cross the Spark↔Python boundary
-through ``mapInArrow``, and this module is the only code that reads or
-builds Arrow buffers by hand. Kernels see a variable-width column as the
-flat layout the sigkit kernels take — one ``uint8`` byte buffer plus
-``(n+1,)`` int64 offsets — and hand their numpy results back as Arrow
-columns without a per-row Python object.
+Kernels cross the Spark↔Python boundary through ``mapInArrow`` (the
+sketch aggregates' merges through ``applyInArrow``), and this module is
+the only code that reads or builds Arrow buffers by hand. Kernels see a
+variable-width column as the flat layout the sigkit kernels take — one
+``uint8`` byte buffer plus ``(n+1,)`` int64 offsets — and hand their
+numpy results back as Arrow columns without a per-row Python object.
 
 Spark-free: nothing here imports pyspark, so kernels and tests call it
 directly. ``or_reduce_bitmap`` is the one function that drives a plan,
@@ -65,10 +65,24 @@ def binary_array(values: np.ndarray, elem_offsets: np.ndarray) -> pa.BinaryArray
     )
 
 
-def list_array(values: np.ndarray, offsets: np.ndarray) -> pa.ListArray:
+def list_array(
+    values: np.ndarray, offsets: np.ndarray, type: pa.DataType | None = None
+) -> pa.ListArray:
     """List column whose element i is ``values[offsets[i]:offsets[i+1]]``;
-    the item type follows ``values``' dtype."""
-    return pa.ListArray.from_arrays(pa.array(offsets.astype(np.int32)), pa.array(values))
+    the item type is ``type``, or follows ``values``' dtype when omitted
+    (pass it for object arrays, whose inferred type depends on the data)."""
+    return pa.ListArray.from_arrays(pa.array(offsets.astype(np.int32)), pa.array(values, type))
+
+
+def list_values(arr: pa.Array | pa.ChunkedArray) -> tuple[np.ndarray, np.ndarray]:
+    """(values, (n+1,) int64 offsets from 0) of a list column, the inverse
+    of ``list_array``: element i is ``values[offs[i]:offs[i+1]]``. A null
+    list reads as empty; string and binary items come back as objects."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    offs = np.zeros(len(arr) + 1, dtype=np.int64)
+    np.cumsum(arr.value_lengths().fill_null(0).to_numpy(), out=offs[1:])
+    return arr.flatten().to_numpy(zero_copy_only=False), offs
 
 
 def or_reduce_bitmap(

@@ -77,28 +77,23 @@ class MisraGries:
     def maximum_error(self) -> int:
         return self.offset
 
-    def frequent_items(self, threshold: int, no_false_negatives: bool = True) -> list:
-        """Threshold query, frequencies/sketch.rs:421-436: the threshold is
-        clamped to at least the current offset (maximum_error), then
+    def above_threshold(
+        self, threshold: float | None = None, no_false_negatives: bool = True
+    ) -> np.ndarray:
+        """Mask of the items the threshold query reports,
+        frequencies/sketch.rs:421-436: the threshold (default: the offset)
+        is clamped to at least the current offset (maximum_error), then
         NoFalseNegatives keeps UB > t, NoFalsePositives keeps LB > t —
         strict inequalities, as the reference."""
-        t = max(int(threshold), self.offset)
+        t = self.offset if threshold is None else max(threshold, self.offset)
         bound = self.counts + (self.offset if no_false_negatives else 0)
-        keep = bound > t
+        return bound > t
+
+    def frequent_items(self, threshold: int, no_false_negatives: bool = True) -> list:
+        """(item, upper bound) of the items ``above_threshold`` keeps,
+        heaviest first."""
+        keep = self.above_threshold(threshold, no_false_negatives)
         order = np.argsort(-self.counts[keep], kind="stable")
         its = self.items[keep][order]
         cts = (self.counts[keep] + self.offset)[order]  # upper-bound estimate
         return list(zip(its.tolist(), cts.tolist()))
-
-    def to_rows(self) -> tuple[list, list, int, int]:
-        return self.items.tolist(), self.counts.tolist(), self.offset, self.stream_weight
-
-    @classmethod
-    def from_rows(cls, max_map_size, items, counts, offset, weight) -> "MisraGries":
-        return cls(
-            max_map_size,
-            np.asarray(list(items), dtype=object),
-            np.asarray(list(counts), dtype=np.int64),
-            int(offset),
-            int(weight),
-        )

@@ -132,15 +132,3 @@ class TDigest:
         bins (-inf, s0], (s0, s1], ..., (s_last, +inf); sums to 1."""
         c = self.cdf(split_points)
         return np.diff(np.concatenate([[0.0], c, [1.0]]))
-
-    def to_rows(self) -> tuple[list, list]:
-        self.compress()
-        return self.means.tolist(), self.weights.tolist()
-
-    @classmethod
-    def from_rows(cls, delta, means, weights) -> "TDigest":
-        return cls(
-            float(delta),
-            np.asarray(list(means), dtype=np.float64),
-            np.asarray(list(weights), dtype=np.float64),
-        )

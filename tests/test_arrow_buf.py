@@ -13,6 +13,7 @@ from datasketches_rust_spark.operators.verify import jaccard_batch
 from datasketches_rust_spark.sigkit.arrow_buf import (
     binary_array,
     list_array,
+    list_values,
     or_reduce_bitmap,
     to_buf,
 )
@@ -58,6 +59,21 @@ def test_binary_array_fixed_width_and_list_array_dtypes():
     ints = list_array(np.array([7, -1, 2**62], dtype=np.int64), offs)
     assert ints.type == pa.list_(pa.int64())
     assert ints.to_pylist() == [[7, -1], [], [2**62]]
+
+
+def test_list_values_inverts_list_array():
+    """list_values reads back what list_array built, across chunks and a
+    slice, with a null list as empty and object items typed by ``type``."""
+    words = np.array(["a", "bb", "", "ccc"], dtype=object)
+    col = list_array(words, np.array([0, 2, 2, 4]), pa.string())
+    assert col.type == pa.list_(pa.string())
+    with_null = pa.array([["x"], None, ["y", "z"]], pa.list_(pa.string()))
+    chunked = pa.chunked_array([col.slice(1), with_null])
+    values, offs = list_values(chunked)
+    assert values.tolist() == ["", "ccc", "x", "y", "z"]
+    assert offs.tolist() == [0, 0, 2, 3, 3, 5]
+    empty = list_array(np.empty(0, dtype=object), np.array([0, 0]), pa.binary())
+    assert empty.to_pylist() == [[]] and list_values(empty)[1].tolist() == [0, 0]
 
 
 def _kmv_pairs():
@@ -133,12 +149,15 @@ def test_or_reduce_bitmap_bounded_fan_in(spark):
 
 
 def test_kernel_layout_guard():
-    """One kernel style and one buffer module: no mapInPandas under
-    operators/ or plans/, and only sigkit/arrow_buf.py touches
-    ``pa.Array.buffers()``."""
-    for sub in ("operators", "plans"):
+    """One kernel style and one buffer module: no pandas kernel
+    (``mapInPandas``, ``applyInPandas``, ``pandas_udf``) and no pandas
+    import under functions/, operators/ or plans/, and only
+    sigkit/arrow_buf.py touches ``pa.Array.buffers()``."""
+    banned = ("mapInPandas", "applyInPandas", "pandas_udf", "import pandas")
+    for sub in ("functions", "operators", "plans"):
         for path in (PKG / sub).glob("*.py"):
-            assert "mapInPandas" not in path.read_text(), path
+            text = path.read_text()
+            assert not [b for b in banned if b in text], path
     readers = {
         path.relative_to(PKG).as_posix()
         for path in PKG.rglob("*.py")

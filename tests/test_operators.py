@@ -1426,6 +1426,80 @@ def test_frequent_items_threshold_clamp_and_strict(spark):
     assert s.frequent_items(threshold=0) == s.frequent_items(threshold=s.offset)
 
 
+def test_sketch_aggs_keep_null_group_keys(spark):
+    """A NULL group key is a group of its own, as in Spark's groupBy: each
+    aggregate returns exactly the groups of ``df.groupBy(...).count()``,
+    for a string key, a long key and both."""
+    from datasketches_rust_spark.functions.sketch_aggs import (
+        frequent_items_sketch_agg,
+        tdigest_sketch_agg,
+    )
+
+    rows = [
+        (("a", "b", None)[v % 3], (1, None)[v % 2], float(v), f"it{v % 3}") for v in range(40)
+    ]
+    df = spark.createDataFrame(rows, "g string, k long, v double, item string").repartition(3)
+    aggs = {
+        "tdigest_agg": lambda gc: tdigest_agg(df, gc, "v", [0.5]),
+        "tdigest_sketch_agg": lambda gc: tdigest_sketch_agg(df, gc, "v"),
+        "frequent_items_agg": lambda gc: frequent_items_agg(df, gc, "item", threshold_weight=0),
+        "frequent_items_sketch_agg": lambda gc: frequent_items_sketch_agg(df, gc, "item"),
+    }
+    for gc in (["g"], ["k"], ["g", "k"]):
+        want = {tuple(r) for r in df.groupBy(*gc).count().select(*gc).collect()}
+        assert any(None in key for key in want)
+        for name, agg in aggs.items():
+            got = {tuple(r) for r in agg(gc).select(*gc).collect()}
+            assert got == want, (name, gc, got)
+    # the NULL group's digest holds exactly its own values
+    p50 = {r["g"]: r["p50"] for r in tdigest_agg(df, ["g"], "v", [0.5], delta=1e7).collect()}
+    assert p50[None] == float(np.median([v for v in range(40) if v % 3 == 2]))
+
+
+def test_frequent_items_skip_null_items(spark):
+    """NULL items (and NULL weights) are skipped like Spark's aggregates
+    skip NULL inputs: they are never reported and add no stream weight,
+    for string and long items alike."""
+    from datasketches_rust_spark.functions.sketch_aggs import frequent_items_sketch_agg
+
+    rows = [("x", 1, 2)] * 30 + [(None, None, 1)] * 50 + [("y", 2, None)] * 5 + [("z", 3, 1)] * 7
+    df = spark.createDataFrame(rows, "s string, n long, w long").repartition(3)
+    for col, x, y, z in (("s", "x", "y", "z"), ("n", 1, 2, 3)):
+        got = {
+            r["item"]: (r["count_lb"], r["count_ub"])
+            for r in frequent_items_agg(df, [], col, threshold_weight=0).collect()
+        }
+        assert got == {x: (30, 30), y: (5, 5), z: (7, 7)}
+        weighted = {
+            r["item"]: r["count_lb"]
+            for r in frequent_items_agg(df, [], col, weight_col="w", threshold_weight=0).collect()
+        }
+        assert weighted == {x: 60, z: 7}
+        stored = frequent_items_sketch_agg(df, [], col, weight_col="w").collect()[0]
+        assert stored["weight"] == 67 and None not in stored["items"]
+
+
+def test_sketch_aggs_build_without_warnings(spark):
+    """Building any of the six aggregates raises no UserWarning (the
+    grouped-map merges need no type-hint inference)."""
+    import warnings
+
+    from datasketches_rust_spark.functions.sketch_aggs import (
+        frequent_items_merge_agg,
+        frequent_items_sketch_agg,
+        tdigest_merge_agg,
+        tdigest_sketch_agg,
+    )
+
+    df = spark.createDataFrame([("a", 1.0, "i")], "g string, v double, item string")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        tdigest_agg(df, ["g"], "v", [0.5])
+        tdigest_merge_agg(tdigest_sketch_agg(df, ["g"], "v"), [], [0.5])
+        frequent_items_agg(df, [], "item")
+        frequent_items_merge_agg(frequent_items_sketch_agg(df, ["g"], "item"), ["g"])
+
+
 def test_countmin_merge(spark):
     """Merged counter tables == table built on the concatenated input
     (elementwise add, countmin/sketch.rs:254-267)."""
