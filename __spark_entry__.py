@@ -246,13 +246,9 @@ def _q_tuple_merge_qty(spark, sf):
     )
 
     li = _t(spark, sf, "lineitem")
-    # the warehouse pattern STORES the per-cell sketches; emulate that by
-    # materializing the cells relation once — tuple_merge_agg reads its
-    # input three times (thetas, entries, group-restore join), and without
-    # the cut each read would replay the whole cells aggregation
     cells = tuple_sketch_agg(
         li, ["l_returnflag", "l_linestatus"], "l_orderkey", "l_quantity", k=32768
-    ).localCheckpoint(eager=False)
+    )
     merged = tuple_merge_agg(cells, ["l_returnflag"], "sketch", k=32768)
     return merged.select(
         "l_returnflag",

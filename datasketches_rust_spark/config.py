@@ -15,10 +15,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass, replace
 
+from .sigkit.kmv import MAX_THETA63  # noqa: F401  (re-exported)
 from .sigkit.xxhash import xxh64_str_list
 
 DEFAULT_SEED = 9001  # reference DEFAULT_UPDATE_SEED (hash/mod.rs:83)
-MAX_THETA63 = (1 << 63) - 1  # i64::MAX, thetafamily/common/constants.rs:21
 
 TOKEN_REGEX = "[A-Za-z0-9_]+"  # tokenizer v1: identifier runs (ASCII)
 

@@ -520,7 +520,7 @@ def _bloom_might_contain_packed(
     import numpy as np
     import pyarrow as pa
 
-    from ..sigkit.arrow_buf import or_reduce_bitmap
+    from ..sigkit.arrow_buf import bitmap_test, or_reduce_bitmap
     from ..sigkit.xxhash import xxh64_u64
 
     bitmap = or_reduce_bitmap(
@@ -547,8 +547,7 @@ def _bloom_might_contain_packed(
             h1 = np.mod(xxh64_u64(raw, 42).view(np.int64), m)
             hit = np.ones(len(v), dtype=bool)
             for i in range(num_hashes):
-                p = (h0 + i * h1) % m
-                hit &= (bm[p >> 3] >> (p & 7).astype(np.uint8)) & 1 > 0
+                hit &= bitmap_test(bm, (h0 + i * h1) % m)
             yield pa.RecordBatch.from_arrays(
                 [rb.column(j) for j in range(rb.num_columns)] + [pa.array(hit)],
                 names=cols + ["might_contain"],

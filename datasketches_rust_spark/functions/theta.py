@@ -1,20 +1,27 @@
 """Theta/KMV sketch as a pure-built-in Spark aggregate (no Python UDFs).
 
 The reference's theta sketch is "k smallest distinct 63-bit hashes + theta"
-(`/root/reference/datasketches/src/thetafamily/theta/sketch.rs:103-106`,
-rebuild/trim at ``common/hash_table.rs:388-423``). Re-expressed in Spark's
-partial→final aggregation model using only JVM expressions, so the whole
-agg stays in whole-stage codegen and map-side combine applies:
+(datasketches-rust `thetafamily/theta/sketch.rs:103-106`, rebuild/trim at
+``common/hash_table.rs:388-423``). Re-expressed in Spark's partial→final
+aggregation model using only JVM expressions, so the whole agg stays in
+whole-stage codegen and map-side combine applies:
 
 - hash item: ``xxhash64 >> 1`` (63-bit, sign-safe — the Java-compat form
-  of ``common/hash_table.rs:135-140``);
+  of ``common/hash_table.rs:135-140``); rows with a NULL item are
+  skipped, as ``COUNT(DISTINCT)`` skips them;
 - partial: ``groupBy(keys + salt).agg(slice(array_sort(collect_set(h)), 1,
-  k+1))`` — each salt shard keeps at most k+1 smallest distinct hashes;
-- final: merge shards with ``array_distinct(flatten(...))``, re-sort,
-  re-truncate to k+1 — exactly ThetaUnion's min-theta + k-truncation
-  (common/union.rs:64-135);
+  k+1))`` with ``salt = pmod(h, 64)`` — each salt shard keeps at most k+1
+  smallest distinct hashes;
+- final: the shards hold disjoint hashes, so ``flatten(collect_list(...))``
+  is duplicate-free; re-sort, re-truncate to k+1 — exactly ThetaUnion's
+  min-theta + k-truncation (common/union.rs:64-135);
 - estimate: retained / (theta / 2^63) (theta/sketch.rs:143-150), exact
   while the true distinct count <= k.
+
+``_bottom_k`` is that core, shared by the four grouped aggregates: the
+tuple sketch (functions/tuple.py) runs it with a summary carried beside
+each hash, as the reference's tuple sketch reuses the theta hash table,
+trim and union rules.
 
 The sketch column is a struct (kmv array<long>, theta long, retained int)
 — the ordered CompactThetaSketch (theta/sketch.rs:321-332) as a column.
@@ -26,8 +33,13 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-MAX_THETA63 = (1 << 63) - 1
+from ..sigkit.kmv import MAX_THETA63
+
 _SALT_SHARDS = 64
+# the insert-time screen (theta_prescreen): relative sd of the per-group
+# distinct estimate D̂, and how far above the expected final theta it screens
+_SCREEN_RSD = 0.02
+_SCREEN_SAFETY = 2.0
 
 
 def _h63(col) -> Column:
@@ -69,15 +81,49 @@ def canonical_value(df: DataFrame, col_name: str) -> Column:
     return c
 
 
-def theta_prescreen(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    k: int,
-    rsd: float = 0.02,
-    safety: float = 2.0,
-    dhat_sample: float | None = None,
+def _hashed(
+    df: DataFrame, group_cols: list[str], value_col: str, summary_col: str | None = None
 ) -> DataFrame:
+    """(group..., __h[, __s]) input rows of a sketch build: the item's
+    63-bit hash and, for a tuple sketch, its summary value. A row whose
+    item or summary is NULL hashes to 0 (Spark's ``xxhash64(NULL)`` is the
+    seed, which would count NULL as an item), so like a zero hash
+    (hash_table.rs:160-163) it inserts nothing but keeps its group, as
+    ``COUNT(DISTINCT)`` does."""
+    keep = F.col(value_col).isNotNull()
+    extra = []
+    if summary_col is not None:
+        keep = keep & F.col(summary_col).isNotNull()
+        extra = [F.col(summary_col).cast("double").alias("__s")]
+    h = F.when(keep, _h63(canonical_value(df, value_col))).otherwise(F.lit(0))
+    return df.select(*group_cols, h.alias("__h"), *extra)
+
+
+def _prescreen(rows: DataFrame, group_cols: list[str], k: int) -> DataFrame:
+    """``rows`` (``_hashed``'s output) with __h <= theta_hat — the body of
+    ``theta_prescreen``, which documents it."""
+    dhat = F.col("__dhat")
+    that = F.when(dhat <= F.lit(int(2 * _SCREEN_SAFETY * k)), F.lit(MAX_THETA63)).otherwise(
+        F.least(
+            F.lit(float(MAX_THETA63)), F.lit(_SCREEN_SAFETY * k * float(1 << 63)) / dhat
+        ).cast("long")
+    )
+    gb = [f"__g{i}" for i in range(len(group_cols))]
+    bounds = (
+        rows.groupBy(*group_cols)
+        .agg(F.approx_count_distinct("__h", _SCREEN_RSD).alias("__dhat"))
+        .select(*[F.col(c).alias(b) for c, b in zip(group_cols, gb)], that.alias("__that"))
+    )
+    # null-safe, so a NULL group key is screened like any other group
+    on = [F.col(c).eqNullSafe(F.col(b)) for c, b in zip(group_cols, gb)]
+    return (
+        rows.join(F.broadcast(bounds), on or None)
+        .where(F.col("__h") <= F.col("__that"))
+        .select(*rows.columns)
+    )
+
+
+def theta_prescreen(df: DataFrame, group_cols: list[str], value_col: str, k: int) -> DataFrame:
     """Insert-time theta screen: (group..., __h) rows with __h <= theta_hat.
 
     The reference screens candidates against theta at insert time
@@ -92,47 +138,89 @@ def theta_prescreen(
 
     Cost/scale notes (the two deliberate trade-offs of this design):
 
-    - The D̂ pass is a SECOND scan of (group_cols, value_col). It is kept
-      because the shuffle it bounds is the expensive resource, and when the
-      input is a checkpointed/cached stage (the pipeline case) the rescan
-      is cheap. Where even that matters, ``dhat_sample=f`` computes D̂ on a
-      Bernoulli f-sample: a sample's distinct count can only UNDERcount,
-      which inflates theta_hat — the safe direction (weaker screening,
-      never a wrong sketch) — so sampling trades screening strength for
-      scan cost with no correctness risk.
+    - The D̂ pass is a SECOND scan of the input. It is kept because the
+      shuffle it bounds is the expensive resource, and when the input is
+      a checkpointed/cached stage (the pipeline case) the rescan is cheap.
     - The per-group theta_hat table is broadcast: group cardinality must
       fit in a broadcast (~10M groups at two longs each ≈ 160 MB). Above
       that, disable the screen and let the salted two-level agg carry the
       state — with that many groups, per-group row counts are small and
       screening buys little anyway.
     """
-    h = _h63(canonical_value(df, value_col))
-    base = df.select(*group_cols, h.alias("__h")).where(
-        h != 0  # zero-hash screening (hash_table.rs:160-163)
-    )
-    dsrc = df.sample(dhat_sample, seed=9001) if dhat_sample else df
-    dhat = dsrc.groupBy(*group_cols).agg(
-        F.approx_count_distinct(value_col, rsd).alias("__dhat")
-    )
-    that = (
-        F.when(F.col("__dhat") <= F.lit(int(2 * safety * k)), F.lit(MAX_THETA63))
-        .otherwise(
-            F.least(
-                F.lit(float(MAX_THETA63)),
-                F.lit(safety * k * float(1 << 63)) / F.col("__dhat"),
-            ).cast("long")
-        )
-        .alias("__that")
-    )
-    bounds = dhat.select(*group_cols, that)
-    if group_cols:
-        # left join: under dhat_sample a group can be absent from the
-        # sample entirely — its rows must pass unscreened, never be dropped
-        base = base.join(F.broadcast(bounds), group_cols, "left")
-        base = base.withColumn("__that", F.coalesce(F.col("__that"), F.lit(MAX_THETA63)))
+    return _prescreen(_hashed(df, group_cols, value_col), group_cols, k)
+
+
+def _key(e: Column, summary: bool) -> Column:
+    return e["key"] if summary else e
+
+
+def _pack(m: Column, k: int | None, theta: Column, summary: bool = False) -> Column:
+    """Sorted entries below ``theta`` → sketch struct. Past k entries it
+    keeps the k smallest and lowers theta to the (k+1)-th hash (the trim of
+    hash_table.rs:388-423); ``k=None`` never truncates. An entry is a hash,
+    or for a tuple sketch a (key=hash, value=summary) struct — the shape
+    ``map_entries`` gives."""
+    if k is not None:
+        over = F.size(m) > k
+        theta = F.when(over, _key(F.element_at(m, k + 1), summary)).otherwise(theta)
+        m = F.when(over, F.slice(m, 1, k)).otherwise(m)
+    if summary:
+        fields = [
+            F.transform(m, lambda e: e["key"]).alias("kmv"),
+            F.transform(m, lambda e: e["value"]).alias("summaries"),
+        ]
     else:
-        base = base.crossJoin(F.broadcast(bounds))
-    return base.where(F.col("__h") <= F.col("__that")).drop("__that")
+        fields = [m.alias("kmv")]
+    return F.struct(
+        *fields, theta.cast("long").alias("theta"), F.size(m).cast("int").alias("retained")
+    )
+
+
+def _bottom_k(
+    rows: DataFrame, group_cols: list[str], k: int, theta: int | None = MAX_THETA63
+) -> DataFrame:
+    """group_cols + ``sketch``: the k smallest distinct ``__h`` per group —
+    the KMV core of the theta and tuple sketch aggregates.
+
+    ``rows`` carries ``__h`` and, for a tuple sketch, the summary ``__s``
+    of its one row per (group, __h). ``theta`` is a build's initial theta,
+    and a hash is inserted iff 0 < hash < theta — the reference's insert
+    screen (hash_table.rs:160-163). A row that inserts nothing (a NULL item
+    that ``_hashed`` maps to 0, a hash a p < 1 build rejects, the NULL
+    ``explode_outer`` row of an empty stored sketch) still keeps its group.
+    Each hash lands in exactly one salt shard, so the shards' k+1 smallest
+    distinct entries concatenate duplicate-free and the final merge only
+    re-sorts and re-truncates — per-shard build, then union. A merge passes
+    ``theta=None`` and ``rows`` carries each input sketch's theta as
+    ``__t``: the group minimum screens the entries after truncation (exact,
+    see ``theta_merge_agg``), and a group with no input theta is the
+    never-updated sketch.
+    """
+    summary = "__s" in rows.columns
+    h = F.col("__h")
+    entry = F.struct(h.alias("key"), F.col("__s").alias("value")) if summary else h
+    insert = h != 0 if theta is None else (h != 0) & (h < F.lit(theta))
+    tmin = [F.min("__t").alias("__t")] if theta is None else []
+    partial = (
+        rows.withColumn("__salt", F.pmod(F.coalesce(h, F.lit(0)), F.lit(_SALT_SHARDS)))
+        .groupBy(*group_cols, "__salt")
+        .agg(
+            *tmin,
+            F.slice(F.array_sort(F.collect_set(F.when(insert, entry))), 1, k + 1)
+            .alias("__part"),
+        )
+    )
+    merged = partial.groupBy(*group_cols).agg(
+        *tmin,
+        F.slice(F.array_sort(F.flatten(F.collect_list("__part"))), 1, k + 1).alias("__m"),
+    )
+    m = F.col("__m")
+    if theta is None:
+        t = F.coalesce(F.col("__t"), F.lit(MAX_THETA63))
+        m = F.filter(m, lambda e: _key(e, summary) < t)
+    else:
+        t = F.lit(theta)
+    return merged.select(*group_cols, _pack(m, k, t, summary).alias("sketch"))
 
 
 def theta_sketch_agg(
@@ -142,46 +230,31 @@ def theta_sketch_agg(
     k: int = 4096,
     screen: bool = True,
     p: float = 1.0,
-    dhat_sample: float | None = None,
 ) -> DataFrame:
     """groupBy(group_cols) → theta sketch of distinct value_col per group.
 
     ``theta_prescreen`` bounds agg input to ~safety*k rows per group (the
     insert-time screen of hash_table.rs:160-163 as a filter pushed ahead of
-    the shuffle), then a two-level salted aggregation caps per-task state
-    at (k+1) hashes per (group, salt) shard — the distributed analog of
-    per-shard sketch build then union. Returns group_cols + ``sketch``.
+    the shuffle), then ``_bottom_k``'s two-level salted aggregation caps
+    per-task state at (k+1) hashes per (group, salt) shard — the
+    distributed analog of per-shard sketch build then union. A NULL
+    ``value_col`` inserts nothing, but its group stays (as in
+    ``COUNT(DISTINCT)``); a NULL group key is its own group. Returns
+    group_cols + ``sketch``.
 
     ``p`` is the reference's up-front sampling probability
     (theta/sketch.rs builder: initial theta = p * MAX_THETA): hashes >=
-    p*2^63 are rejected at insert time and the sketch's theta never
+    p*2^63 are rejected at insert time (a group whose every hash is
+    rejected keeps an empty sketch at theta p*MAX, the reference's
+    updated-but-empty sampling sketch) and the sketch's theta never
     exceeds p*MAX — the estimator divides by theta/2^63 as usual, so
     estimates stay unbiased under sampling.
     """
     init_theta = MAX_THETA63 if p >= 1.0 else int(p * MAX_THETA63)
+    rows = _hashed(df, group_cols, value_col)
     if screen:
-        screened = theta_prescreen(df, group_cols, value_col, k, dhat_sample=dhat_sample)
-    else:
-        h = _h63(canonical_value(df, value_col))
-        screened = df.select(*group_cols, h.alias("__h")).where(h != 0)
-    if p < 1.0:
-        screened = screened.where(F.col("__h") < F.lit(init_theta))
-    partial = (
-        screened.withColumn("__salt", F.pmod(F.col("__h"), F.lit(_SALT_SHARDS)))
-        .groupBy(*group_cols, "__salt")
-        .agg(F.slice(F.array_sort(F.collect_set("__h")), 1, k + 1).alias("__part"))
-    )
-    merged = partial.groupBy(*group_cols).agg(
-        F.slice(
-            F.array_sort(F.array_distinct(F.flatten(F.collect_list("__part")))),
-            1,
-            k + 1,
-        ).alias("__m")
-    )
-    return merged.select(
-        *group_cols,
-        _pack_sketch(F.col("__m"), k, init_theta).alias("sketch"),
-    )
+        rows = _prescreen(rows, group_cols, k)
+    return _bottom_k(rows, group_cols, k, init_theta)
 
 
 def theta_merge_agg(
@@ -198,16 +271,17 @@ def theta_merge_agg(
     sketches, ``groupBy(month)`` and merge, without the crossJoin fold a
     pairwise ``theta_union`` column would need.
 
-    One logical shuffle on (group, salt): ``explode_outer`` flattens kmv
-    entries (empty sketches still contribute their theta through the null
-    row); each salt shard keeps its min-theta and the k+1 smallest
-    distinct hashes; the final merge re-sorts, re-truncates, and screens
-    under the group-wide min theta. Screening AFTER shard truncation is
-    exact: an entry a shard dropped exceeds all k+1 entries it kept, so
-    if any kept entry fails the final screen the dropped one fails it
-    too, and if all kept entries pass, the shard already contributes its
-    full k+1 — either way the k smallest surviving hashes are identical
-    to screen-then-truncate (the ThetaUnion order, common/union.rs:130-135).
+    One read of ``df`` and one logical shuffle on (group, salt):
+    ``explode_outer`` flattens kmv entries (empty sketches still
+    contribute their theta through the null row); each salt shard keeps
+    its min-theta and the k+1 smallest distinct hashes; the final merge
+    re-sorts, re-truncates, and screens under the group-wide min theta.
+    Screening AFTER shard truncation is exact: an entry a shard dropped
+    exceeds all k+1 entries it kept, so if any kept entry fails the final
+    screen the dropped one fails it too, and if all kept entries pass, the
+    shard already contributes its full k+1 — either way the k smallest
+    surviving hashes are identical to screen-then-truncate (the ThetaUnion
+    order, common/union.rs:130-135).
 
     Empty-sketch semantics (deliberate, differs from the reference in one
     corner): the group min-theta is taken over ALL input sketches,
@@ -225,49 +299,10 @@ def theta_merge_agg(
     rows from the min to match union.rs exactly.
     """
     s = F.col(sketch_col)
-    ex = df.select(
-        *group_cols,
-        s["theta"].alias("__t"),
-        F.explode_outer(s["kmv"]).alias("__h"),
+    rows = df.select(
+        *group_cols, s["theta"].alias("__t"), F.explode_outer(s["kmv"]).alias("__h")
     )
-    partial = (
-        ex.withColumn(
-            "__salt", F.pmod(F.coalesce(F.col("__h"), F.lit(0)), F.lit(_SALT_SHARDS))
-        )
-        .groupBy(*group_cols, "__salt")
-        .agg(
-            F.min("__t").alias("__tp"),
-            # collect_set skips the explode_outer null of empty sketches
-            F.slice(F.array_sort(F.collect_set("__h")), 1, k + 1).alias("__part"),
-        )
-    )
-    merged = partial.groupBy(*group_cols).agg(
-        F.min("__tp").alias("__theta"),
-        F.slice(
-            F.array_sort(F.array_distinct(F.flatten(F.collect_list("__part")))),
-            1,
-            k + 1,
-        ).alias("__m0"),
-    )
-    scr = F.filter(F.col("__m0"), lambda x: x < F.col("__theta"))
-    return merged.select(
-        *group_cols,
-        _pack_sketch(scr, k, F.col("__theta")).alias("sketch"),
-    )
-
-
-def _pack_sketch(m: Column, k: int, init_theta: int | Column = MAX_THETA63) -> Column:
-    """(k+1)-truncated sorted hash array → sketch struct. ``init_theta``
-    may be a per-row Column (the merge aggregate's group min-theta)."""
-    init = init_theta if isinstance(init_theta, Column) else F.lit(init_theta)
-    over = F.size(m) > k
-    theta = F.when(over, F.least(F.element_at(m, k + 1), init)).otherwise(init)
-    kmv = F.when(over, F.slice(m, 1, k)).otherwise(m)
-    return F.struct(
-        kmv.alias("kmv"),
-        theta.cast("long").alias("theta"),
-        F.size(kmv).cast("int").alias("retained"),
-    )
+    return _bottom_k(rows, group_cols, k, theta=None)
 
 
 def theta_estimate(sketch: Column) -> Column:
@@ -333,43 +368,22 @@ def _screen(arr: Column, theta: Column) -> Column:
 def theta_union(a: Column, b: Column, k: int = 4096) -> Column:
     """Union of two sketch structs (common/union.rs:64-135)."""
     theta = _min_theta(a, b)
-    m = F.array_sort(
-        F.array_union(_screen(a["kmv"], theta), _screen(b["kmv"], theta))
-    )
-    over = F.size(m) > k
-    new_theta = F.when(over, F.element_at(m, k + 1)).otherwise(theta)
-    kmv = F.when(over, F.slice(m, 1, k)).otherwise(m)
-    return F.struct(
-        kmv.alias("kmv"),
-        new_theta.cast("long").alias("theta"),
-        F.size(kmv).cast("int").alias("retained"),
-    )
+    m = F.array_union(_screen(a["kmv"], theta), _screen(b["kmv"], theta))
+    return _pack(F.array_sort(m), k, theta)
 
 
 def theta_intersection(a: Column, b: Column) -> Column:
     """Intersection under min-theta (common/intersection.rs:53-226)."""
     theta = _min_theta(a, b)
-    kmv = F.array_sort(
-        F.array_intersect(_screen(a["kmv"], theta), _screen(b["kmv"], theta))
-    )
-    return F.struct(
-        kmv.alias("kmv"),
-        theta.cast("long").alias("theta"),
-        F.size(kmv).cast("int").alias("retained"),
-    )
+    m = F.array_intersect(_screen(a["kmv"], theta), _screen(b["kmv"], theta))
+    return _pack(F.array_sort(m), None, theta)
 
 
 def theta_a_not_b(a: Column, b: Column) -> Column:
     """A \\ B below combined theta (common/a_not_b.rs:58-168)."""
     theta = _min_theta(a, b)
-    kmv = F.array_sort(
-        F.array_except(_screen(a["kmv"], theta), _screen(b["kmv"], theta))
-    )
-    return F.struct(
-        kmv.alias("kmv"),
-        theta.cast("long").alias("theta"),
-        F.size(kmv).cast("int").alias("retained"),
-    )
+    m = F.array_except(_screen(a["kmv"], theta), _screen(b["kmv"], theta))
+    return _pack(F.array_sort(m), None, theta)
 
 
 # ------------------------------------------------------------ jaccard triple

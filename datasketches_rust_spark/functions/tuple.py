@@ -20,15 +20,24 @@ in the reference.
 Union (`tuple/union.rs:68-128`): min-theta screen on both sides, AddAssign
 summaries of keys present in both, k-truncate. Implemented with
 ``map_zip_with`` over (hash -> summary) maps — keys union, values add.
+
+The screen, the salted bottom-k aggregation and the truncate-and-pack are
+the theta sketch's (functions/theta.py); tuple adds only the summary
+carried beside each hash and the per-key sum.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .theta import MAX_THETA63, _h63, canonical_value
-
-_SALT_SHARDS = 64
+from .theta import (
+    _bottom_k,
+    _hashed,
+    _pack,
+    _prescreen,
+    theta_estimate,
+    theta_jaccard,
+)
 
 
 def tuple_sketch_agg(
@@ -37,79 +46,20 @@ def tuple_sketch_agg(
     key_col: str,
     value_col: str,
     k: int = 4096,
-    screen: bool = True,
-    rsd: float = 0.02,
-    safety: float = 2.0,
 ) -> DataFrame:
     """groupBy(group_cols) -> tuple sketch of (distinct key, sum(value)).
 
-    Plan: per-(group, key-hash) sum (the AddAssign update policy as a
-    hash agg with map-side combine) -> theta-hat screen (the insert-time
-    screen of hash_table.rs:160-163, bounding downstream state to ~2k
-    entries per group) -> salted collect of (hash, summary) structs ->
-    merge-sort + k-truncate.
+    Plan: the theta sketch's insert-time screen (``theta_prescreen``,
+    bounding downstream state to ~2k keys per group) -> per-(group,
+    key-hash) sum (the AddAssign update policy as a hash agg with
+    map-side combine) -> the theta sketch's salted bottom-k core with the
+    summary carried beside each hash. A row whose key or value is NULL
+    inserts nothing, but its group stays; a NULL group key is its own
+    group.
     """
-    h = _h63(canonical_value(df, key_col))
-    base = df.select(
-        *group_cols,
-        h.alias("__h"),
-        F.col(value_col).cast("double").alias("__v"),
-    ).where(h != 0)
-    keyed = base.groupBy(*group_cols, "__h").agg(F.sum("__v").alias("__s"))
-
-    if screen:
-        dhat = df.groupBy(*group_cols).agg(
-            F.approx_count_distinct(key_col, rsd).alias("__dhat")
-        )
-        that = (
-            F.when(F.col("__dhat") <= F.lit(int(2 * safety * k)), F.lit(MAX_THETA63))
-            .otherwise(
-                F.least(
-                    F.lit(float(MAX_THETA63)),
-                    F.lit(safety * k * float(1 << 63)) / F.col("__dhat"),
-                ).cast("long")
-            )
-            .alias("__that")
-        )
-        bounds = dhat.select(*group_cols, that)
-        if group_cols:
-            keyed = keyed.join(F.broadcast(bounds), group_cols)
-        else:
-            keyed = keyed.crossJoin(F.broadcast(bounds))
-        keyed = keyed.where(F.col("__h") <= F.col("__that")).drop("__that")
-
-    # each __h lands in exactly one salt shard, so the final merge is a
-    # duplicate-free sorted concat; struct array_sort orders by first field
-    partial = (
-        keyed.withColumn("__salt", F.pmod(F.col("__h"), F.lit(_SALT_SHARDS)))
-        .groupBy(*group_cols, "__salt")
-        .agg(
-            F.slice(
-                F.array_sort(F.collect_list(F.struct(F.col("__h"), F.col("__s")))),
-                1,
-                k + 1,
-            ).alias("__part")
-        )
-    )
-    merged = partial.groupBy(*group_cols).agg(
-        F.slice(
-            F.array_sort(F.flatten(F.collect_list("__part"))), 1, k + 1
-        ).alias("__m")
-    )
-    over = F.size("__m") > k
-    theta = F.when(over, F.element_at("__m", k + 1)["__h"]).otherwise(
-        F.lit(MAX_THETA63)
-    )
-    ent = F.when(over, F.slice("__m", 1, k)).otherwise(F.col("__m"))
-    return merged.select(
-        *group_cols,
-        F.struct(
-            F.transform(ent, lambda e: e["__h"]).alias("kmv"),
-            F.transform(ent, lambda e: e["__s"]).alias("summaries"),
-            theta.cast("long").alias("theta"),
-            F.size(ent).cast("int").alias("retained"),
-        ).alias("sketch"),
-    )
+    rows = _prescreen(_hashed(df, group_cols, key_col, value_col), group_cols, k)
+    keyed = rows.groupBy(*group_cols, "__h").agg(F.sum("__s").alias("__s"))
+    return _bottom_k(keyed, group_cols, k)
 
 
 def tuple_merge_agg(
@@ -124,96 +74,45 @@ def tuple_merge_agg(
     sketch) as a grouped aggregate, for re-aggregating stored sketches
     without a crossJoin fold of pairwise ``tuple_union`` columns.
 
-    Plan: a tiny per-group min-theta aggregate (broadcast — same
-    group-cardinality bound as ``theta_prescreen``'s theta-hat table),
-    then one shuffle summing summaries per (group, hash) — the AddAssign
-    of keys shared across sketches — with the min-theta screen applied
-    before the salted two-level k-truncation, exactly the
-    screen-then-combine-then-truncate order of the reference union.
-    Empty sketches contribute their theta through the thetas aggregate,
-    and all-empty groups are restored by the final (tiny) left join.
+    ``theta_merge_agg``'s plan with one more shuffle: one
+    ``explode_outer`` read of ``df``, a ``groupBy(group, hash)`` that sums
+    the summaries of keys shared across sketches (and keeps their min
+    theta), then the salted bottom-k merge screening under the group-wide
+    min theta after truncation — the same k smallest surviving keys as the
+    reference's screen-then-combine-then-truncate order, since the screen
+    depends on the hash alone. Empty sketches contribute their theta
+    through the ``explode_outer`` null row, so all-empty groups survive.
     As in ``theta_merge_agg`` (see its docstring for the full argument),
     the min-theta runs over ALL rows including retained==0: never-updated
     sketches carry theta==MAX (the min identity, no effect), while a
     retained==0, theta<MAX row is read as updated-but-sampled-to-empty
     and legitimately bounds the union theta.
-
-    ``df`` is consumed three times (thetas, entries, the group-restore
-    join): pass a materialized relation — a stored sketch table, cache,
-    or checkpoint — as the warehouse pattern naturally does; an
-    unmaterialized aggregation chain would be replayed per consumer.
     """
-    grp = "__mg_grp"
-    if not group_cols:
-        df = df.withColumn(grp, F.lit(0))
-        gcols = [grp]
-    else:
-        gcols = list(group_cols)
     s = F.col(sketch_col)
-    # thetas comes straight from df (no exploded copy): empty sketches
-    # contribute their theta here, so the entry branch can use a plain
-    # explode — one less duplicated upstream chain in the physical plan
-    thetas = df.groupBy(*gcols).agg(F.min(s["theta"]).alias("__theta"))
-    entries = df.select(
-        *gcols,
-        F.explode(
-            F.zip_with(
-                s["kmv"], s["summaries"], lambda h, v: F.struct(h.alias("h"), v.alias("s"))
-            )
-        ).alias("__e"),
-    ).select(*gcols, F.col("__e")["h"].alias("__h"), F.col("__e")["s"].alias("__s"))
-    keyed = (
-        entries.join(F.broadcast(thetas), gcols)
-        .where(F.col("__h") < F.col("__theta"))
-        .groupBy(*gcols, "__h")
-        .agg(F.sum("__s").alias("__s"))
+    rows = df.select(
+        *group_cols, s["theta"].alias("__t"), F.explode_outer(_entries(s)).alias("__e")
+    ).select(*group_cols, "__t", F.col("__e.key").alias("__h"), F.col("__e.value").alias("__s"))
+    keyed = rows.groupBy(*group_cols, "__h").agg(
+        F.min("__t").alias("__t"), F.sum("__s").alias("__s")
     )
-    partial = (
-        keyed.withColumn("__salt", F.pmod(F.col("__h"), F.lit(_SALT_SHARDS)))
-        .groupBy(*gcols, "__salt")
-        .agg(
-            F.slice(
-                F.array_sort(F.collect_list(F.struct(F.col("__h"), F.col("__s")))),
-                1,
-                k + 1,
-            ).alias("__part")
-        )
+    return _bottom_k(keyed, group_cols, k, theta=None)
+
+
+def _entries(sk: Column) -> Column:
+    """The sketch's (key=hash, value=summary) entries."""
+    return F.zip_with(
+        sk["kmv"], sk["summaries"], lambda h, s: F.struct(h.alias("key"), s.alias("value"))
     )
-    merged = partial.groupBy(*gcols).agg(
-        F.slice(
-            F.array_sort(F.flatten(F.collect_list("__part"))), 1, k + 1
-        ).alias("__m")
-    )
-    # left join from the (tiny) thetas table so groups whose every input
-    # sketch was empty survive as empty sketches with the group theta
-    joined = thetas.join(merged, gcols, "left").withColumn(
-        "__m",
-        F.coalesce(
-            F.col("__m"), F.array().cast("array<struct<__h:bigint,__s:double>>")
-        ),
-    )
-    over = F.size("__m") > k
-    theta = F.when(over, F.element_at("__m", k + 1)["__h"]).otherwise(F.col("__theta"))
-    ent = F.when(over, F.slice("__m", 1, k)).otherwise(F.col("__m"))
-    out = joined.select(
-        *gcols,
-        F.struct(
-            F.transform(ent, lambda e: e["__h"]).alias("kmv"),
-            F.transform(ent, lambda e: e["__s"]).alias("summaries"),
-            theta.cast("long").alias("theta"),
-            F.size(ent).cast("int").alias("retained"),
-        ).alias("sketch"),
-    )
-    return out.drop(grp) if not group_cols else out
 
 
 def _entries_map(sk: Column, theta: Column) -> Column:
     """(hash -> summary) map of entries surviving the given theta."""
-    pairs = F.filter(
-        F.zip_with(sk["kmv"], sk["summaries"], lambda h, s: F.struct(h.alias("h"), s.alias("s"))),
-        lambda e: e["h"] < theta,
-    )
-    return F.map_from_entries(pairs)
+    return F.map_from_entries(F.filter(_entries(sk), lambda e: e["key"] < theta))
+
+
+def _pack_entries(m: Column, theta: Column, k: int | None = None) -> Column:
+    """(hash -> summary) map + theta → sorted tuple-sketch struct."""
+    return _pack(F.array_sort(F.map_entries(m)), k, theta, summary=True)
 
 
 def tuple_union(a: Column, b: Column, k: int = 4096) -> Column:
@@ -225,37 +124,7 @@ def tuple_union(a: Column, b: Column, k: int = 4096) -> Column:
         _entries_map(b, theta),
         lambda _k, va, vb: F.coalesce(va, F.lit(0.0)) + F.coalesce(vb, F.lit(0.0)),
     )
-    ent = F.array_sort(
-        F.transform(
-            F.map_entries(merged),
-            lambda e: F.struct(e["key"].alias("h"), e["value"].alias("s")),
-        )
-    )
-    over = F.size(ent) > k
-    new_theta = F.when(over, F.element_at(ent, k + 1)["h"]).otherwise(theta)
-    kept = F.when(over, F.slice(ent, 1, k)).otherwise(ent)
-    return F.struct(
-        F.transform(kept, lambda e: e["h"]).alias("kmv"),
-        F.transform(kept, lambda e: e["s"]).alias("summaries"),
-        new_theta.cast("long").alias("theta"),
-        F.size(kept).cast("int").alias("retained"),
-    )
-
-
-def _pack_entries(m: Column, theta: Column) -> Column:
-    """(hash -> summary) map + theta → sorted tuple-sketch struct."""
-    ent = F.array_sort(
-        F.transform(
-            F.map_entries(m),
-            lambda e: F.struct(e["key"].alias("h"), e["value"].alias("s")),
-        )
-    )
-    return F.struct(
-        F.transform(ent, lambda e: e["h"]).alias("kmv"),
-        F.transform(ent, lambda e: e["s"]).alias("summaries"),
-        theta.cast("long").alias("theta"),
-        F.size(ent).cast("int").alias("retained"),
-    )
+    return _pack_entries(merged, theta, k)
 
 
 def tuple_intersection(a: Column, b: Column) -> Column:
@@ -290,24 +159,12 @@ def tuple_a_not_b(a: Column, b: Column) -> Column:
     return _pack_entries(merged, theta)
 
 
-def tuple_jaccard(a: Column, b: Column, num_std_devs: float = 2.0) -> Column:
-    """(lower, estimate, upper) key-set Jaccard of two tuple sketches.
-
-    Summary values do not participate in the comparison
-    (tuple/jaccard_similarity.rs:75-101 delegates to the key-only
-    JaccardSimilarityOperator) — so this IS theta_jaccard applied to the
-    tuple struct, which shares the kmv/theta field layout.
-    """
-    from .theta import theta_jaccard
-
-    return theta_jaccard(a, b, num_std_devs)
-
-
-def tuple_estimate(sketch: Column) -> Column:
-    """Distinct-key estimate — same estimator as the theta sketch."""
-    return sketch["retained"].cast("double") / (
-        sketch["theta"].cast("double") / F.lit(float(1 << 63))
-    )
+# Summaries never enter the key-count estimate or the key-set Jaccard
+# (tuple/jaccard_similarity.rs:75-101 delegates to the key-only
+# JaccardSimilarityOperator), and the tuple struct shares the theta
+# struct's kmv/theta fields, so both are the theta functions.
+tuple_estimate = theta_estimate
+tuple_jaccard = theta_jaccard
 
 
 def tuple_summary_sum(sketch: Column, scaled: bool = True) -> Column:

@@ -26,7 +26,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
-from ..sigkit.arrow_buf import or_reduce_bitmap, to_buf
+from ..sigkit.arrow_buf import bitmap_test, or_reduce_bitmap, to_buf
 
 _B = np.uint64(1099511628211)  # FNV prime, odd → invertible mod 2^64
 _B_INV = np.uint64(pow(int(_B), -1, 1 << 64))
@@ -87,16 +87,6 @@ def _bloom_positions_np(h: np.ndarray, m: int) -> np.ndarray:
     p1 = h & mask
     p2 = (h * np.uint64(0x9E3779B97F4A7C15) >> np.uint64(17)) & mask
     return np.concatenate([p1, p2])
-
-
-def _bloom_hit(bitmap: np.ndarray, h: np.ndarray, m: int) -> np.ndarray:
-    """Boolean mask: both probe bits set."""
-    mask = np.uint64(m - 1)
-    p1 = h & mask
-    p2 = (h * np.uint64(0x9E3779B97F4A7C15) >> np.uint64(17)) & mask
-    b1 = (bitmap[(p1 >> np.uint64(3)).astype(np.int64)] >> (p1 & np.uint64(7)).astype(np.uint8)) & 1
-    b2 = (bitmap[(p2 >> np.uint64(3)).astype(np.int64)] >> (p2 & np.uint64(7)).astype(np.uint8)) & 1
-    return (b1 & b2).astype(bool)
 
 
 def _prefix_rows(base: DataFrame, text_col: str, window: int) -> DataFrame:
@@ -175,7 +165,9 @@ def _hash_batches(id_col: str, text_col: str, window: int, bloom=None, m: int = 
             hasw = counts > 0
             pref[hasw] = h[woffs[:-1][hasw]]
             if bitmap is not None:
-                keep = _bloom_hit(bitmap, h, m) | (h == np.repeat(pref, counts))
+                # both probe bits set, or the doc's own prefix window
+                hit = bitmap_test(bitmap, _bloom_positions_np(h, m)).reshape(2, -1).all(axis=0)
+                keep = hit | (h == np.repeat(pref, counts))
                 dk = np.repeat(np.arange(len(counts)), counts)[keep]
                 hk = h[keep]
                 kcounts = np.bincount(dk, minlength=len(counts))

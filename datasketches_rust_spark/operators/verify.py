@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..config import PipelineConfig
 from ..sigkit.arrow_buf import to_buf
+from ..sigkit.kmv import MAX_THETA63
 
 VERIFIED_SCHEMA = "sha_a binary, sha_b binary, jaccard_est double, accepted boolean"
 _UNPAIRED = (
@@ -117,7 +118,6 @@ def verify_pairs(
     threshold = cfg.jaccard_threshold
     k = cfg.kmv_k
     slack = 2.0  # NUM_STD_DEVS = 2.0, jaccard_similarity.rs:36
-    max_theta = (1 << 63) - 1
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         carry = None  # an a-row whose b-row opens the next batch
@@ -138,7 +138,7 @@ def verify_pairs(
             ta = a.column("theta64").to_numpy()
             tb = b.column("theta64").to_numpy()
             j = jaccard_batch(a.column("minhash_kmv"), ta, b.column("minhash_kmv"), tb)
-            estimating = (ta < max_theta) | (tb < max_theta)
+            estimating = (ta < MAX_THETA63) | (tb < MAX_THETA63)
             sigma = np.sqrt(np.clip(j * (1.0 - j), 0.0, None) / k)
             ub = np.where(estimating, j + slack * sigma, j)
             yield pa.RecordBatch.from_arrays(

@@ -10,7 +10,8 @@ numpy results back as Arrow columns without a per-row Python object.
 Spark-free: nothing here imports pyspark, so kernels and tests call it
 directly. ``or_reduce_bitmap`` is the one function that drives a plan,
 and it only calls the ``mapInArrow``/``coalesce``/``collect`` methods of
-the DataFrame it is given.
+the DataFrame it is given; the packed bitmap it writes has one reader,
+``bitmap_test``.
 """
 
 from __future__ import annotations
@@ -112,3 +113,10 @@ def or_reduce_bitmap(
     for row in df.coalesce(8).mapInArrow(partials, "bm binary").collect():
         out |= np.frombuffer(row["bm"], dtype=np.uint8)
     return out.tobytes()
+
+
+def bitmap_test(bitmap: np.ndarray, positions: np.ndarray) -> np.ndarray:
+    """Whether each bit position is set in a packed ``uint8`` bitmap of
+    ``or_reduce_bitmap``'s layout (bit p at byte p >> 3, bit p & 7)."""
+    p = positions.astype(np.int64)
+    return (bitmap[p >> 3] >> (p & 7).astype(np.uint8)) & 1 > 0

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import numpy as np
 
-MAX_THETA63 = (1 << 63) - 1
+MAX_THETA63 = (1 << 63) - 1  # i64::MAX, thetafamily/common/constants.rs:21
 
 
 def kmv_signatures(

@@ -12,6 +12,7 @@ from datasketches_rust_spark.config import MAX_THETA63
 from datasketches_rust_spark.operators.verify import jaccard_batch
 from datasketches_rust_spark.sigkit.arrow_buf import (
     binary_array,
+    bitmap_test,
     list_array,
     list_values,
     or_reduce_bitmap,
@@ -146,6 +147,18 @@ def test_or_reduce_bitmap_bounded_fan_in(spark):
     for job in jobs:
         for stage in tracker.getJobInfo(job).stageIds:
             assert tracker.getStageInfo(stage).numTasks <= 8
+
+
+def test_bitmap_test_reads_the_packed_layout():
+    """``bitmap_test`` reads ``or_reduce_bitmap``'s layout: bit p at byte
+    p >> 3, bit p & 7, for signed and unsigned positions."""
+    set_bits = np.array([0, 2, 7, 9, 15, 20])
+    want = np.zeros(24, dtype=np.uint8)
+    want[set_bits] = 1
+    bm = np.packbits(want, bitorder="little")
+    for dt in (np.int64, np.uint64):
+        got = bitmap_test(bm, np.arange(24, dtype=dt))
+        assert got.dtype == bool and (got == want.astype(bool)).all()
 
 
 def test_kernel_layout_guard():

@@ -628,6 +628,9 @@ def test_theta_sampling_probability(spark):
     assert row["retained"] < 0.02 * n  # ~1% of hashes survive sampling
     est = row["retained"] / (row["theta"] / float(1 << 63))
     assert est == pytest.approx(n, rel=0.1)
+    # a group whose every hash is rejected keeps an empty sketch at p*MAX
+    tiny = theta_sketch_agg(df.limit(3).withColumn("g", F.lit(1)), ["g"], "v", k=16, p=1e-12)
+    assert [tuple(r["sketch"]) for r in tiny.collect()] == [([], int(1e-12 * MAX_THETA63), 0)]
 
 
 def test_tuple_set_ops_exact_mode(spark):
@@ -778,28 +781,6 @@ def test_theta_canonical_value_hashing(spark):
     ki = theta_sketch_agg(as_int, [], "v", k=64).select("sketch.kmv").collect()[0][0]
     kl = theta_sketch_agg(as_long, [], "v", k=64).select("sketch.kmv").collect()[0][0]
     assert list(ki) == list(kl)
-
-
-def test_theta_prescreen_dhat_sample_safe(spark):
-    """Sample-based D̂ (one cheap scan instead of two full ones) must yield
-    the bit-identical sketch: underestimating D inflates theta_hat — the
-    safe direction — and groups missing from the sample pass unscreened."""
-    df = spark.range(300_000).select(
-        (F.col("id") % 3).alias("g"), (F.col("id") % 50_000).alias("v")
-    )
-    # one tiny group that a 1% sample will often miss entirely
-    tiny = spark.range(5).select(F.lit(7).alias("g"), F.col("id").alias("v"))
-    df = df.unionByName(tiny)
-    full = {
-        r["g"]: (list(r["sketch"]["kmv"]), r["sketch"]["theta"])
-        for r in theta_sketch_agg(df, ["g"], "v", k=512).collect()
-    }
-    sampled = {
-        r["g"]: (list(r["sketch"]["kmv"]), r["sketch"]["theta"])
-        for r in theta_sketch_agg(df, ["g"], "v", k=512, dhat_sample=0.01).collect()
-    }
-    assert full == sampled
-    assert set(full) == {0, 1, 2, 7}
 
 
 def test_substring_bloom_prefilter_reduction_and_equivalence(spark):
@@ -1182,6 +1163,9 @@ def test_theta_merge_agg_empty_and_theta_propagation(spark):
     out = {r["g"]: r["sketch"] for r in theta_merge_agg(sk, ["g"], "sketch", k=64).collect()}
     assert out["a"]["theta"] == t and list(out["a"]["kmv"]) == [100, 200]
     assert out["b"]["theta"] == MAX and list(out["b"]["kmv"]) == []
+    # a merge of no sketches is the never-updated sketch
+    none = theta_merge_agg(sk.limit(0), [], "sketch", k=64).collect()
+    assert [tuple(r["sketch"]) for r in none] == [([], MAX, 0)]
 
 
 def test_tuple_merge_agg_matches_direct_and_sums(spark):
@@ -1235,6 +1219,102 @@ def test_tuple_merge_agg_matches_direct_and_sums(spark):
     assert list(est["kmv"]) == list(fold["kmv"]) and est["theta"] == fold["theta"]
     for es, fs in zip(est["summaries"], fold["summaries"]):
         assert es == pytest.approx(fs)
+
+
+def test_theta_tuple_aggs_skip_null_items(spark):
+    """A NULL item, or a NULL tuple value, inserts nothing (Spark's
+    xxhash64(NULL) is the seed, which would count NULL as a distinct
+    item), but the row's group stays, as in COUNT(DISTINCT)."""
+    from datasketches_rust_spark.functions.tuple import (
+        tuple_estimate,
+        tuple_sketch_agg,
+        tuple_summary_sum,
+    )
+
+    df = spark.createDataFrame(
+        [("a", 1, None), ("a", 2, 5.0), ("a", None, 3.0), ("b", None, 1.0), ("c", 1, None)],
+        "g string, k int, v double",
+    )
+    theta = {
+        r["g"]: r["e"]
+        for r in theta_sketch_agg(df, ["g"], "k", k=64)
+        .select("g", theta_estimate(F.col("sketch")).alias("e"))
+        .collect()
+    }
+    exact = {r["g"]: float(r["n"]) for r in df.groupBy("g").agg(F.countDistinct("k").alias("n")).collect()}
+    assert theta == exact == {"a": 2.0, "b": 0.0, "c": 1.0}
+    tup = {
+        r["g"]: (r["e"], r["s"])
+        for r in tuple_sketch_agg(df, ["g"], "k", "v", k=64)
+        .select(
+            "g",
+            tuple_estimate(F.col("sketch")).alias("e"),
+            tuple_summary_sum(F.col("sketch")).alias("s"),
+        )
+        .collect()
+    }
+    assert tup == {"a": (1.0, 5.0), "b": (0.0, 0.0), "c": (0.0, 0.0)}
+
+
+@pytest.mark.parametrize(
+    "agg", ["theta_sketch_agg", "theta_merge_agg", "tuple_sketch_agg", "tuple_merge_agg"]
+)
+def test_theta_tuple_aggs_null_group_is_own_group(spark, agg):
+    """A NULL group key is a group of its own in all four KMV aggregates:
+    its sketch equals the sketch built from that group's rows alone — in
+    estimation mode, with the insert-time screen active (D̂ >> 4k) and
+    NULL items mixed in."""
+    from datasketches_rust_spark.functions.theta import theta_merge_agg
+    from datasketches_rust_spark.functions.tuple import tuple_merge_agg, tuple_sketch_agg
+
+    k = 64
+    df = spark.range(6000).select(
+        F.when(F.col("id") % 3 != 0, (F.col("id") % 3).cast("string")).alias("g"),
+        (F.col("id") % 4).alias("day"),
+        F.when(F.col("id") % 11 != 0, F.col("id") % 2500).alias("key"),
+        (F.col("id") % 7 + 1).cast("double").alias("w"),
+    )
+    if agg.startswith("theta"):
+        build = lambda d, gc: theta_sketch_agg(d, gc, "key", k=k)  # noqa: E731
+    else:
+        build = lambda d, gc: tuple_sketch_agg(d, gc, "key", "w", k=k)  # noqa: E731
+    merge = {"theta_merge_agg": theta_merge_agg, "tuple_merge_agg": tuple_merge_agg}.get(agg)
+
+    def run(d, gc):
+        if merge is None:
+            return build(d, gc)
+        return merge(build(d, gc + ["day"]), gc, "sketch", k=k)
+
+    got = {r["g"]: r["sketch"] for r in run(df, ["g"]).collect()}
+    assert set(got) == {None, "1", "2"}
+    alone = run(df.where(F.col("g").isNull()).drop("g"), []).collect()[0]["sketch"]
+    assert got[None]["retained"] == k and got[None]["theta"] < (1 << 63) - 1
+    assert got[None] == alone
+
+
+def test_tuple_merge_agg_reads_input_once(spark, tmp_path):
+    """tuple_merge_agg is one explode_outer read of its input: over a
+    parquet scan its plan holds exactly the input plan's FileScans and
+    broadcast joins (none of its own), so no checkpoint is needed to keep
+    the input from being replayed."""
+    from datasketches_rust_spark.functions.tuple import tuple_merge_agg, tuple_sketch_agg
+
+    path = str(tmp_path / "rows.parquet")
+    spark.range(3000).select(
+        (F.col("id") % 3).alias("g"),
+        (F.col("id") % 4).alias("day"),
+        (F.col("id") % 500).alias("key"),
+        F.lit(1.0).alias("w"),
+    ).write.parquet(path)
+    cells = tuple_sketch_agg(spark.read.parquet(path), ["g", "day"], "key", "w", k=64)
+    merged = tuple_merge_agg(cells, ["g"], "sketch", k=64)
+
+    def plan(d):
+        return d._jdf.queryExecution().executedPlan().toString()
+
+    for node in ("FileScan", "BroadcastHashJoin"):
+        assert plan(merged).count(node) == plan(cells).count(node), (node, plan(merged))
+    assert plan(cells).count("FileScan") == 2  # the rows and the screen's D̂ pass
 
 
 def test_rolling_window_hashes_buf_parity_and_speed():
