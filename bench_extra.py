@@ -11,6 +11,11 @@ Modes:
   python bench_extra.py --task-latency  # fixed cost of one warm one-task
                                         # job: JVM-only, mapInArrow, RDD
                                         # Python (no SF dir needed)
+  python bench_extra.py --signature-stage
+                                        # signature kernel ms/batch with 1
+                                        # and 4 concurrent processes, then
+                                        # the signatures stage wall on the
+                                        # perfbench-shaped 8k corpus
 
 Respects $SPARK_GRAFT_SF_DIR and $SPARK_GRAFT_CPUS exactly like bench.py.
 """
@@ -69,15 +74,125 @@ def task_latency(runs: int) -> None:
     spark.stop()
 
 
+# the perfbench dedup_large_files corpus (seed 0): generator seed, files,
+# size scale, and the bench's Arrow batch rows
+SIG_CORPUS = {"seed": 1000, "n_files": 8000, "size_scale": 8}
+SIG_BATCH_ROWS = 384
+
+
+def _kernel_ms(batches, barrier, reps: int, out) -> None:
+    """Median ms per batch of ``signature_record_batch`` over ``batches``,
+    timed after one warm pass and after every process reached ``barrier``."""
+    from datasketches_rust_spark.config import PipelineConfig
+    from datasketches_rust_spark.operators.signatures import signature_record_batch
+
+    cfg = PipelineConfig()
+    for b in batches:
+        signature_record_batch(b, cfg)
+    barrier.wait()
+    walls = []
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        for b in batches:
+            signature_record_batch(b, cfg)
+        walls.append((time.perf_counter() - t0) / len(batches))
+    out.put(1000.0 * statistics.median(walls))
+
+
+def _kernel_ms_concurrent(batches, procs: int, reps: int) -> float:
+    """Median over ``procs`` processes, all hashing at once, of each one's
+    median ms per batch."""
+    import multiprocessing as mp
+
+    ctx = mp.get_context("spawn")
+    barrier, out = ctx.Barrier(procs), ctx.Queue()
+    ps = [ctx.Process(target=_kernel_ms, args=(batches, barrier, reps, out))
+          for _ in range(procs)]
+    for p in ps:
+        p.start()
+    got = [out.get(timeout=600) for _ in ps]
+    for p in ps:
+        p.join(timeout=60)
+    return round(statistics.median(got), 1)
+
+
+def signature_stage(runs: int) -> None:
+    """The signature kernel outside Spark (ms per 384-row batch, alone and
+    with 4 processes at once; the single-process number understates the
+    in-situ cost), then the median wall of ``compute_signatures`` plus an
+    eager ``localCheckpoint`` over the perfbench-shaped corpus on local[4],
+    after two warm-up runs."""
+    from datasketches_rust_spark.config import PipelineConfig
+    from datasketches_rust_spark.corpus.generator import corpus_spark
+    from datasketches_rust_spark.operators.signatures import compute_signatures
+    from datasketches_rust_spark.plans.session import get_spark
+    sys.path.insert(0, os.path.join(REPO, "perfbench"))
+    from probes import kernel_batches
+
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (REPO, os.environ.get("PYTHONPATH")) if p
+    )
+    c = SIG_CORPUS
+    path = os.path.join(REPO, ".cache",
+                        f"sigstage_s{c['seed']}_n{c['n_files']}_x{c['size_scale']}")
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        spark = get_spark(master="local[4]", shuffle_partitions=16,
+                          app_name="bench_extra_sigstage")
+        corpus_spark(spark, c["n_files"], seed=c["seed"], partitions=8,
+                     size_scale=c["size_scale"]).drop("file_seq").write.mode(
+            "overwrite").parquet(path)
+        spark.stop()
+    batches = kernel_batches(path)  # perfbench's sigkit probe batches
+    out = {
+        "signature_kernel.batches": len(batches),
+        "signature_kernel.text_mb_per_batch": round(
+            statistics.mean(b.column(2).nbytes for b in batches) / 2**20, 2),
+        "signature_kernel.batch_ms_1proc": _kernel_ms_concurrent(batches, 1, 7),
+        "signature_kernel.batch_ms_4proc": _kernel_ms_concurrent(batches, 4, 7),
+    }
+    del batches
+
+    spark = get_spark(master="local[4]", shuffle_partitions=16,
+                      app_name="bench_extra_sigstage", extra_conf={
+                          # perfbench's scan and batch settings
+                          "spark.sql.files.maxPartitionBytes": str(32 * 1024 * 1024),
+                          "spark.sql.files.openCostInBytes": str(256 * 1024),
+                          "spark.sql.execution.arrow.maxRecordsPerBatch": str(SIG_BATCH_ROWS),
+                          "spark.ui.showConsoleProgress": "false",
+                      })
+    cfg = PipelineConfig()
+    corpus = spark.read.parquet(path)
+    walls = []
+    for i in range(runs + 2):
+        t0 = time.perf_counter()
+        compute_signatures(corpus, cfg).localCheckpoint(eager=True)
+        if i >= 2:
+            walls.append(time.perf_counter() - t0)
+    q = statistics.quantiles(walls, n=4)
+    out.update({
+        "signature_stage.files": c["n_files"],
+        "signature_stage.runs": runs,
+        "signature_stage.wall_s_median": round(statistics.median(walls), 3),
+        "signature_stage.wall_s_iqr": round(q[2] - q[0], 3),
+        "signature_stage.walls_s": [round(w, 3) for w in walls],
+    })
+    print(json.dumps(out))
+    spark.stop()
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--explain", default=None)
     ap.add_argument("--queries", default=None)
     ap.add_argument("--passes", type=int, default=2)
     ap.add_argument("--task-latency", action="store_true")
+    ap.add_argument("--signature-stage", action="store_true")
     args = ap.parse_args()
     if args.task_latency:
         task_latency(runs=15)
+        return
+    if args.signature_stage:
+        signature_stage(runs=6)
         return
 
     from datasketches_rust_spark.plans.session import get_spark

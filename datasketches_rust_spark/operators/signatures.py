@@ -28,7 +28,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from ..config import PipelineConfig
-from ..sigkit.arrow_buf import binary_array, list_array, to_buf
+from ..sigkit.arrow_buf import binary_array, doc_chunks, list_array, to_buf
 from ..sigkit.kmv import kmv_signatures
 from ..sigkit.oph import band_hashes, oph_minhashes
 from ..sigkit.tokenize import shingle_hashes_buf
@@ -50,16 +50,41 @@ SIGNATURE_SCHEMA = (
 )
 
 
-def signature_record_batch(rb: pa.RecordBatch, cfg: PipelineConfig) -> pa.RecordBatch:
-    """Arrow-native signature kernel: UTF-8 bytes never become Python strs."""
-    n = rb.num_rows
-    content = rb.column(rb.schema.get_field_index("content"))
-    buf, doc_offs = to_buf(content)
-    vals, offs = shingle_hashes_buf(buf, doc_offs, cfg.shingle_width, cfg.seed)
-    sig_vals, sig_offs, theta, n_distinct = kmv_signatures(vals, offs, cfg.kmv_k)
-    mh = oph_minhashes(vals, offs, cfg.num_perm, cfg.seed)
-    bh = band_hashes(mh, cfg.num_bands, cfg.band_rows, cfg.seed)
+# text bytes per kernel pass: the hashing steps make several full-size
+# temporaries per pass, so smaller passes keep them closer to the core;
+# 1 MiB ran fastest with 4 concurrent processes in a 0.5/1/2/4 MiB sweep
+# (CLAUDE.md)
+_CHUNK_BYTES = 1 << 20
 
+
+def shingle_chunks(
+    content: pa.Array, cfg: PipelineConfig
+) -> Iterator[tuple[np.ndarray, np.ndarray]]:
+    """``shingle_hashes_buf`` of consecutive runs of at most _CHUNK_BYTES of
+    text of a string column: one (values, offsets) pair per run, in order."""
+    buf, doc_offs = to_buf(content)
+    for chunk_buf, chunk_offs in doc_chunks(buf, doc_offs, _CHUNK_BYTES):
+        yield shingle_hashes_buf(chunk_buf, chunk_offs, cfg.shingle_width, cfg.seed)
+
+
+def signature_record_batch(rb: pa.RecordBatch, cfg: PipelineConfig) -> pa.RecordBatch:
+    """Arrow-native signature kernel: UTF-8 bytes never become Python strs.
+
+    The numpy pipeline runs per doc chunk (``shingle_chunks``); every
+    result is per doc, so the chunks' results concatenate unchanged into
+    one output batch per input batch.
+    """
+    n = rb.num_rows
+    parts = []
+    for vals, offs in shingle_chunks(rb.column(rb.schema.get_field_index("content")), cfg):
+        sig_vals, _, theta, n_distinct = kmv_signatures(vals, offs, cfg.kmv_k)
+        mh = oph_minhashes(vals, offs, cfg.num_perm, cfg.seed)
+        bh = band_hashes(mh, cfg.num_bands, cfg.band_rows, cfg.seed)
+        parts.append((sig_vals, theta, n_distinct, bh))
+    sig_vals, theta, n_distinct, bh = (np.concatenate(p) for p in zip(*parts))
+
+    sig_offs = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(np.minimum(n_distinct, cfg.kmv_k), out=sig_offs[1:])
     nonempty = n_distinct > 0
     band_offs = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(np.where(nonempty, cfg.num_bands, 0), out=band_offs[1:])

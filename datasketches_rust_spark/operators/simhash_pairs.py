@@ -15,14 +15,14 @@ from __future__ import annotations
 
 from typing import Iterator
 
+import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import LongType
 
 from ..config import PipelineConfig
-from ..sigkit.arrow_buf import to_buf
 from ..sigkit.simhash import simhash64
-from ..sigkit.tokenize import shingle_hashes_buf
+from .signatures import shingle_chunks
 
 
 def simhash_fingerprints(
@@ -32,7 +32,7 @@ def simhash_fingerprints(
     text_col: str = "text",
 ) -> DataFrame:
     """(id, simhash64) per doc, hashed from the Arrow text buffer by the
-    signature kernel's path (``shingle_hashes_buf``); a null text is an
+    signature kernel's path (``shingle_chunks``); a null text is an
     empty doc (fingerprint 0)."""
     schema = docs.select(id_col).schema.add("simhash64", LongType())
 
@@ -40,11 +40,8 @@ def simhash_fingerprints(
         for rb in batches:
             if not rb.num_rows:
                 continue
-            buf, doc_offs = to_buf(rb.column(1))
-            vals, offs = shingle_hashes_buf(buf, doc_offs, cfg.shingle_width, cfg.seed)
-            yield pa.RecordBatch.from_arrays(
-                [rb.column(0), pa.array(simhash64(vals, offs))], [id_col, "simhash64"]
-            )
+            fp = np.concatenate([simhash64(v, o) for v, o in shingle_chunks(rb.column(1), cfg)])
+            yield pa.RecordBatch.from_arrays([rb.column(0), pa.array(fp)], [id_col, "simhash64"])
 
     return docs.select(id_col, text_col).mapInArrow(run, schema)
 

@@ -54,6 +54,28 @@ def to_buf(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     return data, offs.astype(np.int64) - lo
 
 
+def doc_chunks(
+    buf: np.ndarray, offs: np.ndarray, max_bytes: float
+) -> Iterator[tuple[np.ndarray, np.ndarray]]:
+    """Cut a ``to_buf`` column into consecutive runs of values holding at
+    most ``max_bytes`` bytes, with at least one value per run (so a longer
+    value is a run of its own); yield each run as its own (bytes, offsets
+    from 0). An empty column yields one empty run.
+
+    Kernels that make several full-size temporaries per input byte run on
+    these runs so the temporaries stay cache-resident whatever the Arrow
+    batch size; results are per-value, so they concatenate unchanged.
+    """
+    n, lo = len(offs) - 1, 0
+    while True:
+        hi = int(np.searchsorted(offs, offs[lo] + max_bytes, side="right")) - 1
+        hi = min(max(hi, lo + 1), n)
+        yield buf[offs[lo] : offs[hi]], offs[lo : hi + 1] - offs[lo]
+        if hi >= n:
+            return
+        lo = hi
+
+
 def binary_array(values: np.ndarray, elem_offsets: np.ndarray) -> pa.BinaryArray:
     """Binary column whose value i is the bytes of
     ``values[elem_offsets[i]:elem_offsets[i+1]]``, built zero-copy over

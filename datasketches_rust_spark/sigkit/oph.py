@@ -15,7 +15,8 @@ stride-from-high-bits trick of common/hash_table.rs:425-427.
 
 Vectorization: np.minimum.at over (doc, bucket) flat indices; densification
 is a doubled-matrix cumulative-max forward fill; band hashes are one
-xxh64 call over an (n_docs*b, r) uint64 matrix. No per-row Python.
+xxh64 call over an (n_docs*b, r) uint64 matrix with per-row band seeds.
+No per-row Python.
 """
 
 from __future__ import annotations
@@ -81,10 +82,7 @@ def band_hashes(minhashes: np.ndarray, num_bands: int, rows: int, seed: int) -> 
     """
     n_docs, num_perm = minhashes.shape
     assert num_perm == num_bands * rows
-    out = np.empty((n_docs, num_bands), dtype=np.int64)
-    banded = minhashes.reshape(n_docs, num_bands, rows)
-    for b in range(num_bands):
-        out[:, b] = (xxh64_u64_matrix(banded[:, b, :], seed + b) >> np.uint64(1)).astype(
-            np.int64
-        )
-    return out
+    # all (doc, band) rows in one call, row (d, b) seeded with seed + b
+    seeds = np.tile(np.arange(seed, seed + num_bands, dtype=np.int64), n_docs)
+    h = xxh64_u64_matrix(minhashes.reshape(n_docs * num_bands, rows), seeds)
+    return (h >> np.uint64(1)).astype(np.int64).reshape(n_docs, num_bands)

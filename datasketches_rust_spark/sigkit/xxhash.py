@@ -14,7 +14,7 @@ Two entry points:
 - :func:`xxh64_bytes` — arbitrary-length byte strings given as one
   concatenated ``uint8`` buffer plus offsets (exactly the Arrow string
   layout). Internally buckets rows by length so every bucket is processed as
-  a dense ``(n, L)`` matrix with loops only over *length*, never over rows.
+  one vector per input word, with loops only over *length*, never over rows.
 
 Spark's built-in ``F.xxhash64`` is the same XXH64 (seed 42); parity is
 pinned in tests/test_xxhash.py against both the reference's official test
@@ -33,31 +33,38 @@ P3 = U64(0x165667B19E3779F9)
 P4 = U64(0x85EBCA77C2B2AE63)
 P5 = U64(0x27D4EB2F165667C5)
 
-_0 = U64(0)
-_64 = U64(64)
+
+def _rotl_(x: np.ndarray, r: int, scratch: np.ndarray) -> None:
+    """x = rotl64(x, r), in place."""
+    np.left_shift(x, U64(r), out=scratch)
+    np.right_shift(x, U64(64 - r), out=x)
+    x |= scratch
 
 
-def _rotl(x: np.ndarray, r: int) -> np.ndarray:
-    r = U64(r)
-    return (x << r) | (x >> (_64 - r))
+def _round0(lane: np.ndarray, out: np.ndarray, scratch: np.ndarray) -> np.ndarray:
+    """out = XXH64 round of ``lane`` on a zero accumulator: rotl(lane·P2, 31)·P1."""
+    np.multiply(lane, P2, out=out)
+    _rotl_(out, 31, scratch)
+    out *= P1
+    return out
 
 
-def _round(acc, lane):
-    acc = acc + lane * P2
-    return _rotl(acc, 31) * P1
+def _finalize_(h: np.ndarray, scratch: np.ndarray) -> np.ndarray:
+    """The XXH64 avalanche, in place."""
+    for shift, prime in ((33, P2), (29, P3)):
+        np.right_shift(h, U64(shift), out=scratch)
+        h ^= scratch
+        h *= prime
+    np.right_shift(h, U64(32), out=scratch)
+    h ^= scratch
+    return h
 
 
-def _merge_round(acc, v):
-    acc = acc ^ _round(_0, v)
-    return acc * P1 + P4
-
-
-def _finalize(h: np.ndarray) -> np.ndarray:
-    h = h ^ (h >> U64(33))
-    h = h * P2
-    h = h ^ (h >> U64(29))
-    h = h * P3
-    return h ^ (h >> U64(32))
+def _seeded(seed, add: int, n: int) -> np.ndarray:
+    """(n,) uint64 ``seed + add`` mod 2^64; ``seed`` is an int or an (n,) array."""
+    if np.ndim(seed):
+        return np.asarray(seed, dtype=np.uint64) + U64(add % (1 << 64))
+    return np.full(n, U64((seed + add) % (1 << 64)))
 
 
 def xxh64_u64(x, seed: int = 0) -> np.ndarray:
@@ -67,58 +74,65 @@ def xxh64_u64(x, seed: int = 0) -> np.ndarray:
     ``xxh64(long)`` semantics of Spark's ``F.xxhash64`` on LongType.
     """
     x = np.asarray(x, dtype=np.uint64)
-    acc = U64((seed + int(P5) + 8) % (1 << 64))
-    acc = acc ^ _round(_0, x)
-    acc = _rotl(acc, 27) * P1 + P4
-    return _finalize(acc)
+    flat = x.ravel()
+    return _xxh64_lanes(lambda pos, dt: flat, flat.size, 8, seed).reshape(x.shape)
 
 
-def _xxh64_fixed(m: np.ndarray, seed: int) -> np.ndarray:
-    """XXH64 of every row of a dense (n, L) uint8 matrix."""
-    n, length = m.shape
-    mod = 1 << 64
-    seed = seed % mod
+def _xxh64_lanes(lane, n: int, length: int, seed) -> np.ndarray:
+    """XXH64 of ``n`` byte strings of one ``length``: ``lane(pos, dtype)``
+    returns the (n,) little-endian ``<u8``, ``<u4`` or ``u1`` word at byte
+    ``pos`` of every string, and is only asked for words inside the
+    strings. ``seed`` is one int or an (n,) array of per-row seeds.
+
+    Every step is an ``out=`` ufunc over the result, two scratch arrays
+    and, in the stripe path, the four accumulators.
+    """
+    if n == 0:
+        return np.empty(0, dtype=np.uint64)
+    t = np.empty(n, dtype=np.uint64)
+    u = np.empty(n, dtype=np.uint64)
     if length >= 32:
-        nstripes = length // 32
-        lanes = np.ascontiguousarray(m[:, : nstripes * 32]).view("<u8")
-        v1 = np.full(n, U64((seed + int(P1) + int(P2)) % mod), dtype=np.uint64)
-        v2 = np.full(n, U64((seed + int(P2)) % mod), dtype=np.uint64)
-        v3 = np.full(n, U64(seed), dtype=np.uint64)
-        v4 = np.full(n, U64((seed - int(P1)) % mod), dtype=np.uint64)
-        for s in range(nstripes):
-            b = 4 * s
-            v1 = _round(v1, lanes[:, b])
-            v2 = _round(v2, lanes[:, b + 1])
-            v3 = _round(v3, lanes[:, b + 2])
-            v4 = _round(v4, lanes[:, b + 3])
-        h = _rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12) + _rotl(v4, 18)
-        h = _merge_round(h, v1)
-        h = _merge_round(h, v2)
-        h = _merge_round(h, v3)
-        h = _merge_round(h, v4)
-        pos = nstripes * 32
+        vs = [_seeded(seed, add, n) for add in (int(P1) + int(P2), int(P2), 0, -int(P1))]
+        for pos in range(0, length - 31, 32):
+            for i, v in enumerate(vs):
+                v += np.multiply(lane(pos + 8 * i, "<u8"), P2, out=t)
+                _rotl_(v, 31, t)
+                v *= P1
+        h = np.zeros(n, dtype=np.uint64)
+        for v, r in zip(vs, (1, 7, 12, 18)):
+            np.left_shift(v, U64(r), out=t)
+            np.right_shift(v, U64(64 - r), out=u)
+            t |= u
+            h += t
+        for v in vs:
+            h ^= _round0(v, t, u)
+            h *= P1
+            h += P4
+        pos = length // 32 * 32
     else:
-        h = np.full(n, U64((seed + int(P5)) % mod), dtype=np.uint64)
+        h = _seeded(seed, int(P5), n)
         pos = 0
 
-    h = h + U64(length)
+    h += U64(length)
 
     while pos + 8 <= length:
-        lane = np.ascontiguousarray(m[:, pos : pos + 8]).view("<u8")[:, 0]
-        h = h ^ _round(_0, lane)
-        h = _rotl(h, 27) * P1 + P4
+        h ^= _round0(lane(pos, "<u8"), t, u)
+        _rotl_(h, 27, t)
+        h *= P1
+        h += P4
         pos += 8
     if pos + 4 <= length:
-        lane = np.ascontiguousarray(m[:, pos : pos + 4]).view("<u4")[:, 0].astype(np.uint64)
-        h = h ^ (lane * P1)
-        h = _rotl(h, 23) * P2 + P3
+        h ^= np.multiply(lane(pos, "<u4"), P1, out=t)
+        _rotl_(h, 23, t)
+        h *= P2
+        h += P3
         pos += 4
     while pos < length:
-        lane = m[:, pos].astype(np.uint64)
-        h = h ^ (lane * P5)
-        h = _rotl(h, 11) * P1
+        h ^= np.multiply(lane(pos, "u1"), P5, out=t)
+        _rotl_(h, 11, t)
+        h *= P1
         pos += 1
-    return _finalize(h)
+    return _finalize_(h, t)
 
 
 def xxh64_slices(
@@ -126,51 +140,50 @@ def xxh64_slices(
 ) -> np.ndarray:
     """XXH64 of ``n`` ragged byte slices ``data[starts[i]:starts[i]+lengths[i]]``.
 
-    Rows are bucketed by length; each bucket runs as one dense matrix, so
-    Python-level iteration is over distinct lengths only.
+    Rows are bucketed by length; a bucket's words at byte ``pos`` are one
+    gather ``words[starts + pos]`` from a zero-copy view of ``data`` that
+    has a (possibly unaligned) word at every byte offset, so Python-level
+    iteration is over distinct lengths only and no (n, L) matrix is built.
     """
-    data = np.asarray(data, dtype=np.uint8)
+    data = np.ascontiguousarray(data, dtype=np.uint8)
     starts = np.asarray(starts, dtype=np.int64)
     lengths = np.asarray(lengths, dtype=np.int64)
     n = len(lengths)
     out = np.empty(n, dtype=np.uint64)
     if n == 0:
         return out
+    # word i of each view is the word starting at byte i; the views end
+    # where their last word ends on the buffer's last byte
+    words = {
+        dt: np.ndarray((max(len(data) - np.dtype(dt).itemsize + 1, 0),), dt, data, 0, (1,))
+        for dt in ("<u8", "<u4", "u1")
+    }
     # one argsort groups equal lengths contiguously — the per-unique-length
     # `lengths == L` formulation rescanned the whole array once per
     # distinct length (~40 full passes on a code-token batch). Stable int
-    # argsort is a radix sort with one pass per key byte, so sorting the
-    # (tiny) lengths as uint16 runs 2 passes instead of int64's 8 —
-    # measured ~4× faster on a 490k-token batch; identical order.
-    if lengths.size and int(lengths.max()) < (1 << 16):
-        order = np.argsort(lengths.astype(np.uint16), kind="stable")
-    else:
-        order = np.argsort(lengths, kind="stable")
-    sorted_lengths = lengths[order]
-    bounds = np.nonzero(np.diff(sorted_lengths))[0] + 1
-    for sel in np.split(order, bounds):
+    # argsort is a radix sort with one pass per key byte for 8- and 16-bit
+    # keys, so the lengths are sorted in the narrowest unsigned type that
+    # holds them (uint16 measured ~4× faster than int64 on a 490k-token
+    # batch); identical order.
+    order = np.argsort(lengths.astype(np.min_scalar_type(int(lengths.max()))), kind="stable")
+    for sel in np.split(order, np.flatnonzero(np.diff(lengths[order])) + 1):
+        s = starts[sel]
         length = int(lengths[sel[0]])
-        if length == 0:
-            out[sel] = _xxh64_fixed(np.empty((len(sel), 0), dtype=np.uint8), seed)
-        else:
-            # gather bucket rows through a zero-copy sliding-window VIEW:
-            # one (n,) row-index fancy gather materializes the (n, L)
-            # matrix directly, instead of building an (n, L) int64 index
-            # matrix first — measured ~1.6× faster on a 490k-token batch
-            sw = np.lib.stride_tricks.sliding_window_view(data, length)
-            out[sel] = _xxh64_fixed(sw[starts[sel]], seed)
+        out[sel] = _xxh64_lanes(lambda pos, dt: words[dt][s + pos], len(sel), length, seed)
     return out
 
 
-def xxh64_u64_matrix(m: np.ndarray, seed: int = 0) -> np.ndarray:
+def xxh64_u64_matrix(m: np.ndarray, seed=0) -> np.ndarray:
     """XXH64 of each row of an (n, w) uint64 matrix, hashed as 8w LE bytes.
 
-    Used for shingle hashing (w consecutive token hashes) and band hashing
-    (r consecutive bucket minhashes): one dense vectorized call per batch.
+    ``seed`` is one int or an (n,) array of per-row seeds, so band hashing
+    (r consecutive bucket minhashes, seed + band) is one call per batch.
+    Each word is a zero-copy strided view of the matrix.
     """
     m = np.ascontiguousarray(m, dtype="<u8")
     n, w = m.shape
-    return _xxh64_fixed(m.view(np.uint8).reshape(n, 8 * w), seed)
+    b = m.view(np.uint8).reshape(n, 8 * w)
+    return _xxh64_lanes(lambda pos, dt: np.ndarray((n,), dt, b, pos, (8 * w,)), n, 8 * w, seed)
 
 
 def xxh64_bytes(data: np.ndarray, offsets: np.ndarray, seed: int = 0) -> np.ndarray:

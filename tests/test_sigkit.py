@@ -20,7 +20,11 @@ from datasketches_rust_spark.sigkit.kmv import (
 )
 from datasketches_rust_spark.sigkit.oph import band_hashes, oph_minhashes
 from datasketches_rust_spark.sigkit.simhash import hamming64, simhash64
-from datasketches_rust_spark.sigkit.tokenize import shingle_hashes, token_hash_stream
+from datasketches_rust_spark.sigkit.tokenize import (
+    shingle_hashes,
+    sorted_distinct,
+    token_hash_stream,
+)
 from datasketches_rust_spark.sigkit.union_find import union_find
 from datasketches_rust_spark.sigkit.xxhash import xxh64_u64
 
@@ -84,6 +88,31 @@ def test_shingle_count_formula():
     vals, offs = shingle_hashes([words], width=5, seed=CFG.seed)
     assert offs[1] == 96  # n - w + 1 distinct shingles
     assert np.all(np.diff(vals[: offs[1]]) > 0)  # sorted distinct
+
+
+def test_sorted_distinct_screens_zero_hashes():
+    """The zero screen and the recount of the count-based layout on
+    synthetic values (real shingle hashes never reach zero): a zero opens
+    a doc's sorted slice, including a short doc's single shingle."""
+    docs = [[0, 0, 5, 5, 9], [0], [], [3], [0, 7], [4, 4], [0, 0], [1, 2, 2, 3]]
+    offs = np.zeros(len(docs) + 1, dtype=np.int64)
+    np.cumsum([len(d) for d in docs], out=offs[1:])
+    vals = np.array([v for d in docs for v in d], dtype=np.uint64)
+    got_vals, got_offs = sorted_distinct(vals, offs)
+    want = [sorted(set(d) - {0}) for d in docs]
+    assert [got_vals[got_offs[i]:got_offs[i + 1]].tolist() for i in range(len(docs))] == want
+
+    rng = np.random.default_rng(3)
+    sizes = rng.integers(0, 6, size=200)
+    offs = np.zeros(len(sizes) + 1, dtype=np.int64)
+    np.cumsum(sizes, out=offs[1:])
+    vals = rng.integers(0, 4, size=int(offs[-1])).astype(np.uint64)
+    for i in range(len(sizes)):
+        vals[offs[i]:offs[i + 1]].sort()
+    got_vals, got_offs = sorted_distinct(vals, offs)
+    for i in range(len(sizes)):
+        want = np.setdiff1d(vals[offs[i]:offs[i + 1]], [0])
+        assert np.array_equal(got_vals[got_offs[i]:got_offs[i + 1]], want)
 
 
 # ---------------------------------------------------------------- kmv
