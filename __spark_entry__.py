@@ -20,8 +20,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from datasketches_rust_spark.config import PipelineConfig
 from datasketches_rust_spark.functions.sketches import (
-    bloom_build,
-    bloom_might_contain,
+    bloom_contains,
+    bloom_filter,
     countmin_estimate,
     countmin_relative_error,
     countmin_sketch,
@@ -302,15 +302,10 @@ def _q_countmin_reflayout(spark, sf):
     (vectorized sigkit.murmur3 kernel, pinned by the reference's own test
     vectors). Exact mode (width >> distinct event types), so estimates
     equal true counts and the oracle is exact."""
-    from datasketches_rust_spark.functions.sketches import (
-        countmin_build_reflayout,
-        countmin_estimate_reflayout,
-    )
-
     ev = _t(spark, sf, "events")
-    sketch = countmin_build_reflayout(ev, "event_type", num_hashes=3, width=2048)
+    sketch = countmin_sketch(ev, "event_type", num_hashes=3, width=2048, ref_seed=9001)
     items = ev.select("event_type").distinct()
-    return countmin_estimate_reflayout(sketch, items, "event_type")
+    return countmin_estimate(sketch, items, "event_type")
 
 
 def _q_tdigest_quantiles(spark, sf):
@@ -329,9 +324,9 @@ def _q_tdigest_quantiles(spark, sf):
 def _q_bloom_semijoin(spark, sf):
     orders = _t(spark, sf, "orders").where(F.col("o_totalprice") > 50000)
     li = _t(spark, sf, "lineitem")
-    bits = bloom_build(orders, "o_orderkey", num_bits=1 << 22, num_hashes=5)
+    f = bloom_filter(orders, "o_orderkey", num_bits=1 << 22, num_hashes=5)
     keys = li.select("l_orderkey").distinct()
-    flags = bloom_might_contain(keys, "l_orderkey", bits, num_bits=1 << 22, num_hashes=5)
+    flags = bloom_contains(keys, "l_orderkey", f)
     return (
         li.join(flags.where("might_contain").select("l_orderkey"), "l_orderkey")
         .agg(F.count("*").alias("n_matched"))

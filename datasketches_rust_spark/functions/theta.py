@@ -154,16 +154,21 @@ def _key(e: Column, summary: bool) -> Column:
     return e["key"] if summary else e
 
 
-def _pack(m: Column, k: int | None, theta: Column, summary: bool = False) -> Column:
-    """Sorted entries below ``theta`` → sketch struct. Past k entries it
-    keeps the k smallest and lowers theta to the (k+1)-th hash (the trim of
-    hash_table.rs:388-423); ``k=None`` never truncates. An entry is a hash,
+def _truncate(m: Column, k: int, theta: Column, summary: bool = False) -> tuple[Column, Column]:
+    """(entries, theta) of sorted entries below ``theta``, cut to k: past k
+    entries it keeps the k smallest and lowers theta to the (k+1)-th hash
+    (the trim of hash_table.rs:388-423)."""
+    over = F.size(m) > k
+    return (
+        F.when(over, F.slice(m, 1, k)).otherwise(m),
+        F.when(over, _key(F.element_at(m, k + 1), summary)).otherwise(theta),
+    )
+
+
+def _pack(m: Column, theta: Column, summary: bool = False) -> Column:
+    """Sorted entries below ``theta`` → sketch struct. An entry is a hash,
     or for a tuple sketch a (key=hash, value=summary) struct — the shape
     ``map_entries`` gives."""
-    if k is not None:
-        over = F.size(m) > k
-        theta = F.when(over, _key(F.element_at(m, k + 1), summary)).otherwise(theta)
-        m = F.when(over, F.slice(m, 1, k)).otherwise(m)
     if summary:
         fields = [
             F.transform(m, lambda e: e["key"]).alias("kmv"),
@@ -214,13 +219,18 @@ def _bottom_k(
         *tmin,
         F.slice(F.array_sort(F.flatten(F.collect_list("__part"))), 1, k + 1).alias("__m"),
     )
-    m = F.col("__m")
+    # one select per step (screen, truncate, pack): each entry array is
+    # built once, not written out again in every field of the struct
     if theta is None:
         t = F.coalesce(F.col("__t"), F.lit(MAX_THETA63))
-        m = F.filter(m, lambda e: _key(e, summary) < t)
+        screened = F.filter(F.col("__m"), lambda e: _key(e, summary) < t)
     else:
-        t = F.lit(theta)
-    return merged.select(*group_cols, _pack(m, k, t, summary).alias("sketch"))
+        t, screened = F.lit(theta), F.col("__m")
+    merged = merged.select(*group_cols, t.alias("__t"), screened.alias("__m"))
+    m, t = F.col("__m"), F.col("__t")
+    cut_m, cut_t = _truncate(m, k, t, summary)
+    merged = merged.select(*group_cols, cut_t.alias("__t"), cut_m.alias("__m"))
+    return merged.select(*group_cols, _pack(m, t, summary).alias("sketch"))
 
 
 def theta_sketch_agg(
@@ -369,21 +379,21 @@ def theta_union(a: Column, b: Column, k: int = 4096) -> Column:
     """Union of two sketch structs (common/union.rs:64-135)."""
     theta = _min_theta(a, b)
     m = F.array_union(_screen(a["kmv"], theta), _screen(b["kmv"], theta))
-    return _pack(F.array_sort(m), k, theta)
+    return _pack(*_truncate(F.array_sort(m), k, theta))
 
 
 def theta_intersection(a: Column, b: Column) -> Column:
     """Intersection under min-theta (common/intersection.rs:53-226)."""
     theta = _min_theta(a, b)
     m = F.array_intersect(_screen(a["kmv"], theta), _screen(b["kmv"], theta))
-    return _pack(F.array_sort(m), None, theta)
+    return _pack(F.array_sort(m), theta)
 
 
 def theta_a_not_b(a: Column, b: Column) -> Column:
     """A \\ B below combined theta (common/a_not_b.rs:58-168)."""
     theta = _min_theta(a, b)
     m = F.array_except(_screen(a["kmv"], theta), _screen(b["kmv"], theta))
-    return _pack(F.array_sort(m), None, theta)
+    return _pack(F.array_sort(m), theta)
 
 
 # ------------------------------------------------------------ jaccard triple

@@ -35,6 +35,7 @@ from .theta import (
     _hashed,
     _pack,
     _prescreen,
+    _truncate,
     theta_estimate,
     theta_jaccard,
 )
@@ -112,7 +113,10 @@ def _entries_map(sk: Column, theta: Column) -> Column:
 
 def _pack_entries(m: Column, theta: Column, k: int | None = None) -> Column:
     """(hash -> summary) map + theta → sorted tuple-sketch struct."""
-    return _pack(F.array_sort(F.map_entries(m)), k, theta, summary=True)
+    e = F.array_sort(F.map_entries(m))
+    if k is not None:
+        e, theta = _truncate(e, k, theta, summary=True)
+    return _pack(e, theta, summary=True)
 
 
 def tuple_union(a: Column, b: Column, k: int = 4096) -> Column:

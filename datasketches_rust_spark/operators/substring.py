@@ -268,7 +268,6 @@ def duplicated_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     min_len: int = 64,
-    partitions: int | None = None,
 ) -> DataFrame:
     """Cross-document verbatim spans >= min_len bytes, via a per-partition
     suffix array (sigkit.suffix_array) — the substring-dedup index stage.
@@ -288,8 +287,6 @@ def duplicated_spans(
     from ..sigkit.suffix_array import shared_spans_buf
 
     base = docs.select(F.col(id_col), F.col(text_col))
-    if partitions:
-        base = base.repartition(partitions)
     id_t = base.schema[0].dataType.simpleString()
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

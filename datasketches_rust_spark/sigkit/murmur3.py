@@ -15,7 +15,7 @@ with per-row seeds derived at :513-523), so the helpers here also expose:
 - :func:`murmur3_bucket_indexes` — h1 % num_buckets per (item, row seed):
   the reference's bucket layout for raw-byte items, enabling
   reference-compatible Count-Min counter tables (see
-  functions/sketches.countmin_build_reflayout). Byte framing note: the
+  functions/sketches.countmin_sketch with ``ref_seed``). Byte framing note: the
   kernel hashes the given bytes verbatim; the reference hashes whatever
   Rust's ``Hash`` impl writes for the item type (e.g. ``str`` appends a
   0xFF terminator), so callers matching a specific Rust item type must

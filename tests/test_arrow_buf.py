@@ -3,6 +3,7 @@ buffer-form ``jaccard_batch`` against the scalar estimator, the bounded
 bitmap OR-reducer, and a layout guard over the package sources."""
 
 import pathlib
+import re
 
 import numpy as np
 import pyarrow as pa
@@ -164,13 +165,18 @@ def test_bitmap_test_reads_the_packed_layout():
 def test_kernel_layout_guard():
     """One kernel style and one buffer module: no pandas kernel
     (``mapInPandas``, ``applyInPandas``, ``pandas_udf``) and no pandas
-    import under functions/, operators/ or plans/, and only
-    sigkit/arrow_buf.py touches ``pa.Array.buffers()``."""
+    import under functions/, operators/ or plans/, only
+    sigkit/arrow_buf.py touches ``pa.Array.buffers()``, and no module under
+    functions/ imports sigkit.xxhash: Spark-compatible placement comes from
+    the JVM ``xxhash64`` expression, never from a numpy copy of it."""
     banned = ("mapInPandas", "applyInPandas", "pandas_udf", "import pandas")
     for sub in ("functions", "operators", "plans"):
         for path in (PKG / sub).glob("*.py"):
             text = path.read_text()
             assert not [b for b in banned if b in text], path
+    xxhash_import = re.compile(r"sigkit\.xxhash|sigkit import[^\n]*\bxxhash\b")
+    for path in (PKG / "functions").glob("*.py"):
+        assert not xxhash_import.search(path.read_text()), path
     readers = {
         path.relative_to(PKG).as_posix()
         for path in PKG.rglob("*.py")

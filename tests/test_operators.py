@@ -6,11 +6,12 @@ from pyspark.sql import functions as F
 
 from datasketches_rust_spark.config import PipelineConfig
 from datasketches_rust_spark.functions.sketch_aggs import frequent_items_agg, tdigest_agg
+from datasketches_rust_spark.functions import sketches
 from datasketches_rust_spark.functions.sketches import (
-    bloom_build,
-    bloom_might_contain,
-    countmin_build,
+    bloom_contains,
+    bloom_filter,
     countmin_estimate,
+    countmin_sketch,
 )
 from datasketches_rust_spark.functions.textops import ngram_jaccard_pairs
 from datasketches_rust_spark.functions.theta import (
@@ -94,14 +95,14 @@ def test_countmin_and_bloom(spark):
     ev = spark.createDataFrame(
         [(f"k{i % 7}",) for i in range(7000)], "k string"
     )
-    sk = countmin_build(ev, "k", num_hashes=3, width=1024)
-    est = countmin_estimate(sk, ev.select("k").distinct(), "k", num_hashes=3, width=1024)
+    sk = countmin_sketch(ev, "k", num_hashes=3, width=1024)
+    est = countmin_estimate(sk, ev.select("k").distinct(), "k")
     assert all(r["est_count"] == 1000 for r in est.collect())
 
     small = spark.range(100).select(F.col("id").alias("v"))
     probe = spark.range(1000).select(F.col("id").alias("v"))
-    bits = bloom_build(small, "v", num_bits=1 << 16, num_hashes=5)
-    flags = bloom_might_contain(probe, "v", bits, num_bits=1 << 16, num_hashes=5)
+    f = bloom_filter(small, "v", num_bits=1 << 16, num_hashes=5)
+    flags = bloom_contains(probe, "v", f)
     got = {r["v"]: r["might_contain"] for r in flags.collect()}
     assert all(got[v] for v in range(100))  # no false negatives ever
     fp = sum(got[v] for v in range(100, 1000))
@@ -110,7 +111,7 @@ def test_countmin_and_bloom(spark):
     # non-distinct probes: duplicate rows collapse into one group whose
     # exploded position count is a multiple of k — contract must hold
     dup_probe = probe.union(probe.where("v < 50"))
-    dup_flags = bloom_might_contain(dup_probe, "v", bits, num_bits=1 << 16, num_hashes=5)
+    dup_flags = bloom_contains(dup_probe, "v", f)
     dup_got = {r["v"]: r["might_contain"] for r in dup_flags.collect()}
     assert all(dup_got[v] for v in range(100))
 
@@ -572,8 +573,7 @@ def test_bloom_accuracy_contract(spark):
     m, k = bloom_with_accuracy(n, fpp)
     members = spark.range(n).select(F.col("id").alias("v"))
     probe = spark.range(n, n + 4000).select(F.col("id").alias("v"))
-    bits = bloom_build(members, "v", num_bits=m, num_hashes=k)
-    flags = bloom_might_contain(probe, "v", bits, num_bits=m, num_hashes=k)
+    flags = bloom_contains(probe, "v", bloom_filter(members, "v", num_bits=m, num_hashes=k))
     fp_rate = flags.where("might_contain").count() / 4000
     assert fp_rate <= 2.5 * fpp, fp_rate  # within 2.5x of target
 
@@ -1102,6 +1102,9 @@ def test_theta_merge_agg_matches_direct_and_fold(spark):
     # exact mode: merging per-(g,day) sketches == building per-g directly
     per_day = theta_sketch_agg(df, ["g", "day"], "v", k=16384)
     merged = theta_merge_agg(per_day, ["g"], "sketch", k=16384)
+    # the screened entry array is built once, not once per struct field
+    plan = merged._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("filter(") == 1, plan
     direct = theta_sketch_agg(df, ["g"], "v", k=16384)
     m = {r["g"]: r["sketch"] for r in merged.collect()}
     d = {r["g"]: r["sketch"] for r in direct.collect()}
@@ -1588,44 +1591,32 @@ def test_countmin_merge(spark):
     d1 = spark.createDataFrame([(f"k{i % 5}",) for i in range(500)], "k string")
     d2 = spark.createDataFrame([(f"k{i % 9}",) for i in range(900)], "k string")
     kw = dict(num_hashes=3, width=512)
-    merged = countmin_merge(
-        countmin_build(d1, "k", **kw), countmin_build(d2, "k", **kw)
-    )
-    both = countmin_build(d1.unionByName(d2), "k", **kw)
+    merged = countmin_merge(countmin_sketch(d1, "k", **kw), countmin_sketch(d2, "k", **kw))
+    both = countmin_sketch(d1.unionByName(d2), "k", **kw)
     items = d1.unionByName(d2).select("k").distinct()
-    em = {
-        r["k"]: r["est_count"]
-        for r in countmin_estimate(merged, items, "k", **kw).collect()
-    }
-    eb = {
-        r["k"]: r["est_count"]
-        for r in countmin_estimate(both, items, "k", **kw).collect()
-    }
+    em = {r["k"]: r["est_count"] for r in countmin_estimate(merged, items, "k").collect()}
+    eb = {r["k"]: r["est_count"] for r in countmin_estimate(both, items, "k").collect()}
     assert em == eb and sum(em.values()) >= 1400
 
 
-def test_bloom_might_contain_broadcast_cutoff(spark):
-    """bloom_might_contain broadcasts the bit set only below the
-    capacity threshold; above it the static plan must NOT pin a broadcast
-    (worst-case set bits == num_bits would OOM the driver) — and both
-    plans return identical flags."""
-    from datasketches_rust_spark.functions.sketches import (
-        bloom_build,
-        bloom_might_contain,
-    )
-
+def test_bloom_might_contain_broadcast_cutoff(spark, monkeypatch):
+    """bloom_contains broadcasts the packed bitmap only up to the capacity
+    gate; above it the static plan must NOT pin a broadcast (worst-case
+    set bits == num_bits would OOM the driver) — and both plans return
+    identical flags."""
     nb, k = 1 << 14, 4
     member = spark.createDataFrame([(f"m{i}",) for i in range(200)], "v string")
-    bits = bloom_build(member, "v", num_bits=nb, num_hashes=k)
+    f = bloom_filter(member, "v", num_bits=nb, num_hashes=k)
     probe = spark.createDataFrame(
         [(f"m{i}",) for i in range(0, 400, 2)], "v string"
     )
 
-    small = bloom_might_contain(probe, "v", bits, nb, k)
+    small = bloom_contains(probe, "v", f)
     plan_small = small._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan_small, plan_small
+    assert "MapInArrow" in plan_small and "Join" not in plan_small, plan_small
 
-    big = bloom_might_contain(probe, "v", bits, nb, k, max_broadcast_bits=nb - 1)
+    monkeypatch.setattr(sketches, "_BLOOM_MAX_BROADCAST_BITS", nb - 1)
+    big = bloom_contains(probe, "v", f)
     plan_big = big._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" not in plan_big, plan_big
 
@@ -1717,11 +1708,7 @@ def test_countmin_reflayout_build_estimate_merge(spark):
     seeds, countmin/sketch.rs:423-428, :513-523): exact estimates when
     width >> distinct items, and two reflayout sketches merge to the
     build-on-concat table through the config-guarded countmin_merge."""
-    from datasketches_rust_spark.functions.sketches import (
-        countmin_build_reflayout,
-        countmin_estimate_reflayout,
-        countmin_merge,
-    )
+    from datasketches_rust_spark.functions.sketches import countmin_merge
     from datasketches_rust_spark.sigkit.murmur3 import (
         murmur3_bucket_indexes,
         murmur3_row_seeds,
@@ -1729,9 +1716,10 @@ def test_countmin_reflayout_build_estimate_merge(spark):
 
     d1 = spark.createDataFrame([(f"k{i % 5}",) for i in range(500)], "k string")
     d2 = spark.createDataFrame([(f"k{i % 9}",) for i in range(900)], "k string")
-    sk = countmin_build_reflayout(d1, "k", num_hashes=3, width=512)
+    kw = dict(num_hashes=3, width=512, ref_seed=9001)
+    sk = countmin_sketch(d1, "k", **kw)
     items = d1.unionByName(d2).select("k").distinct()
-    est = {r["k"]: r["est_count"] for r in countmin_estimate_reflayout(sk, items, "k").collect()}
+    est = {r["k"]: r["est_count"] for r in countmin_estimate(sk, items, "k").collect()}
     assert all(est[f"k{i}"] == 100 for i in range(5))
 
     # the table's cells sit exactly where the reference's algorithm puts them
@@ -1745,10 +1733,10 @@ def test_countmin_reflayout_build_estimate_merge(spark):
     }
     assert want <= got
 
-    merged = countmin_merge(sk, countmin_build_reflayout(d2, "k", num_hashes=3, width=512))
-    both = countmin_build_reflayout(d1.unionByName(d2), "k", num_hashes=3, width=512)
-    em = {r["k"]: r["est_count"] for r in countmin_estimate_reflayout(merged, items, "k").collect()}
-    eb = {r["k"]: r["est_count"] for r in countmin_estimate_reflayout(both, items, "k").collect()}
+    merged = countmin_merge(sk, countmin_sketch(d2, "k", **kw))
+    both = countmin_sketch(d1.unionByName(d2), "k", **kw)
+    em = {r["k"]: r["est_count"] for r in countmin_estimate(merged, items, "k").collect()}
+    eb = {r["k"]: r["est_count"] for r in countmin_estimate(both, items, "k").collect()}
     assert em == eb
 
 
@@ -1787,9 +1775,10 @@ def test_countmin_halve_and_decay(spark):
 
 
 def test_countmin_df_merge_guard(spark):
-    """CountMinDF carries (num_hashes, width); merge enforces the
+    """CountMinDF carries its cell placement; merge enforces the
     reference's dimension-compatibility check (countmin/sketch.rs:254-267
-    errors on mismatched (d, w)) and the merged result keeps the config."""
+    errors on mismatched (d, w)), also across bucket layouts and murmur
+    seeds, and the merged result keeps the config."""
     import pytest as _pytest
 
     from datasketches_rust_spark.functions.sketches import (
@@ -1805,17 +1794,7 @@ def test_countmin_df_merge_guard(spark):
 
     merged = countmin_merge(a, b)
     assert isinstance(merged, CountMinDF)
-    assert (merged.num_hashes, merged.width) == (3, 512)
-    # config-carrying estimate == raw-table estimate with explicit config
-    items = d1.unionByName(d2).select("k").distinct()
-    em = {r["k"]: r["est_count"] for r in countmin_estimate(merged, items, "k").collect()}
-    eb = {
-        r["k"]: r["est_count"]
-        for r in countmin_estimate(
-            merged.table, items, "k", num_hashes=3, width=512
-        ).collect()
-    }
-    assert em == eb
+    assert merged[1:] == (3, 512, None)
 
     wrong_width = countmin_sketch(d2, "k", num_hashes=3, width=1024)
     with _pytest.raises(ValueError, match="incompatible count-min"):
@@ -1823,8 +1802,12 @@ def test_countmin_df_merge_guard(spark):
     wrong_d = countmin_sketch(d2, "k", num_hashes=5, width=512)
     with _pytest.raises(ValueError, match="incompatible count-min"):
         countmin_merge(a, wrong_d)
-    with _pytest.raises(TypeError, match="mix"):
-        countmin_merge(a, b.table)
+    murmur = countmin_sketch(d2, "k", num_hashes=3, width=512, ref_seed=9001)
+    with _pytest.raises(ValueError, match="incompatible count-min"):
+        countmin_merge(a, murmur)
+    other_seed = countmin_sketch(d2, "k", num_hashes=3, width=512, ref_seed=1)
+    with _pytest.raises(ValueError, match="incompatible count-min"):
+        countmin_merge(murmur, other_seed)
 
 
 def test_verify_pairs_broadcast_parity(spark):
@@ -1952,22 +1935,18 @@ def test_verify_pairs_broadcast_parity(spark):
             )
 
 
-def test_countmin_reflayout_broadcast_gate(spark):
-    """countmin_estimate_reflayout broadcasts the counter table only
-    while num_hashes*width stays under the capacity gate; past it the
-    probe joins without a pinned broadcast — identical estimates."""
-    from datasketches_rust_spark.functions.sketches import (
-        countmin_build_reflayout,
-        countmin_estimate_reflayout,
-    )
-
+def test_countmin_reflayout_broadcast_gate(spark, monkeypatch):
+    """countmin_estimate broadcasts the counter table only while
+    num_hashes*width stays under the capacity gate; past it the probe
+    joins without a pinned broadcast — identical estimates."""
     df = spark.createDataFrame([(f"k{i % 7}",) for i in range(700)], "k string")
-    sk = countmin_build_reflayout(df, "k", num_hashes=3, width=256)
+    sk = countmin_sketch(df, "k", num_hashes=3, width=256, ref_seed=9001)
     items = df.select("k").distinct()
 
-    small = countmin_estimate_reflayout(sk, items, "k")
+    small = countmin_estimate(sk, items, "k")
     assert "BroadcastHashJoin" in small._jdf.queryExecution().executedPlan().toString()
-    big = countmin_estimate_reflayout(sk, items, "k", max_broadcast_cells=3 * 256 - 1)
+    monkeypatch.setattr(sketches, "_CM_MAX_BROADCAST_CELLS", 3 * 256 - 1)
+    big = countmin_estimate(sk, items, "k")
     assert (
         "BroadcastHashJoin"
         not in big._jdf.queryExecution().executedPlan().toString()
@@ -1977,31 +1956,65 @@ def test_countmin_reflayout_broadcast_gate(spark):
     assert rs == rb and len(rs) == 7
 
 
-def test_bloom_packed_probe_parity(spark):
-    """Long probe keys take the packed-bitmap path (no join in the probe
-    plan); flags must be bit-identical to the classic join path, and
-    duplicate probe rows must still collapse (the grouped-count
-    contract)."""
-    from datasketches_rust_spark.functions.sketches import (
-        bloom_build,
-        bloom_might_contain,
+def test_countmin_estimate_reads_the_sketch_layout(spark):
+    """A sketch estimated through countmin_estimate returns its exact
+    counts (exact mode, width >> distinct items) in the JVM layout and in
+    the murmur layout under any seed: the probe places items by the
+    sketch's own layout, never by xxhash64 or a default seed."""
+    df = spark.createDataFrame(
+        [("a",)] * 100 + [("b",)] * 40 + [("c",)] * 7, "k string"
     )
+    items = df.select("k").distinct()
+    for ref_seed in (None, 9001, 1):
+        sk = countmin_sketch(df, "k", num_hashes=3, width=512, ref_seed=ref_seed)
+        est = {r["k"]: r["est_count"] for r in countmin_estimate(sk, items, "k").collect()}
+        assert est == {"a": 100, "b": 40, "c": 7}, ref_seed
 
+
+def test_bloom_packed_probe_parity(spark, monkeypatch):
+    """Under the broadcast gate the probe is one MapInArrow kernel and no
+    join; its flags equal the shuffle-join path's for long, int and string
+    keys with NULLs and duplicate probe rows, and duplicates collapse (the
+    grouped-count contract)."""
     nb, k = 1 << 14, 4
-    member = spark.createDataFrame([(i * 3,) for i in range(300)], "v long")
-    bits = bloom_build(member, "v", num_bits=nb, num_hashes=k)
-    probe = spark.createDataFrame(
-        [(i,) for i in range(0, 600, 2)] * 2, "v long"  # duplicated rows
-    )
+    keys = {"long": lambda i: i, "int": lambda i: i, "string": lambda i: f"s{i}"}
+    for dtype, key in keys.items():
+        member = spark.createDataFrame(
+            [(key(i * 3),) for i in range(300)] + [(None,)], f"v {dtype}"
+        )
+        f = bloom_filter(member, "v", num_bits=nb, num_hashes=k)
+        probe = spark.createDataFrame(
+            ([(key(i),) for i in range(0, 600, 2)] + [(None,)]) * 2, f"v {dtype}"
+        )
 
-    packed = bloom_might_contain(probe, "v", bits, nb, k)
-    assert "MapInArrow" in packed._jdf.queryExecution().executedPlan().toString()
-    join = bloom_might_contain(probe, "v", bits, nb, k, max_broadcast_bits=0)
+        packed = bloom_contains(probe, "v", f)
+        plan = packed._jdf.queryExecution().executedPlan().toString()
+        assert "MapInArrow" in plan and "Join" not in plan, plan
+        with monkeypatch.context() as m:
+            m.setattr(sketches, "_BLOOM_MAX_BROADCAST_BITS", 0)
+            join = bloom_contains(probe, "v", f)
+            plan = join._jdf.queryExecution().executedPlan().toString()
+            assert "BroadcastHashJoin" not in plan and "MapInArrow" not in plan, plan
+            rj = {(r["v"], r["might_contain"]) for r in join.collect()}
 
-    rp = sorted((r["v"], r["might_contain"]) for r in packed.collect())
-    rj = sorted((r["v"], r["might_contain"]) for r in join.collect())
-    assert rp == rj
-    assert len(rp) == 300  # duplicates collapsed
-    # no false negatives: every true member whose key was probed is flagged
-    members = {i * 3 for i in range(300)}
-    assert all(m for v, m in rp if v in members)
+        rp = [(r["v"], r["might_contain"]) for r in packed.collect()]
+        assert len(rp) == 301 and set(rp) == rj, dtype  # duplicates collapsed
+        # no false negatives: every member probed, NULL included, is flagged
+        members = {key(i * 3) for i in range(300)} | {None}
+        assert all(m for v, m in rp if v in members), dtype
+
+
+def test_bloom_probe_keeps_long_keys_exact_beside_nulls(spark):
+    """A member long key above 2^53 probed in one Arrow batch with a NULL
+    is still found: the probe never reads keys through a float array."""
+    big = (1 << 53) + 1
+    member = spark.createDataFrame([(big,), (7,)], "v long")
+    f = bloom_filter(member, "v", num_bits=1 << 16, num_hashes=5)
+    probe = spark.createDataFrame([(big,), (None,), (7,)], "v long")
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")  # one batch past the dedup
+    try:
+        got = {r["v"]: r["might_contain"] for r in bloom_contains(probe, "v", f).collect()}
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert got == {big: True, None: got[None], 7: True}
