@@ -36,8 +36,6 @@ class PipelineConfig:
     tokenizer_version: str = "v1"
     # skew handling: LSH buckets larger than this are salted/capped
     max_bucket_size: int = 200
-    # substring-dedup rolling window (chars)
-    substr_window: int = 32
     # the one plan setting (execution only — never in cfg_hash): the
     # pipeline measures the rep-key count once and, at or under this
     # limit, broadcasts the narrow key set into the signature scan (the

@@ -25,7 +25,7 @@ from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..config import PipelineConfig
 from ..sigkit.arrow_buf import binary_array, doc_chunks, list_array, to_buf
@@ -103,6 +103,12 @@ def signature_record_batch(rb: pa.RecordBatch, cfg: PipelineConfig) -> pa.Record
     )
 
 
+def file_id() -> Column:
+    """A corpus row's file key: sha256 hex of repo, path and commit joined
+    by NUL, named ``file_id``."""
+    return F.sha2(F.concat_ws("\x00", "repo", "path", "commit"), 256).alias("file_id")
+
+
 def compute_signatures(corpus: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """corpus(repo, path, commit, lang, content) → signature table.
 
@@ -112,7 +118,7 @@ def compute_signatures(corpus: DataFrame, cfg: PipelineConfig) -> DataFrame:
     pandas/str materialization).
     """
     with_ids = corpus.select(
-        F.sha2(F.concat_ws("\x00", "repo", "path", "commit"), 256).alias("file_id"),
+        file_id(),
         F.unhex(F.sha2(F.col("content"), 256)).alias("content_sha"),
         "content",
     )

@@ -14,8 +14,8 @@ north rule. Strategy (scales as O(total_chars) map work + one equi-join):
 Window hashing plays the role the suffix array plays in the reference's
 substring-dedup framing: a positional index over content, queried by
 prefix — here expressed as a Spark join instead of a per-node binary
-search. Docs shorter than W are not supported (asserted by caller);
-W=32 < min doc length for all our inputs.
+search. A doc shorter than W has no window, hence no prefix hash: it is
+never reported as contained, even when its text occurs in another doc.
 """
 
 from __future__ import annotations
@@ -32,25 +32,14 @@ _B = np.uint64(1099511628211)  # FNV prime, odd → invertible mod 2^64
 _B_INV = np.uint64(pow(int(_B), -1, 1 << 64))
 
 
-def rolling_window_hashes(text: bytes, window: int) -> np.ndarray:
-    """All W-char window hashes of one byte string (vectorized O(len)).
-
-    H(i) = sum_{j<W} b[i+j] * B^(W-1-j)  (mod 2^64), computed from modular
-    prefix sums: H(i) = B^(W-1+i) * (S[i+W] - S[i]) with S[t] = sum b[u]*B^-u.
-    Single-doc reference form of ``rolling_window_hashes_buf`` (kept for
-    tests and driver-side use; the Spark kernels use the buffer form).
-    """
-    b = np.frombuffer(text, dtype=np.uint8)
-    h, _ = rolling_window_hashes_buf(b, np.array([0, len(b)], dtype=np.int64), window)
-    return h
-
-
 def rolling_window_hashes_buf(
     buf: np.ndarray, doc_offs: np.ndarray, window: int
 ) -> tuple[np.ndarray, np.ndarray]:
     """Window hashes of EVERY doc in a flat (uint8 buffer, offsets) batch —
     one vectorized pass over the whole Arrow buffer, no per-doc Python.
 
+    H(i) = sum_{j<W} b[i+j] * B^(W-1-j)  (mod 2^64), computed from modular
+    prefix sums: H(i) = B^(W-1+i) * (S[i+W] - S[i]) with S[t] = sum b[u]*B^-u.
     Because H(i) = B^(W-1+i) · (S[i+W] − S[i]) telescopes the global
     position out of the sum, prefix sums computed ONCE over the
     concatenated buffer yield position-independent hashes for every doc:
@@ -108,9 +97,7 @@ def _prefix_rows(base: DataFrame, text_col: str, window: int) -> DataFrame:
     ).repartition(8)
 
 
-def _prefix_bloom_bitmap(
-    base: DataFrame, id_col: str, text_col: str, window: int, m: int
-) -> bytes:
+def _prefix_bloom_bitmap(base: DataFrame, text_col: str, window: int, m: int) -> bytes:
     """OR-reduced bitmap of every doc's prefix hash.
 
     The prefix hash needs only the first ``window`` bytes of each doc, so
@@ -129,73 +116,80 @@ def _prefix_bloom_bitmap(
     return or_reduce_bitmap(_prefix_rows(base, text_col, window), positions, m)
 
 
-def _hash_batches(id_col: str, text_col: str, window: int, bloom=None, m: int = 0):
-    """One Arrow pass emitting window hashes, prefix rows flagged __p=1.
+def _per_doc(base: DataFrame, rows, names: list[str], types: list[str]) -> DataFrame:
+    """One Arrow pass of a per-doc kernel over ``base``'s (id, text) rows.
 
-    With ``bloom`` (a broadcast bitmap of all prefix hashes), non-prefix
-    window hashes that miss the bloom are dropped IN the kernel — the
-    semi-join pushdown that keeps the container side of the downstream
-    join near O(n_docs) instead of O(total_chars). No recall loss: the
-    bloom has no false negatives (every prefix was inserted), and bloom
-    false positives are removed by the exact ``instr`` verify.
-
-    Buffer path: UTF-8 bytes are read straight from the Arrow data buffer
-    (``arrow_buf.to_buf``) and hashed in ONE vectorized pass over the
-    whole batch (``rolling_window_hashes_buf``); the bloom screen is one
-    batch-wide mask. The only remaining per-doc step is the np.unique of
-    each doc's (post-screen) window-hash segment — contiguous, L1-sized
-    views, the same deliberate pattern as sigkit/tokenize.py's
-    per-segment unique (a global lexsort measured slower).
+    ``rows(buf, offs)`` takes one batch's texts in the ``to_buf`` layout
+    and returns (doc-index arrays, value arrays). Each doc-index array
+    becomes a column of the ids it indexes (one ``take``), named by the
+    leading ``names``; the value columns follow, with Spark types
+    ``types``. A batch with no output row yields nothing.
     """
+    id_t = base.schema[0].dataType.simpleString()
+    n_ids = len(names) - len(types)
+    schema = ", ".join(f"{n} {t}" for n, t in zip(names, [id_t] * n_ids + types))
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        bitmap = np.frombuffer(bloom.value, dtype=np.uint8) if bloom is not None else None
         for rb in batches:
             if not rb.num_rows:
                 continue
-            ids = rb.column(rb.schema.get_field_index(id_col))
-            buf, offs = to_buf(
-                rb.column(rb.schema.get_field_index(text_col))
-            )
-            h, woffs = rolling_window_hashes_buf(buf, offs, window)
-            if len(h) == 0:
-                continue
-            counts = np.diff(woffs)
-            pref = np.zeros(len(counts), dtype=np.uint64)
-            hasw = counts > 0
-            pref[hasw] = h[woffs[:-1][hasw]]
-            if bitmap is not None:
-                # both probe bits set, or the doc's own prefix window
-                hit = bitmap_test(bitmap, _bloom_positions_np(h, m)).reshape(2, -1).all(axis=0)
-                keep = hit | (h == np.repeat(pref, counts))
-                dk = np.repeat(np.arange(len(counts)), counts)[keep]
-                hk = h[keep]
-                kcounts = np.bincount(dk, minlength=len(counts))
-            else:
-                hk, kcounts = h, counts
-            koffs = np.zeros(len(kcounts) + 1, dtype=np.int64)
-            np.cumsum(kcounts, out=koffs[1:])
-            uniq, doc_idx, lens = [], [], []
-            for d in np.nonzero(kcounts)[0]:
-                u = np.unique(hk[koffs[d]: koffs[d + 1]])
-                uniq.append(u)
-                doc_idx.append(d)
-                lens.append(len(u))
-            if not uniq:
-                continue
-            u_all = np.concatenate(uniq)
-            row_doc = np.repeat(np.asarray(doc_idx, dtype=np.int64), lens)
-            p_all = (u_all == pref[row_doc]).astype(np.int8)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids.take(pa.array(row_doc)),
-                    pa.array(u_all.view(np.int64)),
-                    pa.array(p_all),
-                ],
-                ["__id", "__h", "__p"],
-            )
+            docs, vals = rows(*to_buf(rb.column(1)))
+            if len(docs[0]):
+                yield pa.RecordBatch.from_arrays(
+                    [rb.column(0).take(pa.array(d)) for d in docs] + [pa.array(v) for v in vals],
+                    names,
+                )
 
-    return run
+    return base.mapInArrow(run, schema)
+
+
+def _drop_repeats(vals: np.ndarray, offs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(values, offsets) of a per-doc layout without each value that
+    repeats its predecessor in the same doc: one mask, one recount."""
+    keep = np.empty(len(vals), dtype=bool)
+    np.not_equal(vals[1:], vals[:-1], out=keep[1:])
+    keep[offs[:-1][np.diff(offs) > 0]] = True
+    kept = np.flatnonzero(keep)
+    return vals[kept], np.searchsorted(kept, offs)
+
+
+def _distinct_per_doc(vals: np.ndarray, offs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(distinct values, offsets) of each doc slice ``vals[offs[i]:offs[i+1]]``,
+    ascending per doc. Sorts each slice of ``vals`` in place (contiguous,
+    cache-sized; a global lexsort measured slower), then drops repeats.
+    No zero screen: a window hash of 0 is a real window.
+    """
+    for lo, hi in zip(offs[:-1].tolist(), offs[1:].tolist()):
+        vals[lo:hi].sort()
+    return _drop_repeats(vals, offs)
+
+
+def _containment_rows(window: int, bloom, m: int):
+    """The containment kernel: each doc's distinct window hashes, prefix
+    rows flagged __p=1.
+
+    ``bloom`` is a broadcast bitmap of all prefix hashes: non-prefix
+    window hashes that miss it are dropped IN the kernel — the semi-join
+    pushdown that keeps the container side of the downstream join near
+    O(n_docs) instead of O(total_chars). No recall loss: the bloom has no
+    false negatives (every prefix was inserted), and bloom false
+    positives are removed by the exact ``instr`` verify.
+    """
+
+    def rows(buf: np.ndarray, offs: np.ndarray):
+        h, woffs = rolling_window_hashes_buf(buf, offs, window)
+        counts = np.diff(woffs)
+        pref = np.zeros(len(counts), dtype=np.uint64)
+        pref[counts > 0] = h[woffs[:-1][counts > 0]]
+        # both probe bits set, or the doc's own prefix window
+        bitmap = np.frombuffer(bloom.value, dtype=np.uint8)
+        hit = bitmap_test(bitmap, _bloom_positions_np(h, m)).reshape(2, -1).all(axis=0)
+        keep = np.flatnonzero(hit | (h == np.repeat(pref, counts)))
+        u, uoffs = _distinct_per_doc(h[keep], np.searchsorted(keep, woffs))
+        doc = np.repeat(np.arange(len(counts)), np.diff(uoffs))
+        return [doc], [u.view(np.int64), (u == pref[doc]).astype(np.int8)]
+
+    return rows
 
 
 def containment_pairs(
@@ -203,41 +197,29 @@ def containment_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     window: int = 32,
-    prefilter: bool = True,
-    n_docs: int | None = None,
 ) -> DataFrame:
-    """(id_a contained-in id_b) pairs, exact-verified. Requires every doc
-    length >= window (true for all engine inputs; see module doc).
+    """(id_a contained-in id_b) pairs, exact-verified. A doc shorter than
+    ``window`` bytes is never reported as contained (see module doc).
 
-    ``n_docs`` sizes the prefilter bloom without the sizing ``count()``
-    scan — pass it when the cardinality is already known (e.g. from an
-    upstream stage's ``_metrics``); an approximate value is fine, the
-    bitmap size only tunes the false-positive rate.
-
-    ``prefilter`` (default) broadcasts a bloom bitmap of the n_docs prefix
-    hashes into the window-hash kernel, so the container side emits only
-    windows that can possibly match a prefix — shuffle input drops from
-    O(total distinct window positions) to ~n_docs + fpp*total, the classic
-    bloom semi-join pushdown. Bitmap is sized 16 bits/doc (fpp ~1.4% at
-    two probes), capped at 2^26 bits (8 MB broadcast; beyond ~4M docs per
-    job the fpp degrades gracefully and the exact verify still holds).
-    Identical output either way (no false negatives; FPs die in verify).
+    A bloom bitmap of the n_docs prefix hashes is broadcast into the
+    window-hash kernel, so the container side emits only windows that can
+    possibly match a prefix — shuffle input drops from O(total distinct
+    window positions) to ~n_docs + fpp*total, the classic bloom semi-join
+    pushdown. The bitmap is sized from one ``count()`` at 16 bits/doc (fpp
+    ~1.4% at two probes), capped at 2^26 bits (8 MB broadcast; beyond ~4M
+    docs per job the fpp degrades gracefully and the exact verify still
+    holds).
     """
     base = docs.select(F.col(id_col), F.col(text_col))
-    id_t = base.schema[0].dataType.simpleString()
-    schema = f"__id {id_t}, __h long, __p tinyint"
-
-    bloom, m = None, 0
-    if prefilter:
-        if n_docs is None:
-            n_docs = base.count()
-        m = max(64, min(1 << 26, 1 << int(16 * max(n_docs, 1)).bit_length()))
-        bitmap = _prefix_bloom_bitmap(base, id_col, text_col, window, m)
-        bloom = base.sparkSession.sparkContext.broadcast(bitmap)
+    m = max(64, min(1 << 26, 1 << int(16 * max(base.count(), 1)).bit_length()))
+    bloom = base.sparkSession.sparkContext.broadcast(
+        _prefix_bloom_bitmap(base, text_col, window, m)
+    )
 
     # one kernel pass over the corpus, reused for both join sides
-    hashed = base.mapInArrow(_hash_batches(id_col, text_col, window, bloom, m), schema)
-    hashed = hashed.localCheckpoint(eager=False)
+    hashed = _per_doc(
+        base, _containment_rows(window, bloom, m), ["__id", "__h", "__p"], ["long", "tinyint"]
+    ).localCheckpoint(eager=False)
     windows = hashed.select("__id", "__h")
     prefixes = hashed.where(F.col("__p") == 1).select("__id", "__h")
 
@@ -269,64 +251,68 @@ def duplicated_spans(
     text_col: str = "text",
     min_len: int = 64,
 ) -> DataFrame:
-    """Cross-document verbatim spans >= min_len bytes, via a per-partition
+    """Cross-document verbatim spans >= min_len bytes, via a per-batch
     suffix array (sigkit.suffix_array) — the substring-dedup index stage.
 
-    Partition-local by design: each task builds one suffix array over its
-    documents, so memory stays bounded at any corpus size. Pairs spanning
-    partitions are the LSH/rolling-hash stages' job; this operator's role
-    is high-resolution *partial*-duplication detection (license blocks,
-    vendored code, copy-pasted functions) within a partition — co-locate
-    related docs (e.g. repartition by repo/lang) to aim it.
+    Batch-local by design: the kernel builds one suffix array per Arrow
+    batch, i.e. over at most ``spark.sql.execution.arrow.maxRecordsPerBatch``
+    documents of one partition, so memory stays bounded at any corpus
+    size. Pairs spanning batches are the LSH/rolling-hash stages' job;
+    this operator's role is high-resolution *partial*-duplication
+    detection (license blocks, vendored code, copy-pasted functions)
+    among neighbouring docs — co-locate related docs (e.g. repartition by
+    repo/lang) to aim it.
 
-    Buffer path: the UTF-8 bytes go straight from the Arrow data buffer
-    into the sentinel-concatenated suffix-array input
-    (``shared_spans_buf``) — no per-doc ``str.encode`` (the engine's last
-    one lived here until round 5).
+    The UTF-8 bytes go straight from the Arrow data buffer into the
+    sentinel-concatenated suffix-array input (``shared_spans_buf``).
     """
     from ..sigkit.suffix_array import shared_spans_buf
 
+    def rows(buf: np.ndarray, offs: np.ndarray):
+        spans = shared_spans_buf(buf, offs, min_len)
+        return [spans[:, 0], spans[:, 1]], [spans[:, 2]]
+
     base = docs.select(F.col(id_col), F.col(text_col))
-    id_t = base.schema[0].dataType.simpleString()
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            ids = rb.column(rb.schema.get_field_index(id_col))
-            buf, offs = to_buf(
-                rb.column(rb.schema.get_field_index(text_col))
-            )
-            spans = shared_spans_buf(buf, offs, min_len)
-            if not len(spans):
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids.take(pa.array(spans[:, 0])),
-                    ids.take(pa.array(spans[:, 1])),
-                    pa.array(spans[:, 2]),
-                ],
-                ["id_a", "id_b", "span_len"],
-            )
-
-    out = base.mapInArrow(run, f"id_a {id_t}, id_b {id_t}, span_len long")
+    out = _per_doc(base, rows, ["id_a", "id_b", "span_len"], ["long"])
     return out.groupBy(
         F.least("id_a", "id_b").alias(f"{id_col}_a"),
         F.greatest("id_a", "id_b").alias(f"{id_col}_b"),
     ).agg(F.max("span_len").alias("span_len"))
 
 
-def winnow_hashes(h: np.ndarray, w: int) -> np.ndarray:
-    """Winnowing fingerprint set of a positional hash sequence
-    (Schleimer/Wilkerson/Aiken, SIGMOD'03): the minimum of every sliding
-    window of ``w`` consecutive hashes, deduplicated. Guarantee: two
-    sequences sharing >= w consecutive hashes share a fingerprint."""
-    if len(h) == 0:
-        return h
-    if len(h) <= w:
-        return np.unique(h.min(keepdims=True))
-    sw = np.lib.stride_tricks.sliding_window_view(h, w)
-    return np.unique(sw.min(axis=1))
+def winnow_hashes(h: np.ndarray, offs: np.ndarray, w: int) -> tuple[np.ndarray, np.ndarray]:
+    """Winnowing fingerprint sets (Schleimer/Wilkerson/Aiken, SIGMOD'03)
+    of every doc's positional hash sequence ``h[offs[i]:offs[i+1]]``: the
+    distinct minima of every window of ``w`` consecutive hashes, as
+    (values, offsets), ascending per doc. A doc with fewer than ``w``
+    hashes gets its whole-doc minimum. Guarantee: two sequences sharing
+    >= w consecutive hashes share a fingerprint.
+
+    One sliding minimum over the whole batch by doubling: ``m`` holds the
+    minimum of k consecutive hashes for k = 1, 2, 4, … up to the largest
+    k <= w, and two overlapping k-runs cover each w-window. Only windows
+    that lie inside one doc are kept.
+    """
+    counts = np.diff(offs)
+    n_out = np.where(counts >= w, counts - w + 1, np.minimum(counts, 1))
+    ooffs = np.zeros(len(counts) + 1, dtype=np.int64)
+    np.cumsum(n_out, out=ooffs[1:])
+    out = np.empty(int(ooffs[-1]), dtype=h.dtype)
+    if len(out):
+        nz = counts > 0
+        # whole-doc minimum in each doc's first slot; long docs overwrite it
+        out[ooffs[:-1][nz]] = np.minimum.reduceat(h, offs[:-1][nz])
+    if len(h) >= w:
+        m, k = h, 1
+        while 2 * k <= w:
+            m = np.minimum(m[:-k], m[k:])
+            k *= 2
+        mins = np.minimum(m[: len(m) - (w - k)], m[w - k :])
+        inside = np.arange(len(mins)) + w <= np.repeat(offs[1:], counts)[: len(mins)]
+        out[np.repeat(counts >= w, n_out)] = mins[inside]
+    # neighbouring windows mostly share their minimum: dropping those
+    # repeats first shrinks the sort ~(w+1)/2-fold
+    return _distinct_per_doc(*_drop_repeats(out, ooffs))
 
 
 def doc_fingerprints(
@@ -343,43 +329,17 @@ def doc_fingerprints(
     single-global-min variant lacked. Expected density ~2/(winnow_window+1)
     of the window hashes.
 
-    Buffer path: all window hashes come from one vectorized pass over the
-    Arrow batch (``rolling_window_hashes_buf``); the per-doc winnow/unique
-    step operates on contiguous L1-sized views of that array (the
-    tokenize.py per-segment pattern), with no per-doc encode or hashing.
+    All window hashes come from one vectorized pass over the Arrow batch
+    (``rolling_window_hashes_buf``) and are winnowed in one batch-wide
+    sliding minimum (``winnow_hashes``); no per-doc encode or hashing.
     """
+
+    def rows(buf: np.ndarray, offs: np.ndarray):
+        h, woffs = rolling_window_hashes_buf(buf, offs, window)
+        fp, foffs = winnow_hashes(h, woffs, winnow_window)
+        return [np.repeat(np.arange(len(offs) - 1), np.diff(foffs))], [fp.view(np.int64)]
+
     base = docs.select(F.col(id_col), F.col(text_col))
-    id_t = base.schema[0].dataType.simpleString()
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            ids = rb.column(rb.schema.get_field_index(id_col))
-            buf, offs = to_buf(
-                rb.column(rb.schema.get_field_index(text_col))
-            )
-            h, woffs = rolling_window_hashes_buf(buf, offs, window)
-            if len(h) == 0:
-                continue
-            counts = np.diff(woffs)
-            uniq, doc_idx, lens = [], [], []
-            for d in np.nonzero(counts)[0]:
-                u = winnow_hashes(h[woffs[d]: woffs[d + 1]], winnow_window)
-                uniq.append(u)
-                doc_idx.append(d)
-                lens.append(len(u))
-            if not uniq:
-                continue
-            row_doc = np.repeat(np.asarray(doc_idx, dtype=np.int64), lens)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids.take(pa.array(row_doc)),
-                    pa.array(np.concatenate(uniq).view(np.int64)),
-                ],
-                ["__id", "fingerprint"],
-            )
-
-    return base.mapInArrow(run, f"__id {id_t}, fingerprint long").withColumnRenamed(
+    return _per_doc(base, rows, ["__id", "fingerprint"], ["long"]).withColumnRenamed(
         "__id", id_col
     )

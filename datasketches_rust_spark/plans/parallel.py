@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def fan_out_small_scan(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def fan_out_small_scan(df: DataFrame) -> DataFrame:
     """Round-robin repartition when the planned scan yields fewer
     partitions than the session's parallelism.
 
@@ -21,6 +21,5 @@ def fan_out_small_scan(df: DataFrame, min_partitions: int | None = None) -> Data
     repartition itself only moves the small input once (deterministic:
     Spark sorts before round-robin so retries replay the same placement).
     """
-    sc = df.sparkSession.sparkContext
-    target = min_partitions or sc.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(target) if df.rdd.getNumPartitions() < target else df

@@ -52,7 +52,7 @@ from ..operators.lsh import (
     has_duplicate_id_rows,
     rep_payload,
 )
-from ..operators.signatures import compute_signatures
+from ..operators.signatures import compute_signatures, file_id
 from ..operators.substring import containment_pairs
 from ..operators.verify import verify_pairs
 
@@ -309,32 +309,14 @@ class DedupPipeline:
         self.flush_metrics()
         return clusters
 
-    def containment(
-        self, corpus: DataFrame, input_fp: str = "corpus", prefilter: bool = True
-    ) -> DataFrame:
+    def containment(self, corpus: DataFrame) -> DataFrame:
         """Substring-containment pairs (file_id_contained, file_id_container)
         over the corpus — the suffix/substring dedup stage, run alongside
-        the MinHash pipeline.
-
-        Exemplar of the ``n_docs`` hint (operators/substring.py): the
-        prefilter bloom is sized from the ids stage's measured row count
-        (recorded when the stage was materialized), so NO sizing
-        ``count()`` job appears in the plan. The
-        signature/ids stages are shared with ``run()``/``dup_pairs()`` —
-        checkpointed or cached once, reused by every consumer.
+        the MinHash pipeline. It runs no pipeline stage: the operator reads
+        (file_id, content) straight from the corpus.
         """
-        _, ids, _ = self._signature_stages(corpus, input_fp)
-        docs = corpus.select(
-            F.sha2(F.concat_ws("\x00", "repo", "path", "commit"), 256).alias("file_id"),
-            F.col("content"),
-        )
         return containment_pairs(
-            docs,
-            id_col="file_id",
-            text_col="content",
-            window=self.cfg.substr_window,
-            prefilter=prefilter,
-            n_docs=self._stage_rows("ids", ids),
+            corpus.select(file_id(), "content"), id_col="file_id", text_col="content"
         )
 
     def dup_pairs(self, corpus: DataFrame, input_fp: str = "corpus") -> DataFrame:

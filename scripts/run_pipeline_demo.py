@@ -1,6 +1,6 @@
 """Drive the full dedup pipeline end-to-end on a generated corpus.
 
-Usage: PYTHONPATH=/root/repo python scripts/run_pipeline_demo.py [n_files]
+Usage (from the repo root): PYTHONPATH=. python scripts/run_pipeline_demo.py [n_files]
 
 Prints recall vs the embedded exact-Jaccard truth, cluster stats, and the
 stage metrics — the smallest honest end-to-end exercise of the engine.

@@ -159,6 +159,16 @@ def test_duplicated_spans_and_containment(spark):
     assert (3, 0) in cont and (3, 1) in cont
 
 
+def test_containment_skips_docs_shorter_than_window(spark):
+    """A doc shorter than the window has no prefix hash, so it is never
+    reported as contained, even when its text occurs in another doc."""
+    ta = "short_needle_text_20"  # 20 bytes < window 32
+    tb = "lead " * 20 + ta + " tail" * 20  # 200+ bytes
+    assert len(ta) == 20 and ta in tb
+    df = spark.createDataFrame([(1, ta), (2, tb)], "doc_id long, text string")
+    assert containment_pairs(df, window=32).collect() == []
+
+
 def test_theta_bounds_bracket_truth(spark):
     from datasketches_rust_spark.functions.theta import theta_bounds
 
@@ -600,16 +610,22 @@ def test_winnowing_guarantee(spark):
 
 
 def test_winnow_kernel_matches_naive():
+    """The batch sliding minimum equals a per-doc naive winnow over docs
+    with 0, fewer than w, exactly w and more than w hashes."""
     from datasketches_rust_spark.operators.substring import winnow_hashes
 
     rng = np.random.default_rng(7)
-    h = rng.integers(0, 1 << 60, size=500).astype(np.uint64)
-    for w in (1, 2, 16, 100, 499, 500, 600):
-        got = winnow_hashes(h, w)
-        naive = np.unique(
-            [h[i : i + w].min() for i in range(max(1, len(h) - w + 1))]
-        )
-        assert np.array_equal(got, naive), w
+    for w in (1, 2, 3, 16, 17, 100, 500):
+        lens = [0, 1, w - 1, w, w + 1, 2 * w + 3, 0, 600, w, 5, 0]
+        docs = [rng.integers(0, 1 << 60, size=n).astype(np.uint64) for n in lens]
+        offs = np.zeros(len(docs) + 1, dtype=np.int64)
+        np.cumsum(lens, out=offs[1:])
+        got, goffs = winnow_hashes(np.concatenate(docs), offs, w)
+        for d, h in enumerate(docs):
+            naive = np.unique(
+                [h[i : i + w].min() for i in range(max(1, len(h) - w + 1))] if len(h) else []
+            ).astype(np.uint64)
+            assert np.array_equal(got[goffs[d] : goffs[d + 1]], naive), (w, d)
 
 
 def test_theta_sampling_probability(spark):
@@ -785,11 +801,16 @@ def test_theta_canonical_value_hashing(spark):
 
 def test_substring_bloom_prefilter_reduction_and_equivalence(spark):
     """The bloom semi-join pushdown drops the container-side join input
-    >= 10x on long docs with identical output (no false negatives by
+    >= 10x below the distinct windows per doc on long docs, and the pairs
+    equal the exhaustive ``ta in tb`` truth (no false negatives by
     construction; bloom FPs die in the exact instr verify)."""
     import random
 
-    from datasketches_rust_spark.operators.substring import _hash_batches
+    from datasketches_rust_spark.operators.substring import (
+        _containment_rows,
+        _per_doc,
+        _prefix_bloom_bitmap,
+    )
 
     rng = random.Random(31)
     docs = []
@@ -800,31 +821,26 @@ def test_substring_bloom_prefilter_reduction_and_equivalence(spark):
     docs.append((101, docs[1][1][2000:2600]))
     df = spark.createDataFrame(docs, "doc_id long, text string")
 
-    fast = {
+    got = {
         (r["doc_id_contained"], r["doc_id_container"])
         for r in containment_pairs(df, window=32).collect()
     }
-    full = {
-        (r["doc_id_contained"], r["doc_id_container"])
-        for r in containment_pairs(df, window=32, prefilter=False).collect()
-    }
-    assert fast == full
-    assert {(100, 0), (101, 1)} <= fast
+    truth = {(a, b) for a, ta in docs for b, tb in docs if a != b and ta in tb}
+    assert got == truth
+    assert {(100, 0), (101, 1)} <= got
 
-    # measure kernel emission volume directly (rows entering the join)
+    # kernel emission (rows entering the join) vs the distinct windows
+    distinct = sum(
+        len({t.encode()[i : i + 32] for i in range(len(t.encode()) - 31)}) for _, t in docs
+    )
     base = df.select("doc_id", "text")
-    unfiltered = base.mapInArrow(
-        _hash_batches("doc_id", "text", 32), "__id long, __h long, __p tinyint"
-    ).count()
     n = base.count()
     m = max(64, min(1 << 26, 1 << int(16 * n).bit_length()))
-    from datasketches_rust_spark.operators.substring import _prefix_bloom_bitmap
-
-    bm = spark.sparkContext.broadcast(_prefix_bloom_bitmap(base, "doc_id", "text", 32, m))
-    filtered = base.mapInArrow(
-        _hash_batches("doc_id", "text", 32, bm, m), "__id long, __h long, __p tinyint"
+    bm = spark.sparkContext.broadcast(_prefix_bloom_bitmap(base, "text", 32, m))
+    filtered = _per_doc(
+        base, _containment_rows(32, bm, m), ["__id", "__h", "__p"], ["long", "tinyint"]
     ).count()
-    assert filtered * 10 <= unfiltered, (filtered, unfiltered)
+    assert filtered * 10 <= distinct, (filtered, distinct)
 
 
 def test_prefix_bloom_scan_runs_at_input_parallelism(spark):
@@ -1007,30 +1023,6 @@ def test_frequent_items_agg_error_types(spark):
         ).collect()
     }
     assert exact_nofn == exact_nofp == truth
-
-
-def test_containment_pairs_ndocs_hint(spark):
-    """A caller-supplied n_docs skips the sizing count() at identical
-    output (an approximate hint only tunes the bloom fp rate)."""
-    docs = [
-        (1, "A" * 40 + "needle body text that is long enough"),
-        (2, "prefix " + "A" * 40 + "needle body text that is long enough" + " suffix"),
-        (3, "completely unrelated document content here with enough length"),
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    base = {
-        (r["doc_id_contained"], r["doc_id_container"])
-        for r in containment_pairs(df, window=32).collect()
-    }
-    hinted = {
-        (r["doc_id_contained"], r["doc_id_container"])
-        for r in containment_pairs(df, window=32, n_docs=3).collect()
-    }
-    rough_hint = {
-        (r["doc_id_contained"], r["doc_id_container"])
-        for r in containment_pairs(df, window=32, n_docs=1000).collect()
-    }
-    assert base == hinted == rough_hint == {(1, 2)}
 
 
 def test_ann_ivf_sample_is_order_independent(spark):
@@ -1326,11 +1318,7 @@ def test_rolling_window_hashes_buf_parity_and_speed():
     sub-window docs, and beats the per-doc loop it replaced."""
     import time
 
-    from datasketches_rust_spark.operators.substring import (
-        _B,
-        rolling_window_hashes,
-        rolling_window_hashes_buf,
-    )
+    from datasketches_rust_spark.operators.substring import _B, rolling_window_hashes_buf
 
     rng = np.random.default_rng(7)
     W = 32
@@ -1355,8 +1343,6 @@ def test_rolling_window_hashes_buf_parity_and_speed():
     for d, doc in enumerate(docs):
         got = h[woffs[d]: woffs[d + 1]].tolist()
         assert got == naive(doc), f"doc {d}"
-        # single-doc wrapper agrees too
-        assert rolling_window_hashes(doc, W).tolist() == got
 
     # micro-bench: 3000 x 300B docs — one batch pass vs the per-doc loop
     many = [rng.integers(0, 256, size=300, dtype=np.uint8).tobytes() for _ in range(3000)]
@@ -1366,8 +1352,9 @@ def test_rolling_window_hashes_buf_parity_and_speed():
     t_batch = min(
         _timed(lambda: rolling_window_hashes_buf(mbuf, moffs, W)) for _ in range(3)
     )
+    one = [(np.frombuffer(d, dtype=np.uint8), np.array([0, len(d)])) for d in many]
     t_loop = min(
-        _timed(lambda: [rolling_window_hashes(d, W) for d in many]) for _ in range(3)
+        _timed(lambda: [rolling_window_hashes_buf(b, o, W) for b, o in one]) for _ in range(3)
     )
     assert t_batch < t_loop, (t_batch, t_loop)
 

@@ -320,36 +320,22 @@ def test_duplicate_corpus_rows_one_representative_per_content(spark, monkeypatch
     assert clusters.content_sha.nunique() == 2
 
 
-def test_pipeline_containment_threads_ndocs_hint(spark, corpus, monkeypatch):
-    """DedupPipeline.containment passes the ids stage's measured row count
-    as containment_pairs' n_docs hint (round-4 VERDICT ask #7) — no
-    sizing count() over the corpus — and matches the direct operator."""
-    import datasketches_rust_spark.plans.pipeline as P
-    from datasketches_rust_spark.operators.substring import (
-        containment_pairs as direct_cp,
-    )
+def test_pipeline_containment_runs_no_stage(spark, corpus):
+    """DedupPipeline.containment is the direct operator over (file_id,
+    content): it matches containment_pairs and runs no pipeline stage."""
+    from datasketches_rust_spark.operators.substring import containment_pairs
 
-    captured = {}
-    orig = P.containment_pairs
-
-    def spy(docs, **kw):
-        captured.update(kw)
-        return orig(docs, **kw)
-
-    monkeypatch.setattr(P, "containment_pairs", spy)
     pipe = DedupPipeline(spark, CFG)
     c = corpus.drop("file_seq")
     out = {tuple(r) for r in pipe.containment(c).collect()}
-    assert captured["n_docs"] == c.count()
+    assert out and pipe.metrics == []
 
     docs = c.selectExpr(
         "sha2(concat_ws('\x00', repo, path, commit), 256) AS file_id", "content"
     )
     expect = {
         tuple(r)
-        for r in direct_cp(
-            docs, id_col="file_id", text_col="content", window=CFG.substr_window
-        ).collect()
+        for r in containment_pairs(docs, id_col="file_id", text_col="content").collect()
     }
     assert out == expect
 
