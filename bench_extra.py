@@ -16,6 +16,12 @@ Modes:
                                         # and 4 concurrent processes, then
                                         # the signatures stage wall on the
                                         # perfbench-shaped 8k corpus
+  python bench_extra.py --codegen [--passes N] [--codegen-cache K]
+                                        # classes compiled and compile ms
+                                        # per pass of the 12 headline
+                                        # queries over perfbench/tables,
+                                        # N passes in one local[4] session
+                                        # (K overrides the codegen cache)
 
 Respects $SPARK_GRAFT_SF_DIR and $SPARK_GRAFT_CPUS exactly like bench.py.
 """
@@ -49,7 +55,10 @@ def _median_ms(job, runs: int) -> float:
 def task_latency(runs: int) -> None:
     """Median wall of warm one-partition jobs on local[4]: JVM-only, one
     mapInArrow task and one RDD Python task. The two Python numbers minus
-    the JVM one are the fixed cost a Python task adds."""
+    the JVM one are the fixed cost a Python task adds. ``worker_socket``
+    is what a task's worker talks to the JVM over (``unix`` or ``tcp``)."""
+    import pyarrow as pa
+
     from datasketches_rust_spark.plans.session import get_spark
 
     # the workers import the package (and its daemon module) from here
@@ -59,6 +68,14 @@ def task_latency(runs: int) -> None:
     spark = get_spark(master="local[4]", shuffle_partitions=4,
                       app_name="bench_extra_latency")
     one = spark.range(0, 1, 1, 1)
+
+    def uds(batches):
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict(
+            {"uds": [os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED", "false")]})
+
+    worker_uds = one.mapInArrow(uds, "uds string").collect()[0].uds
     out = {
         "jvm_job_ms": _median_ms(lambda: one.selectExpr("id + 1").collect(), runs),
         "python_task_ms": _median_ms(
@@ -69,6 +86,7 @@ def task_latency(runs: int) -> None:
         "runs": runs,
         "daemon_module": spark.sparkContext.getConf().get(
             "spark.python.daemon.module", "pyspark.daemon"),
+        "worker_socket": "unix" if worker_uds.lower() == "true" else "tcp",
     }
     print(json.dumps(out))
     spark.stop()
@@ -180,6 +198,53 @@ def signature_stage(runs: int) -> None:
     spark.stop()
 
 
+def codegen(passes: int, cache_entries: int | None) -> None:
+    """Classes Spark compiles (Janino) and their compile ms in each pass of
+    the 12 headline queries over the perfbench tables, all passes in one
+    local[4] session with perfbench's shuffle and batch settings, plus the
+    queries that compiled in each pass. A pass after the first that still
+    compiles regenerates classes its cache should hold."""
+    import __spark_entry__
+    from bench import HEADLINE
+    from datasketches_rust_spark.plans.session import get_spark
+
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (REPO, os.environ.get("PYTHONPATH")) if p
+    )
+    conf = {"spark.sql.execution.arrow.maxRecordsPerBatch": "384",
+            "spark.ui.showConsoleProgress": "false"}
+    if cache_entries is not None:
+        conf["spark.sql.codegen.cache.maxEntries"] = str(cache_entries)
+    spark = get_spark(master="local[4]", shuffle_partitions=64,
+                      app_name="bench_extra_codegen", extra_conf=conf)
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    generator = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    qs = __spark_entry__.queries()
+    tables = os.path.join(REPO, "perfbench", "tables")
+    out = []
+    for i in range(passes):
+        n0, ns0, t0 = compiles.getCount(), generator.compileTime(), time.perf_counter()
+        by_query = {}
+        for name in HEADLINE:
+            q0 = compiles.getCount()
+            qs[name](spark, tables).toArrow()
+            if compiles.getCount() > q0:
+                by_query[name] = compiles.getCount() - q0
+        out.append({
+            "pass": i,
+            "compiled": compiles.getCount() - n0,
+            "compile_ms": round((generator.compileTime() - ns0) / 1e6, 1),
+            "wall_s": round(time.perf_counter() - t0, 3),
+            "compiled_by_query": by_query,
+        })
+    print(json.dumps({
+        "codegen_cache": int(spark.conf.get("spark.sql.codegen.cache.maxEntries")),
+        "passes": out,
+    }))
+    spark.stop()
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--explain", default=None)
@@ -187,12 +252,17 @@ def main() -> None:
     ap.add_argument("--passes", type=int, default=2)
     ap.add_argument("--task-latency", action="store_true")
     ap.add_argument("--signature-stage", action="store_true")
+    ap.add_argument("--codegen", action="store_true")
+    ap.add_argument("--codegen-cache", type=int, default=None)
     args = ap.parse_args()
     if args.task_latency:
         task_latency(runs=15)
         return
     if args.signature_stage:
         signature_stage(runs=6)
+        return
+    if args.codegen:
+        codegen(args.passes, args.codegen_cache)
         return
 
     from datasketches_rust_spark.plans.session import get_spark

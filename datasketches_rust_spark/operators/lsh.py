@@ -56,12 +56,15 @@ def has_duplicate_id_rows(ids: DataFrame) -> bool:
     instead of ~100 bytes of (binary sha + hex fid), measured 3x faster;
     a hash collision can only create a false "duplicates exist"
     (triggering a harmless unneeded dedup), never miss a real duplicate.
+    It counts every duplicate key rather than ``limit(1)``: the groups are
+    aggregated either way, and Spark names each limit's generated counter
+    from a JVM-wide sequence, so a limit recompiles its classes (4 here)
+    on every call, which no codegen cache can hold.
     """
     return (
         ids.groupBy(F.xxhash64("content_sha", "file_id").alias("__k"))
         .count()
         .where(F.col("count") > 1)
-        .limit(1)
         .count()
         > 0
     )

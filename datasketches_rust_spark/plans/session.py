@@ -4,12 +4,27 @@ from __future__ import annotations
 
 import os
 import site
+import tempfile
 
 from pyspark.sql import SparkSession
 
 _PACKAGE_ROOT = os.path.dirname(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
+
+# Spark's cache of compiled codegen classes (a static conf, default 100).
+# The 12 headline queries generate ~205 classes a pass, so at 100 Janino
+# recompiled 203-205 of them on every later pass (1.5-2.0 s of a ~10 s
+# pass); at 1024 a later pass compiles none (`bench_extra.py --codegen
+# --passes 4`, local[4]). The dedup pass generates 62 and fits either way.
+_CODEGEN_CACHE_ENTRIES = 1024
+
+# Spark binds a local worker's Unix socket at <dir>/.<uuid4>.sock. Linux's
+# sun_path holds 107 bytes, but Spark rejects a socket dir over 61
+# characters (a 104-byte path, the BSD sun_path), and a rejected conf fails
+# the session's start, so the path must fit 104 bytes.
+_SOCKET_PATH_MAX = 104
+_SOCKET_NAME_BYTES = len("/.") + 36 + len(".sock")
 
 
 def _workers_find_package() -> bool:
@@ -24,6 +39,19 @@ def _workers_find_package() -> bool:
     )
 
 
+def _unix_socket_conf(socket_dir: str) -> dict[str, str]:
+    """Spark confs that move local Python workers onto Unix domain
+    sockets in ``socket_dir``, or none when a socket path there would be
+    too long (the workers then stay on TCP; a path over Linux's limit
+    fails every Python task, a dir over Spark's limit the session)."""
+    if len(os.fsencode(socket_dir)) + _SOCKET_NAME_BYTES > _SOCKET_PATH_MAX:
+        return {}
+    return {
+        "spark.python.unix.domain.socket.enabled": "true",
+        "spark.python.unix.domain.socket.dir": socket_dir,
+    }
+
+
 def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
@@ -36,10 +64,12 @@ def get_spark(
     ``local[*]``); it is always set on the builder, so pass the cluster's
     master explicitly to run elsewhere. For a local master whose workers
     find this package, the Python workers fork from ``plans.pydaemon``,
-    which stops each task from re-reading ``pyspark.zip``. Other masters
-    keep the stock daemon: a worker that cannot import the daemon module
-    fails every Python task. ``extra_conf`` is applied last and overrides
-    any of these settings.
+    which stops each task from re-reading ``pyspark.zip``, and talk to
+    the JVM over Unix domain sockets in ``tempfile.gettempdir()`` when a
+    socket path there is short enough (a TCP connection stalls each
+    task ~40 ms). Other masters keep the stock daemon: a worker that
+    cannot import the daemon module fails every Python task.
+    ``extra_conf`` is applied last and overrides any of these settings.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
@@ -67,6 +97,7 @@ def get_spark(
         # signature kernels work on whole-file strings; keep Arrow batches
         # bounded so a batch of 200KB files stays well under executor memory
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
+        .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
@@ -74,6 +105,8 @@ def get_spark(
         b = b.config(
             "spark.python.daemon.module", "datasketches_rust_spark.plans.pydaemon"
         )
+        for k, v in _unix_socket_conf(tempfile.gettempdir()).items():
+            b = b.config(k, v)
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()

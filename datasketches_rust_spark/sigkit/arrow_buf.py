@@ -114,11 +114,12 @@ def or_reduce_bitmap(
     """OR of the bits ``positions(rb)`` sets for every Arrow batch ``rb`` of
     ``df``: a packed little-endian bitmap of ``num_bits`` bits.
 
-    Each task ORs its batches into one partial bitmap; a narrow
-    ``coalesce(8)`` bounds the tasks, so the driver collects at most 8
-    partials whatever ``df``'s partition count. The coalesce propagates
-    down to ``df``'s last exchange — a caller whose input is a scan puts
-    its own exchange above it first, or the scan runs in 8 tasks.
+    Each task ORs its batches into one partial bitmap; a narrow coalesce
+    to ``min(8, defaultParallelism)`` bounds the tasks to one wave, so the
+    driver collects at most 8 partials whatever ``df``'s partition count.
+    The coalesce propagates down to ``df``'s last exchange — a caller
+    whose input is a scan puts its own exchange above it first, or the
+    scan runs in that many tasks.
     """
     nbytes = (num_bits + 7) // 8
 
@@ -132,7 +133,8 @@ def or_reduce_bitmap(
         yield pa.RecordBatch.from_arrays([pa.array([bm.tobytes()], pa.binary())], ["bm"])
 
     out = np.zeros(nbytes, dtype=np.uint8)
-    for row in df.coalesce(8).mapInArrow(partials, "bm binary").collect():
+    fan_in = min(8, df.sparkSession.sparkContext.defaultParallelism)
+    for row in df.coalesce(fan_in).mapInArrow(partials, "bm binary").collect():
         out |= np.frombuffer(row["bm"], dtype=np.uint8)
     return out.tobytes()
 

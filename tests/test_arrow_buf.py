@@ -128,8 +128,9 @@ def test_jaccard_batch_matches_scalar_estimator_over_input_forms():
 
 
 def test_or_reduce_bitmap_bounded_fan_in(spark):
-    """The OR of every batch's positions, with at most 8 partial bitmaps
-    reaching the driver whatever the input's partition count."""
+    """The OR of every batch's positions, with at most
+    min(8, defaultParallelism) partial bitmaps (one wave of tasks) reaching
+    the driver whatever the input's partition count."""
     num_bits = 1000
     df = spark.range(0, 5000, 1, 40)
     sc = spark.sparkContext
@@ -147,7 +148,7 @@ def test_or_reduce_bitmap_bounded_fan_in(spark):
     assert jobs
     for job in jobs:
         for stage in tracker.getJobInfo(job).stageIds:
-            assert tracker.getStageInfo(stage).numTasks <= 8
+            assert tracker.getStageInfo(stage).numTasks <= min(8, sc.defaultParallelism)
 
 
 def test_bitmap_test_reads_the_packed_layout():
