@@ -1,20 +1,30 @@
-"""Text analysis + exact n-gram dedup as pure JVM DataFrame expressions.
+"""Text analysis + exact n-gram dedup.
 
-Everything here stays inside whole-stage codegen: tokenization is
-``regexp_extract_all``, shingling is ``transform(sequence(...), slice)``,
-Jaccard is a shingle-explode + self-join + group-count — no Python UDFs at
-all, so these operators scale with Spark's native shuffle machinery.
+The text operators are JVM DataFrame expressions inside whole-stage
+codegen: tokenization is ``regexp_extract_all`` (``[A-Za-z0-9_]+`` runs),
+and the counts, ratios and heavy hitters are array folds and group-counts
+over those tokens, with no Python UDFs.
 
-Semantics match sigkit's kernel tokenizer (token = ``[A-Za-z0-9_]+`` run;
-docs with 0 < n_tokens < width contribute one whole-sequence shingle) so
-the exact path and the sketch path agree on what a "shingle" is.
+The exact n-gram Jaccard takes each doc's shingle set from the signature
+kernel itself (``operators/signatures.shingle_chunks``, one
+``mapInArrow``), so the exact verifier and the sketch pipeline share one
+definition of a shingle: docs with 0 < n_tokens < width contribute one
+whole-sequence shingle, docs with no tokens none. Prefix filtering and
+the per-pair intersection are JVM joins and array expressions.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from typing import Iterator
 
-from ..config import TOKEN_REGEX
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql.types import ArrayType, LongType
+
+from ..config import TOKEN_REGEX, PipelineConfig
+from ..operators.signatures import shingle_chunks
+from ..sigkit.arrow_buf import list_array
 
 EN_STOPWORDS = (
     "the of and to in a is that it for on with as are was at by an be this "
@@ -26,45 +36,35 @@ def tokens(col) -> Column:
     return F.regexp_extract_all(col, F.lit(TOKEN_REGEX), 0)
 
 
-def shingles(tok: Column, width: int = 5) -> Column:
-    """w-gram shingle strings; short docs → one whole-sequence shingle."""
-    n = F.size(tok)
-    full = F.transform(
-        F.sequence(F.lit(0), n - width),
-        lambda i: F.concat_ws(" ", F.slice(tok, i + 1, width)),
-    )
-    return (
-        F.when(n >= width, full)
-        .when(n > 0, F.array(F.concat_ws(" ", tok)))
-        .otherwise(F.array().cast("array<string>"))
-    )
-
-
 def _shingle_hash_arrays(docs: DataFrame, id_col: str, text_col: str, width: int) -> DataFrame:
-    """(id, sorted array of distinct-shingle hashes) — one row per doc.
+    """(__id, __hs) — one row per doc: its sorted, distinct 63-bit shingle
+    hashes from the signature kernel (default seed, 1 MiB doc chunks).
 
-    Keeping the shingles in array form (instead of exploding immediately)
-    lets prefix extraction run as a per-row ``slice`` inside the scan stage;
-    hashing shrinks every downstream shuffle to (id, int64) rows.
-
-    The tokenize+shingle+hash projection is the expensive part of the
-    whole operator, so a narrow scan (one small parquet file = one
-    partition) must be fanned out first or it runs single-task
-    (guide §2.5); no-op whenever the scan already plans enough splits.
+    The hashes are below 2^63, so their int64 view keeps the one global
+    order the prefix filter needs; they never leave this operator. A NULL
+    text reads as empty. The kernel is the expensive part of the whole
+    operator, so a narrow scan (one small parquet file = one partition) is
+    fanned out first or it runs single-task (guide §2.5); no-op whenever
+    the scan already plans enough splits.
     """
     from ..plans.parallel import fan_out_small_scan
 
-    docs = fan_out_small_scan(docs.select(F.col(id_col), F.col(text_col)))
-    return docs.select(
-        F.col(id_col).alias("__id"),
-        F.array_sort(
-            F.array_distinct(
-                F.transform(
-                    F.array_distinct(shingles(tokens(F.col(text_col)), width)),
-                    lambda s: F.xxhash64(s),
-                )
-            )
-        ).alias("__hs"),
+    cfg = PipelineConfig(shingle_width=width)
+    base = fan_out_small_scan(docs.select(F.col(id_col).alias("__id"), F.col(text_col)))
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            vals, offs = zip(*shingle_chunks(rb.column(1), cfg))
+            counts = np.concatenate([np.diff(o) for o in offs])
+            doc_offs = np.zeros(rb.num_rows + 1, dtype=np.int64)
+            np.cumsum(counts, out=doc_offs[1:])
+            hs = list_array(np.concatenate(vals).view(np.int64), doc_offs)
+            yield pa.RecordBatch.from_arrays([rb.column(0), hs], ["__id", "__hs"])
+
+    return base.mapInArrow(
+        run, base.select("__id").schema.add("__hs", ArrayType(LongType()))
     )
 
 
@@ -74,22 +74,19 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     width: int = 5,
     threshold: float = 0.8,
-    prefix_filter: bool = True,
 ) -> DataFrame:
     """Exact token-w-gram Jaccard dedup: all pairs with J >= threshold.
 
     EXACT (no LSH, no false negatives) — the verification counterpart of
-    the sketch pipeline and the DuckDB-oracle-matched operator. The
-    default plan uses classic prefix filtering (Chaudhuri/Bayardo): under
-    a global order (the shingle hash), two sets with J >= t must share an
-    element within their floor((1-t)|A|)+1 smallest elements — proof: the
+    the sketch pipeline and the DuckDB-oracle-matched operator. The plan
+    uses classic prefix filtering (Chaudhuri/Bayardo): under a global
+    order (the shingle hash), two sets with J >= t must share an element
+    within their floor((1-t)|A|)+1 smallest elements — proof: the
     smallest common element x of A∩B has rank <= |A\\B|+1 <= (1-t)|A|+1 in
     A, likewise in B. So the self-join runs on ~(1-t) of the shingles, a
     length filter (t*na <= nb <= na/t) prunes further, and the full
     intersection is computed only for surviving candidate pairs — as a
     per-pair JVM ``array_intersect`` over the two sorted hash-set arrays.
-    ``prefix_filter=False`` keeps the exhaustive self-join (the small-scale
-    cross-check path).
 
     The prefix length is computed integer-exactly as ``n - ceil(t*n) + 1``
     (== floor((1-t)n) + 1) with a 1e-9 guard inside the ceil so float error
@@ -99,81 +96,50 @@ def ngram_jaccard_pairs(
     a per-row JVM ``slice`` over the doc's sorted hash array — map-side, in
     the same stage as the scan; no window, no extra exchange.
     """
-    # the per-doc hash arrays feed several consumers: cut lineage so
-    # tokenization+shingling runs once
+    # the per-doc hash arrays feed both the prefix join and the scoring
+    # joins: cut lineage so the kernel runs once
     arr = _shingle_hash_arrays(docs, id_col, text_col, width).localCheckpoint(eager=False)
-    sizes = arr.select("__id", F.size("__hs").alias("n"))
-
-    if prefix_filter:
-        plen = (
-            F.col("n")
-            - F.ceil(F.lit(threshold) * F.col("n") - F.lit(1e-9))
-            + F.lit(1)
-        ).cast("int")
-        pref = (
-            arr.withColumn("n", F.size("__hs"))
-            .select("__id", "n", F.explode(F.slice("__hs", F.lit(1), plen)).alias("__shh"))
-        )
-        a, b = pref.alias("a"), pref.alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a.__shh") == F.col("b.__shh"))
-                & (F.col("a.__id") < F.col("b.__id"))
-                & (F.col("b.n") >= F.lit(threshold) * F.col("a.n"))
-                & (F.col("a.n") >= F.lit(threshold) * F.col("b.n")),
-            )
-            .select(F.col("a.__id").alias("ia"), F.col("b.__id").alias("ib"))
-            .distinct()
-        )
-        # candidates are a tiny fraction of the corpus after prefix+length
-        # filtering, so the full intersection is cheapest as a per-pair JVM
-        # array_intersect over the two sorted hash-set arrays — no explode
-        # of the whole corpus, no count groupBy, no sizes joins
-        ha = arr.select(F.col("__id").alias("ia"), F.col("__hs").alias("__ha"))
-        hb = arr.select(F.col("__id").alias("ib"), F.col("__hs").alias("__hb"))
-        scored = (
-            cand.join(ha, "ia")
-            .join(hb, "ib")
-            .select(
-                "ia",
-                "ib",
-                F.size("__ha").alias("na"),
-                F.size("__hb").alias("nb"),
-                F.size(F.array_intersect("__ha", "__hb")).alias("inter"),
-            )
-        )
-        return scored.select(
-            F.col("ia").alias(f"{id_col}_a"),
-            F.col("ib").alias(f"{id_col}_b"),
-            F.round(
-                F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6
-            ).alias("jaccard"),
-        ).where(F.col("jaccard") >= threshold)
-    else:
-        ex = arr.select("__id", F.explode("__hs").alias("__shh"))
-        a, b = ex.alias("a"), ex.alias("b")
-        inter = (
-            a.join(
-                b,
-                (F.col("a.__shh") == F.col("b.__shh"))
-                & (F.col("a.__id") < F.col("b.__id")),
-            )
-            .groupBy(F.col("a.__id").alias("ia"), F.col("b.__id").alias("ib"))
-            .agg(F.count("*").alias("inter"))
-        )
-    return (
-        inter.join(sizes.withColumnRenamed("__id", "ia").withColumnRenamed("n", "na"), "ia")
-        .join(sizes.withColumnRenamed("__id", "ib").withColumnRenamed("n", "nb"), "ib")
-        .select(
-            F.col("ia").alias(f"{id_col}_a"),
-            F.col("ib").alias(f"{id_col}_b"),
-            F.round(
-                F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
+    n = F.size("__hs")
+    plen = (n - F.ceil(F.lit(threshold) * n - F.lit(1e-9)) + F.lit(1)).cast("int")
+    pref = arr.select(
+        "__id", n.alias("n"), F.explode(F.slice("__hs", F.lit(1), plen)).alias("__shh")
     )
+    a, b = pref.alias("a"), pref.alias("b")
+    cand = (
+        a.join(
+            b,
+            (F.col("a.__shh") == F.col("b.__shh"))
+            & (F.col("a.__id") < F.col("b.__id"))
+            & (F.col("b.n") >= F.lit(threshold) * F.col("a.n"))
+            & (F.col("a.n") >= F.lit(threshold) * F.col("b.n")),
+        )
+        .select(F.col("a.__id").alias("ia"), F.col("b.__id").alias("ib"))
+        .distinct()
+    )
+    # candidates are a tiny fraction of the corpus after prefix+length
+    # filtering, so the full intersection is cheapest as a per-pair JVM
+    # array_intersect over the two sorted hash-set arrays — no explode
+    # of the whole corpus, no count groupBy, no sizes joins
+    ha = arr.select(F.col("__id").alias("ia"), F.col("__hs").alias("__ha"))
+    hb = arr.select(F.col("__id").alias("ib"), F.col("__hs").alias("__hb"))
+    scored = (
+        cand.join(ha, "ia")
+        .join(hb, "ib")
+        .select(
+            "ia",
+            "ib",
+            F.size("__ha").alias("na"),
+            F.size("__hb").alias("nb"),
+            F.size(F.array_intersect("__ha", "__hb")).alias("inter"),
+        )
+    )
+    return scored.select(
+        F.col("ia").alias(f"{id_col}_a"),
+        F.col("ib").alias(f"{id_col}_b"),
+        F.round(
+            F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6
+        ).alias("jaccard"),
+    ).where(F.col("jaccard") >= threshold)
 
 
 def exact_dedup_map(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:

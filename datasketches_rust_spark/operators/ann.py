@@ -9,12 +9,22 @@ whole-stage codegen (``zip_with``/``aggregate`` expressions, no UDF).
 of vectors; queries only score candidates sharing a hyperplane-sign band,
 turning the cross join into an equi-join. Probabilistic recall; the
 brute-force op is its correctness oracle at test scale.
+
+Every operator here scores with one cosine expression (``_cosine``) and
+the three top-k operators rank with one window (``_top_k``); each only
+builds its own candidate relation.
 """
 
 from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window, functions as F
+
+from ..sigkit.arrow_buf import list_values
+
+# (id, double vector, norm) column names of the two top-k sides
+_Q = ("query_id", "__q", "__qn")
+_V = ("neighbor_id", "__v", "__vn")
 
 
 def _as_double(col) -> Column:
@@ -31,6 +41,36 @@ def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
+def _side(df: DataFrame, id_col: str, vec_col: str, names, *extra: Column) -> DataFrame:
+    """``df`` as (id, double vector, norm) columns named by ``names``, with
+    ``extra`` columns between the vector and its norm."""
+    i, v, n = names
+    return df.select(
+        F.col(id_col).alias(i), _as_double(F.col(vec_col)).alias(v), *extra
+    ).withColumn(n, _norm(F.col(v)))
+
+
+def _cosine(a, b) -> Column:
+    """Cosine of the (vector, norm) columns ``a`` and ``b``, rounded to 9
+    decimals so rankings and thresholds are reproducible across engines."""
+    return F.round(_dot(F.col(a[0]), F.col(b[0])) / (F.col(a[1]) * F.col(b[1])), 9)
+
+
+def _top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, rank, cosine): the k best-scoring neighbors
+    per query of a candidate relation holding both sides' ``_Q``/``_V``
+    columns; self pairs are dropped and ties break on neighbor id."""
+    scored = pairs.where(F.col("neighbor_id") != F.col("query_id")).select(
+        "query_id", "neighbor_id", _cosine(_Q[1:], _V[1:]).alias("cosine")
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "cosine")
+    )
+
+
 def ann_topk_bruteforce(
     vectors: DataFrame,
     queries: DataFrame,
@@ -43,32 +83,9 @@ def ann_topk_bruteforce(
     Cosine is rounded to 9 decimals before ranking and ties break on
     neighbor id, so the ranking is reproducible across engines.
     """
-    v = vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        _as_double(F.col(vec_col)).alias("__v"),
-    ).withColumn("__vn", _norm(F.col("__v")))
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _as_double(F.col(vec_col)).alias("__q"),
-    ).withColumn("__qn", _norm(F.col("__q")))
-
-    scored = (
-        v.crossJoin(F.broadcast(q))
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _dot(F.col("__q"), F.col("__v")) / (F.col("__qn") * F.col("__vn")), 9
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    v = _side(vectors, id_col, vec_col, _V)
+    q = _side(queries, id_col, vec_col, _Q)
+    return _top_k(v.crossJoin(F.broadcast(q)), k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> np.ndarray:
@@ -81,16 +98,7 @@ def _sign_bands(vec_col: Column, planes: np.ndarray, band_bits: int) -> Column:
     n_planes = planes.shape[0]
     bits = [
         F.when(
-            F.aggregate(
-                F.zip_with(
-                    _as_double(vec_col),
-                    F.array([F.lit(float(w)) for w in planes[i]]),
-                    lambda x, y: x * y,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            >= 0,
+            _dot(_as_double(vec_col), F.array([F.lit(float(w)) for w in planes[i]])) >= 0,
             F.lit(1),
         ).otherwise(F.lit(0))
         for i in range(n_planes)
@@ -140,20 +148,15 @@ def embedding_dup_pairs(
     from .buckets import capped_bucket_pairs
 
     pairs = capped_bucket_pairs(keys, ["__band"], "__id", max_bucket)
-    v = vectors.select(
-        F.col(id_col).alias("__vid"), _as_double(F.col(vec_col)).alias("__v")
-    ).withColumn("__n", _norm(F.col("__v")))
-    va = v.select(F.col("__vid").alias("id_a"), F.col("__v").alias("va"), F.col("__n").alias("na"))
-    vb = v.select(F.col("__vid").alias("id_b"), F.col("__v").alias("vb"), F.col("__n").alias("nb"))
+    va = _side(vectors, id_col, vec_col, ("id_a", "va", "na"))
+    vb = _side(vectors, id_col, vec_col, ("id_b", "vb", "nb"))
     return (
         pairs.join(va, "id_a")
         .join(vb, "id_b")
         .select(
             F.col("id_a").alias(f"{id_col}_a"),
             F.col("id_b").alias(f"{id_col}_b"),
-            F.round(_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 9).alias(
-                "cosine"
-            ),
+            _cosine(("va", "na"), ("vb", "nb")).alias("cosine"),
         )
         .where(F.col("cosine") >= threshold)
     )
@@ -233,45 +236,33 @@ def ann_topk_ivf(
     # first (biased on corpora ordered/clustered by content, and unstable
     # across partition layouts), this is uniform over ids and reproducible
     # for a given (corpus, seed); the id tie-break pins duplicate hashes.
-    norm_sample = (
+    sample_vals, sample_offs = list_values(
         vectors.select(F.col(id_col).alias("__sid"), _as_double(F.col(vec_col)).alias("v"))
         .orderBy(F.xxhash64("__sid", F.lit(seed)), F.col("__sid"))
         .limit(sample_size)
-        .toPandas()["v"]
+        .toArrow()
+        .column("v")
     )
-    sample = np.stack(norm_sample.to_numpy())
+    sample = sample_vals.reshape(len(sample_offs) - 1, -1)
     norms = np.linalg.norm(sample, axis=1, keepdims=True)
     sample = sample / np.where(norms == 0, 1.0, norms)
     cent = _ivf_centroids(sample, n_lists, kmeans_iters, seed)
 
-    v = vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        _as_double(F.col(vec_col)).alias("__v"),
+    v = _side(
+        vectors,
+        id_col,
+        vec_col,
+        _V,
         F.element_at(_nearest_lists(F.col(vec_col), cent, 1), 1).alias("__list"),
-    ).withColumn("__vn", _norm(F.col("__v")))
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _as_double(F.col(vec_col)).alias("__q"),
+    )
+    q = _side(
+        queries,
+        id_col,
+        vec_col,
+        _Q,
         F.explode(_nearest_lists(F.col(vec_col), cent, nprobe)).alias("__list"),
-    ).withColumn("__qn", _norm(F.col("__q")))
-
-    scored = (
-        v.join(F.broadcast(q), "__list")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _dot(F.col("__q"), F.col("__v")) / (F.col("__qn") * F.col("__vn")), 9
-            ).alias("cosine"),
-        )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _top_k(v.join(F.broadcast(q), "__list"), k)
 
 
 def ann_topk_lsh(
@@ -309,31 +300,9 @@ def ann_topk_lsh(
     )
     cands = (
         vkeys.join(F.broadcast(qkeys), "__band")
-        .where(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-
-    v = vectors.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("__v")
-    ).withColumn("__vn", _norm(F.col("__v")))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("__q")
-    ).withColumn("__qn", _norm(F.col("__q")))
-    scored = (
-        cands.join(v, "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _dot(F.col("__q"), F.col("__v")) / (F.col("__qn") * F.col("__vn")), 9
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    v = _side(vectors, id_col, vec_col, _V)
+    q = _side(queries, id_col, vec_col, _Q)
+    return _top_k(cands.join(v, "neighbor_id").join(F.broadcast(q), "query_id"), k)

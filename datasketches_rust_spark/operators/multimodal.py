@@ -8,10 +8,9 @@ call itself is stubbed (the sandbox has no image/audio libraries).
 - :func:`attach_media_meta` — sniff container format + sizes from magic
   bytes (real, vectorized).
 - :func:`extract_features` — mapInArrow over Arrow batches producing a
-  fixed-dim feature vector per asset. ``decoder="stub"`` raises
-  NotImplementedError at the exact seam where PIL/ffmpeg would plug in;
-  ``decoder="fake"`` produces a *deterministic* byte-statistics vector so
-  the full pipeline (including dedup over media features) is testable.
+  fixed-dim *deterministic* byte-statistics vector per asset, so the full
+  pipeline (including dedup over media features) is testable; a real
+  codec (PIL/torchaudio/ffmpeg) plugs in at ``_fake_decode_features``.
 - :func:`frame_sample_plan` — deterministic frame-index sampling for video
   rows (pure arithmetic on metadata, no decode needed).
 """
@@ -75,19 +74,12 @@ def _fake_decode_features(buf: np.ndarray, offs: np.ndarray) -> np.ndarray:
     return np.divide(hist, total, out=np.zeros_like(hist), where=total > 0)
 
 
-def extract_features(
-    df: DataFrame, binary_col: str, id_col: str, decoder: str = "fake"
-) -> DataFrame:
+def extract_features(df: DataFrame, binary_col: str, id_col: str) -> DataFrame:
     """(id, features array<double>) per asset via Arrow-batched decode."""
     schema = df.select(id_col).schema.add("features", ArrayType(DoubleType()))
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
-            if decoder == "stub":
-                raise NotImplementedError(
-                    "media decode requires an image/audio codec library; "
-                    "plug PIL/torchaudio in here (operators/multimodal.py)"
-                )
             feats = _fake_decode_features(*to_buf(rb.column(1)))
             offsets = np.arange(0, feats.size + 1, FEATURE_DIM)
             yield pa.RecordBatch.from_arrays(

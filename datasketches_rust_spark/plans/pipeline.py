@@ -182,7 +182,8 @@ class DedupPipeline:
     # ------------------------------------------------------------ stages
 
     def _dedup_stages(self, corpus: DataFrame, input_fp: str):
-        """Shared stage chain up to verification.
+        """The stage chain up to verification: signatures, ids, rep_keys,
+        candidates and verified.
 
         Returns (ids, rep_map, verified, fp4, broadcast) where rep_map is
         the narrow (content_sha, rep_file_id) relation and broadcast the
@@ -202,7 +203,17 @@ class DedupPipeline:
         candidates stage's row count (measured the same way) within the
         limit too; else it shuffles.
         """
-        sigs, ids, fp1 = self._signature_stages(corpus, input_fp)
+        # signatures feed several consumers (rep keys, payload attach, the
+        # final file_id→cluster map) — materialize once so the kernel runs
+        # once and the cluster stage never re-scans the raw corpus
+        sigs, fp1 = self._stage(
+            "signatures", input_fp, lambda: compute_signatures(corpus, self.cfg)
+        )
+        # narrow (file_id, content_sha) projection materialized ONCE: the
+        # rep keys agg, the duplicate probe and the final cluster map are
+        # all narrow consumers, and a row-cached wide table gives them no
+        # column pruning — this 60B/row table does
+        ids, _ = self._stage("ids", fp1, lambda: sigs.select("file_id", "content_sha"))
         # the duplicate-(sha,fid) probe and the rep-keys agg both read only
         # the materialized ids blocks and are independent — overlap them
         # (guide §2.6: actions are only sequential because the driver calls
@@ -265,22 +276,6 @@ class DedupPipeline:
         )
         rep_map = keys.select("content_sha", "rep_file_id")
         return ids, rep_map, verified, fp4, broadcast
-
-    def _signature_stages(self, corpus: DataFrame, input_fp: str):
-        """(sigs, ids, fp1): the signatures stage and its narrow ids
-        projection, shared by every entry point."""
-        # signatures feed several consumers (rep keys, payload attach, the
-        # final file_id→cluster map) — materialize once so the kernel runs
-        # once and the cluster stage never re-scans the raw corpus
-        sigs, fp1 = self._stage(
-            "signatures", input_fp, lambda: compute_signatures(corpus, self.cfg)
-        )
-        # narrow (file_id, content_sha) projection materialized ONCE: the
-        # rep keys agg, the duplicate probe and the final cluster map are
-        # all narrow consumers, and a row-cached wide table gives them no
-        # column pruning — this 60B/row table does
-        ids, _ = self._stage("ids", fp1, lambda: sigs.select("file_id", "content_sha"))
-        return sigs, ids, fp1
 
     def _stage_rows(self, name: str, df: DataFrame) -> int:
         """Row count of a just-materialized stage, as ``_stage`` recorded

@@ -28,6 +28,9 @@ independent scalar reimplementation in tests/test_murmur3.py.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+
+from .arrow_buf import to_buf
 
 U64 = np.uint64
 
@@ -128,11 +131,7 @@ def murmur3_bytes(
 
 def murmur3_str_list(strings, seed: int = 0) -> tuple[np.ndarray, np.ndarray]:
     """(h1, h2) of each UTF-8 string in a Python list."""
-    bufs = [s.encode("utf-8") for s in strings]
-    offsets = np.zeros(len(bufs) + 1, dtype=np.int64)
-    np.cumsum([len(b) for b in bufs], out=offsets[1:])
-    data = np.frombuffer(b"".join(bufs), dtype=np.uint8)
-    return murmur3_bytes(data, offsets, seed)
+    return murmur3_bytes(*to_buf(pa.array(strings, pa.string())), seed)
 
 
 def murmur3_row_seeds(seed: int, num_hashes: int) -> np.ndarray:

@@ -21,7 +21,9 @@ regex ``[A-Za-z0-9_]+`` on codepoints).
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
+from .arrow_buf import to_buf
 from .xxhash import xxh64_slices, xxh64_u64
 
 # byte classes for tokenizer v1
@@ -35,13 +37,9 @@ _TOKEN_BYTE_I8 = _TOKEN_BYTE.astype(np.int8)  # 0/1 form for the diff pass
 def concat_docs(texts) -> tuple[np.ndarray, np.ndarray]:
     """Concatenate docs into a flat buffer (the Arrow string layout).
 
-    Returns (flat uint8 buffer, (n+1,) int64 doc offsets into it).
+    Returns (flat uint8 buffer, (n+1,) int64 doc offsets from 0 into it).
     """
-    bufs = [t.encode("utf-8") for t in texts]
-    offsets = np.zeros(len(bufs) + 1, dtype=np.int64)
-    np.cumsum([len(b) for b in bufs], out=offsets[1:])
-    data = np.frombuffer(b"".join(bufs), dtype=np.uint8)
-    return data, offsets
+    return to_buf(pa.array(texts, pa.string()))
 
 
 def token_spans(
@@ -125,12 +123,6 @@ def token_hash_stream_buf(
     # per-token searchsorted
     tok_off = np.searchsorted(starts, doc_offsets).astype(np.int64)
     return hashes, tok_off
-
-
-def token_hash_stream(texts, seed: int) -> tuple[np.ndarray, np.ndarray]:
-    """List-of-strings wrapper around :func:`token_hash_stream_buf`."""
-    buf, doc_offsets = concat_docs(texts)
-    return token_hash_stream_buf(buf, doc_offsets, seed)
 
 
 def shingle_hashes_buf(

@@ -24,6 +24,9 @@ vectors (``xxhash.rs:239-267``) and Spark itself.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+
+from .arrow_buf import to_buf
 
 U64 = np.uint64
 
@@ -198,8 +201,4 @@ def xxh64_bytes(data: np.ndarray, offsets: np.ndarray, seed: int = 0) -> np.ndar
 
 def xxh64_str_list(strings, seed: int = 0) -> np.ndarray:
     """Convenience wrapper: XXH64 of each UTF-8 string in a Python list."""
-    bufs = [s.encode("utf-8") for s in strings]
-    offsets = np.zeros(len(bufs) + 1, dtype=np.int64)
-    np.cumsum([len(b) for b in bufs], out=offsets[1:])
-    data = np.frombuffer(b"".join(bufs), dtype=np.uint8)
-    return xxh64_bytes(data, offsets, seed)
+    return xxh64_bytes(*to_buf(pa.array(strings, pa.string())), seed)

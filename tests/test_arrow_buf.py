@@ -165,12 +165,12 @@ def test_bitmap_test_reads_the_packed_layout():
 
 def test_kernel_layout_guard():
     """One kernel style and one buffer module: no pandas kernel
-    (``mapInPandas``, ``applyInPandas``, ``pandas_udf``) and no pandas
-    import under functions/, operators/ or plans/, only
+    (``mapInPandas``, ``applyInPandas``, ``pandas_udf``), no pandas
+    import and no ``toPandas`` under functions/, operators/ or plans/, only
     sigkit/arrow_buf.py touches ``pa.Array.buffers()``, and no module under
     functions/ imports sigkit.xxhash: Spark-compatible placement comes from
     the JVM ``xxhash64`` expression, never from a numpy copy of it."""
-    banned = ("mapInPandas", "applyInPandas", "pandas_udf", "import pandas")
+    banned = ("mapInPandas", "applyInPandas", "pandas_udf", "import pandas", "toPandas(")
     for sub in ("functions", "operators", "plans"):
         for path in (PKG / sub).glob("*.py"):
             text = path.read_text()

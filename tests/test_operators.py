@@ -190,8 +190,6 @@ def test_theta_bounds_bracket_truth(spark):
 
 
 def test_multimodal_plumbing(spark):
-    import pytest as _pytest
-
     from datasketches_rust_spark.operators.multimodal import (
         attach_media_meta,
         extract_features,
@@ -216,9 +214,6 @@ def test_multimodal_plumbing(spark):
     for asset_id, blob in rows:  # the per-asset loop is the reference
         a = np.frombuffer(blob, np.uint8)
         assert feats[asset_id] == (np.bincount(a >> 4, minlength=16) / max(len(a), 1)).tolist()
-
-    with _pytest.raises(Exception, match="NotImplementedError|codec"):
-        extract_features(df, "blob", "asset_id", decoder="stub").collect()
 
     plan = frame_sample_plan(
         spark.createDataFrame([(1, 300)], "vid long, n_frames long"), "vid", "n_frames"
@@ -445,8 +440,32 @@ def test_embedding_dup_pairs_skew_stress(spark):
     assert 999 <= n <= 8 * 999, n
 
 
-def test_ngram_jaccard_prefix_filter_matches_exhaustive(spark):
-    """Prefix filtering is exact: identical output to the full self-join."""
+def _exact_ngram_pairs(docs, width, threshold):
+    """Pure-Python exact Jaccard over " ".join shingle strings of
+    ``[A-Za-z0-9_]+`` tokens; a doc with 0 < n_tokens < width is one
+    whole-sequence shingle, a doc without tokens has no shingles."""
+    import re
+
+    sets = {}
+    for i, text in docs:
+        toks = re.findall("[A-Za-z0-9_]+", text or "")
+        n = max(len(toks) - width + 1, 1 if toks else 0)
+        sets[i] = {" ".join(toks[j : j + width]) for j in range(n)}
+    out = {}
+    for a in sets:
+        for b in sets:
+            if a < b and sets[a] and sets[b]:
+                inter = len(sets[a] & sets[b])
+                j = round(inter / (len(sets[a]) + len(sets[b]) - inter), 6)
+                if j >= threshold:
+                    out[(a, b)] = j
+    return out
+
+
+def test_ngram_jaccard_matches_python_exact_reference(spark):
+    """The kernel's shingle sets give the exact Jaccard of the shingle
+    strings, edge-case docs included: NULL, empty, punctuation-only,
+    shorter than ``width`` tokens, non-ASCII bytes between tokens."""
     rng = np.random.default_rng(23)
     docs = []
     base = [f"w{i}" for i in range(120)]
@@ -458,14 +477,31 @@ def test_ngram_jaccard_prefix_filter_matches_exhaustive(spark):
         else:
             t = [f"u{d}_{i}" for i in range(int(rng.integers(6, 150)))]
         docs.append((d, " ".join(t)))
+    docs += [
+        (100, None),
+        (101, None),
+        (102, ""),
+        (103, ""),
+        (104, "...!!! ---"),
+        (105, ";; ()"),
+        (106, "one two"),
+        (107, "one two"),
+        (108, "one two three four"),
+        (109, "alpha\u00e9beta gamma\u4e2ddelta eps zeta eta"),
+        (110, "alpha beta gamma delta eps zeta eta"),
+        (111, "alpha beta gamma delta eps zeta eta \u00fcber"),
+    ]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    for thr in (0.5, 0.8):
-        fast = {(r["doc_id_a"], r["doc_id_b"], r["jaccard"])
-                for r in ngram_jaccard_pairs(df, threshold=thr).collect()}
-        full = {(r["doc_id_a"], r["doc_id_b"], r["jaccard"])
-                for r in ngram_jaccard_pairs(df, threshold=thr, prefix_filter=False).collect()}
-        assert fast == full, (thr, fast ^ full)
-        assert len(fast) > 0
+    for width in (5, 3):
+        for thr in (0.5, 0.8):
+            got = {
+                (r["doc_id_a"], r["doc_id_b"]): r["jaccard"]
+                for r in ngram_jaccard_pairs(df, width=width, threshold=thr).collect()
+            }
+            want = _exact_ngram_pairs(docs, width, thr)
+            assert set(got) == set(want), (width, thr, set(got) ^ set(want))
+            assert got == pytest.approx(want, abs=1e-6)
+            assert {(106, 107), (109, 110)} <= set(got) and len(got) > 2
 
 
 def test_ngram_jaccard_prefix_boundary_at_exact_threshold(spark):
@@ -1023,6 +1059,39 @@ def test_frequent_items_agg_error_types(spark):
         ).collect()
     }
     assert exact_nofn == exact_nofp == truth
+
+
+def test_ann_topk_ties_rank_by_neighbor_id(spark):
+    """Duplicate (and power-of-two scaled) vectors tie on cosine; every
+    top-k operator that sees all candidates ranks the tie by neighbor id."""
+    from datasketches_rust_spark.operators.ann import ann_topk_ivf
+
+    rng = np.random.default_rng(31)
+    a, b, c, d = rng.standard_normal((4, 16)).astype(np.float32)
+    group_a = {0: a, 3: a * 2, 7: a, 9: a, 12: a * 4}
+    rest = {4: b, 10: b, 1: c, 2: d, 5: c + d, 6: b - d, 8: a + c, 11: b * 2}
+    vecs = {**group_a, **rest}
+    df = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in sorted(vecs.items())],
+        "vec_id long, embedding array<float>",
+    )
+    q = df.where("vec_id in (0, 4, 12)")
+
+    def ranked(out):
+        return sorted(
+            (r["query_id"], r["rank"], r["neighbor_id"], r["cosine"]) for r in out.collect()
+        )
+
+    exact = ranked(ann_topk_bruteforce(df, q, k=3))
+    assert [n for qid, _, n, _ in exact if qid == 0] == [3, 7, 9]
+    assert [n for qid, _, n, _ in exact if qid == 12] == [0, 3, 7]
+    assert [n for qid, _, n, _ in exact if qid == 4][0] == 10
+    for qid in (0, 12):
+        assert all(cos == 1.0 for q_, _, _, cos in exact if q_ == qid)
+    assert ranked(ann_topk_ivf(df, q, k=3, n_lists=4, nprobe=4)) == exact
+    # one-bit bands: two vectors miss each other only if every sign differs
+    lsh = ann_topk_lsh(df, q, k=3, dim=16, n_planes=64, band_bits=1, max_bucket=10**9)
+    assert ranked(lsh) == exact
 
 
 def test_ann_ivf_sample_is_order_independent(spark):

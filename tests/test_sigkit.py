@@ -21,9 +21,10 @@ from datasketches_rust_spark.sigkit.kmv import (
 from datasketches_rust_spark.sigkit.oph import band_hashes, oph_minhashes
 from datasketches_rust_spark.sigkit.simhash import hamming64, simhash64
 from datasketches_rust_spark.sigkit.tokenize import (
+    concat_docs,
     shingle_hashes,
     sorted_distinct,
-    token_hash_stream,
+    token_hash_stream_buf,
 )
 from datasketches_rust_spark.sigkit.union_find import union_find
 from datasketches_rust_spark.sigkit.xxhash import xxh64_u64
@@ -59,7 +60,7 @@ def test_tokenizer_matches_python_regex():
         "snake_case CamelCase x1 2x _",
         "unicode héllo wörld",  # multibyte separators
     ]
-    hashes, tok_off = token_hash_stream(texts, seed=CFG.seed)
+    hashes, tok_off = token_hash_stream_buf(*concat_docs(texts), CFG.seed)
     rx = re.compile("[A-Za-z0-9_]+")
     for i, t in enumerate(texts):
         toks = rx.findall(t)
@@ -336,7 +337,7 @@ def test_token_spans_multiple_cuts_in_one_run():
     (regression guard for the np.insert rewrite of token_spans)."""
     import numpy as np
 
-    from datasketches_rust_spark.sigkit.tokenize import concat_docs, token_spans
+    from datasketches_rust_spark.sigkit.tokenize import token_spans
     from datasketches_rust_spark.sigkit.xxhash import xxh64_str_list
 
     for docs in (["abc", "defg", "hi"], ["a", "b", "c", "d"], ["ab", "", "cd"], ["x y", "z", "w v"]):
