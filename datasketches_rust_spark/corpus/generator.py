@@ -20,8 +20,8 @@ from the block's base):
 | 17      | contained   | block base embedded verbatim in a larger file  |
 | 18,19   | boilerplate | shared license header + unrelated body         |
 
-Additionally ids 1..mega_family_size-1 are exact copies of id 0 (one
-mega duplicate family) to stress LSH bucket skew handling.
+Additionally ids 1..MEGA_FAMILY_SIZE_DEFAULT-1 are exact copies of id 0
+(one mega duplicate family) to stress LSH bucket skew handling.
 
 The per-row invariant (BASELINE.json input_hint) is
 ``sha256(content)``: :func:`content_sha_pandas` records it at generation
@@ -101,8 +101,8 @@ def _edit_tokens(content: str, frac: float, rng: np.random.Generator) -> str:
     return " ".join(toks)
 
 
-def file_class(file_id: int, mega: int = MEGA_FAMILY_SIZE_DEFAULT) -> str:
-    if 0 < file_id < mega:
+def file_class(file_id: int) -> str:
+    if 0 < file_id < MEGA_FAMILY_SIZE_DEFAULT:
         return "exact"
     m = file_id % 20
     if m <= 11:
@@ -118,9 +118,9 @@ def file_class(file_id: int, mega: int = MEGA_FAMILY_SIZE_DEFAULT) -> str:
     return "boilerplate"
 
 
-def family_id(file_id: int, mega: int = MEGA_FAMILY_SIZE_DEFAULT) -> int:
+def family_id(file_id: int) -> int:
     """Root id of the duplicate family this file derives from."""
-    if file_id < mega:
+    if file_id < MEGA_FAMILY_SIZE_DEFAULT:
         return 0
     m = file_id % 20
     if m <= 11 or m >= 18:
@@ -128,11 +128,9 @@ def family_id(file_id: int, mega: int = MEGA_FAMILY_SIZE_DEFAULT) -> int:
     return file_id - m  # block's class-0 member
 
 
-def content_for(
-    seed: int, file_id: int, mega: int = MEGA_FAMILY_SIZE_DEFAULT, size_scale: int = 1
-) -> str:
-    klass = file_class(file_id, mega)
-    fam = family_id(file_id, mega)
+def content_for(seed: int, file_id: int, size_scale: int = 1) -> str:
+    klass = file_class(file_id)
+    fam = family_id(file_id)
     if klass == "base":
         return _base_content(seed, file_id, size_scale)
     if klass == "exact":
@@ -158,12 +156,7 @@ def content_for(
     return LICENSE_HEADER + "\n" + body
 
 
-def gen_batch(
-    ids: np.ndarray,
-    seed: int,
-    mega: int = MEGA_FAMILY_SIZE_DEFAULT,
-    size_scale: int = 1,
-) -> pd.DataFrame:
+def gen_batch(ids: np.ndarray, seed: int, size_scale: int = 1) -> pd.DataFrame:
     """Corpus rows for a batch of file ids (pure function of (seed, id))."""
     rows = []
     for fid in ids:
@@ -174,7 +167,7 @@ def gen_batch(
         repo = f"org{org}/repo{int(rng.integers(0, 53))}"
         path = f"src/m{int(rng.integers(0, 31))}/f{fid}.{ext}"
         commit = bytes(rng.integers(0, 256, size=20, dtype=np.uint8)).hex()
-        rows.append((repo, path, commit, lang, content_for(seed, fid, mega, size_scale), fid))
+        rows.append((repo, path, commit, lang, content_for(seed, fid, size_scale), fid))
     return pd.DataFrame(rows, columns=["repo", "path", "commit", "lang", "content", "file_seq"])
 
 
@@ -183,8 +176,7 @@ def content_sha_pandas(content: pd.Series) -> pd.Series:
     return content.map(lambda s: hashlib.sha256(s.encode("utf-8")).hexdigest())
 
 
-def corpus_spark(spark, n_files: int, seed: int = 42,
-                 mega: int = MEGA_FAMILY_SIZE_DEFAULT, partitions: int | None = None,
+def corpus_spark(spark, n_files: int, seed: int = 42, partitions: int | None = None,
                  size_scale: int = 1):
     """Distributed deterministic corpus as a Spark DataFrame.
 
@@ -213,38 +205,40 @@ def corpus_spark(spark, n_files: int, seed: int = 42,
 
     def gen(iterator):
         for pdf in iterator:
-            yield gen_batch(pdf["id"].to_numpy(), seed, mega, size_scale)
+            yield gen_batch(pdf["id"].to_numpy(), seed, size_scale)
 
     return spark.range(0, n_files, numPartitions=parts).mapInPandas(gen, schema=schema)
 
 
-def truth_families(n_files: int, mega: int = MEGA_FAMILY_SIZE_DEFAULT) -> pd.DataFrame:
+def truth_families(n_files: int) -> pd.DataFrame:
     """(file_seq, family, klass) for every generated id — ground truth."""
     ids = np.arange(n_files)
-    fams = np.array([family_id(int(i), mega) for i in ids])
-    klass = np.array([file_class(int(i), mega) for i in ids])
+    fams = np.array([family_id(int(i)) for i in ids])
+    klass = np.array([file_class(int(i)) for i in ids])
     return pd.DataFrame({"file_seq": ids, "family": fams, "klass": klass})
 
 
-def truth_pairs(seed: int, n_files: int, shingle_width: int = 5,
-                hash_seed: int = 9001, mega: int = MEGA_FAMILY_SIZE_DEFAULT) -> pd.DataFrame:
+def truth_pairs(seed: int, n_files: int) -> pd.DataFrame:
     """All intra-family pairs with exact token-shingle Jaccard (brute force).
 
     Pairs between families have J << 0.5 by construction (spot-checked in
     tests); within a family every unordered pair is listed with its true
-    Jaccard over distinct shingle hashes — the oracle for recall.
+    Jaccard over distinct shingle hashes at the pipeline's default shingle
+    width and seed — the oracle for recall.
     """
+    from ..config import PipelineConfig
     from ..sigkit.kmv import MAX_THETA63, jaccard_estimate
     from ..sigkit.tokenize import shingle_hashes
 
-    fams = truth_families(n_files, mega)
+    cfg = PipelineConfig()
+    fams = truth_families(n_files)
     out = []
     for fam, grp in fams.groupby("family"):
         ids = grp["file_seq"].to_numpy()
         if len(ids) < 2:
             continue
-        texts = [content_for(seed, int(i), mega) for i in ids]
-        vals, offs = shingle_hashes(texts, shingle_width, hash_seed)
+        texts = [content_for(seed, int(i)) for i in ids]
+        vals, offs = shingle_hashes(texts, cfg.shingle_width, cfg.seed)
         sets = [vals[offs[i]: offs[i + 1]] for i in range(len(ids))]
         for i in range(len(ids)):
             for j in range(i + 1, len(ids)):

@@ -288,12 +288,16 @@ def ann_topk_lsh(
     """
     planes = _hyperplanes(dim, n_planes, seed)
 
-    vkeys = vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.explode(_sign_bands(F.col(vec_col), planes, band_bits)).alias("__band"),
+    # bucket sizes over the same exploded relation: the corpus bands once
+    vkeys = (
+        vectors.select(
+            F.col(id_col).alias("neighbor_id"),
+            F.explode(_sign_bands(F.col(vec_col), planes, band_bits)).alias("__band"),
+        )
+        .withColumn("__bn", F.count(F.lit(1)).over(Window.partitionBy("__band")))
+        .where(F.col("__bn") <= max_bucket)
+        .drop("__bn")
     )
-    sizes = vkeys.groupBy("__band").agg(F.count("*").alias("__bn"))
-    vkeys = vkeys.join(sizes, "__band").where(F.col("__bn") <= max_bucket).drop("__bn")
     qkeys = queries.select(
         F.col(id_col).alias("query_id"),
         F.explode(_sign_bands(F.col(vec_col), planes, band_bits)).alias("__band"),

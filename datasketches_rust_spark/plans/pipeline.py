@@ -19,25 +19,29 @@ materialized reps stage, a shuffle-hash verify join and the iterative
 large-star/small-star ``connected_components``, which never holds a
 component in one task.
 
-Checkpoint/resume: each stage writes to ``<dir>/<stage>`` plus a one-row
-``_meta`` parquet carrying (stage, fingerprint). The fingerprint chains the
-upstream stage's fingerprint with exactly the config parameters the stage
-itself reads (``STAGE_PARAMS``; the signatures stage reads those of
-``cfg_hash``) — the pipeline-level analog of the reference's seed-hash
-compatibility check (hash/seed.rs:42-55): a resumed run whose config or
-upstream changed anything a stage's output depends on refuses to reuse
-that checkpoint and recomputes it, while stages upstream of the change are
-reused. ``_metrics`` accumulates per-stage row counts (map-then-merge
-accounting, FIXTURES.md F5).
+Checkpoint/resume: each stage writes to ``<dir>/<stage>/<sha256(fp)>``,
+named by its fingerprint, and is reused exactly when that directory's
+``_SUCCESS`` exists. The fingerprint chains the upstream stage's
+fingerprint with exactly the config parameters the stage itself reads
+(``STAGE_PARAMS``; the signatures stage reads those of ``cfg_hash``) — the
+pipeline-level analog of the reference's seed-hash compatibility check
+(hash/seed.rs:42-55): a resumed run whose config or upstream changed
+anything a stage's output depends on finds no checkpoint under the new
+name and recomputes it (clearing ``<dir>/<stage>`` first, so one copy per
+stage stays), while stages upstream of the change are reused. The row
+count of a written stage is observed by its own write job. ``_metrics``
+accumulates per-stage (stage, rows_out, input_fingerprint, reused)
+(map-then-merge accounting, FIXTURES.md F5).
 """
 
 from __future__ import annotations
 
 import functools
+import hashlib
 import os
+import shutil
+import time
 
-from py4j.protocol import Py4JJavaError
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..config import PipelineConfig
@@ -63,7 +67,6 @@ STAGE_PARAMS = {
     "candidates": ("max_bucket_size",),
     "verified": ("jaccard_threshold",),
 }
-META_SCHEMA = "stage string, fingerprint string"
 
 
 def assign_clusters(
@@ -99,6 +102,11 @@ def assign_clusters(
     )
 
 
+def _rows(rows) -> int:
+    """A stage's row count: as counted, or as its materializing job observed."""
+    return rows.get["n"] if isinstance(rows, Observation) else rows
+
+
 class DedupPipeline:
     def __init__(
         self,
@@ -109,12 +117,10 @@ class DedupPipeline:
         self.spark = spark
         self.cfg = cfg or PipelineConfig()
         self.dir = checkpoint_dir
-        self.metrics: list[tuple] = []  # (stage, rows_out or Observation, fp, reused)
+        # (stage, rows_out or Observation, fp, reused, wall_s)
+        self.metrics: list[tuple] = []
 
     # ------------------------------------------------------------ checkpoints
-
-    def _meta_path(self, name: str) -> str:
-        return f"{self.dir}/{name}__meta"
 
     def _fingerprint(self, name: str, upstream_fp: str) -> str:
         if name == "signatures":
@@ -123,23 +129,11 @@ class DedupPipeline:
             params = ",".join(f"{k}={getattr(self.cfg, k)!r}" for k in STAGE_PARAMS.get(name, ()))
         return f"{params}|{upstream_fp}|{name}"
 
-    def _read_meta(self, name: str) -> list:
-        """The stage's meta rows; none when the meta parquet is missing or
-        unreadable (the stage then recomputes). Other errors propagate."""
-        try:
-            return self.spark.read.schema(META_SCHEMA).parquet(self._meta_path(name)).collect()
-        except AnalysisException as e:  # meta never written
-            if e.getCondition() != "PATH_NOT_FOUND":
-                raise
-        except Py4JJavaError as e:  # meta files present but corrupt
-            if not str(e.java_exception.getCondition()).startswith("FAILED_READ_FILE"):
-                raise
-        return []
-
     def _stage(
         self, name: str, upstream_fp: str, compute, materialize: bool = True
     ) -> tuple[DataFrame, str]:
         """Run or resume one stage; returns (df, fingerprint)."""
+        t0 = time.monotonic()
         fp = self._fingerprint(name, upstream_fp)
         if self.dir is None:
             # no durable checkpoint: cut lineage EAGERLY so every downstream
@@ -155,27 +149,29 @@ class DedupPipeline:
             if materialize:
                 rows = Observation()
                 df = df.observe(rows, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
-                self.metrics.append((name, rows, fp, False))
+                self.metrics.append((name, rows, fp, False, time.monotonic() - t0))
             return df, fp
-        path = f"{self.dir}/{name}"
+        stage_dir = f"{self.dir}/{name}"
+        path = f"{stage_dir}/{hashlib.sha256(fp.encode()).hexdigest()}"
         if os.path.exists(os.path.join(path, "_SUCCESS")):
-            meta = self._read_meta(name)
-            if meta and meta[0]["fingerprint"] == fp:
-                df = self.spark.read.parquet(path)
-                self.metrics.append((name, df.count(), fp, True))
-                return df, fp
-        df = compute()
-        df.write.mode("overwrite").parquet(path)
-        self.spark.createDataFrame([(name, fp)], META_SCHEMA).write.mode("overwrite").parquet(self._meta_path(name))
-        out = self.spark.read.parquet(path)
-        self.metrics.append((name, out.count(), fp, False))
-        return out, fp
+            df = self.spark.read.parquet(path)
+            self.metrics.append((name, df.count(), fp, True, time.monotonic() - t0))
+            return df, fp
+        # any other checkpoint of this stage (another fingerprint, an
+        # unfinished write, the old unnamed layout) is stale
+        if os.path.exists(stage_dir):
+            shutil.rmtree(stage_dir)
+        rows = Observation()
+        compute().observe(rows, F.count(F.lit(1)).alias("n")).write.parquet(path)
+        self.metrics.append((name, rows, fp, False, time.monotonic() - t0))
+        return self.spark.read.parquet(path), fp
 
     def flush_metrics(self) -> None:
         if self.dir is None or not self.metrics:
             return
         self.spark.createDataFrame(
-            self.metrics, "stage string, rows_out long, input_fingerprint string, reused boolean"
+            [(name, _rows(rows), fp, reused) for name, rows, fp, reused, _ in self.metrics],
+            "stage string, rows_out long, input_fingerprint string, reused boolean",
         ).write.mode("append").parquet(f"{self.dir}/_metrics")
         self.metrics = []
 
@@ -279,12 +275,12 @@ class DedupPipeline:
 
     def _stage_rows(self, name: str, df: DataFrame) -> int:
         """Row count of a just-materialized stage, as ``_stage`` recorded
-        it (the checkpoint's count, or the count the eager checkpoint job
-        observed); one job over the stage's plan only for a stage built
-        with ``materialize=False``."""
+        it (the reused checkpoint's count, or the count its write or eager
+        checkpoint job observed); one job over the stage's plan only for a
+        stage built with ``materialize=False``."""
         for stage, rows, *_ in reversed(self.metrics):
             if stage == name:
-                return rows.get["n"] if isinstance(rows, Observation) else rows
+                return _rows(rows)
         return df.count()
 
     def run(self, corpus: DataFrame, input_fp: str = "corpus") -> DataFrame:

@@ -2,9 +2,10 @@
 at a fixed parallelism over a pre-generated corpus parquet.
 
 Usage: python scripts/bench_dedup_child.py <corpus_path> <cpus>
-Prints one JSON line: {"wall": seconds, "files": n, "clusters": n}
-(wall covers the pipeline only, not session startup — the quantity that
-scales with executors on a real cluster).
+Prints one JSON line: {"wall": seconds, "files": n, "rows": n,
+"clusters": n, "stage_walls": {stage: seconds}} (wall covers the pipeline
+only, not session startup — the quantity that scales with executors on a
+real cluster).
 """
 
 import json
@@ -20,20 +21,6 @@ except ImportError:  # plain-python fallback for local debugging
 
 from datasketches_rust_spark.plans.pipeline import DedupPipeline
 from datasketches_rust_spark.plans.session import get_spark
-
-
-class StageWallPipeline(DedupPipeline):
-    """DedupPipeline that records each stage's wall, keyed by stage name."""
-
-    def __init__(self, *args, **kwargs):
-        super().__init__(*args, **kwargs)
-        self.walls: dict[str, float] = {}
-
-    def _stage(self, name, upstream_fp, compute, materialize=True):
-        t = time.monotonic()
-        out = super()._stage(name, upstream_fp, compute, materialize)
-        self.walls[name] = round(time.monotonic() - t, 2)
-        return out
 
 
 def main(corpus_path: str, cpus: int) -> None:
@@ -90,20 +77,18 @@ def main(corpus_path: str, cpus: int) -> None:
     # interpreter startup to nothing; at bench scale it would skew the ratio
     corpus.select("repo").mapInArrow(lambda it: it, "repo string").count()
 
-    # SPARK_GRAFT_STAGE_WALLS=1 (diagnostic): also time each stage of the
-    # same pipeline — every stage is an eager checkpoint, so a stage's wall
-    # is its own work; finds which stage stops scaling
-    timed = os.environ.get("SPARK_GRAFT_STAGE_WALLS") == "1"
-    pipe = (StageWallPipeline if timed else DedupPipeline)(spark)
+    pipe = DedupPipeline(spark)
     t0 = time.monotonic()
     clusters = pipe.run(corpus)
     n_rows = clusters.count()
     wall = time.monotonic() - t0
     n_clusters = clusters.select("cluster_id").distinct().count()
 
-    out = {"wall": wall, "files": n_files, "rows": n_rows, "clusters": n_clusters}
-    if timed:
-        out["stage_walls"] = pipe.walls
+    # every stage is an eager checkpoint, so a stage's wall is its own work;
+    # it shows which stage stops scaling
+    stage_walls = {name: round(wall_s, 2) for name, *_, wall_s in pipe.metrics}
+    out = {"wall": wall, "files": n_files, "rows": n_rows, "clusters": n_clusters,
+           "stage_walls": stage_walls}
     print(json.dumps(out))
     spark.stop()
     shutil.rmtree(f"/dev/shm/spark-bench-{cpus}", ignore_errors=True)

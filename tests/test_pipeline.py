@@ -8,7 +8,11 @@ Correctness anchors (SURVEY.md §5 carry-over):
   produces identical clusters.
 """
 
-import shutil
+import hashlib
+import json
+import os
+import subprocess
+import sys
 from collections import Counter
 
 import numpy as np
@@ -26,6 +30,7 @@ from datasketches_rust_spark.corpus.generator import (
 )
 from datasketches_rust_spark.plans.pipeline import DedupPipeline
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 N_FILES = 2000
 SEED = 42
 CFG = PipelineConfig()
@@ -172,32 +177,68 @@ def test_resume_after_crash_past_candidates(spark, corpus, tmp_path):
     )
 
 
-def test_stage_resume_meta_errors(spark, tmp_path):
-    """A missing or corrupt stage meta parquet means recompute; an error
-    that is not a missing/unreadable meta propagates instead of being
-    swallowed."""
-    ckpt = str(tmp_path / "ckpt")
-    pipe = DedupPipeline(spark, CFG, checkpoint_dir=ckpt)
-    compute = lambda: spark.range(5)  # noqa: E731
+def test_stage_checkpoint_named_by_fingerprint(spark, tmp_path):
+    """A stage checkpoints to <dir>/<stage>/<sha256(fingerprint)> and is
+    reused exactly when that directory's _SUCCESS exists; a recompute
+    leaves only the current fingerprint's copy; _metrics.rows_out is the
+    checkpoint's row count whether written or reused; an error that is not
+    a missing checkpoint propagates instead of being swallowed."""
+    ckpt = tmp_path / "ckpt"
+    pipe = DedupPipeline(spark, CFG, checkpoint_dir=str(ckpt))
+    compute = lambda: spark.range(7)  # noqa: E731
+
+    def digest(upstream_fp):
+        return hashlib.sha256(pipe._fingerprint("ids", upstream_fp).encode()).hexdigest()
+
+    # an old-layout checkpoint (parquet straight under <dir>/<stage>) is
+    # recomputed, never reused, and removed
+    spark.range(3).write.parquet(str(ckpt / "ids"))
     pipe._stage("ids", "up", compute)
     pipe._stage("ids", "up", compute)
     assert [m[3] for m in pipe.metrics] == [False, True]
+    assert [p.name for p in (ckpt / "ids").iterdir()] == [digest("up")]
 
-    meta = tmp_path / "ckpt" / "ids__meta"
-    for f in meta.glob("*.parquet"):
-        f.write_bytes(b"not parquet")
+    (ckpt / "ids" / digest("up") / "_SUCCESS").unlink()  # a write cut short
     pipe._stage("ids", "up", compute)
     assert pipe.metrics[-1][3] is False
-    shutil.rmtree(meta)  # a run cut between the stage write and its meta
-    pipe._stage("ids", "up", compute)
+
+    pipe._stage("ids", "up2", compute)  # a fingerprint change
     assert pipe.metrics[-1][3] is False
+    assert [p.name for p in (ckpt / "ids").iterdir()] == [digest("up2")]
+    pipe._stage("ids", "up2", compute)
+    assert pipe.metrics[-1][3] is True
+
+    pipe.flush_metrics()
+    metrics = spark.read.parquet(str(ckpt / "_metrics")).toPandas()
+    assert sorted(metrics.reused) == [False, False, False, True, True]
+    assert (metrics.rows_out == spark.read.parquet(str(ckpt / "ids" / digest("up2"))).count()).all()
 
     def broken(*_):
         raise RuntimeError("boom")
 
     pipe.spark = type("S", (), {"read": property(broken)})()
     with pytest.raises(RuntimeError, match="boom"):
-        pipe._stage("ids", "up", compute)
+        pipe._stage("ids", "up2", compute)
+
+
+def test_bench_child_runs_pipeline(spark, tmp_path):
+    """scripts/bench_dedup_child.py (the child bench.py runs per core
+    count) runs the pipeline over a corpus parquet and prints its JSON
+    line with a wall per stage. A subprocess: the child stops its session."""
+    path = str(tmp_path / "corpus")
+    corpus_spark(spark, 300, seed=SEED, partitions=2).drop("file_seq").write.parquet(path)
+    env = dict(os.environ, PYTHONPATH=REPO)
+    child = subprocess.run(
+        [sys.executable, os.path.join("scripts", "bench_dedup_child.py"), path, "2"],
+        cwd=REPO, env=env, capture_output=True, text=True, timeout=900,
+    )
+    assert child.returncode == 0, child.stderr[-4000:]
+    out = json.loads(child.stdout.strip().splitlines()[-1])
+    assert out["files"] == out["rows"] == 300
+    assert out["clusters"] >= 1
+    assert set(out["stage_walls"]) == {
+        "signatures", "ids", "rep_keys", "candidates", "verified", "clusters"
+    }
 
 
 def test_hot_lsh_bucket_star_path(spark):
