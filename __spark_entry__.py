@@ -51,12 +51,13 @@ from datasketches_rust_spark.operators.substring import (
     doc_fingerprints,
     duplicated_spans,
 )
+from datasketches_rust_spark.plans.session import read_parquet
 
 CFG = PipelineConfig()
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def _docs_as_corpus(docs: DataFrame) -> DataFrame:

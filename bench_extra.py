@@ -7,7 +7,12 @@ Modes:
   python bench_extra.py --explain DIR   # also write explain("formatted")
                                         # per query into DIR/<q>.txt
   python bench_extra.py --queries a,b   # restrict to a subset
+                                        # (every per-query mode prints each
+                                        # query's Spark jobs and tasks per
+                                        # pass next to its wall)
   python bench_extra.py --passes 3      # number of passes (default 2)
+  python bench_extra.py --perfbench     # over perfbench/tables in a
+                                        # perfbench-shaped local[4] session
   python bench_extra.py --task-latency  # fixed cost of one warm one-task
                                         # job: JVM-only, mapInArrow, RDD
                                         # Python (no SF dir needed)
@@ -198,6 +203,25 @@ def signature_stage(runs: int) -> None:
     spark.stop()
 
 
+PERFBENCH_TABLES = os.path.join(REPO, "perfbench", "tables")
+
+
+def _perfbench_spark(app_name: str, conf: dict | None = None):
+    """A local[4] session shaped like perfbench's: 64 shuffle partitions,
+    384-row Arrow batches and its file-split sizes."""
+    from datasketches_rust_spark.plans.session import get_spark
+
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (REPO, os.environ.get("PYTHONPATH")) if p
+    )
+    conf = {"spark.sql.execution.arrow.maxRecordsPerBatch": "384",
+            "spark.sql.files.maxPartitionBytes": str(32 * 1024 * 1024),
+            "spark.sql.files.openCostInBytes": str(256 * 1024),
+            "spark.ui.showConsoleProgress": "false", **(conf or {})}
+    return get_spark(master="local[4]", shuffle_partitions=64,
+                     app_name=app_name, extra_conf=conf)
+
+
 def codegen(passes: int, cache_entries: int | None) -> None:
     """Classes Spark compiles (Janino) and their compile ms in each pass of
     the 12 headline queries over the perfbench tables, all passes in one
@@ -206,22 +230,16 @@ def codegen(passes: int, cache_entries: int | None) -> None:
     compiles regenerates classes its cache should hold."""
     import __spark_entry__
     from bench import HEADLINE
-    from datasketches_rust_spark.plans.session import get_spark
 
-    os.environ["PYTHONPATH"] = os.pathsep.join(
-        p for p in (REPO, os.environ.get("PYTHONPATH")) if p
-    )
-    conf = {"spark.sql.execution.arrow.maxRecordsPerBatch": "384",
-            "spark.ui.showConsoleProgress": "false"}
+    conf = {}
     if cache_entries is not None:
         conf["spark.sql.codegen.cache.maxEntries"] = str(cache_entries)
-    spark = get_spark(master="local[4]", shuffle_partitions=64,
-                      app_name="bench_extra_codegen", extra_conf=conf)
+    spark = _perfbench_spark("bench_extra_codegen", conf)
     jvm = spark.sparkContext._jvm
     compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     generator = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
     qs = __spark_entry__.queries()
-    tables = os.path.join(REPO, "perfbench", "tables")
+    tables = PERFBENCH_TABLES
     out = []
     for i in range(passes):
         n0, ns0, t0 = compiles.getCount(), generator.compileTime(), time.perf_counter()
@@ -245,6 +263,17 @@ def codegen(passes: int, cache_entries: int | None) -> None:
     spark.stop()
 
 
+def _jobs_tasks(sc, group: str) -> tuple[int, int]:
+    """(jobs, tasks run) of the Spark jobs in job group ``group``, read
+    from the live status store; a stage shared by several of the jobs (a
+    reused shuffle) counts once, and a skipped stage runs no task."""
+    tracker = sc.statusTracker()
+    jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+    stages = {s for j in jobs if j is not None for s in j.stageIds}
+    infos = (tracker.getStageInfo(s) for s in stages)
+    return len(jobs), sum(i.numCompletedTasks for i in infos if i is not None)
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--explain", default=None)
@@ -254,6 +283,7 @@ def main() -> None:
     ap.add_argument("--signature-stage", action="store_true")
     ap.add_argument("--codegen", action="store_true")
     ap.add_argument("--codegen-cache", type=int, default=None)
+    ap.add_argument("--perfbench", action="store_true")
     args = ap.parse_args()
     if args.task_latency:
         task_latency(runs=15)
@@ -271,14 +301,18 @@ def main() -> None:
 
     qs = entrymod.queries()
     names = args.queries.split(",") if args.queries else bench.HEADLINE
-    spark = get_spark(
-        master=f"local[{CPUS}]", shuffle_partitions=CPUS, app_name="bench_extra"
-    )
+    sf_dir = SF_DIR
+    if args.perfbench:
+        sf_dir, spark = PERFBENCH_TABLES, _perfbench_spark("bench_extra")
+    else:
+        spark = get_spark(
+            master=f"local[{CPUS}]", shuffle_partitions=CPUS, app_name="bench_extra"
+        )
 
     if args.explain:
         os.makedirs(args.explain, exist_ok=True)
         for name in names:
-            df = qs[name](spark, SF_DIR)
+            df = qs[name](spark, sf_dir)
             txt = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
@@ -288,23 +322,33 @@ def main() -> None:
 
     times: dict[str, float] = {}
     samples: dict[str, list] = {n: [] for n in names}
-    for _ in range(args.passes):
+    jobs: dict[str, list] = {n: [] for n in names}
+    tasks: dict[str, list] = {n: [] for n in names}
+    sc = spark.sparkContext
+    for i in range(args.passes):
         for name in names:
-            spark.sparkContext.setJobDescription(f"bench_extra: {name}")
+            group = f"bench_extra: {name} #{i}"
+            sc.setJobGroup(group, group)
             t0 = time.monotonic()
-            df = qs[name](spark, SF_DIR)
+            df = qs[name](spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             wall = round(time.monotonic() - t0, 3)
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setJobDescription(None)
             samples[name].append(wall)
             times[name] = min(times.get(name, wall), wall)
-            spark.sparkContext.setJobDescription(None)
+            n_jobs, n_tasks = _jobs_tasks(sc, group)
+            jobs[name].append(n_jobs)
+            tasks[name].append(n_tasks)
     print(
         json.dumps(
             {
                 "value": round(sum(times.values()), 3),
                 "queries": times,
                 "samples": samples,
-                "sf": SF_DIR,
+                "jobs": jobs,
+                "tasks": tasks,
+                "sf": sf_dir,
             }
         )
     )

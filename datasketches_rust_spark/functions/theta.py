@@ -1,32 +1,28 @@
-"""Theta/KMV sketch as a pure-built-in Spark aggregate (no Python UDFs).
+"""Theta/KMV sketch: the grouped aggregates and the column set ops.
 
 The reference's theta sketch is "k smallest distinct 63-bit hashes + theta"
 (datasketches-rust `thetafamily/theta/sketch.rs:103-106`, rebuild/trim at
-``common/hash_table.rs:388-423``). Re-expressed in Spark's partial→final
-aggregation model using only JVM expressions, so the whole agg stays in
-whole-stage codegen and map-side combine applies:
+``common/hash_table.rs:388-423``). The sketch column is a struct
+(kmv array<long>, theta long, retained int) — the ordered
+CompactThetaSketch (theta/sketch.rs:321-332) as a column.
 
-- hash item: ``xxhash64 >> 1`` (63-bit, sign-safe — the Java-compat form
-  of ``common/hash_table.rs:135-140``); rows with a NULL item are
-  skipped, as ``COUNT(DISTINCT)`` skips them;
-- partial: ``groupBy(keys + salt).agg(slice(array_sort(collect_set(h)), 1,
-  k+1))`` with ``salt = pmod(h, 64)`` — each salt shard keeps at most k+1
-  smallest distinct hashes;
-- final: the shards hold disjoint hashes, so ``flatten(collect_list(...))``
-  is duplicate-free; re-sort, re-truncate to k+1 — exactly ThetaUnion's
-  min-theta + k-truncation (common/union.rs:64-135);
+- hash item: ``xxhash64 >> 1`` in the JVM (63-bit, sign-safe — the
+  Java-compat form of ``common/hash_table.rs:135-140``); rows with a NULL
+  item are skipped, as ``COUNT(DISTINCT)`` skips them;
+- build and grouped union (``theta_sketch_agg``, ``theta_merge_agg``):
+  the KMV family of functions/sketch_aggs.py — a ``mapInArrow`` partial
+  keeps each group's k+1 smallest distinct hashes per input partition
+  (sigkit.bottom_k), one ``applyInArrow`` merge per group keeps the k
+  smallest under the group's minimum theta and sets theta from the
+  (k+1)-th (ThetaUnion, common/union.rs:64-135);
 - estimate: retained / (theta / 2^63) (theta/sketch.rs:143-150), exact
   while the true distinct count <= k.
 
-``_bottom_k`` is that core, shared by the four grouped aggregates: the
-tuple sketch (functions/tuple.py) runs it with a summary carried beside
-each hash, as the reference's tuple sketch reuses the theta hash table,
-trim and union rules.
-
-The sketch column is a struct (kmv array<long>, theta long, retained int)
-— the ordered CompactThetaSketch (theta/sketch.rs:321-332) as a column.
-Set ops (union/intersect/a-not-b) between sketch columns are JVM array
-functions: array_union/array_intersect/array_except + theta min.
+The tuple sketch (functions/tuple.py) runs the same aggregates with a
+summary carried beside each hash, as the reference's tuple sketch reuses
+the theta hash table, trim and union rules. Set ops (union/intersect/
+a-not-b) between sketch columns are JVM array functions:
+array_union/array_intersect/array_except + theta min.
 """
 
 from __future__ import annotations
@@ -34,12 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..sigkit.kmv import MAX_THETA63
-
-_SALT_SHARDS = 64
-# the insert-time screen (theta_prescreen): relative sd of the per-group
-# distinct estimate D̂, and how far above the expected final theta it screens
-_SCREEN_RSD = 0.02
-_SCREEN_SAFETY = 2.0
+from .sketch_aggs import kmv_merge, kmv_partials
 
 
 def _h63(col) -> Column:
@@ -99,57 +90,6 @@ def _hashed(
     return df.select(*group_cols, h.alias("__h"), *extra)
 
 
-def _prescreen(rows: DataFrame, group_cols: list[str], k: int) -> DataFrame:
-    """``rows`` (``_hashed``'s output) with __h <= theta_hat — the body of
-    ``theta_prescreen``, which documents it."""
-    dhat = F.col("__dhat")
-    that = F.when(dhat <= F.lit(int(2 * _SCREEN_SAFETY * k)), F.lit(MAX_THETA63)).otherwise(
-        F.least(
-            F.lit(float(MAX_THETA63)), F.lit(_SCREEN_SAFETY * k * float(1 << 63)) / dhat
-        ).cast("long")
-    )
-    gb = [f"__g{i}" for i in range(len(group_cols))]
-    bounds = (
-        rows.groupBy(*group_cols)
-        .agg(F.approx_count_distinct("__h", _SCREEN_RSD).alias("__dhat"))
-        .select(*[F.col(c).alias(b) for c, b in zip(group_cols, gb)], that.alias("__that"))
-    )
-    # null-safe, so a NULL group key is screened like any other group
-    on = [F.col(c).eqNullSafe(F.col(b)) for c, b in zip(group_cols, gb)]
-    return (
-        rows.join(F.broadcast(bounds), on or None)
-        .where(F.col("__h") <= F.col("__that"))
-        .select(*rows.columns)
-    )
-
-
-def theta_prescreen(df: DataFrame, group_cols: list[str], value_col: str, k: int) -> DataFrame:
-    """Insert-time theta screen: (group..., __h) rows with __h <= theta_hat.
-
-    The reference screens candidates against theta at insert time
-    (common/hash_table.rs:160-163) so sketch state never exceeds O(k); a
-    Spark agg sees all rows before any truncation, so the screen becomes a
-    cheap pre-pass: approx_count_distinct per group -> theta_hat =
-    min(2^63-1, safety*k/D_hat * 2^63) -> filter. Any screen value >= the
-    true final theta (the (k+1)-th smallest hash, ~ (k+1)/D * 2^63 with
-    relative sd ~1/sqrt(k)) preserves the k smallest exactly, so
-    safety=2.0 leaves the sketch bit-identical w.p. 1 - exp(-Theta(k)).
-    Groups with D_hat <= 2*safety*k skip the screen (exact mode).
-
-    Cost/scale notes (the two deliberate trade-offs of this design):
-
-    - The D̂ pass is a SECOND scan of the input. It is kept because the
-      shuffle it bounds is the expensive resource, and when the input is
-      a checkpointed/cached stage (the pipeline case) the rescan is cheap.
-    - The per-group theta_hat table is broadcast: group cardinality must
-      fit in a broadcast (~10M groups at two longs each ≈ 160 MB). Above
-      that, disable the screen and let the salted two-level agg carry the
-      state — with that many groups, per-group row counts are small and
-      screening buys little anyway.
-    """
-    return _prescreen(_hashed(df, group_cols, value_col), group_cols, k)
-
-
 def _key(e: Column, summary: bool) -> Column:
     return e["key"] if summary else e
 
@@ -181,76 +121,20 @@ def _pack(m: Column, theta: Column, summary: bool = False) -> Column:
     )
 
 
-def _bottom_k(
-    rows: DataFrame, group_cols: list[str], k: int, theta: int | None = MAX_THETA63
-) -> DataFrame:
-    """group_cols + ``sketch``: the k smallest distinct ``__h`` per group —
-    the KMV core of the theta and tuple sketch aggregates.
-
-    ``rows`` carries ``__h`` and, for a tuple sketch, the summary ``__s``
-    of its one row per (group, __h). ``theta`` is a build's initial theta,
-    and a hash is inserted iff 0 < hash < theta — the reference's insert
-    screen (hash_table.rs:160-163). A row that inserts nothing (a NULL item
-    that ``_hashed`` maps to 0, a hash a p < 1 build rejects, the NULL
-    ``explode_outer`` row of an empty stored sketch) still keeps its group.
-    Each hash lands in exactly one salt shard, so the shards' k+1 smallest
-    distinct entries concatenate duplicate-free and the final merge only
-    re-sorts and re-truncates — per-shard build, then union. A merge passes
-    ``theta=None`` and ``rows`` carries each input sketch's theta as
-    ``__t``: the group minimum screens the entries after truncation (exact,
-    see ``theta_merge_agg``), and a group with no input theta is the
-    never-updated sketch.
-    """
-    summary = "__s" in rows.columns
-    h = F.col("__h")
-    entry = F.struct(h.alias("key"), F.col("__s").alias("value")) if summary else h
-    insert = h != 0 if theta is None else (h != 0) & (h < F.lit(theta))
-    tmin = [F.min("__t").alias("__t")] if theta is None else []
-    partial = (
-        rows.withColumn("__salt", F.pmod(F.coalesce(h, F.lit(0)), F.lit(_SALT_SHARDS)))
-        .groupBy(*group_cols, "__salt")
-        .agg(
-            *tmin,
-            F.slice(F.array_sort(F.collect_set(F.when(insert, entry))), 1, k + 1)
-            .alias("__part"),
-        )
-    )
-    merged = partial.groupBy(*group_cols).agg(
-        *tmin,
-        F.slice(F.array_sort(F.flatten(F.collect_list("__part"))), 1, k + 1).alias("__m"),
-    )
-    # one select per step (screen, truncate, pack): each entry array is
-    # built once, not written out again in every field of the struct
-    if theta is None:
-        t = F.coalesce(F.col("__t"), F.lit(MAX_THETA63))
-        screened = F.filter(F.col("__m"), lambda e: _key(e, summary) < t)
-    else:
-        t, screened = F.lit(theta), F.col("__m")
-    merged = merged.select(*group_cols, t.alias("__t"), screened.alias("__m"))
-    m, t = F.col("__m"), F.col("__t")
-    cut_m, cut_t = _truncate(m, k, t, summary)
-    merged = merged.select(*group_cols, cut_t.alias("__t"), cut_m.alias("__m"))
-    return merged.select(*group_cols, _pack(m, t, summary).alias("sketch"))
-
-
 def theta_sketch_agg(
     df: DataFrame,
     group_cols: list[str],
     value_col: str,
     k: int = 4096,
-    screen: bool = True,
     p: float = 1.0,
 ) -> DataFrame:
     """groupBy(group_cols) → theta sketch of distinct value_col per group.
 
-    ``theta_prescreen`` bounds agg input to ~safety*k rows per group (the
-    insert-time screen of hash_table.rs:160-163 as a filter pushed ahead of
-    the shuffle), then ``_bottom_k``'s two-level salted aggregation caps
-    per-task state at (k+1) hashes per (group, salt) shard — the
-    distributed analog of per-shard sketch build then union. A NULL
-    ``value_col`` inserts nothing, but its group stays (as in
-    ``COUNT(DISTINCT)``); a NULL group key is its own group. Returns
-    group_cols + ``sketch``.
+    One read of ``df``: per-shard build, then union — ``kmv_partials``
+    keeps each group's k+1 smallest distinct hashes per input partition
+    and ``kmv_merge`` unions them, exactly. A NULL ``value_col`` inserts
+    nothing, but its group stays (as in ``COUNT(DISTINCT)``); a NULL group
+    key is its own group. Returns group_cols + ``sketch``.
 
     ``p`` is the reference's up-front sampling probability
     (theta/sketch.rs builder: initial theta = p * MAX_THETA): hashes >=
@@ -262,9 +146,7 @@ def theta_sketch_agg(
     """
     init_theta = MAX_THETA63 if p >= 1.0 else int(p * MAX_THETA63)
     rows = _hashed(df, group_cols, value_col)
-    if screen:
-        rows = _prescreen(rows, group_cols, k)
-    return _bottom_k(rows, group_cols, k, init_theta)
+    return kmv_merge(kmv_partials(rows, group_cols, k, False, init_theta), group_cols, k, False)
 
 
 def theta_merge_agg(
@@ -281,17 +163,10 @@ def theta_merge_agg(
     sketches, ``groupBy(month)`` and merge, without the crossJoin fold a
     pairwise ``theta_union`` column would need.
 
-    One read of ``df`` and one logical shuffle on (group, salt):
-    ``explode_outer`` flattens kmv entries (empty sketches still
-    contribute their theta through the null row); each salt shard keeps
-    its min-theta and the k+1 smallest distinct hashes; the final merge
-    re-sorts, re-truncates, and screens under the group-wide min theta.
-    Screening AFTER shard truncation is exact: an entry a shard dropped
-    exceeds all k+1 entries it kept, so if any kept entry fails the final
-    screen the dropped one fails it too, and if all kept entries pass, the
-    shard already contributes its full k+1 — either way the k smallest
-    surviving hashes are identical to screen-then-truncate (the ThetaUnion
-    order, common/union.rs:130-135).
+    One read of ``df`` and one shuffle of sketches: the partials keep a
+    group's min theta and its k+1 smallest hashes below it per input
+    partition, and ``kmv_merge`` screens under the group's min theta and
+    truncates to k (the ThetaUnion order, common/union.rs:130-135).
 
     Empty-sketch semantics (deliberate, differs from the reference in one
     corner): the group min-theta is taken over ALL input sketches,
@@ -308,11 +183,8 @@ def theta_merge_agg(
     explicit empty flag is ever added to the struct, exclude flagged
     rows from the min to match union.rs exactly.
     """
-    s = F.col(sketch_col)
-    rows = df.select(
-        *group_cols, s["theta"].alias("__t"), F.explode_outer(s["kmv"]).alias("__h")
-    )
-    return _bottom_k(rows, group_cols, k, theta=None)
+    partials = kmv_partials(df, group_cols, k, False, sketch_col=sketch_col)
+    return kmv_merge(partials, group_cols, k, False)
 
 
 def theta_estimate(sketch: Column) -> Column:

@@ -2,7 +2,7 @@
 
 Re-expresses the reference's TupleSketch with the DefaultUpdatePolicy /
 DefaultUnionPolicy pair (`tuple/policy.rs:60-121`: update is
-``summary += value``, union combine is ``summary += other``) as a pure-JVM
+``summary += value``, union combine is ``summary += other``) as a grouped
 Spark aggregate. The sketch column is a struct
 
     (kmv array<long>, summaries array<double>, theta long, retained int)
@@ -17,28 +17,21 @@ followed by trim-to-k (the same argument that makes the KMV trim exact,
 common/hash_table.rs:388-423). Keys trimmed away lose their summaries, as
 in the reference.
 
-Union (`tuple/union.rs:68-128`): min-theta screen on both sides, AddAssign
-summaries of keys present in both, k-truncate. Implemented with
-``map_zip_with`` over (hash -> summary) maps — keys union, values add.
+The grouped build and union are the theta sketch's (the KMV family of
+functions/sketch_aggs.py, sigkit.bottom_k) with the summary carried beside
+each hash and summed per distinct hash in the partials and in the merge.
 
-The screen, the salted bottom-k aggregation and the truncate-and-pack are
-the theta sketch's (functions/theta.py); tuple adds only the summary
-carried beside each hash and the per-key sum.
+Column union (`tuple/union.rs:68-128`): min-theta screen on both sides,
+AddAssign summaries of keys present in both, k-truncate. Implemented with
+``map_zip_with`` over (hash -> summary) maps — keys union, values add.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .theta import (
-    _bottom_k,
-    _hashed,
-    _pack,
-    _prescreen,
-    _truncate,
-    theta_estimate,
-    theta_jaccard,
-)
+from .sketch_aggs import kmv_merge, kmv_partials
+from .theta import _hashed, _pack, _truncate, theta_estimate, theta_jaccard
 
 
 def tuple_sketch_agg(
@@ -50,17 +43,13 @@ def tuple_sketch_agg(
 ) -> DataFrame:
     """groupBy(group_cols) -> tuple sketch of (distinct key, sum(value)).
 
-    Plan: the theta sketch's insert-time screen (``theta_prescreen``,
-    bounding downstream state to ~2k keys per group) -> per-(group,
-    key-hash) sum (the AddAssign update policy as a hash agg with
-    map-side combine) -> the theta sketch's salted bottom-k core with the
-    summary carried beside each hash. A row whose key or value is NULL
+    ``theta_sketch_agg``'s plan, with the values of each key hash summed
+    (the AddAssign update policy). A row whose key or value is NULL
     inserts nothing, but its group stays; a NULL group key is its own
     group.
     """
-    rows = _prescreen(_hashed(df, group_cols, key_col, value_col), group_cols, k)
-    keyed = rows.groupBy(*group_cols, "__h").agg(F.sum("__s").alias("__s"))
-    return _bottom_k(keyed, group_cols, k)
+    rows = _hashed(df, group_cols, key_col, value_col)
+    return kmv_merge(kmv_partials(rows, group_cols, k, True), group_cols, k, True)
 
 
 def tuple_merge_agg(
@@ -75,28 +64,15 @@ def tuple_merge_agg(
     sketch) as a grouped aggregate, for re-aggregating stored sketches
     without a crossJoin fold of pairwise ``tuple_union`` columns.
 
-    ``theta_merge_agg``'s plan with one more shuffle: one
-    ``explode_outer`` read of ``df``, a ``groupBy(group, hash)`` that sums
-    the summaries of keys shared across sketches (and keeps their min
-    theta), then the salted bottom-k merge screening under the group-wide
-    min theta after truncation — the same k smallest surviving keys as the
+    ``theta_merge_agg``'s plan, with the summaries of keys shared across
+    sketches summed — the same k smallest surviving keys as the
     reference's screen-then-combine-then-truncate order, since the screen
-    depends on the hash alone. Empty sketches contribute their theta
-    through the ``explode_outer`` null row, so all-empty groups survive.
-    As in ``theta_merge_agg`` (see its docstring for the full argument),
-    the min-theta runs over ALL rows including retained==0: never-updated
-    sketches carry theta==MAX (the min identity, no effect), while a
-    retained==0, theta<MAX row is read as updated-but-sampled-to-empty
-    and legitimately bounds the union theta.
+    depends on the hash alone. As in ``theta_merge_agg`` (see its
+    docstring), the min theta runs over ALL rows, retained==0 included,
+    so all-empty groups survive.
     """
-    s = F.col(sketch_col)
-    rows = df.select(
-        *group_cols, s["theta"].alias("__t"), F.explode_outer(_entries(s)).alias("__e")
-    ).select(*group_cols, "__t", F.col("__e.key").alias("__h"), F.col("__e.value").alias("__s"))
-    keyed = rows.groupBy(*group_cols, "__h").agg(
-        F.min("__t").alias("__t"), F.sum("__s").alias("__s")
-    )
-    return _bottom_k(keyed, group_cols, k, theta=None)
+    partials = kmv_partials(df, group_cols, k, True, sketch_col=sketch_col)
+    return kmv_merge(partials, group_cols, k, True)
 
 
 def _entries(sk: Column) -> Column:

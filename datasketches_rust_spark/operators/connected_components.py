@@ -42,6 +42,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, functions as F
 
+from ..plans.session import as_read_back
 from ..sigkit.arrow_buf import binary_array, to_buf
 from ..sigkit.union_find import union_find
 
@@ -82,13 +83,15 @@ def _small_star(edges: DataFrame) -> DataFrame:
 
 def _cut_lineage(df: DataFrame, checkpoint_dir: str | None, tag: str) -> DataFrame:
     """Materialize + truncate lineage. The action taken here (eager
-    localCheckpoint or parquet write) is the ONLY job of an iteration —
-    the convergence fingerprint rides it as an observed metric."""
+    localCheckpoint or parquet write) is the ONLY action of an iteration —
+    the convergence fingerprint rides it as an observed metric, and the
+    write is read back with the schema it was written with, so no footer
+    job runs (AQE still runs each of the iteration's exchanges as a job)."""
     if checkpoint_dir is None:
         return df.localCheckpoint(eager=True)
     path = f"{checkpoint_dir}/cc_{tag}"
     df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
+    return df.sparkSession.read.schema(as_read_back(df.schema)).parquet(path)
 
 
 def connected_components(

@@ -59,6 +59,7 @@ from ..operators.lsh import (
 from ..operators.signatures import compute_signatures, file_id
 from ..operators.substring import containment_pairs
 from ..operators.verify import verify_pairs
+from .session import as_read_back
 
 # PipelineConfig fields each stage reads beyond its upstream's output; the
 # signatures stage reads exactly the cfg_hash fields. The execution-only
@@ -162,9 +163,10 @@ class DedupPipeline:
         if os.path.exists(stage_dir):
             shutil.rmtree(stage_dir)
         rows = Observation()
-        compute().observe(rows, F.count(F.lit(1)).alias("n")).write.parquet(path)
+        df = compute().observe(rows, F.count(F.lit(1)).alias("n"))
+        df.write.parquet(path)
         self.metrics.append((name, rows, fp, False, time.monotonic() - t0))
-        return self.spark.read.parquet(path), fp
+        return self.spark.read.schema(as_read_back(df.schema)).parquet(path), fp
 
     def flush_metrics(self) -> None:
         if self.dir is None or not self.metrics:

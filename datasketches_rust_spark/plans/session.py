@@ -1,4 +1,5 @@
-"""SparkSession factory with the engine's scale-oriented defaults."""
+"""SparkSession factory with the engine's scale-oriented defaults, and
+parquet reads that skip Spark's schema inference when the schema is known."""
 
 from __future__ import annotations
 
@@ -6,7 +7,8 @@ import os
 import site
 import tempfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 _PACKAGE_ROOT = os.path.dirname(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -110,3 +112,55 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+# ``spark.read.parquet(path)`` without a schema runs a one-task Spark job
+# that reads a footer ("parquet at <unknown>:0"): 64-81 ms per open on a
+# warm local[4] session, against 6-9 ms with the schema given. Spark's own
+# inferred schema is kept per (application, path), guarded by the files'
+# names, sizes and mtimes. (pyarrow's footer schema is no substitute: it
+# reads ``timestamp`` where Spark infers ``timestamp_ntz``.)
+_PARQUET_SCHEMAS: dict[tuple[str, str], tuple[tuple, StructType]] = {}
+
+
+def _files_stat(path: str) -> tuple | None:
+    """Sorted (file, size, mtime_ns) of the local file or every file under
+    the local directory ``path``; None if ``path`` is not local."""
+    if os.path.isfile(path):
+        files = [path]
+    elif os.path.isdir(path):
+        files = [os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs]
+    else:
+        return None
+    return tuple(sorted((f, (st := os.stat(f)).st_size, st.st_mtime_ns) for f in files))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, given the schema Spark inferred when
+    this application last opened the same, unchanged files. A rewritten
+    table is inferred again; a path that is not local always is."""
+    stat = _files_stat(path)
+    key = (spark.sparkContext.applicationId, path)
+    hit = _PARQUET_SCHEMAS.get(key)
+    if stat is not None and hit is not None and hit[0] == stat:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if stat is not None:
+        _PARQUET_SCHEMAS[key] = (stat, df.schema)
+    return df
+
+
+def as_read_back(dt: DataType) -> DataType:
+    """``dt`` as ``spark.read.parquet`` infers it for files written with
+    it: every field, array element and map value nullable. Reading a
+    just-written checkpoint with this schema skips the footer job."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, as_read_back(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(as_read_back(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(as_read_back(dt.keyType), as_read_back(dt.valueType), True)
+    return dt
+

@@ -330,38 +330,77 @@ def test_ngram_jaccard_pairs_small(spark):
     assert got[(1, 2)] == pytest.approx(41 / 51, abs=1e-6)
 
 
-def test_theta_prescreen_bounds_agg_input_and_preserves_sketch(spark):
-    """A 10^6-distinct group must enter the agg with O(k) rows after the
-    insert-time theta screen, and the screened sketch must be bit-identical
-    to the unscreened one (the screen keeps every hash < true theta)."""
-    from datasketches_rust_spark.functions.theta import theta_prescreen
+def test_theta_partials_bounded_and_exact(spark):
+    """One group of 10^6 distinct values at k = 1024: the partial stage
+    emits at most k+1 hashes per task, and the sketch is exactly the k
+    smallest distinct xxhash64(v) >> 1, with theta the (k+1)-th."""
+    from datasketches_rust_spark.functions.sketch_aggs import kmv_partials
+    from datasketches_rust_spark.functions.theta import _hashed
 
     k = 1024
-    df = spark.range(1_000_000).select(
-        F.lit("g").alias("g"), F.col("id").alias("v")
+    df = spark.range(1_000_000).select(F.lit("g").alias("g"), F.col("id").alias("v"))
+    partials = kmv_partials(_hashed(df, ["g"], "v"), ["g"], k, summary=False)
+    tasks = partials.rdd.getNumPartitions()
+    emitted = partials.select(F.sum(F.size("sketch.kmv"))).collect()[0][0]
+    assert k <= emitted <= tasks * (k + 1), (emitted, tasks)
+
+    h = F.shiftrightunsigned(F.xxhash64("v"), 1).alias("h")
+    want = [r["h"] for r in df.select(h).distinct().orderBy("h").limit(k + 1).collect()]
+    sk = theta_sketch_agg(df, ["g"], "v", k=k).collect()[0]["sketch"]
+    assert list(sk["kmv"]) == want[:k]
+    assert sk["theta"] == want[k] and sk["retained"] == k
+
+
+def test_theta_tuple_aggs_empty_input_without_groups(spark):
+    """With no group columns an empty input builds one never-updated
+    sketch, as a global aggregate does; with group columns it builds none."""
+    from datasketches_rust_spark.functions.tuple import tuple_sketch_agg
+
+    MAX = (1 << 63) - 1
+    for df in (
+        spark.createDataFrame([], "k long, v double"),
+        spark.range(100).select(F.col("id").alias("k"), F.lit(1.0).alias("v")).where("k < 0"),
+    ):
+        theta = [tuple(r["sketch"]) for r in theta_sketch_agg(df, [], "k", k=16).collect()]
+        assert theta == [([], MAX, 0)]
+        tup = [tuple(r["sketch"]) for r in tuple_sketch_agg(df, [], "k", "v", k=16).collect()]
+        assert tup == [([], [], MAX, 0)]
+        assert theta_sketch_agg(df.withColumn("g", F.lit(1)), ["g"], "k", k=16).count() == 0
+
+
+def test_sketch_aggs_independent_of_arrow_batch_size(spark):
+    """The partials cut their input into fixed row chunks, so theta, tuple,
+    t-digest and Misra-Gries results do not depend on the Arrow batch
+    size, even where Misra-Gries purges and t-digest compresses."""
+    from datasketches_rust_spark.functions.sketch_aggs import (
+        frequent_items_sketch_agg,
+        tdigest_sketch_agg,
     )
-    screened = theta_prescreen(df, ["g"], "v", k=k)
-    n_in = screened.count()
-    # safety*k = 2048 expected survivors; allow 3x slack for hash variance
-    assert n_in <= 3 * 2 * k, n_in
-    assert n_in >= k + 1  # must keep at least the k+1 smallest
+    from datasketches_rust_spark.functions.tuple import tuple_sketch_agg
 
-    a = theta_sketch_agg(df, ["g"], "v", k=k, screen=True).collect()[0]["sketch"]
-    b = theta_sketch_agg(df, ["g"], "v", k=k, screen=False).collect()[0]["sketch"]
-    assert a["theta"] == b["theta"]
-    assert a["retained"] == b["retained"] == k
-    assert list(a["kmv"]) == list(b["kmv"])
-    est = a["retained"] / (a["theta"] / float(1 << 63))
-    # relative sd is 1/sqrt(k) ~ 3.1%; 4 sigma keeps the fixed seed safe
-    assert est == pytest.approx(1_000_000, rel=4 / np.sqrt(k))
-
-
-def test_theta_prescreen_small_group_passthrough(spark):
-    """Groups with D_hat <= 4k skip the screen entirely (exact mode)."""
-    from datasketches_rust_spark.functions.theta import theta_prescreen
-
-    df = spark.range(500).select(F.lit("g").alias("g"), F.col("id").alias("v"))
-    assert theta_prescreen(df, ["g"], "v", k=1024).count() == 500
+    df = spark.range(0, 70_000, numPartitions=1).select(
+        (F.col("id") % 3).alias("g"),
+        (F.col("id") * 7919 % 50_000).alias("k"),
+        (F.col("id") % 13).cast("double").alias("v"),
+        (F.col("id") * 31 % 997).alias("it"),
+    )
+    aggs = {
+        "theta": lambda: theta_sketch_agg(df, ["g"], "k", k=512),
+        "tuple": lambda: tuple_sketch_agg(df, ["g"], "k", "v", k=512),
+        "tdigest": lambda: tdigest_sketch_agg(df, ["g"], "v", delta=20.0),
+        "mg": lambda: frequent_items_sketch_agg(df, ["g"], "it", max_map_size=16),
+    }
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    got = {}
+    try:
+        for rows in (7, 384, 2048):
+            spark.conf.set(conf, str(rows))
+            got[rows] = {n: agg().orderBy("g").collect() for n, agg in aggs.items()}
+    finally:
+        spark.conf.set(conf, old)
+    assert got[7] == got[384] == got[2048]
+    assert got[7]["mg"][0]["offset"] > 0  # purges ran
 
 
 def test_simhash_pairs_skew_stress(spark):
@@ -1163,9 +1202,9 @@ def test_theta_merge_agg_matches_direct_and_fold(spark):
     # exact mode: merging per-(g,day) sketches == building per-g directly
     per_day = theta_sketch_agg(df, ["g", "day"], "v", k=16384)
     merged = theta_merge_agg(per_day, ["g"], "sketch", k=16384)
-    # the screened entry array is built once, not once per struct field
+    # each of the two aggregates shuffles sketches once, never raw rows
     plan = merged._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("filter(") == 1, plan
+    assert plan.count("Exchange") == 2, plan
     direct = theta_sketch_agg(df, ["g"], "v", k=16384)
     m = {r["g"]: r["sketch"] for r in merged.collect()}
     d = {r["g"]: r["sketch"] for r in direct.collect()}
@@ -1378,7 +1417,7 @@ def test_tuple_merge_agg_reads_input_once(spark, tmp_path):
 
     for node in ("FileScan", "BroadcastHashJoin"):
         assert plan(merged).count(node) == plan(cells).count(node), (node, plan(merged))
-    assert plan(cells).count("FileScan") == 2  # the rows and the screen's D̂ pass
+    assert plan(cells).count("FileScan") == 1  # one read of the rows
 
 
 def test_rolling_window_hashes_buf_parity_and_speed():

@@ -221,6 +221,36 @@ def test_stage_checkpoint_named_by_fingerprint(spark, tmp_path):
         pipe._stage("ids", "up2", compute)
 
 
+def test_checkpoints_read_back_with_the_inferred_schema(spark, tmp_path):
+    """A just-written stage checkpoint, and a connected-components
+    iteration written to the checkpoint dir, are read back with the
+    schema spark.read.parquet infers for them (so no footer job runs)."""
+    from datasketches_rust_spark.operators.connected_components import _cut_lineage
+
+    ckpt = tmp_path / "ckpt"
+    read = {}
+
+    class Capture(DedupPipeline):
+        def _stage(self, name, upstream_fp, compute, materialize=True):
+            df, fp = super()._stage(name, upstream_fp, compute, materialize)
+            read[name] = df.schema
+            return df, fp
+
+    docs = corpus_spark(spark, 300, seed=SEED, partitions=2).drop("file_seq")
+    Capture(spark, CFG, checkpoint_dir=str(ckpt)).run(docs)
+    assert set(read) >= {"signatures", "ids", "rep_keys", "candidates", "verified", "clusters"}
+    for name, schema in read.items():
+        (path,) = (ckpt / name).iterdir()
+        assert schema == spark.read.parquet(str(path)).schema, name
+
+    edges = spark.range(4).select(
+        F.unhex(F.sha2(F.col("id").cast("string"), 256)).alias("src"),
+        F.unhex(F.sha2((F.col("id") + 1).cast("string"), 256)).alias("dst"),
+    )
+    cut = _cut_lineage(edges, str(ckpt), "t")
+    assert cut.schema == spark.read.parquet(str(ckpt / "cc_t")).schema
+
+
 def test_bench_child_runs_pipeline(spark, tmp_path):
     """scripts/bench_dedup_child.py (the child bench.py runs per core
     count) runs the pipeline over a corpus parquet and prints its JSON

@@ -61,3 +61,45 @@ def test_long_socket_dir_keeps_tcp(tmp_path):
     deep = tmp_path / ("d" * 80)
     deep.mkdir()
     assert session._unix_socket_conf(str(deep)) == {}
+
+
+def test_read_parquet_keeps_spark_inferred_schema(spark, tmp_path):
+    """read_parquet gives Spark's own inferred schema (timestamp_ntz
+    included) on a first and a repeated open, and a table rewritten with
+    one more column is inferred again."""
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "t.parquet")
+    df = spark.range(5).select(
+        "id", F.col("id").cast("string").alias("s"),
+        F.lit("2024-01-02 03:04:05").cast("timestamp_ntz").alias("ts"),
+    )
+    df.write.parquet(path)
+    want = spark.read.parquet(path).schema
+    assert session.read_parquet(spark, path).schema == want
+    again = session.read_parquet(spark, path)
+    assert again.schema == want and again.count() == 5
+    df.withColumn("extra", F.lit(1.5)).write.mode("overwrite").parquet(path)
+    got = session.read_parquet(spark, path)
+    assert got.schema == spark.read.parquet(path).schema
+    assert got.schema.names == ["id", "s", "ts", "extra"]
+
+
+def test_as_read_back_is_the_inferred_schema(spark, tmp_path):
+    """A written DataFrame's schema through as_read_back equals what
+    spark.read.parquet infers for the files: non-nullable columns, array
+    elements, struct fields and map values all come back nullable."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(3).select(
+        "id",
+        F.sha2(F.col("id").cast("string"), 256).alias("hex"),
+        F.array(F.col("id"), F.lit(2)).alias("arr"),
+        F.struct(F.col("id").alias("a"), F.array(F.lit(1.0)).alias("b")).alias("st"),
+        F.create_map(F.lit("k"), F.col("id")).alias("m"),
+        F.unhex(F.sha2(F.col("id").cast("string"), 256)).alias("bin"),
+    )
+    path = str(tmp_path / "w.parquet")
+    df.write.parquet(path)
+    assert not df.schema["id"].nullable
+    assert session.as_read_back(df.schema) == spark.read.parquet(path).schema

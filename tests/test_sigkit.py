@@ -10,6 +10,7 @@ import numpy as np
 import pytest
 
 from datasketches_rust_spark.config import MAX_THETA63, PipelineConfig
+from datasketches_rust_spark.sigkit.bottom_k import GroupedBottomK
 from datasketches_rust_spark.sigkit.kmv import (
     a_not_b,
     estimate,
@@ -414,3 +415,64 @@ def test_union_find_unsigned_byte_order_and_degenerate_inputs():
     empty = np.array([], dtype="S32")
     nodes, comp, rounds = union_find(empty, empty)
     assert len(nodes) == len(comp) == rounds == 0
+
+
+def _bottom_k_oracle(g, h, s, n_groups, k, theta):
+    """Per group (kmv, summaries, theta) by brute force: np.unique of the
+    inserted hashes, summaries summed per hash."""
+    out = []
+    for i in range(n_groups):
+        m = (g == i) & (h != 0) & (h < theta[i])
+        u, inv = np.unique(h[m], return_inverse=True)
+        sums = np.bincount(inv, weights=s[m], minlength=len(u))
+        t = int(u[k]) if len(u) > k else int(theta[i])
+        out.append((u[:k].tolist(), sums[:k].tolist(), t))
+    return out
+
+
+@pytest.mark.parametrize("k", [1, 8, 64])
+@pytest.mark.parametrize("p", [1.0, 0.3])
+def test_grouped_bottom_k_matches_brute_force(k, p):
+    """Chunks that straddle compactions, zero hashes, an initial theta
+    below MAX (p < 1), several groups and a lowered group theta: the state
+    equals np.unique's bottom k of every group, summaries summed."""
+    rng = np.random.default_rng(k * 10 + int(p * 10))
+    n_groups, n = 5, 6000
+    init = MAX_THETA63 if p >= 1.0 else int(p * MAX_THETA63)
+    # group 0 repeats few distinct hashes, group 4 sees only zero hashes
+    g = rng.integers(0, n_groups, n)
+    h = rng.integers(1, MAX_THETA63, n, dtype=np.int64)
+    h[g == 0] = rng.integers(1, 40, int((g == 0).sum()))
+    h[g == 4] = 0
+    h[rng.random(n) < 0.05] = 0
+    s = rng.integers(1, 50, n).astype(np.float64)
+    theta = np.full(n_groups, init, np.int64)
+    theta[1] = min(init, 1 << 61)
+    for summary in (False, True):
+        kern = GroupedBottomK(k, init, summary)
+        kern.lower_theta(np.array([1, 0]), np.array([1 << 61, MAX_THETA63]))
+        cuts = np.sort(rng.choice(np.arange(1, n), 9, replace=False))
+        for lo, hi in zip(np.r_[0, cuts], np.r_[cuts, n]):
+            kern.update(g[lo:hi], h[lo:hi], s[lo:hi] if summary else None)
+        offs, kmv, sums, th = kern.sketches()
+        want = _bottom_k_oracle(g, h, s, n_groups, k, theta)
+        for i, (wk, ws, wt) in enumerate(want):
+            assert kmv[offs[i]:offs[i + 1]].tolist() == wk, (summary, i)
+            assert th[i] == wt, (summary, i)
+            if summary:
+                assert sums[offs[i]:offs[i + 1]].tolist() == ws
+            else:
+                assert sums is None
+
+
+def test_grouped_bottom_k_no_rows_and_registered_groups():
+    """No hashes at all: no group, or registered groups keep their theta
+    and an empty entry list."""
+    offs, kmv, sums, th = GroupedBottomK(4).sketches()
+    assert offs.tolist() == [0] and len(kmv) == 0 and sums is None and len(th) == 0
+    kern = GroupedBottomK(4, 1 << 40, summary=True)
+    kern.update(np.array([0, 2]), np.array([0, 1 << 50]), np.array([1.0, 2.0]))
+    offs, kmv, sums, th = kern.sketches()
+    assert offs.tolist() == [0, 0, 0, 0] and th.tolist() == [1 << 40] * 3
+    assert len(kmv) == len(sums) == 0
+
