@@ -263,17 +263,6 @@ def codegen(passes: int, cache_entries: int | None) -> None:
     spark.stop()
 
 
-def _jobs_tasks(sc, group: str) -> tuple[int, int]:
-    """(jobs, tasks run) of the Spark jobs in job group ``group``, read
-    from the live status store; a stage shared by several of the jobs (a
-    reused shuffle) counts once, and a skipped stage runs no task."""
-    tracker = sc.statusTracker()
-    jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
-    stages = {s for j in jobs if j is not None for s in j.stageIds}
-    infos = (tracker.getStageInfo(s) for s in stages)
-    return len(jobs), sum(i.numCompletedTasks for i in infos if i is not None)
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--explain", default=None)
@@ -295,7 +284,7 @@ def main() -> None:
         codegen(args.passes, args.codegen_cache)
         return
 
-    from datasketches_rust_spark.plans.session import get_spark
+    from datasketches_rust_spark.plans.session import get_spark, job_ids, jobs_tasks
     import __spark_entry__ as entrymod
     import bench
 
@@ -337,7 +326,7 @@ def main() -> None:
             sc.setJobDescription(None)
             samples[name].append(wall)
             times[name] = min(times.get(name, wall), wall)
-            n_jobs, n_tasks = _jobs_tasks(sc, group)
+            n_jobs, n_tasks = jobs_tasks(sc, job_ids(sc, group))
             jobs[name].append(n_jobs)
             tasks[name].append(n_tasks)
     print(

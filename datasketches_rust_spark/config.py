@@ -21,6 +21,7 @@ from .sigkit.xxhash import xxh64_str_list
 DEFAULT_SEED = 9001  # reference DEFAULT_UPDATE_SEED (hash/mod.rs:83)
 
 TOKEN_REGEX = "[A-Za-z0-9_]+"  # tokenizer v1: identifier runs (ASCII)
+TOKENIZER_VERSION = "v1"  # names TOKEN_REGEX in cfg_hash; bump when it changes
 
 
 @dataclass(frozen=True)
@@ -33,7 +34,6 @@ class PipelineConfig:
     num_bands: int = 32  # LSH bands b
     band_rows: int = 6  # minhash rows per band r (num_perm = b*r = 192)
     jaccard_threshold: float = 0.8
-    tokenizer_version: str = "v1"
     # skew handling: LSH buckets larger than this are salted/capped
     max_bucket_size: int = 200
     # the one plan setting (execution only — never in cfg_hash): the
@@ -58,7 +58,7 @@ class PipelineConfig:
             str(x)
             for x in (
                 "dsrs-spark",
-                self.tokenizer_version,
+                TOKENIZER_VERSION,
                 self.seed,
                 self.shingle_width,
                 self.kmv_k,

@@ -38,28 +38,21 @@ def exact_rep_keys(ids: DataFrame) -> DataFrame:
     full 2KB signature rows — measured as the single largest shuffle cost
     of the pipeline. Identical contents have identical signatures, so the
     min-file_id pick only provides determinism; the payload attaches
-    later (``rep_payload``) without ever shuffling.
+    later, in one join (``rep_payload``).
     """
     return ids.groupBy("content_sha").agg(F.min("file_id").alias("rep_file_id"))
 
 
 def has_duplicate_id_rows(ids: DataFrame) -> bool:
     """True if any (content_sha, file_id) pair appears more than once —
-    i.e. the corpus carried duplicate (repo, path, commit) rows, in which
-    case the rep payload join would emit one rep row per copy.
+    i.e. the corpus carried duplicate (repo, path, commit) rows.
 
-    An unconditional wide dropDuplicates would make that impossible but
-    forces a SortAggregate over the 2KB signature rows (First() on
-    binary/array buffers) — measured as NEGATIVE 4→16-core scaling — so
-    instead this narrow 2-column probe decides whether the wide dedup is
-    needed at all. It groups on xxhash64(sha, fid) — one 8-byte key
-    instead of ~100 bytes of (binary sha + hex fid), measured 3x faster;
-    a hash collision can only create a false "duplicates exist"
-    (triggering a harmless unneeded dedup), never miss a real duplicate.
-    It counts every duplicate key rather than ``limit(1)``: the groups are
-    aggregated either way, and Spark names each limit's generated counter
-    from a JVM-wide sequence, so a limit recompiles its classes (4 here)
-    on every call, which no codegen cache can hold.
+    Kept only for ``perfbench/tracing.py``, whose ``Tracer.operators()``
+    reads and rebinds ``plans.pipeline.has_duplicate_id_rows``; nothing in
+    the package calls it. The pipeline detects duplicate input rows from
+    the reps stage's row count instead, at no extra job. Groups on
+    xxhash64(sha, fid): a collision can only report a false duplicate,
+    never miss a real one.
     """
     return (
         ids.groupBy(F.xxhash64("content_sha", "file_id").alias("__k"))
@@ -79,16 +72,19 @@ def rep_payload(
 ) -> DataFrame:
     """(content_sha, *payload_cols) of each representative's signature row,
     derived by joining the already-materialized signature table against
-    the narrow rep-key set.
+    the narrow rep-key set. One row per key, unless a representative's
+    (content_sha, file_id) row repeats in ``signatures`` (duplicate input
+    rows): then one row per copy, so the result holds more rows than
+    ``keys``.
 
     ``broadcast=True``: the (content_sha, rep_file_id) key set broadcasts
     into the signature scan (BroadcastHashJoin), so the wide kmv/band
-    payload is scanned in place and NEVER crosses an exchange.
+    payload is scanned in place and crosses no exchange.
     ``broadcast=False``: a shuffle-hash join with the narrow keys as BUILD
     side (never the 2KB signature rows, whose per-partition hash map
-    cannot spill and OOMs at ~1.5M+ files) — one wide exchange, so
-    callers with several consumers should materialize the result once.
-    The caller decides: ``DedupPipeline`` broadcasts iff the measured
+    cannot spill and OOMs at ~1.5M+ files) — one wide exchange.
+    ``DedupPipeline`` materializes the result once as its reps stage,
+    read by candidates and verify, and broadcasts iff the measured
     rep-key count is at most ``cfg.broadcast_key_limit`` (~100 B per key).
     """
     k = keys.select("content_sha", "rep_file_id")

@@ -9,15 +9,16 @@ CompactThetaSketch exchange path, theta/sketch.rs:443-491).
 One decision, made once, picks the plan of every key-bound stage: the
 measured rep-key count against ``cfg.broadcast_key_limit``, the only plan
 setting. Within the limit, the narrow key set is broadcast into the
-signature scan for each payload attach, verify broadcasts its side rows
-(if twice the measured pair count fits too), and connected components
-run as one vectorized union-find task (``union_find_components``): the
-graph's nodes are a subset of the rep keys, so the same bound covers that
-task's memory, and the stage costs a fixed handful of jobs instead of ~6
-per Kiveris iteration. Beyond the limit, all three take shuffle plans: a
-materialized reps stage, a shuffle-hash verify join and the iterative
-large-star/small-star ``connected_components``, which never holds a
-component in one task.
+signature scan for the one join that materializes the representative
+payload (the reps stage, read by candidates and verify), verify
+broadcasts its side rows (if twice the measured pair count fits too),
+and connected components run as one vectorized union-find task
+(``union_find_components``): the graph's nodes are a subset of the rep
+keys, so the same bound covers that task's memory, and the stage costs a
+fixed handful of jobs instead of ~6 per Kiveris iteration. Beyond the
+limit, all three take shuffle plans: a shuffle-hash reps join, a
+shuffle-hash verify join and the iterative large-star/small-star
+``connected_components``, which never holds a component in one task.
 
 Checkpoint/resume: each stage writes to ``<dir>/<stage>/<sha256(fp)>``,
 named by its fingerprint, and is reused exactly when that directory's
@@ -36,7 +37,6 @@ accumulates per-stage (stage, rows_out, input_fingerprint, reused)
 
 from __future__ import annotations
 
-import functools
 import hashlib
 import os
 import shutil
@@ -53,7 +53,7 @@ from ..operators.lsh import (
     candidate_pairs,
     exact_pairs,
     exact_rep_keys,
-    has_duplicate_id_rows,
+    has_duplicate_id_rows,  # noqa: F401  (perfbench/tracing.py rebinds this name)
     rep_payload,
 )
 from ..operators.signatures import compute_signatures, file_id
@@ -181,6 +181,7 @@ class DedupPipeline:
 
     def _dedup_stages(self, corpus: DataFrame, input_fp: str):
         """The stage chain up to verification: signatures, ids, rep_keys,
+        reps (and, on duplicate input rows only, reps_distinct),
         candidates and verified.
 
         Returns (ids, rep_map, verified, fp4, broadcast) where rep_map is
@@ -190,74 +191,42 @@ class DedupPipeline:
         own materialization (the checkpoint's row count, or a count
         observed by the eager checkpoint job), so it costs no job.
 
-        Only the NARROW rep-key table is materialized up front; consumers
-        attach the payload columns they need (candidates: bands; verify:
-        kmv/theta). Broadcast path: each attach broadcasts the key set
-        into the already-materialized signature scan — the ~2KB wide rows
-        are scanned in place, never re-shuffled or re-materialized.
-        Fallback path: a materialized shuffle-hash reps stage carries the
-        three payload columns and each attach selects from it. Verify
-        broadcasts two side rows per candidate pair, so it needs twice the
-        candidates stage's row count (measured the same way) within the
-        limit too; else it shuffles.
+        The reps stage joins the representative payload (bands, kmv,
+        theta) once, on both plans; the decision only picks its join:
+        the narrow key set broadcast into the signature scan (no
+        exchange), or a shuffle-hash join with the keys as build side.
+        Candidates and verify both read the materialized reps. Every rep
+        key meets at least one signature row, so reps holds more rows
+        than rep_keys exactly when a representative's input row repeats
+        (duplicate (repo, path, commit) rows); those copies are
+        byte-identical, and only then does a reps_distinct stage keep one
+        per content_sha. Verify broadcasts two side rows per candidate
+        pair, so it needs twice the candidates stage's row count
+        (measured the same way) within the limit too; else it shuffles.
         """
-        # signatures feed several consumers (rep keys, payload attach, the
-        # final file_id→cluster map) — materialize once so the kernel runs
-        # once and the cluster stage never re-scans the raw corpus
+        # signatures feed several consumers (ids, the reps join) —
+        # materialize once so the kernel runs once and no later stage
+        # re-scans the raw corpus
         sigs, fp1 = self._stage(
             "signatures", input_fp, lambda: compute_signatures(corpus, self.cfg)
         )
         # narrow (file_id, content_sha) projection materialized ONCE: the
-        # rep keys agg, the duplicate probe and the final cluster map are
-        # all narrow consumers, and a row-cached wide table gives them no
-        # column pruning — this 60B/row table does
+        # rep keys agg and the final cluster map are narrow consumers, and
+        # a row-cached wide table gives them no column pruning — this
+        # 60B/row table does
         ids, _ = self._stage("ids", fp1, lambda: sigs.select("file_id", "content_sha"))
-        # the duplicate-(sha,fid) probe and the rep-keys agg both read only
-        # the materialized ids blocks and are independent — overlap them
-        # (guide §2.6: actions are only sequential because the driver calls
-        # them sequentially; the probe's tasks back-fill cores the keys
-        # agg's tail leaves idle). Only in the no-checkpoint path: with a
-        # checkpoint dir the probe stays LAZY so a resumed run skips it.
-        probe_fut = None
-        if self.dir is None:
-            from concurrent.futures import ThreadPoolExecutor
-
-            pool = ThreadPoolExecutor(max_workers=1)
-            probe_fut = pool.submit(has_duplicate_id_rows, ids)
-            pool.shutdown(wait=False)
         keys, fp2 = self._stage("rep_keys", fp1, lambda: exact_rep_keys(ids))
-        broadcast = self._stage_rows("rep_keys", keys) <= self.cfg.broadcast_key_limit
-
-        @functools.cache
-        def payload() -> DataFrame:
-            """The signature rows, deduplicated on (content_sha, file_id)
-            only when the probe finds duplicate input rows. The probe runs
-            at most once: the prefetched future's result (so its exception
-            surfaces) or a lazy probe a resumed run never reaches."""
-            dups = probe_fut.result() if probe_fut is not None else has_duplicate_id_rows(ids)
-            return sigs.dropDuplicates(["content_sha", "file_id"]) if dups else sigs
-
-        if broadcast:
-            def attach(cols: list[str]) -> DataFrame:
-                return rep_payload(payload(), keys, cols, broadcast=True)
-        else:
-            reps, fp2 = self._stage(
-                "reps",
-                fp2,
-                lambda: rep_payload(
-                    payload(),
-                    keys,
-                    ["bands", "minhash_kmv", "theta64"],
-                    broadcast=False,
-                ),
-            )
-
-            def attach(cols: list[str]) -> DataFrame:
-                return reps.select("content_sha", *cols)
-
-        cands, fp3 = self._stage(
-            "candidates", fp2, lambda: candidate_pairs(attach(["bands"]), self.cfg)
+        n_keys = self._stage_rows("rep_keys", keys)
+        broadcast = n_keys <= self.cfg.broadcast_key_limit
+        cols = ["bands", "minhash_kmv", "theta64"]
+        reps, fp2 = self._stage(
+            "reps", fp2, lambda: rep_payload(sigs, keys, cols, broadcast=broadcast)
         )
+        if self._stage_rows("reps", reps) > n_keys:
+            reps, fp2 = self._stage(
+                "reps_distinct", fp2, lambda: reps.dropDuplicates(["content_sha"])
+            )
+        cands, fp3 = self._stage("candidates", fp2, lambda: candidate_pairs(reps, self.cfg))
         # the rep-key count does not bound the pairs (a family of m
         # near-duplicates gives up to m(m-1)/2), so measure them too
         limit = self.cfg.broadcast_key_limit
@@ -265,12 +234,7 @@ class DedupPipeline:
         verified, fp4 = self._stage(
             "verified",
             fp3,
-            lambda: verify_pairs(
-                cands,
-                attach(["minhash_kmv", "theta64"]),
-                self.cfg,
-                broadcast=side_rows,
-            ),
+            lambda: verify_pairs(cands, reps, self.cfg, broadcast=side_rows),
         )
         rep_map = keys.select("content_sha", "rep_file_id")
         return ids, rep_map, verified, fp4, broadcast

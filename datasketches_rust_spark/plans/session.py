@@ -1,5 +1,6 @@
-"""SparkSession factory with the engine's scale-oriented defaults, and
-parquet reads that skip Spark's schema inference when the schema is known."""
+"""SparkSession factory with the engine's scale-oriented defaults,
+parquet reads that skip Spark's schema inference when the schema is known,
+and job/task counts read from the live status store."""
 
 from __future__ import annotations
 
@@ -164,3 +165,21 @@ def as_read_back(dt: DataType) -> DataType:
         return MapType(as_read_back(dt.keyType), as_read_back(dt.valueType), True)
     return dt
 
+
+def job_ids(sc, group: str | None = None) -> set[int]:
+    """Ids of the jobs in job group ``group`` (None: every job of no
+    group) the live status store holds, once the listener bus has
+    delivered every event posted so far. Job groups are thread-local: a
+    job started on another thread carries none of the caller's group."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def jobs_tasks(sc, jobs: set[int]) -> tuple[int, int]:
+    """(jobs, tasks run) of ``jobs``; a stage shared by several of them (a
+    reused shuffle) counts once, and a skipped stage runs no task."""
+    tracker = sc.statusTracker()
+    infos = [tracker.getJobInfo(j) for j in jobs]
+    stages = {s for i in infos if i is not None for s in i.stageIds}
+    done = (tracker.getStageInfo(s) for s in stages)
+    return len(jobs), sum(i.numCompletedTasks for i in done if i is not None)

@@ -3,9 +3,11 @@ at a fixed parallelism over a pre-generated corpus parquet.
 
 Usage: python scripts/bench_dedup_child.py <corpus_path> <cpus>
 Prints one JSON line: {"wall": seconds, "files": n, "rows": n,
-"clusters": n, "stage_walls": {stage: seconds}} (wall covers the pipeline
-only, not session startup — the quantity that scales with executors on a
-real cluster).
+"clusters": n, "stage_walls": {stage: seconds}, "jobs": n, "tasks": n,
+"peak_rss_mb": MB} (wall covers the pipeline only, not session startup —
+the quantity that scales with executors on a real cluster). jobs and tasks
+count every Spark job the pass starts, on any thread; peak_rss_mb is the
+VmHWM sum over the driver, JVM and Python worker processes.
 """
 
 import json
@@ -14,13 +16,17 @@ import shutil
 import sys
 import time
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 try:  # normally provided by spark-submit --py-files
     import datasketches_rust_spark  # noqa: F401
 except ImportError:  # plain-python fallback for local debugging
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "perfbench"))
 
-from datasketches_rust_spark.plans.pipeline import DedupPipeline
-from datasketches_rust_spark.plans.session import get_spark
+from probes import tree_peak_rss_mb  # noqa: E402
+
+from datasketches_rust_spark.plans.pipeline import DedupPipeline  # noqa: E402
+from datasketches_rust_spark.plans.session import get_spark, job_ids, jobs_tasks  # noqa: E402
 
 
 def main(corpus_path: str, cpus: int) -> None:
@@ -77,18 +83,25 @@ def main(corpus_path: str, cpus: int) -> None:
     # interpreter startup to nothing; at bench scale it would skew the ratio
     corpus.select("repo").mapInArrow(lambda it: it, "repo string").count()
 
+    sc = spark.sparkContext
+    before = job_ids(sc)
     pipe = DedupPipeline(spark)
     t0 = time.monotonic()
     clusters = pipe.run(corpus)
     n_rows = clusters.count()
     wall = time.monotonic() - t0
+    jobs, tasks = jobs_tasks(sc, job_ids(sc) - before)
     n_clusters = clusters.select("cluster_id").distinct().count()
 
     # every stage is an eager checkpoint, so a stage's wall is its own work;
     # it shows which stage stops scaling
     stage_walls = {name: round(wall_s, 2) for name, *_, wall_s in pipe.metrics}
+    # under spark-submit the JVM is the driver's parent: measure its tree
+    jvm_pid = sc._jvm.java.lang.ProcessHandle.current().pid()
+    root = jvm_pid if jvm_pid == os.getppid() else os.getpid()
     out = {"wall": wall, "files": n_files, "rows": n_rows, "clusters": n_clusters,
-           "stage_walls": stage_walls}
+           "stage_walls": stage_walls, "jobs": jobs, "tasks": tasks,
+           "peak_rss_mb": round(tree_peak_rss_mb(root), 1)}
     print(json.dumps(out))
     spark.stop()
     shutil.rmtree(f"/dev/shm/spark-bench-{cpus}", ignore_errors=True)

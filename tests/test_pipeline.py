@@ -254,7 +254,8 @@ def test_checkpoints_read_back_with_the_inferred_schema(spark, tmp_path):
 def test_bench_child_runs_pipeline(spark, tmp_path):
     """scripts/bench_dedup_child.py (the child bench.py runs per core
     count) runs the pipeline over a corpus parquet and prints its JSON
-    line with a wall per stage. A subprocess: the child stops its session."""
+    line with a wall per stage, the pass's jobs and tasks and the process
+    tree's peak RSS. A subprocess: the child stops its session."""
     path = str(tmp_path / "corpus")
     corpus_spark(spark, 300, seed=SEED, partitions=2).drop("file_seq").write.parquet(path)
     env = dict(os.environ, PYTHONPATH=REPO)
@@ -267,8 +268,45 @@ def test_bench_child_runs_pipeline(spark, tmp_path):
     assert out["files"] == out["rows"] == 300
     assert out["clusters"] >= 1
     assert set(out["stage_walls"]) == {
-        "signatures", "ids", "rep_keys", "candidates", "verified", "clusters"
+        "signatures", "ids", "rep_keys", "reps", "candidates", "verified", "clusters"
     }
+    assert out["jobs"] >= len(out["stage_walls"])
+    assert out["tasks"] >= out["jobs"]
+    assert out["peak_rss_mb"] > 0
+
+
+def test_perfbench_tracer_drives_the_pipeline(spark):
+    """perfbench/tracing.py, the benchmark's traced half, leans on the
+    package: TracedPipeline overrides ``_stage(name, upstream_fp, compute,
+    materialize)`` and Tracer.operators() rebinds
+    ``plans.pipeline.has_duplicate_id_rows``. A traced pass inside
+    operators() gives DedupPipeline's clusters and one span per stage."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_tracing", os.path.join(REPO, "perfbench", "tracing.py")
+    )
+    tracing = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tracing)
+
+    docs = corpus_spark(spark, 300, seed=SEED, partitions=2).drop("file_seq")
+    tracer = tracing.Tracer(spark)
+    with tracer.operators():
+        traced = tracing.TracedPipeline(tracer, spark).run(docs)
+        traced = traced.orderBy("file_id").toPandas()
+    pipe = DedupPipeline(spark, CFG)
+    plain = pipe.run(docs).orderBy("file_id").toPandas()
+    pd.testing.assert_frame_equal(traced, plain)
+    stages = [m[0] for m in pipe.metrics]
+    assert [name for name, *_ in tracer.spans] == stages
+    assert len(set(stages)) == len(stages)
+
+
+def test_cfg_hash_pinned():
+    """The signatures stage's checkpoint name hashes cfg_hash(): these
+    values keep existing checkpoints valid."""
+    assert CFG.cfg_hash() == -1629457282777921161
+    assert CFG.with_(shingle_width=3).cfg_hash() == 3969806056879764255
 
 
 def test_hot_lsh_bucket_star_path(spark):
@@ -348,11 +386,13 @@ def test_rep_payload_fallback_path_identical(spark, corpus):
     pd.testing.assert_frame_equal(a, b)
 
 
-def test_duplicate_corpus_rows_one_representative_per_content(spark, monkeypatch):
+def test_duplicate_corpus_rows_one_representative_per_content(spark, monkeypatch, tmp_path):
     """Duplicate (repo, path, commit) input rows must still yield exactly
-    one representative row per content_sha on both plans (the duplicate
-    probe turns on the wide dedup only when such rows exist), and the
-    broadcast and fallback clusters must agree."""
+    one representative row per content_sha on both plans: the reps stage
+    then holds more rows than rep_keys, and only then does a reps_distinct
+    stage run. The broadcast and fallback clusters must agree, and a
+    checkpointed run resumes every stage, reps_distinct included, with
+    the same clusters."""
     import datasketches_rust_spark.plans.pipeline as P
 
     rows = [
@@ -360,12 +400,11 @@ def test_duplicate_corpus_rows_one_representative_per_content(spark, monkeypatch
         ("r1", "b.py", "c1", "py", "alpha beta gamma delta epsilon zeta " * 4),
         ("r2", "c.py", "c1", "py", "totally different content here okay " * 4),
     ]
-    corpus = spark.createDataFrame(
-        # a.py and b.py share content and each appear 4x verbatim, so the
-        # representative (the min file_id) is a duplicated row either way
-        rows + rows[:2] * 3,
-        "repo string, path string, commit string, lang string, content string",
-    )
+    schema = "repo string, path string, commit string, lang string, content string"
+    # a.py and b.py share content and each appear 4x verbatim, so the
+    # representative (the min file_id) is a duplicated row either way
+    corpus = spark.createDataFrame(rows + rows[:2] * 3, schema)
+    clean = spark.createDataFrame(rows, schema)
     attached = []
 
     def spy(reps, cfg):
@@ -374,17 +413,29 @@ def test_duplicate_corpus_rows_one_representative_per_content(spark, monkeypatch
 
     orig = P.candidate_pairs
     monkeypatch.setattr(P, "candidate_pairs", spy)
-    out = [
-        DedupPipeline(spark, CFG.with_(broadcast_key_limit=limit))
-        .run(corpus)
-        .orderBy("file_id")
-        .toPandas()
-        for limit in (CFG.broadcast_key_limit, 0)
-    ]
+    stages = ["signatures", "ids", "rep_keys", "reps", "reps_distinct",
+              "candidates", "verified", "clusters"]
+    out = []
+    for limit in (CFG.broadcast_key_limit, 0):
+        cfg = CFG.with_(broadcast_key_limit=limit)
+        pipe = DedupPipeline(spark, cfg)
+        out.append(pipe.run(corpus).orderBy("file_id").toPandas())
+        assert [m[0] for m in pipe.metrics] == stages
+        pipe = DedupPipeline(spark, cfg)
+        pipe.run(clean)
+        assert "reps_distinct" not in [m[0] for m in pipe.metrics]
+
+        ckpt = str(tmp_path / f"ckpt{limit}")
+        for _ in range(2):  # a fresh checkpoint dir, then a resumed run
+            resumed = DedupPipeline(spark, cfg, checkpoint_dir=ckpt).run(corpus)
+            pd.testing.assert_frame_equal(resumed.orderBy("file_id").toPandas(), out[-1])
+        metrics = spark.read.parquet(f"{ckpt}/_metrics").toPandas()
+        assert sorted(metrics[~metrics.reused].stage) == sorted(stages)
+        assert sorted(metrics[metrics.reused].stage) == sorted(stages)
     pd.testing.assert_frame_equal(*out)
     for shas in attached:  # two distinct contents, one rep row each
         assert len(shas) == len(set(shas)) == 2
-    assert len(attached) == 2
+    assert len(attached) == 2 * 3  # the resumed runs reuse candidates
     clusters = out[0]
     assert len(clusters) == 9  # one row per input row
     assert (clusters.groupby("content_sha").cluster_id.nunique() == 1).all()
@@ -414,8 +465,9 @@ def test_pipeline_containment_runs_no_stage(spark, corpus):
 def test_rep_payload_auto_mode_resolves_from_key_count(spark, corpus, monkeypatch):
     """The pipeline derives every join side from the measured rep-key count
     (no static knob to forget): a limit below the key count takes the
-    shuffle fallback for each payload attach and for verify, a comfortable
-    limit keeps the broadcast path — both with identical clusters."""
+    shuffle-hash reps join and verify join, a comfortable limit keeps the
+    broadcast path — one reps join per run either way, no duplicate-row
+    probe, and identical clusters."""
     import datasketches_rust_spark.plans.pipeline as P
 
     calls = []
@@ -425,39 +477,31 @@ def test_rep_payload_auto_mode_resolves_from_key_count(spark, corpus, monkeypatc
             return _orig(*args, **kw)
 
         monkeypatch.setattr(P, name, spy)
+
+    def no_probe(ids):
+        raise AssertionError("the pass ran the duplicate-row probe")
+
+    monkeypatch.setattr(P, "has_duplicate_id_rows", no_probe)
     a = (
         DedupPipeline(spark, CFG)
         .run(corpus.drop("file_seq"))
         .orderBy("file_id")
         .toPandas()
     )
-    assert sorted(calls) == [
-        ("rep_payload", True), ("rep_payload", True), ("verify_pairs", True)
-    ]
+    assert calls == [("rep_payload", True), ("verify_pairs", True)]
 
-    probes, probe = [], P.has_duplicate_id_rows
-
-    def probe_spy(ids):
-        probes.append(ids)
-        return probe(ids)
-
-    monkeypatch.setattr(P, "has_duplicate_id_rows", probe_spy)
     calls.clear()
     forced_fallback = DedupPipeline(spark, CFG.with_(broadcast_key_limit=0))
     b = forced_fallback.run(corpus.drop("file_seq")).orderBy("file_id").toPandas()
     pd.testing.assert_frame_equal(a, b)
-    # one shuffle-hash reps stage serves both attaches
-    assert sorted(calls) == [("rep_payload", False), ("verify_pairs", False)]
-    # the probe prefetched before the decision is the one the fallback's
-    # reps stage consumes: it runs once, and its result is read
-    assert len(probes) == 1
+    assert calls == [("rep_payload", False), ("verify_pairs", False)]
 
 
 def test_verify_broadcast_gated_by_measured_pair_count(spark, monkeypatch):
     """Verify broadcasts two side rows per candidate pair, and a family of
     near-duplicates has more pairs than rep keys: with a limit that holds
-    the rep keys but not twice the pairs, the payload attaches stay
-    broadcast, verify takes its shuffle-hash join, and the clusters equal
+    the rep keys but not twice the pairs, the reps join stays broadcast,
+    verify takes its shuffle-hash join, and the clusters equal
     the all-broadcast run's."""
     import datasketches_rust_spark.plans.pipeline as P
 
@@ -493,8 +537,6 @@ def test_verify_broadcast_gated_by_measured_pair_count(spark, monkeypatch):
             .toPandas()
         )
     assert n_keys < 2 * n_pairs[-1] and n_pairs[0] == n_pairs[-1] == 66
-    assert sorted(calls) == [
-        ("rep_payload", True), ("rep_payload", True), ("verify_pairs", False)
-    ]
+    assert calls == [("rep_payload", True), ("verify_pairs", False)]
     pd.testing.assert_frame_equal(*out)
     assert out[0].cluster_id.nunique() == 1 + 4  # the family and 4 controls
